@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from dbdiff_spark.config import DbConfig
 
@@ -199,14 +199,26 @@ class FileCatalog:
     json) in the directory; keys come from an explicit
     ``{table: [cols]}`` mapping, with the reference's no-PK fallback
     (all columns) when a table has no declared key.  When one table name
-    exists in several formats, parquet wins (the scale format)."""
+    exists in several formats, parquet wins (the scale format).
+
+    One instance is one read of the directory: the table listing and
+    each loaded frame are memoized, so ``primary_keys`` on a no-key
+    table reuses the frame ``load`` built (no second schema-inference
+    job).  Build a new catalog to see files added or rewritten since."""
 
     def __init__(self, spark: SparkSession, directory: str, keys: dict[str, list[str]] | None = None):
         self.spark = spark
         self.directory = str(directory)
         self.keys = dict(keys or {})
+        self._files: dict[str, tuple[Path, str]] | None = None
+        self._frames: dict[str, DataFrame] = {}
 
     def _table_files(self) -> dict[str, tuple[Path, str]]:
+        if self._files is None:
+            self._files = self._scan_table_files()
+        return self._files
+
+    def _scan_table_files(self) -> dict[str, tuple[Path, str]]:
         """Table name → (path, format).  Three shapes count as tables:
         a data FILE (``t.parquet``), a Spark-written DIRECTORY whose
         name carries the extension (``t.csv/`` of part files), and a
@@ -269,7 +281,7 @@ class FileCatalog:
                         f"table {name!r}: {p.name} shadowed by "
                         f"{winner[0].name} (same format); rename or "
                         "remove one of the files",
-                        stacklevel=2,
+                        stacklevel=3,
                     )
                 elif winner[1] != "parquet":
                     # csv next to json with NO parquet sibling: the
@@ -284,7 +296,7 @@ class FileCatalog:
                         f"{winner[0].name} ({winner[1]}) — cross-format "
                         "collision the parquet-wins rule does not "
                         "adjudicate; rename or remove one of the files",
-                        stacklevel=2,
+                        stacklevel=3,
                     )
         return found
 
@@ -292,6 +304,11 @@ class FileCatalog:
         return sorted(self._table_files())
 
     def load(self, table: str):
+        if table not in self._frames:
+            self._frames[table] = self._read(table)
+        return self._frames[table]
+
+    def _read(self, table: str):
         from dbdiff_spark.io import load_table, read_source
 
         entry = self._table_files().get(table)

@@ -44,14 +44,17 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass, field
 from enum import Enum
-from functools import reduce
-from typing import NamedTuple
+from functools import partial, reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
+from dbdiff_spark.io import run_jobs
 from dbdiff_spark.normalize import normalize_to_strings
+from dbdiff_spark.sqltext import ident, string_lit
 
 # Diff status labels (reference: extract_data.go:186-192 const block).
 INSERTED = "INSERTED"
@@ -60,6 +63,14 @@ UPDATED = "UPDATED"
 NOT_MODIFIED = "NOT_MODIFIED"
 
 META_COLS = ["diff_status", "is_before", "modified_columns"]
+
+# SQL-text fragments shared by the planners below
+_INSERTED, _DELETED, _UPDATED, _NOT_MODIFIED = (
+    string_lit(s) for s in (INSERTED, DELETED, UPDATED, NOT_MODIFIED)
+)
+_EMPTY_NAMES = "CAST(array() AS ARRAY<STRING>)"
+_BEFORE_ROW = "struct(true AS is_before, __b_row AS `row`)"
+_AFTER_ROW = "struct(false AS is_before, __a_row AS `row`)"
 
 
 class DiffMode(str, Enum):
@@ -72,23 +83,97 @@ class DiffMode(str, Enum):
     TYPED = "typed"
 
 
-class DiffResult(NamedTuple):
-    """A diff DataFrame plus the metadata needed by sinks."""
+@dataclass(frozen=True)
+class DiffResult:
+    """A diff DataFrame plus the metadata needed by sinks.
+
+    ``rows(max_rows)`` is the rendered output every sink reads; it is
+    collected once per cap and kept on the instance, so a console report
+    followed by an xlsx report of the same results runs the diff's jobs
+    once (see :func:`collect_rows`)."""
 
     df: DataFrame
     key_columns: list[str]
     value_columns: list[str]
+    _rows: dict[int, list[Row]] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def rows(self, max_rows: int) -> list[Row]:
+        """``ordered_output(self).limit(max_rows).collect()``, memoized
+        per ``max_rows``."""
+        if max_rows not in self._rows:
+            self._rows[max_rows] = ordered_output(self).limit(max_rows).collect()
+        return self._rows[max_rows]
 
 
-def _null_safe_key_condition(b: DataFrame, a: DataFrame, key_cols: list[str]) -> Column:
-    """Composite-key equi-join condition with null-safe comparison.
+# Tables whose sink rows collect at once: each is a small driver-bound
+# job, so overlapping them hides per-job latency, but an unbounded fan-out
+# on a many-table database would open one gateway connection per table.
+_COLLECT_CONCURRENCY = 8
 
-    ``<=>`` is still recognized by Catalyst as an equi-join key, so the
-    planner can pick sort-merge / shuffled-hash / broadcast — this does
-    NOT degrade to a nested-loop join.
-    """
-    return reduce(
-        lambda acc, c: acc & c, [b[k].eqNullSafe(a[k]) for k in key_cols]
+
+def collect_rows(results: dict[str, DiffResult], max_rows: int) -> None:
+    """Fill every result's ``rows(max_rows)`` memo, submitting the
+    tables' collect jobs concurrently (``io.run_jobs``).  Results already
+    collected at this cap submit nothing."""
+    pending = [r for r in results.values() if max_rows not in r._rows]
+    for i in range(0, len(pending), _COLLECT_CONCURRENCY):
+        run_jobs(
+            *[partial(r.rows, max_rows) for r in pending[i : i + _COLLECT_CONCURRENCY]]
+        )
+
+
+def _side_tagged_union(
+    before: DataFrame, after: DataFrame, cols: list[str]
+) -> DataFrame:
+    """``cols`` of both sides stacked, each row tagged ``__side`` 0
+    (before) or 1 (after)."""
+    sel = [ident(c) for c in cols]
+    return before.selectExpr(*sel, "0 AS __side").unionByName(
+        after.selectExpr(*sel, "1 AS __side")
+    )
+
+
+def _chain(op: str, conds: list[str]) -> str:
+    """``((c1 op c2) op c3) …`` — left-deep like a Python ``reduce``; the
+    SQL parser would balance a flat ``c1 op c2 op c3`` chain instead."""
+    return reduce(lambda acc, c: f"({acc}) {op} ({c})", conds)
+
+
+def _or_all(conds: list[str]) -> str:
+    return _chain("OR", conds) if conds else "false"
+
+
+def _number_lit(v: float) -> str:
+    """SQL literal of the type ``F.lit(v)`` would carry: int for Python
+    ints, double for floats (a bare ``0.5`` would parse as DECIMAL)."""
+    if isinstance(v, int):
+        return str(v)
+    return f"{float(v)!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+
+
+def _modified_array(compares: list[str], names: list[str]) -> str:
+    """``array<string>`` of the names whose comparison holds."""
+    if not compares:
+        return _EMPTY_NAMES
+    hits = ", ".join(
+        f"CASE WHEN {cmp} THEN {string_lit(c)} END" for cmp, c in zip(compares, names)
+    )
+    return f"array_compact(array({hits}))"
+
+
+def _explode_pairs(classified: DataFrame, pair: str, value_cols: list[str]) -> DataFrame:
+    """One output row per ``(is_before, row)`` struct of the ``pair``
+    array: the diff's final ``diff_status, is_before, modified_columns,
+    <value columns>`` shape."""
+    return classified.selectExpr(
+        "diff_status", "modified_columns", f"explode({pair}) AS __e"
+    ).selectExpr(
+        "diff_status",
+        "__e.is_before AS is_before",
+        "modified_columns",
+        *[f"__e.`row`.{ident(c)} AS {ident(c)}" for c in value_cols],
     )
 
 
@@ -102,8 +187,9 @@ def _is_orderable(dtype: str) -> bool:
     return not any(m in dtype for m in _UNORDERABLE_MARKERS)
 
 
-def _canonical_comparable(col: Column, dtype: str) -> Column:
-    """A comparable canonical rendering of an unorderable-typed column.
+def _canonical_comparable(col: str, dtype: str) -> str:
+    """A comparable canonical rendering (SQL text) of an
+    unorderable-typed column.
 
     Single-level maps become their entry array sorted by key —
     content-equal maps compare equal regardless of entry order, and
@@ -114,8 +200,8 @@ def _canonical_comparable(col: Column, dtype: str) -> Column:
     if _is_orderable(dtype):
         return col
     if dtype.startswith("map<") and _is_orderable(dtype[4:]):
-        return F.array_sort(F.map_entries(col))
-    return col.cast("string")
+        return f"array_sort(map_entries({col}))"
+    return f"CAST({col} AS STRING)"
 
 
 def _shield_reserved(
@@ -151,8 +237,8 @@ def _shield_reserved(
         taken.add(new)
         renames[c] = new
     shielded = [
-        df.select(
-            *[F.col(f"`{c}`").alias(renames.get(c, c)) for c in df.columns]
+        df.selectExpr(
+            *[f"{ident(c)} AS {ident(renames.get(c, c))}" for c in df.columns]
         )
         for df in frames
     ]
@@ -181,32 +267,23 @@ def dedup_last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     if not others:
         return df.dropDuplicates(key_cols)
     types = dict(df.dtypes)
+    keys = [ident(k) for k in key_cols]
     if all(_is_orderable(types[c]) for c in others):
-        packed = df.groupBy(*[F.col(k) for k in key_cols]).agg(
-            F.max(F.struct(*[F.col(c) for c in others])).alias("__rep")
-        )
-        return packed.select(
+        rep = ", ".join(ident(c) for c in others)
+        packed = df.groupBy(*keys).agg(F.expr(f"max(struct({rep})) AS __rep"))
+        return packed.selectExpr(
             *[
-                F.col(c) if c in key_cols else F.col(f"__rep.`{c}`").alias(c)
+                ident(c) if c in key_cols else f"__rep.{ident(c)} AS {ident(c)}"
                 for c in df.columns
             ]
         )
-    from pyspark.sql import Window
-
-    order_by = [
-        (
-            F.col(f"`{c}`")
-            if _is_orderable(types[c])
-            else F.col(f"`{c}`").cast("string")
-        ).desc_nulls_last()
+    order_by = ", ".join(
+        (ident(c) if _is_orderable(types[c]) else f"CAST({ident(c)} AS STRING)")
+        + " DESC NULLS LAST"
         for c in others
-    ]
-    w = Window.partitionBy(*[F.col(f"`{k}`") for k in key_cols]).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
+    rn = f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY {order_by})"
+    return df.selectExpr("*", f"{rn} AS __rn").filter("__rn = 1").drop("__rn")
 
 
 def _diff_all_columns_key(
@@ -231,28 +308,23 @@ def _diff_all_columns_key(
     NULL grouping values compare equal in groupBy — the same null-safe
     key semantics as the join formulation (SURVEY §1.4).
     """
-    tagged = before.select(*value_cols).withColumn(
-        "__side", F.lit(0)
-    ).unionByName(after.select(*value_cols).withColumn("__side", F.lit(1)))
-    counted = tagged.groupBy(*[F.col(f"`{c}`") for c in value_cols]).agg(
-        F.count_if(F.col("__side") == 0).alias("__nb"),
-        F.count_if(F.col("__side") == 1).alias("__na"),
+    sel = [ident(c) for c in value_cols]
+    counted = _side_tagged_union(before, after, value_cols).groupBy(*sel).agg(
+        F.expr("count_if(__side = 0) AS __nb"), F.expr("count_if(__side = 1) AS __na")
     )
-    exclusive = counted.filter((F.col("__nb") == 0) | (F.col("__na") == 0))
     out = (
-        exclusive.select(
-            *value_cols,
-            F.when(F.col("__na") == 0, F.lit(DELETED))
-            .otherwise(F.lit(INSERTED))
-            .alias("diff_status"),
-            F.greatest(F.col("__nb"), F.col("__na")).alias("__n"),
+        counted.filter("__nb = 0 OR __na = 0")
+        .selectExpr(
+            *sel,
+            f"CASE WHEN __na = 0 THEN {_DELETED} ELSE {_INSERTED} END AS diff_status",
+            "greatest(__nb, __na) AS __n",
         )
-        .withColumn("__i", F.explode(F.sequence(F.lit(1), F.col("__n"))))
-        .select(
-            F.col("diff_status"),
-            (F.col("diff_status") == DELETED).alias("is_before"),
-            F.array().cast("array<string>").alias("modified_columns"),
-            *[F.col(f"`{c}`") for c in value_cols],
+        .selectExpr("*", "explode(sequence(1, __n)) AS __i")
+        .selectExpr(
+            "diff_status",
+            f"diff_status = {_DELETED} AS is_before",
+            f"{_EMPTY_NAMES} AS modified_columns",
+            *sel,
         )
     )
     return DiffResult(df=out, key_columns=list(value_cols), value_columns=value_cols)
@@ -286,91 +358,51 @@ def _diff_grouped_dedup(
     """
     value_cols = list(after.columns)
     others = [c for c in value_cols if c not in key_cols]
-    tagged = before.select(*[F.col(f"`{c}`") for c in value_cols]).withColumn(
-        "__side", F.lit(0)
-    ).unionByName(
-        after.select(*[F.col(f"`{c}`") for c in value_cols]).withColumn(
-            "__side", F.lit(1)
-        )
-    )
-    rep = lambda side: F.max(  # noqa: E731
-        F.when(
-            F.col("__side") == side,
-            F.struct(*[F.col(f"`{c}`").alias(c) for c in others]),
-        )
-    )
-    grouped = tagged.groupBy(*[F.col(f"`{k}`") for k in key_cols]).agg(
-        rep(0).alias("__b"), rep(1).alias("__a")
+    keys = [ident(k) for k in key_cols]
+    rep_struct = f"struct({', '.join(ident(c) for c in others)})"
+    grouped = _side_tagged_union(before, after, value_cols).groupBy(*keys).agg(
+        F.expr(f"max(CASE WHEN __side = 0 THEN {rep_struct} END) AS __b"),
+        F.expr(f"max(CASE WHEN __side = 1 THEN {rep_struct} END) AS __a"),
     )
     # drop the unchanged majority with a flat OR chain before any array
     # construction (same reasoning as the FOJ path's pre-filter)
     value_compares = [
-        ~F.col(f"__b.`{c}`").eqNullSafe(F.col(f"__a.`{c}`")) for c in others
+        f"NOT (__b.{ident(c)} <=> __a.{ident(c)})" for c in others
     ]
-    changed_any = reduce(lambda x, y: x | y, value_compares)
     grouped = grouped.filter(
-        F.col("__b").isNull() | F.col("__a").isNull() | changed_any
+        _or_all(["__b IS NULL", "__a IS NULL", _or_all(value_compares)])
     )
-    both = F.col("__b").isNotNull() & F.col("__a").isNotNull()
-    modified = F.when(
-        both,
-        F.array_compact(
-            F.array(
-                *[F.when(cmp, F.lit(c)) for cmp, c in zip(value_compares, others)]
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    modified = (
+        "CASE WHEN __b IS NOT NULL AND __a IS NOT NULL THEN "
+        f"{_modified_array(value_compares, others)} ELSE {_EMPTY_NAMES} END"
+    )
 
-    def row_struct(rep_col: str) -> Column:
-        return F.struct(
-            *[
-                F.col(f"`{c}`").alias(c)
-                if c in key_cols
-                else F.col(f"{rep_col}.`{c}`").alias(c)
+    def row_struct(rep_col: str) -> str:
+        return "struct({})".format(
+            ", ".join(
+                ident(c) if c in key_cols else f"{rep_col}.{ident(c)} AS {ident(c)}"
                 for c in value_cols
-            ]
+            )
         )
 
-    classified = grouped.select(
-        *[F.col(f"`{k}`") for k in key_cols],
-        modified.alias("modified_columns"),
-        row_struct("__b").alias("__b_row"),
-        row_struct("__a").alias("__a_row"),
-        F.when(F.col("__b").isNull(), F.lit(INSERTED))
-        .when(F.col("__a").isNull(), F.lit(DELETED))
-        .otherwise(F.lit(UPDATED))
-        .alias("diff_status"),
+    classified = grouped.selectExpr(
+        *keys,
+        f"{modified} AS modified_columns",
+        f"{row_struct('__b')} AS __b_row",
+        f"{row_struct('__a')} AS __a_row",
+        f"CASE WHEN __b IS NULL THEN {_INSERTED} WHEN __a IS NULL THEN {_DELETED} "
+        f"ELSE {_UPDATED} END AS diff_status",
     )
     pair = (
-        F.when(
-            F.col("diff_status") == UPDATED,
-            F.array(
-                F.struct(F.lit(True).alias("is_before"), F.col("__b_row").alias("row")),
-                F.struct(F.lit(False).alias("is_before"), F.col("__a_row").alias("row")),
-            ),
-        )
-        .when(
-            F.col("diff_status") == DELETED,
-            F.array(
-                F.struct(F.lit(True).alias("is_before"), F.col("__b_row").alias("row"))
-            ),
-        )
-        .otherwise(
-            F.array(
-                F.struct(F.lit(False).alias("is_before"), F.col("__a_row").alias("row"))
-            )
-        )
+        f"CASE WHEN diff_status = {_UPDATED} THEN array({_BEFORE_ROW}, {_AFTER_ROW}) "
+        f"WHEN diff_status = {_DELETED} THEN array({_BEFORE_ROW}) "
+        f"ELSE array({_AFTER_ROW}) END"
     )
-    exploded = classified.select(
-        "diff_status", "modified_columns", F.explode(pair).alias("__e")
+    return DiffResult(
+        df=_explode_pairs(classified, pair, value_cols),
+        key_columns=list(key_cols),
+        value_columns=value_cols,
     )
-    out = exploded.select(
-        F.col("diff_status"),
-        F.col("__e.is_before").alias("is_before"),
-        F.col("modified_columns"),
-        *[F.col(f"__e.row.`{c}`").alias(c) for c in value_cols],
-    )
-    return DiffResult(df=out, key_columns=list(key_cols), value_columns=value_cols)
 
 
 def diff_tables(
@@ -533,72 +565,68 @@ def diff_tables(
     b_types = dict(before.dtypes)
     a_types = dict(after.dtypes)
 
-    def side_struct(side: str, side_cols: list[str], alias: str) -> Column:
+    def side_struct(side: str, side_cols: list[str], alias: str) -> str:
         """A struct of every output value column for one join side,
         with missing-on-this-side columns as typed NULLs and
         type-conflicting columns unified to string."""
         fields = []
         for c in value_cols:
             if c in side_cols:
-                col = F.col(f"{side}.`{c}`")
+                col = f"{side}.{ident(c)}"
                 if c in b_types and c in a_types and b_types[c] != a_types[c]:
-                    col = col.cast("string")
+                    col = f"CAST({col} AS STRING)"
             else:
                 other_type = a_types.get(c, b_types.get(c, "string"))
-                col = F.lit(None).cast(other_type)
-            fields.append(col.alias(c))
-        return F.struct(*fields).alias(alias)
+                col = f"CAST(NULL AS {other_type})"
+            fields.append(f"{col} AS {ident(c)}")
+        return f"struct({', '.join(fields)}) AS {alias}"
 
-    b = before.withColumn("__b_present", F.lit(True)).alias("b")
-    a = after.withColumn("__a_present", F.lit(True)).alias("a")
+    b = before.selectExpr("*", "true AS __b_present").alias("b")
+    a = after.selectExpr("*", "true AS __a_present").alias("a")
 
-    if null_safe_keys:
-        cond = _null_safe_key_condition(b, a, key_cols)
-    else:
-        # plain equality keys: only valid when key columns are known
-        # non-null (the declared-PK contract).  Catalyst rewrites `<=>`
-        # keys as coalesce(k)/isnull(k), which does NOT line up with
-        # bucketed-table output partitioning — this path keeps the join
-        # exchange-free over snapshots bucketed by key.
-        cond = reduce(
-            lambda acc, c: acc & c,
-            [F.col(f"b.`{k}`") == F.col(f"a.`{k}`") for k in key_cols],
-        )
-    joined = b.join(a, on=cond, how="full_outer")
+    # null-safe ``<=>`` is still recognized by Catalyst as an equi-join
+    # key, so the planner can pick sort-merge / shuffled-hash / broadcast
+    # — this does NOT degrade to a nested-loop join.  Plain equality
+    # keys are only valid when key columns are known non-null (the
+    # declared-PK contract).  Catalyst rewrites `<=>` keys as
+    # coalesce(k)/isnull(k), which does NOT line up with bucketed-table
+    # output partitioning — the plain path keeps the join exchange-free
+    # over snapshots bucketed by key.
+    eq = "<=>" if null_safe_keys else "="
+    cond = _chain("AND", [f"b.{ident(k)} {eq} a.{ident(k)}" for k in key_cols])
+    joined = b.join(a, on=F.expr(cond), how="full_outer")
 
-    both_present = F.col("b.__b_present").isNotNull() & F.col("a.__a_present").isNotNull()
+    both_present = "b.__b_present IS NOT NULL AND a.__a_present IS NOT NULL"
 
-    def cmp_col(side: str, c: str) -> Column:
-        col = F.col(f"{side}.`{c}`")
+    def cmp_col(side: str, c: str) -> str:
+        col = f"{side}.{ident(c)}"
         if b_types[c] != a_types[c]:
             # cross-side type conflict: compare the same string
             # rendering the output carries — implicit numeric
             # coercion would hide real changes (1 vs '1.00')
-            col = col.cast("string")
-        else:
-            # unorderable value types (map/variant) cannot feed `<=>`
-            # directly; compare a canonical rendering instead (the
-            # output still carries the native value)
-            col = _canonical_comparable(col, b_types[c])
-        return col
+            return f"CAST({col} AS STRING)"
+        # unorderable value types (map/variant) cannot feed `<=>`
+        # directly; compare a canonical rendering instead (the output
+        # still carries the native value)
+        return _canonical_comparable(col, b_types[c])
 
-    def col_changed(c: str) -> Column:
+    def col_changed(c: str) -> str:
         if tolerance and c in tolerance:
-            # within-epsilon ⇒ unchanged; null semantics match eqNullSafe
+            # within-epsilon ⇒ unchanged; null semantics match `<=>`
             # (null≡null unchanged, null-vs-value changed).  The abs/<=
             # are plain IEEE ops — deterministic on any engine.
-            bc, ac = F.col(f"b.`{c}`"), F.col(f"a.`{c}`")
-            near = F.abs(bc - ac) <= F.lit(tolerance[c])
+            bc, ac = f"b.{ident(c)}", f"a.{ident(c)}"
+            near = f"abs({bc} - {ac}) <= {_number_lit(tolerance[c])}"
             if b_types[c] in ("float", "double"):
                 # NaN≡NaN is unchanged under the exact comparator (both
                 # engines' null-safe equality treats NaN as equal to
                 # itself); abs(NaN−NaN)≤eps is false, so without this
                 # clause adding a tolerance would FLIP such rows to
                 # changed — tolerance must only ever mask changes
-                near = near | (F.isnan(bc) & F.isnan(ac))
-            close = bc.isNotNull() & ac.isNotNull() & near
-            return ~((bc.isNull() & ac.isNull()) | close)
-        return ~cmp_col("b", c).eqNullSafe(cmp_col("a", c))
+                near = f"{near} OR (isnan({bc}) AND isnan({ac}))"
+            close = f"{bc} IS NOT NULL AND {ac} IS NOT NULL AND ({near})"
+            return f"NOT (({bc} IS NULL AND {ac} IS NULL) OR ({close}))"
+        return f"NOT ({cmp_col('b', c)} <=> {cmp_col('a', c)})"
 
     # keys matched null-safely ⇒ never modified; ignored columns are
     # excluded from the comparator entirely (output still carries them)
@@ -614,85 +642,53 @@ def diff_tables(
         # (Catalyst inlines it through the projection), making every
         # joined row pay the array+lambda allocation twice; the OR chain
         # allocates nothing and short-circuits on the first difference.
-        changed_any = (
-            reduce(lambda x, y: x | y, value_compares)
-            if value_compares
-            else F.lit(False)
-        )
         joined = joined.filter(
-            F.col("b.__b_present").isNull()
-            | F.col("a.__a_present").isNull()
-            | changed_any
+            _or_all(
+                ["b.__b_present IS NULL", "a.__a_present IS NULL", _or_all(value_compares)]
+            )
         )
 
     if schema_drift:
         # Reference: column-set change ⇒ every column marked modified and
         # the row counted as UPDATED (extract_data.go:162-171).
-        modified = F.when(
-            both_present, F.array(*[F.lit(c) for c in value_cols])
-        ).otherwise(F.array().cast("array<string>"))
+        changed_array = f"array({', '.join(string_lit(c) for c in value_cols)})"
     else:
-        per_col = [
-            F.when(cmp, F.lit(c))
-            for cmp, c in zip(value_compares, compared_cols)
-        ]
-        changed_array = (
-            F.array_compact(F.array(*per_col)) if per_col else F.array().cast("array<string>")
-        )
-        modified = F.when(both_present, changed_array).otherwise(
-            F.array().cast("array<string>")
-        )
+        changed_array = _modified_array(value_compares, compared_cols)
+    modified = f"CASE WHEN {both_present} THEN {changed_array} ELSE {_EMPTY_NAMES} END"
 
     status = (
-        F.when(F.col("__b_present").isNull(), F.lit(INSERTED))
-        .when(F.col("__a_present").isNull(), F.lit(DELETED))
-        .when(F.size("modified_columns") > 0, F.lit(UPDATED))
-        .otherwise(F.lit(NOT_MODIFIED))
+        f"CASE WHEN __b_present IS NULL THEN {_INSERTED} "
+        f"WHEN __a_present IS NULL THEN {_DELETED} "
+        f"WHEN size(modified_columns) > 0 THEN {_UPDATED} "
+        f"ELSE {_NOT_MODIFIED} END"
     )
-
-    classified = joined.select(
-        modified.alias("modified_columns"),
+    classified = joined.selectExpr(
+        f"{modified} AS modified_columns",
         side_struct("b", b_cols, "__b_row"),
         side_struct("a", a_cols, "__a_row"),
-        F.col("b.__b_present").alias("__b_present"),
-        F.col("a.__a_present").alias("__a_present"),
-    ).withColumn("diff_status", status)
+        "b.__b_present AS __b_present",
+        "a.__a_present AS __a_present",
+    ).selectExpr("*", f"{status} AS diff_status")
 
     if not include_unchanged and schema_drift:
         # Under schema drift every matched row is UPDATED, so only the
         # matched/unmatched split matters; the cheap pre-filter above is
         # skipped and NOT_MODIFIED cannot occur — this filter is kept as
         # a semantic guard only.
-        classified = classified.filter(F.col("diff_status") != NOT_MODIFIED)
+        classified = classified.filter(f"diff_status != {_NOT_MODIFIED}")
 
-    pair = F.when(
-        F.col("diff_status") == UPDATED,
-        F.array(
-            F.struct(F.lit(True).alias("is_before"), F.col("__b_row").alias("row")),
-            F.struct(F.lit(False).alias("is_before"), F.col("__a_row").alias("row")),
-        ),
-    ).when(
-        F.col("diff_status") == DELETED,
-        F.array(F.struct(F.lit(True).alias("is_before"), F.col("__b_row").alias("row"))),
-    ).when(
-        F.col("diff_status") == INSERTED,
-        F.array(F.struct(F.lit(False).alias("is_before"), F.col("__a_row").alias("row"))),
-    ).otherwise(
-        # include_unchanged mode: NOT_MODIFIED renders the after row once.
-        F.array(F.struct(F.lit(False).alias("is_before"), F.col("__a_row").alias("row")))
+    # include_unchanged mode: NOT_MODIFIED renders the after row once
+    pair = (
+        f"CASE WHEN diff_status = {_UPDATED} THEN array({_BEFORE_ROW}, {_AFTER_ROW}) "
+        f"WHEN diff_status = {_DELETED} THEN array({_BEFORE_ROW}) "
+        f"WHEN diff_status = {_INSERTED} THEN array({_AFTER_ROW}) "
+        f"ELSE array({_AFTER_ROW}) END"
     )
-
-    exploded = classified.select(
-        "diff_status", "modified_columns", F.explode(pair).alias("__e")
+    return DiffResult(
+        df=_explode_pairs(classified, pair, value_cols),
+        key_columns=list(key_cols),
+        value_columns=value_cols,
     )
-
-    out = exploded.select(
-        F.col("diff_status"),
-        F.col("__e.is_before").alias("is_before"),
-        F.col("modified_columns"),
-        *[F.col(f"__e.row.`{c}`").alias(c) for c in value_cols],
-    )
-    return DiffResult(df=out, key_columns=list(key_cols), value_columns=value_cols)
 
 
 def apply_diff(
@@ -742,17 +738,17 @@ def apply_diff(
     cols = list(target_cols) if target_cols is not None else base.columns
     removed = diff_df.filter(
         (F.col("diff_status") != UPDATED) | F.col("is_before")
-    ).select(*[F.col(f"`{k}`") for k in key_cols])
+    ).select(*[ident(k) for k in key_cols])
     added = diff_df.filter(
         (F.col("diff_status") == INSERTED)
         | ((F.col("diff_status") == UPDATED) & ~F.col("is_before"))
-    ).select(*[F.col(f"`{c}`") for c in cols])
+    ).select(*[ident(c) for c in cols])
     b = base.alias("__base")
     r = (F.broadcast(removed) if broadcast_changes else removed).alias("__rm")
     cond = reduce(
         lambda acc, c: acc & c,
         [
-            F.col(f"__base.`{k}`").eqNullSafe(F.col(f"__rm.`{k}`"))
+            F.col(f"__base.{ident(k)}").eqNullSafe(F.col(f"__rm.{ident(k)}"))
             for k in key_cols
         ],
     )
@@ -760,7 +756,7 @@ def apply_diff(
     diff_types = dict(diff_df.dtypes)
     kept = b.join(r, cond, "left_anti").select(
         *[
-            F.col(f"`{c}`")
+            F.col(ident(c))
             if c in base_cols
             else F.lit(None).cast(diff_types.get(c, "string")).alias(c)
             for c in cols
@@ -991,7 +987,7 @@ def ordered_output(result: DiffResult) -> DataFrame:
     within an UPDATED pair (reference relies on nondeterministic map
     order — SURVEY §1.5.4; we fix that)."""
     return result.df.orderBy(
-        *result.key_columns, F.col("is_before").desc()
+        *[ident(k) for k in result.key_columns], F.desc("is_before")
     )
 
 

@@ -74,15 +74,22 @@ def spread(df: DataFrame, spark: SparkSession, *key_cols: str) -> DataFrame:
     minor #5: repeated driver CPU per call on large plans).  The
     planned width of a given scan is stable within a session (it
     derives from the file listing and session split config), so a
-    cached answer stays correct."""
+    cached answer stays correct.
+
+    ``semanticHash`` is a 32-bit hash, so two different plans can share
+    a key; that is tolerated, because the cached width only decides
+    whether to add one exchange: a collision costs a skipped or an
+    extra repartition, never a wrong result."""
     n = spark.sparkContext.defaultParallelism
     try:
         key = (spark.sparkContext.applicationId, df.semanticHash(), n)
         width = _SPREAD_WIDTH_CACHE.get(key)
         if width is None:
             width = df.rdd.getNumPartitions()
-            if len(_SPREAD_WIDTH_CACHE) > 4096:  # unbounded-session hygiene
-                _SPREAD_WIDTH_CACHE.clear()
+            if len(_SPREAD_WIDTH_CACHE) >= _SPREAD_WIDTH_CACHE_MAX:
+                # unbounded-session hygiene: evict the oldest entry only,
+                # keeping the session's hot scans cached
+                _SPREAD_WIDTH_CACHE.pop(next(iter(_SPREAD_WIDTH_CACHE)), None)
             _SPREAD_WIDTH_CACHE[key] = width
         if width >= n:
             return df
@@ -92,6 +99,7 @@ def spread(df: DataFrame, spark: SparkSession, *key_cols: str) -> DataFrame:
 
 
 _SPREAD_WIDTH_CACHE: dict[tuple, int] = {}
+_SPREAD_WIDTH_CACHE_MAX = 4096
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -14,7 +14,8 @@ bug without changing observable behavior for sane data.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from dbdiff_spark.sqltext import ident, string_lit
 
 NULL_SENTINEL = "<NULL>"
 
@@ -24,10 +25,11 @@ def normalize_to_strings(df: DataFrame, columns: list[str] | None = None) -> Dat
 
     Mirrors reference operator #5 (SURVEY §2): all source types coerced
     to string before comparison.  A plain ``cast`` stays inside
-    whole-stage codegen — no UDF, no Python round-trip.
+    whole-stage codegen — no UDF, no Python round-trip.  Built as SQL
+    text, one string per column (see ``sqltext``).
     """
     cols = columns or df.columns
-    return df.select([F.col(f"`{c}`").cast("string").alias(c) for c in cols])
+    return df.selectExpr(*[f"CAST({ident(c)} AS STRING) AS {ident(c)}" for c in cols])
 
 
 def presentation_view(df: DataFrame, value_columns: list[str] | None = None) -> DataFrame:
@@ -36,11 +38,12 @@ def presentation_view(df: DataFrame, value_columns: list[str] | None = None) -> 
     Presentation-only (console/xlsx); never used in comparisons.
     """
     cols = value_columns or df.columns
-    return df.select(
-        [
-            F.coalesce(F.col(f"`{c}`").cast("string"), F.lit(NULL_SENTINEL)).alias(c)
+    null = string_lit(NULL_SENTINEL)
+    return df.selectExpr(
+        *[
+            f"coalesce(CAST({ident(c)} AS STRING), {null}) AS {ident(c)}"
             if c in cols
-            else F.col(f"`{c}`")
+            else ident(c)
             for c in df.columns
         ]
     )

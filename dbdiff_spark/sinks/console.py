@@ -13,13 +13,15 @@ only; comparisons upstream are null-safe on real NULLs (SURVEY §1.4).
 The diff result is presumed small relative to the inputs (changed rows
 only), so collecting to the driver mirrors the reference's own
 assumption; ``max_rows`` guards the pathological all-rows-changed case.
+The rows are the result's ``rows(max_rows)`` memo, collected for every
+table at once, so a later xlsx report of the same results runs no job.
 """
 
 from __future__ import annotations
 
 import io
 
-from dbdiff_spark.diff import DELETED, INSERTED, UPDATED, DiffResult, ordered_output
+from dbdiff_spark.diff import DELETED, INSERTED, UPDATED, DiffResult, collect_rows
 from dbdiff_spark.normalize import NULL_SENTINEL
 
 _LABELS = {
@@ -42,7 +44,7 @@ def format_row(columns: list[str], row) -> str:
 def render_table_diff(
     table_name: str, result: DiffResult, max_rows: int = 10_000
 ) -> str:
-    rows = ordered_output(result).limit(max_rows).collect()
+    rows = result.rows(max_rows)
     out = io.StringIO()
     out.write(f"==={table_name}===\n")
     for r in rows:
@@ -54,6 +56,7 @@ def render_table_diff(
 
 
 def print_diffs(results: dict[str, DiffResult], max_rows: int = 10_000) -> None:
+    collect_rows(results, max_rows)
     for name in sorted(results):
         text = render_table_diff(name, results[name], max_rows=max_rows)
         print(text, end="")

@@ -13,7 +13,8 @@ No spreadsheet library ships in this image, so this module emits the
 (public, ECMA-376) SpreadsheetML zip format directly — a workbook with
 one sheet, inline strings, and the four cell styles above.  Driver-side
 code: the diff DataFrame is collected (changed rows only), exactly the
-reference's own assumption.
+reference's own assumption — through the result's ``rows`` memo, which a
+console report of the same results has already filled.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from datetime import datetime
 from pathlib import Path
 from xml.sax.saxutils import escape
 
-from dbdiff_spark.diff import DELETED, INSERTED, UPDATED, DiffResult, ordered_output
+from dbdiff_spark.diff import DELETED, INSERTED, UPDATED, DiffResult, collect_rows
 from dbdiff_spark.normalize import NULL_SENTINEL
 
 _CONTENT_TYPES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
@@ -141,11 +142,12 @@ def write_diff_xlsx(
     max_rows_per_table: int = 10_000,
 ) -> Path:
     """Render every table's diff into one sheet, reference block layout."""
+    collect_rows(results, max_rows_per_table)
     sheet = _Sheet()
     ri = OFFSET_ROW
     for table in sorted(results):
         res = results[table]
-        rows = ordered_output(res).limit(max_rows_per_table).collect()
+        rows = res.rows(max_rows_per_table)
         if not rows:
             continue
         cols = res.value_columns

@@ -28,6 +28,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbdiff_spark.diff import (
     DELETED,
@@ -94,6 +95,21 @@ def _group_fingerprints(
     return {str(r["g"]): [int(r["n"]), int(r["x"]), int(r["s"])] for r in rows}
 
 
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable — the
+    schema a parquet file written from a frame of type ``dt`` reads back
+    as (Spark relaxes nullability on file reads)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 @dataclass
 class Snapshot:
     """A point-in-time copy of a set of tables (manifest only).
@@ -124,6 +140,12 @@ class Snapshot:
     # table → hive partition columns the snapshot was written with
     # (predicates on them in diff_snapshots(where=...) partition-prune)
     partitions: dict[str, list[str]] = field(default_factory=dict)
+    # table → schema (StructType JSON) the table was written with, for
+    # plain (unpartitioned, unbucketed) parquet tables: ``load`` hands it
+    # to the reader, which then runs no schema-inference job.  Tables
+    # without an entry (older manifests, partitioned or bucketed tables)
+    # infer it as before.
+    schemas: dict[str, dict] = field(default_factory=dict)
 
     def load(self, spark: SparkSession, table: str) -> DataFrame:
         if table in self.catalog_tables:
@@ -134,7 +156,10 @@ class Snapshot:
                 # fall back to the path (bucketing metadata lost, diff
                 # still correct — just pays the exchange again)
                 pass
-        return spark.read.format(self.format).load(self.tables[table])
+        reader = spark.read.format(self.format)
+        if table in self.schemas:
+            reader = reader.schema(T.StructType.fromJson(self.schemas[table]))
+        return reader.load(self.tables[table])
 
     def load_groups_pruned(
         self, spark: SparkSession, table: str, changed_groups: list[int]
@@ -244,6 +269,7 @@ class Snapshot:
                     "group_hash_mod": self.group_hash_mod,
                     "format": self.format,
                     "partitions": self.partitions,
+                    "schemas": self.schemas,
                 },
                 indent=2,
             )
@@ -279,6 +305,7 @@ class Snapshot:
             group_hash_mod=data.get("group_hash_mod", 0),
             format=data.get("format", "parquet"),
             partitions=data.get("partitions", {}),
+            schemas=data.get("schemas", {}),
         )
 
 
@@ -387,6 +414,8 @@ class SnapshotStore:
                 w = to_write.write.mode("errorifexists")
                 if name in partition_by:
                     w = w.partitionBy(*partition_by[name])
+                else:
+                    snap.schemas[name] = _as_nullable(df.schema).jsonValue()
                 w.parquet(path)
             else:
                 # delta / iceberg / orc …: same point-in-time contract;

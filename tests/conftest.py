@@ -28,3 +28,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def last_job_id(spark):
+    """Callable returning the newest Spark job id (-1 before any job);
+    equal readings around a call mean the call submitted no job."""
+    tracker = spark.sparkContext.statusTracker()
+    return lambda: max(tracker.getJobIdsForGroup(), default=-1)

@@ -592,3 +592,21 @@ def test_file_catalog_warns_on_cross_format_shadowing(spark, tmp_path):
         cat2.list_tables()
     assert not any("staff" in str(w.message) for w in caught2)
     assert cat2.load("staff").count() == 2  # parquet wins
+
+
+def test_file_catalog_memoizes_listing_and_frames(spark, sf_dir, last_job_id):
+    """One catalog instance is one read of the directory: ``primary_keys``
+    on a no-key table reuses the frame ``load`` built instead of running
+    a second parquet schema-inference job; a new instance reads afresh."""
+    from dbdiff_spark.catalog import TESTDATA_KEYS, FileCatalog
+
+    cat = FileCatalog(spark, sf_dir, TESTDATA_KEYS)
+    tables = ["customer", "lineitem", "events"]
+    frames = {t: cat.load(t) for t in tables}
+    assert cat._table_files() is cat._table_files()  # listed once
+    before = last_job_id()
+    keys = cat.primary_keys(tables)
+    assert last_job_id() == before, "primary_keys re-read a loaded table"
+    assert keys["events"] == frames["events"].columns
+    assert all(cat.load(t) is frames[t] for t in tables)
+    assert FileCatalog(spark, sf_dir, TESTDATA_KEYS).load("events") is not frames["events"]

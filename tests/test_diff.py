@@ -6,8 +6,11 @@ which we must NOT reproduce), no-PK all-columns keys, schema drift, and
 string-vs-typed comparison modes.
 """
 
+from functools import reduce
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbdiff_spark.diff import (
     DELETED,
@@ -547,3 +550,108 @@ def test_diff_revenue_impact_reconciles_totals(spark, sf_dir):
         .groupBy("diff_status").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert {k: v.n_rows for k, v in rows.items()} == expect
+
+
+# --- adversarial column names through the SQL-text planners ------------------
+
+# every character class the planners must quote: backtick, single quote,
+# backslash, dot, space, non-ASCII text, plus a column carrying the diff's
+# own reserved output name (shielded to ``diff_status__data``)
+_ODD_KEY = "k.e`y"
+_ODD_COLS = [_ODD_KEY, "a`b", "it's", "back\\slash", "dot.ted", "with space", "naïve 列", "diff_status", "num"]
+_ODD_SCHEMA = T.StructType(
+    [T.StructField(_ODD_KEY, T.IntegerType())]
+    + [T.StructField(c, T.DoubleType() if c == "num" else T.StringType()) for c in _ODD_COLS[1:]]
+)
+_ODD_BEFORE = [
+    (1, "a", "b", "c", "d", "e", "f", "g", 1.0),
+    (2, "gone", "b", "c", "d", "e", "f", "g", 2.0),
+    (3, "same", "b", "c", "d", "e", "f", "g", 3.0),
+    (5, "x", "it", None, "d", "e", "f", "g", None),
+]
+_ODD_AFTER = [
+    (1, "a2", "b2", "c2", "d2", "e2", "f2", "g2", 1.5),
+    (3, "same", "b", "c", "d", "e", "f", "g", 3.0),
+    (4, "new", "b", "c", "d", "e", "f", "g", 4.0),
+    (5, "x", "it'", "\\", "d", "e", "f", "g", None),
+]
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dsl_reference(before, after, key, mode):
+    """Independent Column-DSL keyed diff: positional renames to safe
+    names (``toDF`` parses nothing), per-side last-wins dedup, a
+    null-safe full outer join and per-column ``eqNullSafe``; the joined
+    rows expand to the sink tuple shape in Python."""
+    names = before.columns
+    n = len(names)
+    kidx = [names.index(k) for k in key]
+    oidx = [i for i in range(n) if i not in kidx]
+
+    def side(df, p):
+        df = df.toDF(*[f"{p}{i}" for i in range(n)])
+        if mode == DiffMode.STRING:
+            df = df.select([F.col(f"{p}{i}").cast("string").alias(f"{p}{i}") for i in range(n)])
+        if oidx:
+            rep = df.groupBy([F.col(f"{p}{i}") for i in kidx]).agg(
+                F.max(F.struct([F.col(f"{p}{i}") for i in oidx])).alias("r")
+            )
+            df = rep.select(
+                [F.col(f"r.{p}{i}").alias(f"{p}{i}") if i in oidx else F.col(f"{p}{i}") for i in range(n)]
+            )
+        return df.withColumn(f"{p}_present", F.lit(True))
+
+    b, a = side(before, "b"), side(after, "a")
+    cond = reduce(lambda x, y: x & y, [F.col(f"b{i}").eqNullSafe(F.col(f"a{i}")) for i in kidx])
+    modified = F.array_compact(
+        F.array(*[F.when(~F.col(f"b{i}").eqNullSafe(F.col(f"a{i}")), F.lit(names[i])) for i in oidx])
+    ) if oidx else F.array().cast("array<string>")
+    joined = b.join(a, cond, "full_outer").withColumn("m", modified)
+    out = set()
+    for r in joined.collect():
+        bvals = tuple(r[f"b{i}"] for i in range(n))
+        avals = tuple(r[f"a{i}"] for i in range(n))
+        if r["b_present"] is None:
+            out.add((INSERTED, False, (), avals))
+        elif r["a_present"] is None:
+            out.add((DELETED, True, (), bvals))
+        elif r["m"]:
+            out.add((UPDATED, True, tuple(r["m"]), bvals))
+            out.add((UPDATED, False, tuple(r["m"]), avals))
+    return out
+
+
+def _as_tuples(res):
+    return {
+        (r["diff_status"], r["is_before"], tuple(r["modified_columns"]), tuple(r[c] for c in res.value_columns))
+        for r in ordered_output(res).collect()
+    }
+
+
+@pytest.mark.parametrize("mode", [DiffMode.STRING, DiffMode.TYPED])
+@pytest.mark.parametrize("path", ["grouped", "all_columns_key", "full_outer_join"])
+def test_adversarial_column_names_match_dsl_reference(spark, mode, path):
+    before = spark.createDataFrame(_ODD_BEFORE, _ODD_SCHEMA)
+    after = spark.createDataFrame(_ODD_AFTER, _ODD_SCHEMA)
+    key = list(_ODD_COLS) if path == "all_columns_key" else [_ODD_KEY]
+    res = diff_tables(before, after, key, mode=mode, dedup_keys=path != "full_outer_join")
+    out_names = [c if c != "diff_status" else "diff_status__data" for c in _ODD_COLS]
+    assert res.value_columns == out_names
+    assert res.df.columns == ["diff_status", "is_before", "modified_columns", *out_names]
+    ref_key = [c if c != "diff_status" else "diff_status__data" for c in key]
+    expected = _dsl_reference(before.toDF(*out_names), after.toDF(*out_names), ref_key, mode)
+    got = _as_tuples(res)
+    assert got == expected
+    if path != "all_columns_key":
+        # modified_columns carries the exact (shielded) names
+        (mods,) = {m for status, before_row, m, vals in got if vals[0] in (1, "1") and before_row}
+        assert mods == tuple(out_names[1:])
+        (mods5,) = {m for status, before_row, m, vals in got if vals[0] in (5, "5") and before_row}
+        assert mods5 == ("it's", "back\\slash")
+    else:
+        assert {s for s, *_ in got} == {INSERTED, DELETED}
+    # the sinks' ordered collect quotes the odd key too
+    assert len(res.rows(100)) == len(got)

@@ -4,6 +4,7 @@ sink partitioning."""
 
 import zipfile
 import xml.etree.ElementTree as ET
+from pathlib import Path
 
 from dbdiff_spark.diff import DiffMode, diff_tables
 from dbdiff_spark.sinks.console import render_table_diff
@@ -60,6 +61,73 @@ def test_xlsx_block_layout_and_styles(spark, tmp_path):
     assert cells["D5"] == ("a2", "2")
     assert cells["B6"][0] == "DELETED"
     assert cells["B7"][0] == "INSERTED"
+
+
+GOLDEN = Path(__file__).resolve().parent / "golden"
+
+
+def _report_fixture(spark):
+    """Three tables' diffs covering every sink row kind: an UPDATED pair
+    with a value→NULL and a NULL-carrying unmodified column, DELETED and
+    INSERTED rows, XML-special text, a composite-key STRING-mode table,
+    and a table with no changes (console header only, no xlsx block)."""
+    people_b = spark.createDataFrame(
+        [(1, "ada", None, 1.5), (2, "bob", "x", 2.0), (3, "c&d", "<y>", None), (5, "eve", "same", 1.0)],
+        "id int, name string, tag string, score double",
+    )
+    people_a = spark.createDataFrame(
+        [(1, "ada2", None, 1.5), (3, "c&d", None, None), (4, "dan", "z", 4.25), (5, "eve", "same", 1.0)],
+        "id int, name string, tag string, score double",
+    )
+    ledger_b = spark.createDataFrame(
+        [(10, 1, "open", 3), (10, 2, None, 4), (11, 1, "shut", 5)],
+        "k1 bigint, k2 int, state string, qty int",
+    )
+    ledger_a = spark.createDataFrame(
+        [(10, 1, "open", 30), (10, 2, "new", 4), (12, 1, "open", None)],
+        "k1 bigint, k2 int, state string, qty int",
+    )
+    quiet = spark.createDataFrame([(1, "same")], "id int, v string")
+    return {
+        "people": diff_tables(people_b, people_a, ["id"], mode=DiffMode.TYPED),
+        "ledger": diff_tables(ledger_b, ledger_a, ["k1", "k2"], dedup_keys=True),
+        "quiet": diff_tables(quiet, quiet, ["id"], mode=DiffMode.TYPED),
+    }
+
+
+def test_sinks_match_goldens_and_xlsx_reuses_console_rows(spark, tmp_path, capsys, last_job_id):
+    """Console text and the xlsx sheet XML are byte-for-byte the reports
+    the Column-DSL planners and per-sink collects produced
+    (``tests/golden``), and the xlsx sink after the console sink on the
+    same results submits no Spark job: both read the results' row memo."""
+    from dbdiff_spark.sinks.console import print_diffs
+
+    results = _report_fixture(spark)
+    print_diffs(results)
+    text = capsys.readouterr().out
+    assert text == (GOLDEN / "report_console.txt").read_text(encoding="utf-8")
+
+    before = last_job_id()
+    out = tmp_path / "report.xlsx"
+    write_diff_xlsx(results, out)
+    assert last_job_id() == before, "xlsx sink re-ran the diff"
+    with zipfile.ZipFile(out) as z:
+        sheet = z.read("xl/worksheets/sheet1.xml")
+    assert sheet == (GOLDEN / "report_sheet1.xml").read_bytes()
+
+
+def test_row_memo_is_per_result_and_per_cap(spark, last_job_id):
+    from dbdiff_spark.diff import collect_rows
+
+    results = _report_fixture(spark)
+    collect_rows(results, 3)
+    before = last_job_id()
+    assert [len(results[t].rows(3)) for t in ("people", "ledger", "quiet")] == [3, 3, 0]
+    assert last_job_id() == before
+    # another cap is another collect; fresh results start empty
+    assert len(results["people"].rows(100)) == 6
+    assert last_job_id() > before
+    assert _report_fixture(spark)["people"]._rows == {}
 
 
 def test_default_output_name():

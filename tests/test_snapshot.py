@@ -706,3 +706,146 @@ def test_incremental_ignore_no_pk_keeps_full_key_group_filter(spark, tmp_path):
     got = {(r["diff_status"], r["v"]) for r in res.collect()}
     assert (DELETED, "v7") in got and (INSERTED, "CHANGED") in got
     assert len(got) == 2  # nothing else surfaced
+
+
+# --- pinned schemas in the manifest -----------------------------------------
+
+
+def _typed_fixture(spark):
+    """Types the manifest's pinned schema must reproduce exactly:
+    non-nullable top-level and nested fields, maps, arrays, structs,
+    decimals, timestamps with and without time zone, dates, binary."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType(), False),
+        T.StructField("m", T.MapType(T.StringType(), T.IntegerType(), False)),
+        T.StructField("arr", T.ArrayType(T.LongType(), False), False),
+        T.StructField("st", T.StructType([
+            T.StructField("a", T.IntegerType(), False),
+            T.StructField("tags", T.ArrayType(T.StringType())),
+        ]), False),
+        T.StructField("d", T.DecimalType(12, 3)),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("day", T.DateType()),
+        T.StructField("bin", T.BinaryType()),
+    ])
+    row = (
+        1, {"k": 1}, [1, 2], (3, ["x", None]), decimal.Decimal("1.250"),
+        datetime.datetime(2020, 1, 1, 12), datetime.datetime(2020, 1, 1, 12),
+        datetime.date(2020, 1, 1), b"\x00\x01",
+    )
+    return spark.createDataFrame([row], schema)
+
+
+def test_manifest_pins_written_schema_for_every_fixture_table(spark, sf_dir, tmp_path, last_job_id):
+    """Every fixture table (timestamps, decimals, arrays) plus a
+    maps/nested/non-nullable table: the pinned-schema load equals what
+    schema inference reads from the files, returns the same rows, and
+    submits no Spark job (inference does)."""
+    cat = FileCatalog(spark, sf_dir, TESTDATA_KEYS)
+    sources = {t: cat.load(t) for t in cat.list_tables()}
+    keys = {**cat.primary_keys(list(sources)), "typed": ["id"]}
+    sources["typed"] = _typed_fixture(spark)
+    SnapshotStore(spark).collect(sources, keys, str(tmp_path / "s"))
+    snap = Snapshot.load_manifest(str(tmp_path / "s"))
+    assert set(snap.schemas) == set(sources)
+    for t in sources:
+        inferred_job = last_job_id()
+        inferred = spark.read.parquet(snap.tables[t])
+        assert last_job_id() > inferred_job, "inference ran no job"
+        before = last_job_id()
+        pinned = snap.load(spark, t)
+        assert pinned.schema == inferred.schema, t
+        assert last_job_id() == before, f"pinned load of {t} ran a job"
+        assert sorted(map(repr, pinned.collect())) == sorted(map(repr, inferred.collect()))
+
+
+def test_manifest_without_schemas_still_loads(spark, tmp_path):
+    import json
+
+    from dbdiff_spark.snapshot import MANIFEST_NAME
+
+    before, after = make_snapshots(spark, tmp_path)
+    for root in ("before", "after"):
+        path = tmp_path / root / MANIFEST_NAME
+        data = json.loads(path.read_text())
+        assert set(data.pop("schemas")) == set(data["tables"])
+        path.write_text(json.dumps(data))
+    old_b = Snapshot.load_manifest(str(tmp_path / "before"))
+    old_a = Snapshot.load_manifest(str(tmp_path / "after"))
+    assert old_b.schemas == {}
+    assert old_b.load(spark, "t2").schema == before.load(spark, "t2").schema
+    rows = lambda res: sorted(map(tuple, res["t1"].df.collect()))  # noqa: E731
+    assert rows(diff_snapshots(spark, old_b, old_a)) == rows(diff_snapshots(spark, before, after))
+
+
+def test_partitioned_and_bucketed_tables_keep_inferred_load(spark, tmp_path):
+    """Partition columns come from directory discovery and bucketed
+    tables read through the session catalog (bucket metadata), so
+    neither gets a pinned schema."""
+    t = spark.createDataFrame([(1, "a", "x"), (2, "b", "y")], "id int, s string, dt string")
+    store = SnapshotStore(spark)
+    part = store.collect({"t": t}, {"t": ["id"]}, str(tmp_path / "p"), partition_by={"t": ["dt"]})
+    assert part.schemas == {}
+    loaded = part.load(spark, "t")
+    assert loaded.columns == ["id", "s", "dt"] and loaded.count() == 2
+    assert loaded.filter("dt = 'x'").count() == 1
+
+    bucketed = store.collect({"t": t}, {"t": ["id"]}, str(tmp_path / "b"), buckets=2)
+    assert bucketed.schemas == {}
+    plan = bucketed.load(spark, "t")._jdf.queryExecution().executedPlan().toString()
+    assert bucketed.catalog_tables["t"] in plan, plan  # read through the catalog
+
+
+# --- driver planning budget ---------------------------------------------------
+
+
+class _GatewayCalls:
+    """Counts py4j commands sent to the JVM while active."""
+
+    def __enter__(self):
+        from py4j import clientserver, java_gateway
+
+        self.calls = 0
+        self._patched = []
+        for cls in (java_gateway.GatewayConnection, clientserver.ClientServerConnection):
+            orig = cls.send_command
+
+            def send_command(conn, command, *args, _orig=orig, **kwargs):
+                self.calls += 1
+                return _orig(conn, command, *args, **kwargs)
+
+            self._patched.append((cls, orig))
+            cls.send_command = send_command
+        return self
+
+    def __exit__(self, *exc):
+        for cls, orig in self._patched:
+            cls.send_command = orig
+
+
+def test_diff_snapshots_planning_gateway_budget(spark, sf_dir, tmp_path):
+    """Planning a 3-table diff (declared key, composite key, no-key
+    table) stays under 1,000 driver→JVM calls.  Column-DSL planners
+    under PySpark 4 made ~7.7k here: every Column call round-trips to
+    record its Python call site."""
+    cat = FileCatalog(spark, sf_dir, TESTDATA_KEYS)
+    tables = ["customer", "lineitem", "events"]
+    keys = cat.primary_keys(tables)
+    store = SnapshotStore(spark)
+    before = store.collect({t: cat.load(t) for t in tables}, keys, str(tmp_path / "b"))
+    edited = {
+        "customer": cat.load("customer").filter("c_custkey % 10 != 0"),
+        "lineitem": cat.load("lineitem").withColumn("l_tax", F.col("l_tax") + 0.01),
+        "events": cat.load("events").filter("event_id % 7 != 0"),
+    }
+    after = store.collect(edited, keys, str(tmp_path / "a"))
+    with _GatewayCalls() as gw:
+        results = diff_snapshots(spark, before, after)
+    assert gw.calls < 1000, gw.calls
+    assert sorted(results) == sorted(tables)
