@@ -897,8 +897,9 @@ def diff_multiset(
             f"before-only={sorted(set(cols) - set(after.columns))} "
             f"after-only={sorted(set(after.columns) - set(cols))}"
         )
+    value_cols = [F.col(ident(c)) for c in cols]
     if after.columns != cols:
-        after = after.select(*cols)
+        after = after.select(*value_cols)
     tagged = before.withColumn("__side", F.lit(0)).unionByName(
         after.withColumn("__side", F.lit(1))
     )
@@ -917,13 +918,12 @@ def diff_multiset(
 
     if strategy == "full_row":
         return finish(
-            tagged.groupBy(*cols).agg(
+            tagged.groupBy(*value_cols).agg(
                 F.count_if(F.col("__side") == 0).alias("n_before"),
                 F.count_if(F.col("__side") == 1).alias("n_after"),
             )
         )
 
-    value_cols = [F.col(f"`{c}`") for c in cols]
     fp = [
         F.xxhash64(*value_cols).alias("__h1"),
         F.xxhash64(F.lit("dbdiff_multiset_salt"), *value_cols).alias("__h2"),
@@ -939,7 +939,7 @@ def diff_multiset(
             )
             .filter(F.col("n_before") != F.col("n_after"))
             .select(
-                *[F.col(f"__row.`{c}`").alias(c) for c in cols],
+                *[F.col(f"__row.{ident(c)}").alias(c) for c in cols],
                 "n_before",
                 "n_after",
             )
@@ -958,7 +958,7 @@ def diff_multiset(
     # dropDuplicates collapses the (diff-sized) probe hits to one row
     # per distinct content — tiny relative to the inputs by definition
     probed = (
-        tagged.select(*[F.col(f"`{c}`") for c in cols], *fp)
+        tagged.select(*value_cols, *fp)
         .join(F.broadcast(changed), ["__h1", "__h2"])
         .dropDuplicates(["__h1", "__h2"])
         .drop("__h1", "__h2")
@@ -1142,7 +1142,7 @@ def _key_sample_hash(key_cols: list[str]) -> Column:
     sides or on neither."""
     return F.expr(
         f"CAST(conv(substr(md5(concat_ws('\\u001f', "
-        + ", ".join(f"CAST(`{c}` AS STRING)" for c in key_cols)
+        + ", ".join(f"CAST({ident(c)} AS STRING)" for c in key_cols)
         + f")), 1, {EST_HASH_HEX}), 16, 10) AS BIGINT)"
     )
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import cut_lineage, load_table, run_jobs, spread
+from dbdiff_spark.io import cut_lineage, load_table, spread
 from dbdiff_spark.ops.text import (
     _D_TOKENS,
     _SPLIT_CASE,
@@ -573,22 +573,19 @@ def dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by the candidate-explosion seatbelt scan and the pair join,
     so the fingerprint aggregation runs exactly once.
 
-    Clustering uses large-star/small-star, not min-label: SimHash is a
-    vocabulary-level hash, so on this template-generated corpus
-    genuinely similar docs are DENSE in hamming space (sf0.1: 77k
-    verified pairs over 7.6k clustered docs, mean degree ~20) and the
-    resulting components are deep — min-label needs diameter rounds
-    (measured 1.6× slower) while big-star contracts in O(log²).  The
+    Clustering is ``bigstar_components``: SimHash is a vocabulary-level
+    hash, so on this template-generated corpus genuinely similar docs
+    are DENSE in hamming space (sf0.1: 77k verified pairs over 7.6k
+    clustered docs, mean degree ~20) and the resulting components are
+    deep, which large-star/small-star contracts in O(log²) rounds.  The
     component-minimum fixpoint is algorithm-independent, so the
     recursive-closure oracle is unchanged."""
     n, w = simhash_corpus_width(spark, sf_dir)
     banded = _simhash_banded(spark, sf_dir, w).localCheckpoint(eager=True)
     assert_band_load(banded, n, "dedup_simhash_neardup")
-    pairs = _simhash_pairs(banded)
-    sym = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS dst")
+    return bigstar_components(
+        _symmetric(_simhash_pairs(banded)), "dedup_simhash_neardup"
     )
-    return bigstar_components(sym)
 
 
 def _simhash_pairs(banded: DataFrame) -> DataFrame:
@@ -746,106 +743,20 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id reachable from it — the group assignment a dedup pipeline
     keeps one representative per.
 
-    Iterative min-label propagation: each round every node adopts the
-    smallest label in its neighborhood; a driver-side convergence count
-    stops the loop (bounded by CC_MAX_ITERS; rounds needed = graph
-    diameter, and near-dup components are shallow by construction).
-    Each round is one join + one groupBy on the EDGE list — the classic
-    Spark formulation.  At much larger graph scales the
-    large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce") halves round count; label propagation is
-    kept here for its direct oracle equivalence.
-
-    The result is independent of iteration order (min over a component
-    is order-free), so the DuckDB oracle can compute it as a recursive
+    Large-star/small-star contraction (``bigstar_components``).  The
+    result is independent of the algorithm (min over a component is
+    order-free), so the DuckDB oracle computes it as a recursive
     transitive closure instead — different algorithm, same fixpoint."""
     pairs = dedup_minhash_lsh(spark, sf_dir)
-    return _min_label_components(
-        pairs.selectExpr("id_a", "id_b")
-    ).select("doc_id", F.col("label").alias("cluster_id"))
+    return bigstar_components(_symmetric(pairs), "neardup_clusters")
 
 
-def _min_label_components(pairs: DataFrame, speculate: bool = True) -> DataFrame:
-    """Min-label propagation over an undirected pair list (columns
-    ``id_a``/``id_b``) → one (doc_id, label) row per node that appears
-    in a pair; shared by the near-dup clustering and entity
-    resolution.
-
-    ``speculate``: overlap each round's convergence count with the
-    next round's contraction (see the loop comment).  True pays ONE
-    wasted contraction in the final round to hide a count per earlier
-    round — a win on many-cheap-round graphs (neardup_clusters
-    5.9 → 3.7 s, entity_resolution 1.97 → 1.79 s measured quiet) and a
-    loss on few-expensive-round dense graphs where the wasted round
-    dominates (the dhash fingerprint graphs: +0.3-0.5 s — those
-    callers pass False and keep the r12 eager sequential shape)."""
-    edges = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
+def _symmetric(pairs: DataFrame) -> DataFrame:
+    """An undirected pair list (``id_a``, ``id_b``) as the symmetric
+    ``(src, dst)`` edge list ``bigstar_components`` consumes."""
+    return pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
         pairs.selectExpr("id_b AS src", "id_a AS dst")
     )
-    # propagation runs over the edge list every round: persist it
-    edges = edges.persist()
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
-        "label", F.col("doc_id")
-    )
-    def _round(lbls: DataFrame) -> DataFrame:
-        nbr_min = (
-            edges.join(lbls, edges.src == lbls.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        return (
-            lbls.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("__changed"),
-            )
-        )
-
-    # cut_lineage, not persist: a cached iterative DataFrame
-    # still carries the full LOGICAL plan, which nests the previous
-    # round's plan — Catalyst re-analysis grows exponentially with
-    # rounds even when execution hits the cache (measured 229 s for
-    # the sf0.1 propagation; 3 s with the lineage cut).  Same
-    # pattern as bigstar_components; with a session checkpoint dir
-    # configured the cut is a RELIABLE checkpoint
-    # (executor-loss-safe).  Eager deliberately (r12 A/B): the lazy
-    # cut (convergence count materializes the round, one job fewer)
-    # measured ~1 s SLOWER per query on the dense dhash graph —
-    # the count's plan over the unmaterialized checkpoint pays the
-    # round's full analysis again; the eager job is cheaper than
-    # that re-analysis, so the two-job shape stays.
-    #
-    # Speculative round pipelining (r13, guide §2.6 — the
-    # bigstar_components pattern): round i's convergence count and
-    # round i+1's materialization both read only checkpointed frames,
-    # so they overlap; a converged round's speculative successor is
-    # discarded (and would be value-identical anyway — propagating
-    # into a converged labeling changes nothing).
-    if speculate:
-        cur = cut_lineage(_round(labels), eager=True)
-        for _ in range(CC_MAX_ITERS):
-            changed, nxt = run_jobs(
-                lambda c=cur: c.filter(F.col("__changed")).count(),
-                lambda l=cur.drop("__changed"): cut_lineage(
-                    _round(l), eager=True
-                ),
-            )
-            labels = cur.drop("__changed")
-            if changed == 0:
-                break
-            cur = nxt
-    else:
-        for _ in range(CC_MAX_ITERS):
-            new_labels = cut_lineage(_round(labels), eager=True)
-            changed = new_labels.filter(F.col("__changed")).count()
-            labels = new_labels.drop("__changed")
-            if changed == 0:
-                break
-    edges.unpersist()
-    return labels
 
 
 # The recursive transitive-closure clustering CTEs, shared by every
@@ -928,14 +839,15 @@ HAVING count(*) > 1
 
 # --- connected components via large-star / small-star ------------------------
 #
-# The at-scale alternative to min-label propagation (neardup_clusters):
-# Kiveris et al., "Connected Components in MapReduce and Beyond" —
-# alternating large-star / small-star contractions converge in
-# O(log² n) rounds on ANY graph (label propagation needs diameter
-# rounds, fatal on chain-shaped graphs), and every round is one
-# groupBy over the edge list.  Same fixpoint: every node maps to the
-# minimum doc_id of its component, so the oracle is the identical
-# recursive closure.
+# The engine's one connected-components algorithm (every near-dup,
+# entity and ingest clustering runs through it): Kiveris et al.,
+# "Connected Components in MapReduce and Beyond" — alternating
+# large-star / small-star contractions converge in O(log² n) rounds on
+# ANY graph (min-label propagation needs diameter rounds, fatal on
+# chain-shaped graphs), and every round is one groupBy over the edge
+# list.  Fixpoint: every node maps to the minimum doc_id of its
+# component, so every oracle is the same recursive closure
+# (``_CC_CLUSTERS_CTES``).
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -972,21 +884,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     ).filter(F.col("src") != F.col("dst"))
 
 
-def bigstar_components(
-    sym_edges: DataFrame,
-    max_iters: int = CC_MAX_ITERS,
-    speculate: bool = True,
-) -> DataFrame:
+def bigstar_components(sym_edges: DataFrame, query: str) -> DataFrame:
     """Connected components of a symmetric edge list ``(src, dst)`` via
     alternating large-star/small-star contraction.  Returns
     ``(doc_id, cluster_id)`` where cluster_id is the component minimum.
 
-    ``speculate`` — overlap each round's convergence count with the
-    next round's contraction (see the loop comment): a win when the
-    loop runs several rounds (the LSH/simhash graphs), a loss when the
-    graph contracts in 1-2 rounds and the one wasted final-round
-    contraction outweighs the hidden counts (the ingest ops'
-    intra-batch exact-copy graphs pass False — r13 A/B)."""
+    Raises ``RuntimeError`` naming ``query`` when ``CC_MAX_ITERS``
+    rounds pass without convergence — a partial contraction is a wrong
+    labeling, never a result."""
     # lineage cut per round — without it the logical plan doubles
     # every contraction and the driver OOMs just stringifying it by
     # round ~6 (the classic iterative-algorithm trap).  cut_lineage
@@ -995,81 +900,37 @@ def bigstar_components(
     edges = cut_lineage(sym_edges)
     nodes = edges.select(F.col("src").alias("doc_id")).distinct()
     # the previous round's (big → small) edge set for the convergence
-    # check — the old shape re-derived it from the symmetrized frame
-    # with a projection + distinct every round; ``subtract`` is
-    # set-semantic on both sides, so the raw multiset is equivalent
+    # check; ``subtract`` is set-semantic on both sides, so the raw
+    # multiset is equivalent to its distinct
     prev = edges.selectExpr(
         "greatest(src, dst) AS src", "least(src, dst) AS dst"
     ).filter(F.col("src") != F.col("dst"))
-    # Speculative round pipelining (r13, guide §2.6): the loop's two
-    # per-round actions — the convergence count of round i and the
-    # contraction of round i+1 — both read only CHECKPOINTED frames,
-    # so they are independent jobs and run overlapped instead of
-    # back-to-back (the rounds are tiny latency-bound jobs at bench SF
-    # and full passes at scale; either way the count was pure critical-
-    # path time).  When the count says converged, the one speculative
-    # contraction is discarded — harmless even if it were used, since
-    # contracting a converged graph reproduces the same edge SET and
-    # every consumer is set-semantic.
-    if speculate:
-        contracted = (
-            cut_lineage(_small_star(_large_star(edges)), eager=True)
-            if max_iters > 0
-            else None
+    for _ in range(CC_MAX_ITERS):
+        contracted = cut_lineage(_small_star(_large_star(edges)))
+        # converged when the (big → small) edge set is stable
+        changed = contracted.subtract(prev).count()
+        prev = contracted
+        # re-symmetrize for the next large-star round
+        edges = contracted.unionByName(
+            contracted.selectExpr("dst AS src", "src AS dst")
         )
-        for _ in range(max_iters):
-            # re-symmetrize for the next large-star round
-            edges = contracted.unionByName(
-                contracted.selectExpr("dst AS src", "src AS dst")
-            )
-            changed, nxt = run_jobs(
-                # converged when the (big → small) edge set is stable
-                lambda c=contracted, p=prev: c.subtract(p).count(),
-                lambda e=edges: cut_lineage(
-                    _small_star(_large_star(e)), eager=True
-                ),
-            )
-            prev = contracted
-            if changed == 0:
-                break
-            contracted = nxt
+        if changed == 0:
+            break
     else:
-        for _ in range(max_iters):
-            contracted = cut_lineage(_small_star(_large_star(edges)))
-            # converged when the (big → small) edge set is stable
-            changed = contracted.subtract(prev).count()
-            prev = contracted
-            # re-symmetrize for the next large-star round
-            edges = contracted.unionByName(
-                contracted.selectExpr("dst AS src", "src AS dst")
-            )
-            if changed == 0:
-                break
+        raise RuntimeError(
+            f"{query}: connected components did not converge within "
+            f"CC_MAX_ITERS={CC_MAX_ITERS} large-star/small-star rounds"
+        )
     # stars: child → root on the (big → small) half; roots map to themselves
     parents = (
         edges.filter(F.col("src") > F.col("dst"))
         .groupBy(F.col("src").alias("doc_id"))
         .agg(F.min("dst").alias("cluster_id"))
     )
-    out = (
-        nodes.join(parents, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
+    return nodes.join(parents, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
     )
-    return out
-
-
-def neardup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the LSH candidate graph via alternating
-    large-star/small-star contraction; output identical to
-    ``neardup_clusters`` (doc_id → component-minimum doc_id)."""
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    base = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS dst")
-    )
-    return bigstar_components(base)
 
 
 # --- record linkage / entity resolution -------------------------------------
@@ -1210,28 +1071,31 @@ FUZZY_MATCH_SQL = _fuzzy_match_sql()
 # Record linkage's second half: the fuzzy candidate pairs above are
 # only EVIDENCE; the entities are the connected components of the pair
 # graph (transitivity: if A≈B and B≈C, one entity {A,B,C} even when
-# dist(A,C) > the threshold).  Reuses the min-label propagation
-# machinery (`_min_label_components`) over part keys and reports one
-# row per multi-member entity with its canonical record (the minimum
-# partkey's name — deterministic).  Scale shape: the pair graph is
+# dist(A,C) > the threshold).  Runs `bigstar_components` over part
+# keys and reports one row per multi-member entity with its canonical
+# record (the minimum partkey's name — deterministic).  Scale shape: the pair graph is
 # block-capped by construction — and TIGHTER here than the pair query's
 # own cap (64 vs 256): the match query surfaces candidate EVIDENCE,
 # while closure cost grows with component size, so the resolution
 # stage bounds its blocks harder (at sf0.1 the 256-cap graph is 2.4M
-# edges in ~1250-node near-cliques — fine for one keyed join+agg per
-# propagation round, hopeless for the oracle's transitive closure).
+# edges in ~1250-node near-cliques — fine for one groupBy per
+# contraction round, hopeless for the oracle's transitive closure).
 # The name join is on the (small) entity-representative set and
 # broadcasts.
 
 ENTITY_BLOCK_CAP = 64
 
 
+def _entity_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = fuzzy_part_match(spark, sf_dir, block_cap=ENTITY_BLOCK_CAP)
+    return _symmetric(pairs.selectExpr("a_key AS id_a", "b_key AS id_b"))
+
+
 def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = fuzzy_part_match(spark, sf_dir, block_cap=ENTITY_BLOCK_CAP).selectExpr(
-        "a_key AS id_a", "b_key AS id_b"
-    )
-    entities = _min_label_components(pairs).select(
-        F.col("doc_id").alias("p_partkey"), F.col("label").alias("entity_id")
+    entities = bigstar_components(
+        _entity_sym_edges(spark, sf_dir), "entity_resolution_parts"
+    ).select(
+        F.col("doc_id").alias("p_partkey"), F.col("cluster_id").alias("entity_id")
     )
     names = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     summary = entities.groupBy("entity_id").agg(
@@ -1277,9 +1141,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per near-dup cluster: the representative to keep (longest member,
     then lowest doc_id) and the member count — the decision table a
     dedup pipeline applies as an anti-join against the corpus.
-    Consumes the big-star labeling (same fixpoint, O(log²) rounds —
-    see ``_split_assignments``)."""
-    clusters = neardup_clusters_bigstar(spark, sf_dir)
+    Consumes the ``neardup_clusters`` labeling."""
+    clusters = neardup_clusters(spark, sf_dir)
     sizes = _neardup_corpus(spark, sf_dir).select(
         "doc_id", F.size("tokens").cast("bigint").alias("n_tokens")
     )
@@ -1904,7 +1767,7 @@ DEDUP_INGEST_SQL = _ingest_sql()
 # ``lsh_ingest``'s scope note punts within-batch duplicates to "the
 # batch operators, then ingest the representatives" — this is that
 # composition as one operator: (1) within-batch candidate pairs (band
-# self-join restricted to the batch), (2) min-label CC elects each
+# self-join restricted to the batch), (2) connected components elect each
 # cluster's minimum-id doc as representative, (3) ONLY representatives
 # probe the stored index, (4) every batch doc inherits its
 # representative's assignment.  Probing |reps| ≤ |batch| docs is the
@@ -1952,8 +1815,7 @@ def dedup_ingest_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     batch_banded = _banded_from_sigs(batch_sigs)
-    # big-star contraction for the intra-batch CC (same component-min
-    # fixpoint as min-label, O(log²) rounds — see _split_assignments)
+    # intra-batch candidate pairs → connected components
     left = batch_banded.alias("x")
     right = batch_banded.alias("y")
     intra_pairs = (
@@ -1968,15 +1830,7 @@ def dedup_ingest_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    clusters = bigstar_components(
-        intra_pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
-            intra_pairs.selectExpr("id_b AS src", "id_a AS dst")
-        ),
-        # intra-batch exact-copy pairs contract in 1-2 rounds: the
-        # speculative loop's wasted final contraction costs more than
-        # the counts it hides (r13 A/B: ingest_full ~10% slower with it)
-        speculate=False,
-    )
+    clusters = bigstar_components(_symmetric(intra_pairs), "dedup_ingest_full")
     assign = (
         batch_sigs.select("doc_id")
         .join(clusters, "doc_id", "left")
@@ -2260,8 +2114,8 @@ FROM scored GROUP BY n_agreeing_bits, est_jaccard_ppm
 # hash is taken over that GROUP id, so entire dup clusters land in one
 # split by construction.  Same 80/10/10 thresholds as the per-doc
 # split.  Shape at scale: the CC labels are the neardup_clusters
-# output (bounded iterative propagation), one keyed left join to
-# attach them, then a map-side-combinable aggregate.
+# output (large-star/small-star), one keyed left join to attach them,
+# then a map-side-combinable aggregate.
 
 
 def _split_assignments(
@@ -2269,13 +2123,9 @@ def _split_assignments(
 ) -> DataFrame:
     """Per-doc (doc_id, group_id, split) over the near-dup corpus —
     the testable inner frame (no cluster may span two splits).
-
-    Consumes the big-star CC labeling: the component-minimum fixpoint
-    is algorithm-independent (min-label stays in the registry as the
-    measured A/B), and a CONSUMER should ride the O(log²)-round
-    contraction, not diameter-round propagation."""
+    ``clusters`` defaults to the ``neardup_clusters`` labeling."""
     if clusters is None:
-        clusters = neardup_clusters_bigstar(spark, sf_dir)
+        clusters = neardup_clusters(spark, sf_dir)
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
     corpus_ids = ids.unionByName(
         ids.selectExpr(f"doc_id + {NEARDUP_OFFSET} AS doc_id")
@@ -2307,63 +2157,33 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _leakage_agg(_split_assignments(spark, sf_dir))
 
 
-def _clusters_one_round_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE propagation round of the CC labeling as a fully LAZY frame —
-    the per-round plan shape, for --explain.  The converged operators
-    (neardup_clusters and its consumers) run driver actions per round
-    at construction time, so inspecting their plan would execute the
-    workload; every round has this same shape, so one round is the
-    honest plan to print."""
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS dst")
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
-    nbr_min = (
-        edges.join(labels, edges.src == labels.doc_id)
-        .groupBy(F.col("dst").alias("doc_id"))
-        .agg(F.min("label").alias("nbr_label"))
-    )
-    return labels.join(nbr_min, "doc_id", "left").selectExpr(
-        "doc_id", "least(label, coalesce(nbr_label, label)) AS cluster_id"
+def _cc_one_round_lazy(sym_edges: DataFrame) -> DataFrame:
+    """ONE large-star/small-star round of ``bigstar_components`` as a
+    fully LAZY ``(doc_id, cluster_id)`` frame — the per-round plan
+    shape, for --explain.  The converged operators run driver actions
+    per round at construction time, so inspecting their plan would
+    execute the workload; every round has this same shape, so one
+    round is the honest plan to print."""
+    return _small_star(_large_star(sym_edges)).selectExpr(
+        "src AS doc_id", "dst AS cluster_id"
     )
 
 
-def _entity_one_round_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One propagation round over the entity pair graph — the lazy plan
-    shape for --explain (the converged operator runs driver actions per
-    round at construction, like neardup_clusters)."""
-    pairs = fuzzy_part_match(spark, sf_dir, block_cap=ENTITY_BLOCK_CAP).selectExpr(
-        "a_key AS id_a", "b_key AS id_b"
-    )
-    edges = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS dst")
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
-    return (
-        edges.join(labels, edges.src == labels.doc_id)
-        .groupBy(F.col("dst").alias("doc_id"))
-        .agg(F.min("label").alias("nbr_label"))
-    )
+def _clusters_explain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cc_one_round_lazy(_symmetric(dedup_minhash_lsh(spark, sf_dir)))
 
 
 EXPLAIN_FRAMES = {
     "dedup_simhash_neardup": lambda spark, sf_dir: _simhash_pairs(
         _simhash_banded(spark, sf_dir)
     ),
-    "neardup_clusters": _clusters_one_round_lazy,
-    "entity_resolution_parts": _entity_one_round_lazy,
+    "neardup_clusters": _clusters_explain_frame,
+    "entity_resolution_parts": lambda spark, sf_dir: _cc_one_round_lazy(
+        _entity_sym_edges(spark, sf_dir)
+    ),
     "leakage_safe_split": lambda spark, sf_dir: _leakage_agg(
         _split_assignments(
-            spark, sf_dir, clusters=_clusters_one_round_lazy(spark, sf_dir)
+            spark, sf_dir, clusters=_clusters_explain_frame(spark, sf_dir)
         )
     ),
 }
@@ -2566,7 +2386,8 @@ QUERIES = {
     "fuzzy_part_match": (fuzzy_part_match, FUZZY_MATCH_SQL),
     "entity_resolution_parts": (entity_resolution_parts, ENTITY_RESOLUTION_SQL),
     "passage_dedup": (passage_dedup, PASSAGE_DEDUP_SQL),
-    "neardup_clusters_bigstar": (neardup_clusters_bigstar, NEARDUP_CLUSTERS_SQL),
+    # kept under its registered name: the same op as neardup_clusters
+    "neardup_clusters_bigstar": (neardup_clusters, NEARDUP_CLUSTERS_SQL),
     "dedup_minhash_lsh": (dedup_minhash_lsh, DEDUP_MINHASH_SQL),
     "dedup_simhash": (dedup_simhash, DEDUP_SIMHASH_SQL),
     "dedup_simhash_neardup": (dedup_simhash_neardup, _simhash_neardup_sql()),

@@ -1,6 +1,6 @@
 """Graph operators over relationship structure latent in the tables.
 
-``neardup_clusters`` / ``bigstar_components`` (ops/dedup.py) cover
+``bigstar_components`` (ops/dedup.py, large-star/small-star) covers
 component-finding; this module adds importance SCORING (PageRank) and
 local STRUCTURE (triangle census) over the part co-purchase graph
 (parts are linked when they appear in the same order).  Rank here is
@@ -122,8 +122,8 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT) AS rank",
             )
         )
-        # Lineage-cut every 5 rounds (bigstar/kmeans policy): a shallow
-        # loop keeps one fused job, deep loops don't blow up re-analysis.
+        # Lineage-cut every 5 rounds: a shallow loop keeps one fused
+        # job, deep loops don't blow up re-analysis.
         if (i + 1) % 5 == 0:
             ranks = cut_lineage(ranks)
     out = (

@@ -753,7 +753,7 @@ FROM hashed GROUP BY dhash HAVING count(*) > 1
 # untouched (pigeonhole), so the band self-join generates a COMPLETE
 # candidate set for radius 3; candidates verify with one popcount
 # expression (``bit_count(a ^ b)``) and verified pairs cluster via the
-# shared min-label connected components.
+# shared large-star/small-star connected components.
 #
 # The jittered corpus plants its perturbations at the hash level —
 # every original spawns a near copy with ``doc_id % 4`` (0..3) bit
@@ -768,7 +768,7 @@ FROM hashed GROUP BY dhash HAVING count(*) > 1
 # expressions (JVM-side in Spark, identical arithmetic in DuckDB).
 #
 # Scale shape: one Arrow-batched codec scan, one shuffle on the
-# (band_idx, band_val) key, expression-only verification, min-label CC
+# (band_idx, band_val) key, expression-only verification, big-star CC
 # over the (sparse) verified graph.  SIZING MATH the 100 TB deployment
 # must respect: expected candidate pairs ≈ N²·B/2^(w+1) even for
 # UNIFORM hashes (B bands of w bits), so w must grow with the corpus —
@@ -903,18 +903,17 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the corpus count (oracle re-derives it identically); the
     banded frame is localCheckpoint'ed once so the codec scan feeds
     both the candidate-explosion seatbelt and the pair join."""
-    from dbdiff_spark.ops.dedup import _min_label_components, assert_band_load
+    from dbdiff_spark.ops.dedup import (
+        _symmetric,
+        assert_band_load,
+        bigstar_components,
+    )
 
     n, w = dhash_corpus_width(spark, sf_dir)
     banded = _dhash_banded(spark, sf_dir, w).localCheckpoint(eager=True)
     assert_band_load(banded, n, "multimodal_dhash_neardup")
-    # speculate=False (r13 A/B): this fingerprint graph is dense and
-    # converges in few EXPENSIVE rounds, so the pipelined loop's one
-    # wasted final-round contraction costs more than the hidden counts
-    # save (3.0 -> 3.6 s measured quiet); the eager sequential shape
-    # stays
-    return _min_label_components(_dhash_pairs(banded), speculate=False).select(
-        "doc_id", F.col("label").alias("cluster_id")
+    return bigstar_components(
+        _symmetric(_dhash_pairs(banded)), "multimodal_dhash_neardup"
     )
 
 
@@ -1166,15 +1165,17 @@ def multimodal_dhash128_neardup(
     count (8x16 at bench N, 4x32 past 2^16 images); the banded frame is
     localCheckpoint'ed once so the codec scan feeds both the
     candidate-explosion seatbelt and the pair join."""
-    from dbdiff_spark.ops.dedup import _min_label_components, assert_band_load
+    from dbdiff_spark.ops.dedup import (
+        _symmetric,
+        assert_band_load,
+        bigstar_components,
+    )
 
     n, w, _b = dhash128_corpus_layout(spark, sf_dir)
     banded = _dhash128_banded(spark, sf_dir, w).localCheckpoint(eager=True)
     assert_band_load(banded, n, "multimodal_dhash128_neardup")
-    # speculate=False — the dhash64 argument above (few expensive
-    # rounds on a dense graph; measured loss with the pipelined loop)
-    return _min_label_components(_dhash128_pairs(banded), speculate=False).select(
-        "doc_id", F.col("label").alias("cluster_id")
+    return bigstar_components(
+        _symmetric(_dhash128_pairs(banded)), "multimodal_dhash128_neardup"
     )
 
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbdiff_spark.sqltext import ident
+
 
 def write_training_shards(
     df: DataFrame,
@@ -46,11 +48,11 @@ def write_training_shards(
     # shard boundaries once order*n_shards exceeds 2^53
     out = df.withColumn(
         "shard_id",
-        F.expr(f"CAST((CAST(`{order_col}` AS BIGINT) * {n_shards}) div {total} AS BIGINT)"),
+        F.expr(f"CAST((CAST({ident(order_col)} AS BIGINT) * {n_shards}) div {total} AS BIGINT)"),
     )
     writer = (
         out.repartitionByRange(n_shards, "shard_id")
-        .sortWithinPartitions("shard_id", order_col)
+        .sortWithinPartitions("shard_id", F.col(ident(order_col)))
         .write.mode("errorifexists")
         .partitionBy("shard_id")
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from dbdiff_spark.config import DbConfig
+from dbdiff_spark.sqltext import ident
 
 
 def write_diff_jdbc(
@@ -37,7 +38,7 @@ def write_diff_jdbc(
     out = df
     for c, t in df.dtypes:
         if t.startswith(("array", "map", "struct")):
-            out = out.withColumn(c, F.col(f"`{c}`").cast("string"))
+            out = out.withColumn(c, F.col(ident(c)).cast("string"))
     if out.rdd.getNumPartitions() > max_connections:
         out = out.coalesce(max_connections)
     out.write.mode(mode).jdbc(

@@ -39,6 +39,7 @@ from dbdiff_spark.diff import (
     diff_tables,
 )
 from dbdiff_spark.io import local_frame
+from dbdiff_spark.sqltext import ident
 
 TABLE_ADDED = "TABLE_ADDED"
 TABLE_DROPPED = "TABLE_DROPPED"
@@ -61,7 +62,7 @@ def _group_expr(key: list[str], groups: int) -> F.Column:  # type: ignore[name-d
     """Deterministic row → hash-group assignment on the key columns.
     Duplicate keys land in one group, so per-group comparison is stable
     under the diff's duplicate-key collapse."""
-    return F.pmod(F.hash(*[F.col(f"`{k}`") for k in key]), F.lit(groups))
+    return F.pmod(F.hash(*[F.col(ident(k)) for k in key]), F.lit(groups))
 
 
 def _group_fingerprints(
@@ -81,7 +82,7 @@ def _group_fingerprints(
     (xor AND sum both preserved), not a structural duplicate pattern.
     The sum aggregates as ``decimal(38,0)`` so it is exact and cannot
     overflow (≥1e19 rows/group would be needed) under ANSI on or off."""
-    cols = [F.col(f"`{c}`") for c in df.columns]
+    cols = [F.col(ident(c)) for c in df.columns]
     xx = F.xxhash64(*cols)
     rows = (
         df.groupBy(_group_expr(key, groups).alias("g"))
@@ -400,16 +401,16 @@ class SnapshotStore:
                 except Exception:
                     obs = None
             if buckets > 0:
-                ident = self._catalog_identifier(snapshot_root, name)
+                table_id = self._catalog_identifier(snapshot_root, name)
                 (
                     to_write.write.mode("errorifexists")
                     .bucketBy(buckets, *key)
                     .sortBy(*key)
                     .option("path", path)
                     .format("parquet")
-                    .saveAsTable(ident)
+                    .saveAsTable(table_id)
                 )
-                snap.catalog_tables[name] = ident
+                snap.catalog_tables[name] = table_id
             elif format == "parquet":
                 w = to_write.write.mode("errorifexists")
                 if name in partition_by:

@@ -36,3 +36,23 @@ def last_job_id(spark):
     equal readings around a call mean the call submitted no job."""
     tracker = spark.sparkContext.statusTracker()
     return lambda: max(tracker.getJobIdsForGroup(), default=-1)
+
+
+def union_find_labels(pairs):
+    """Pure-Python union-find over an undirected pair iterable: node →
+    minimum node of its component, for every node in a pair — the
+    independent model the connected-components tests compare against."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its component's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}

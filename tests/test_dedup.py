@@ -1,14 +1,20 @@
-"""Dedup-tier unit tests: the two connected-components formulations
-must agree, and big-star must converge fast on shapes that defeat
-diameter-bound label propagation (SURVEY §7.1 M5 extension tier)."""
+"""Dedup-tier unit tests: large-star/small-star connected components
+equal a pure-Python union-find on every graph shape — including the
+long paths that defeat diameter-bound label propagation — and fail
+loudly when the round budget runs out (SURVEY §7.1 M5 extension
+tier)."""
 
+import random
+from collections import Counter
+
+import pytest
+from conftest import union_find_labels
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from dbdiff_spark.ops.dedup import (
-    bigstar_components,
-    neardup_clusters,
-    neardup_clusters_bigstar,
-)
+from dbdiff_spark.ops import dedup
+from dbdiff_spark.ops.dedup import bigstar_components
 
 
 def _sym(spark, pairs):
@@ -16,30 +22,82 @@ def _sym(spark, pairs):
     return df.unionByName(df.selectExpr("dst AS src", "src AS dst"))
 
 
-def test_bigstar_equals_label_propagation(spark, sf_dir):
-    a = {tuple(r) for r in neardup_clusters(spark, sf_dir).collect()}
-    b = {tuple(r) for r in neardup_clusters_bigstar(spark, sf_dir).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_bigstar_chain_graph(spark):
     # a 64-node path: diameter 63, label propagation would need ~63
     # rounds — big-star must label every node with the chain minimum
     # within the default iteration budget (O(log^2 n) rounds)
     chain = _sym(spark, [(i, i + 1) for i in range(63)])
-    out = bigstar_components(chain).collect()
+    out = bigstar_components(chain, "test").collect()
     assert len(out) == 64
     assert all(r.cluster_id == 0 for r in out)
 
 
 def test_bigstar_multiple_components_and_singleton_pair(spark):
     edges = _sym(spark, [(10, 11), (11, 12), (20, 21), (5, 30)])
-    got = {(r.doc_id, r.cluster_id) for r in bigstar_components(edges).collect()}
+    got = {(r.doc_id, r.cluster_id) for r in bigstar_components(edges, "test").collect()}
     assert got == {
         (10, 10), (11, 10), (12, 10),
         (20, 20), (21, 20),
         (5, 5), (30, 5),
     }
+
+
+@st.composite
+def cc_graphs(draw):
+    """A path of ≥1000 nodes plus up to three more components (paths,
+    stars, cliques, random forests), as an edge list over node ids that
+    are either in path order or shuffled."""
+    shapes = ["path"] + draw(
+        st.lists(st.sampled_from(["path", "star", "clique", "forest"]), max_size=3)
+    )
+    edges, n = [], 0
+    for i, shape in enumerate(shapes):
+        if shape == "path":
+            size = draw(st.integers(1000, 1300) if i == 0 else st.integers(2, 300))
+            edges += [(n + j, n + j + 1) for j in range(size - 1)]
+        elif shape == "star":
+            size = draw(st.integers(2, 200))
+            edges += [(n, n + j) for j in range(1, size)]
+        elif shape == "clique":
+            size = draw(st.integers(2, 20))
+            edges += [(n + a, n + b) for a in range(size) for b in range(a + 1, size)]
+        else:
+            # each node links to a random earlier node, or starts a new tree
+            parents = draw(
+                st.lists(st.integers(-1, 10**6), min_size=1, max_size=300)
+            )
+            size = len(parents) + 1
+            edges += [
+                (n + j, n + p % j)
+                for j, p in enumerate(parents, start=1)
+                if p >= 0
+            ]
+        n += size
+    ids = list(range(n))
+    if draw(st.booleans()):
+        random.Random(draw(st.integers(0, 2**32))).shuffle(ids)
+    base = draw(st.sampled_from([0, 2**40]))
+    return [(base + ids[a], base + ids[b]) for a, b in edges]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(pairs=cc_graphs())
+def test_bigstar_equals_union_find(spark, pairs):
+    out = bigstar_components(_sym(spark, pairs), "test").collect()
+    assert {r.doc_id: r.cluster_id for r in out} == union_find_labels(pairs)
+
+
+def test_bigstar_raises_when_rounds_run_out(spark, monkeypatch):
+    """A 1000-node path needs more than two contraction rounds: with a
+    budget of two, the partial labeling must not escape."""
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 2)
+    path = _sym(spark, [(i, i + 1) for i in range(999)])
+    with pytest.raises(RuntimeError, match="long_path_query.*CC_MAX_ITERS=2"):
+        bigstar_components(path, "long_path_query")
 
 
 def test_fuzzy_part_match_blocking_and_band(spark, sf_dir):
@@ -273,25 +331,9 @@ def test_entity_resolution_transitivity_and_conservation(spark, sf_dir):
     ents = entity_resolution_parts(spark, sf_dir).collect()
     assert ents, "fixture must produce fuzzy entities"
 
-    # rebuild components in python as the independent model
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for p in pairs:
-        ra, rb = find(p.a_key), find(p.b_key)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp: dict = {}
-    for k in parent:
-        comp.setdefault(find(k), set()).add(k)
-    expect = {(root, len(members)) for root, members in comp.items()}
+    labels = union_find_labels((p.a_key, p.b_key) for p in pairs)
+    expect = set(Counter(labels.values()).items())
     assert {(e.entity_id, e.n_members) for e in ents} == expect
-    assert all(e.entity_id == min(comp[e.entity_id]) for e in ents)
 
 
 def test_ingest_full_members_inherit_representative(spark, sf_dir):

@@ -655,3 +655,58 @@ def test_adversarial_column_names_match_dsl_reference(spark, mode, path):
         assert {s for s, *_ in got} == {INSERTED, DELETED}
     # the sinks' ordered collect quotes the odd key too
     assert len(res.rows(100)) == len(got)
+
+
+def _odd_out_names():
+    return [c if c != "diff_status" else "diff_status__data" for c in _ODD_COLS]
+
+
+@pytest.mark.parametrize("strategy", ["full_row", "one_pass", "hash_first"])
+def test_adversarial_column_names_through_diff_multiset(spark, strategy):
+    """Every diff_multiset strategy quotes the odd names (backticks
+    included) and matches a Python multiset difference."""
+    from collections import Counter
+
+    from dbdiff_spark.diff import diff_multiset
+
+    before = spark.createDataFrame(_ODD_BEFORE, _ODD_SCHEMA)
+    after = spark.createDataFrame(_ODD_AFTER, _ODD_SCHEMA)
+    out = diff_multiset(before, after, strategy=strategy)
+    names = _odd_out_names()
+    nb, na = Counter(_ODD_BEFORE), Counter(_ODD_AFTER)
+    expected = {
+        (row, INSERTED if na[row] > nb[row] else DELETED, abs(na[row] - nb[row]))
+        for row in nb | na
+        if na[row] != nb[row]
+    }
+    got = {
+        (tuple(r[c] for c in names), r["diff_status"], r["n_rows"])
+        for r in out.collect()
+    }
+    assert got == expected
+
+
+def test_adversarial_column_names_through_tracked_snapshot_diff(spark, tmp_path):
+    """Change tracking hashes the odd key and fingerprints every odd
+    column; the incremental diff equals the independent reference."""
+    from dbdiff_spark.snapshot import SnapshotStore, diff_snapshots
+
+    store = SnapshotStore(spark)
+    snaps = [
+        store.collect(
+            {"t": spark.createDataFrame(rows, _ODD_SCHEMA)},
+            {"t": [_ODD_KEY]},
+            str(tmp_path / side),
+            track_changes=True,
+        )
+        for side, rows in (("b", _ODD_BEFORE), ("a", _ODD_AFTER))
+    ]
+    res = diff_snapshots(spark, *snaps, mode=DiffMode.TYPED, incremental=True)["t"]
+    names = _odd_out_names()
+    expected = _dsl_reference(
+        spark.createDataFrame(_ODD_BEFORE, _ODD_SCHEMA).toDF(*names),
+        spark.createDataFrame(_ODD_AFTER, _ODD_SCHEMA).toDF(*names),
+        [_ODD_KEY],
+        DiffMode.TYPED,
+    )
+    assert _as_tuples(res) == expected

@@ -5,6 +5,7 @@ BMP/PPM/WAV codecs (golden spec bytes + round-trip properties)."""
 import hashlib
 
 import pytest
+from conftest import union_find_labels
 
 from dbdiff_spark.ops import multimodal
 
@@ -295,24 +296,13 @@ def test_dhash_neardup_recovers_planted_jitter_exactly(spark, sf_dir):
         imgs[r.doc_id + DHASH_FAR_OFFSET] = far
 
     # brute-force union-find over ALL pairs at the radius
-    parent = {i: i for i in imgs}
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
     ids = sorted(imgs)
-    in_pair = set()
-    for ai, a in enumerate(ids):
-        for b in ids[ai + 1 :]:
-            if bin(imgs[a] ^ imgs[b]).count("1") <= DHASH_RADIUS:
-                in_pair.update((a, b))
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    expected = {i: find(i) for i in sorted(in_pair)}
+    expected = union_find_labels(
+        (a, b)
+        for ai, a in enumerate(ids)
+        for b in ids[ai + 1 :]
+        if bin(imgs[a] ^ imgs[b]).count("1") <= DHASH_RADIUS
+    )
 
     actual = {
         r.doc_id: r.cluster_id

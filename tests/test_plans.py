@@ -269,16 +269,36 @@ def test_diff_estimate_samples_before_classification(spark, sf_dir):
     assert "Union" in plan and "FullOuter" not in plan
 
 
-def test_explain_frames_are_lazy_and_distributed(spark, sf_dir):
+def test_explain_frames_are_lazy_and_distributed(spark, sf_dir, last_job_id):
     """The --explain override for eagerly-materializing queries must
     (a) expose the DISTRIBUTED plan (parquet scans, not a local
-    result) and (b) not leave a cache behind (review regression:
-    --explain used to execute q11 and print a LocalTableScan)."""
+    result), (b) run none of the workload and (c) not leave a cache
+    behind (review regression: --explain used to execute q11 and print
+    a LocalTableScan)."""
     frames = entry.explain_frames()
-    assert "q11_important_parts" in frames
     jsc = spark.sparkContext._jsc  # type: ignore[attr-defined]
-    before_n = jsc.getPersistentRDDs().size()
-    df = frames["q11_important_parts"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" in plan and "LocalTableScan" not in plan
-    assert jsc.getPersistentRDDs().size() <= before_n
+    tracker = spark.sparkContext.statusTracker()
+    # q11 plus the connected-components users (one lazy contraction round)
+    for name in [
+        "q11_important_parts",
+        "neardup_clusters",
+        "entity_resolution_parts",
+        "leakage_safe_split",
+    ]:
+        before_n = jsc.getPersistentRDDs().size()
+        frames[name](spark, sf_dir)  # pays the once-per-session io.spread width probes
+        before_job = last_job_id()
+        df = frames[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan parquet" in plan and "LocalTableScan" not in plan, name
+        # io.load_table infers each source's schema with one parquet
+        # footer-read job per call; any other job (a CC round's count or
+        # checkpoint, a seatbelt scan) means the frame ran the workload
+        stages = [
+            tracker.getStageInfo(s).name
+            for j in tracker.getJobIdsForGroup()
+            if j > before_job
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert all(s.startswith("parquet at ") for s in stages), f"{name}: {stages}"
+        assert jsc.getPersistentRDDs().size() <= before_n, name
