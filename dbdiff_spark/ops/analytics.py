@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import load_table
+from dbdiff_spark.io import cut_lineage, load_table
 
 
 def _dsum(expr: str) -> str:
@@ -801,7 +801,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup consume it; unpinned, each re-runs the orders groupBy) and
     # fuse the derivation scalars — total plus all three axes' min/max
     # — into ONE agg job instead of four sequential ones (r12)
-    cust = cust.localCheckpoint(eager=False)
+    cust = cut_lineage(cust, eager=False)
     s = cust.agg(
         F.count(F.lit(1)).alias("n"),
         *[

@@ -569,7 +569,7 @@ def dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Band width w (and with it the 6·w-bit fingerprint) derives from
     the corpus count at call time — see the section header for the
     sizing law; the DuckDB twin re-derives the identical w from its
-    own count(*).  The banded frame is localCheckpoint'ed once and
+    own count(*).  The banded frame's lineage is cut once and
     shared by the candidate-explosion seatbelt scan and the pair join,
     so the fingerprint aggregation runs exactly once.
 
@@ -581,7 +581,7 @@ def dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     component-minimum fixpoint is algorithm-independent, so the
     recursive-closure oracle is unchanged."""
     n, w = simhash_corpus_width(spark, sf_dir)
-    banded = _simhash_banded(spark, sf_dir, w).localCheckpoint(eager=True)
+    banded = cut_lineage(_simhash_banded(spark, sf_dir, w), eager=True)
     assert_band_load(banded, n, "dedup_simhash_neardup")
     return bigstar_components(
         _symmetric(_simhash_pairs(banded)), "dedup_simhash_neardup"
@@ -1702,8 +1702,8 @@ def dedup_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the batch side's two consumers cannot share an exchange across
     the aggregate/broadcast boundary, plus the old side).  Identical
     rows: a document's signature does not depend on its slice."""
-    sigs = _signatures_spark(_neardup_corpus(spark, sf_dir)).localCheckpoint(
-        eager=True
+    sigs = cut_lineage(
+        _signatures_spark(_neardup_corpus(spark, sf_dir)), eager=True
     )
     new_b = _banded_from_sigs(sigs.filter(F.col("doc_id") >= NEARDUP_OFFSET))
     old_b = _banded_from_sigs(sigs.filter(F.col("doc_id") < NEARDUP_OFFSET))
@@ -1806,7 +1806,7 @@ def dedup_ingest_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature of a document does not depend on which slice consumes
     it."""
     corpus = _neardup_corpus(spark, sf_dir)
-    sigs = _signatures_spark(corpus).localCheckpoint(eager=True)
+    sigs = cut_lineage(_signatures_spark(corpus), eager=True)
     hcols = [f"h{s}" for s in range(N_HASHES)]
     arriving = sigs.filter(F.col("doc_id") >= NEARDUP_OFFSET)
     batch_sigs = arriving.unionByName(

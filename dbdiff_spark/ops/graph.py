@@ -38,10 +38,12 @@ Scale shape:
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import cut_lineage, load_table
+from dbdiff_spark.io import cut_lineage, load_table, pinned
 
 PR_ITERS = 3
 PR_SCALE = 10**9  # initial rank units per node
@@ -94,20 +96,34 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 parts by integer PageRank over the co-purchase graph
     (3 iterations, damping 0.85); degree and final rank exposed."""
-    # Persist the raw edge list FIRST: the HOF pair expansion is the
-    # expensive producer here, and degree, the iteration edge list, the
-    # rank seed and the final degree join all read it — unpersisted,
-    # each would re-run the expansion (measured 4 rebuilds per call).
-    edges = _copurchase_edges(spark, sf_dir).persist()
+    # Pin the raw edge list FIRST: the pair expansion is the expensive
+    # producer here, and degree, the iteration edge list, the rank seed
+    # and the final degree join all read it — unpinned, each would
+    # re-run the expansion (measured 4 rebuilds per call).
+    return _pinned_cut(*_pagerank_frames(spark, sf_dir))
+
+
+def _pinned_cut(pins: list[DataFrame], out: DataFrame) -> DataFrame:
+    """Cut the bounded lazy ``out`` while every frame in ``pins`` (in
+    order) is cached, then release them — each graph entry's cache
+    lifecycle; the lazy ``out`` alone is its --explain frame."""
+    with ExitStack() as stack:
+        for df in pins:
+            stack.enter_context(pinned(df))
+        return cut_lineage(out, eager=True)
+
+
+def _pagerank_frames(spark: SparkSession, sf_dir: str):
+    edges = _copurchase_edges(spark, sf_dir)
     # Degree folded into the edge list ONCE so each iteration is a
     # single keyed join + keyed aggregation (not join-deg + join-edges).
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # Persist the degree-annotated edge list ALREADY hash-partitioned on
-    # the iteration join key: every round's join then reuses the cached
-    # distribution instead of re-shuffling the (data-sized) edge side —
-    # only the node-sized rank vector moves per iteration.
+    # The degree-annotated edge list is pinned ALREADY hash-partitioned
+    # on the iteration join key: every round's join then reuses the
+    # cached distribution instead of re-shuffling the (data-sized) edge
+    # side — only the node-sized rank vector moves per iteration.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges_deg = edges.join(deg, "src").repartition(n_part, "src").persist()
+    edges_deg = edges.join(deg, "src").repartition(n_part, "src")
     ranks = deg.select("src", F.lit(PR_SCALE).cast("long").alias("rank"))
     teleport = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
     for i in range(PR_ITERS):
@@ -132,7 +148,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rank").desc(), F.col("p_partkey"))
         .limit(PR_TOP_K)
     )
-    return out
+    return [edges, edges_deg], out
 
 
 def _pagerank_sql() -> str:
@@ -186,8 +202,12 @@ PAGERANK_SQL = _pagerank_sql()
 
 def triangle_census(edges: DataFrame) -> DataFrame:
     """Census over a SYMMETRIC distinct (src, dst) edge list: nodes,
-    undirected edges, wedges under degree orientation, triangles."""
-    edges = edges.persist()
+    undirected edges, wedges under degree orientation, triangles — one
+    row."""
+    return _pinned_cut(*_census_frames(edges))
+
+
+def _census_frames(edges: DataFrame):
     deg = edges.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -198,7 +218,6 @@ def triangle_census(edges: DataFrame) -> DataFrame:
             "(deg_s < deg_d) OR (deg_s = deg_d AND src < dst)"
         )
         .select("src", "dst")
-        .persist()
     )
     # Edge-iterator form: instead of MATERIALIZING the wedge set (41M
     # rows at sf0.1) and semi-joining it against the edge list, build
@@ -230,7 +249,7 @@ def triangle_census(edges: DataFrame) -> DataFrame:
     n_tri = tri.selectExpr(
         "coalesce(CAST(sum(c) AS BIGINT), 0) AS n"
     ).withColumn("k", F.lit(1))
-    return (
+    return [edges, oriented], (
         n_nodes.selectExpr("k", "n AS n_nodes")
         .join(n_edges.selectExpr("k", "n AS n_edges"), "k")
         .join(n_wedges.selectExpr("k", "n AS n_wedges"), "k")
@@ -305,11 +324,15 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-dst argmax — all keyed shuffles, no broadcast of anything
     data-sized, no driver state.  Community sizes (not per-node rows)
     keep the output community-bounded."""
+    return _pinned_cut(*_label_propagation_frames(spark, sf_dir))
+
+
+def _label_propagation_frames(spark: SparkSession, sf_dir: str):
     edges = _copurchase_edges(spark, sf_dir)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges_p = edges.repartition(n_part, "src").persist()
-    # seed labels from the PERSISTED edge list — deriving them from the
-    # raw plan would re-run the whole HOF pair expansion a second time
+    edges_p = edges.repartition(n_part, "src")
+    # seed labels from the PINNED edge list — deriving them from the
+    # raw plan would re-run the whole pair expansion a second time
     labels = edges_p.select("src").distinct().withColumn("label", F.col("src"))
     for i in range(LP_ITERS):
         # argmax by (count DESC, label ASC) as max(struct(c, -label)) —
@@ -325,7 +348,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if (i + 1) % 5 == 0:
             labels = cut_lineage(labels)
-    return (
+    return [edges_p], (
         labels.groupBy(F.col("label").alias("community_id"))
         .agg(F.count(F.lit(1)).alias("n_members"))
     )
@@ -459,7 +482,7 @@ SELECT 'pair' AS kind, item_a, item_b, support FROM (
 # output — the same fixed-iteration discipline as pagerank and kmeans.
 #
 # Scale shape per round: one degree aggregation + two semi-join-shaped
-# keep filters over the persisted current edge list (monotonically
+# keep filters over the pinned current edge list (monotonically
 # shrinking; kept node sets are degree-filtered and AQE build-sides
 # them when small).  Lineage stays 3 rounds deep — no checkpoint
 # needed; a run-to-convergence variant would cut with io.cut_lineage
@@ -470,8 +493,14 @@ KCORE_ROUNDS = 3
 
 
 def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cur = _copurchase_edges(spark, sf_dir).persist()
-    stats = []
+    # every round's edge list is pinned: the next round and the
+    # round's stats both read it
+    return _pinned_cut(*_kcore_frames(spark, sf_dir))
+
+
+def _kcore_frames(spark: SparkSession, sf_dir: str):
+    cur = _copurchase_edges(spark, sf_dir)
+    rounds, stats = [cur], []
     for rnd in range(1, KCORE_ROUNDS + 1):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= KCORE_K).select("src")
@@ -479,8 +508,8 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur.join(keep, "src")
             .join(keep.withColumnRenamed("src", "dst"), "dst")
             .select("src", "dst")
-            .persist()
         )
+        rounds.append(cur)
         stats.append(
             cur.agg(
                 F.countDistinct("src").alias("n_nodes"),
@@ -490,7 +519,7 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)
-    return out.orderBy("round")
+    return rounds, out.orderBy("round")
 
 
 def _kcore_sql() -> str:
@@ -523,6 +552,13 @@ ORDER BY round
 
 KCORE_SQL = _kcore_sql()
 
+
+EXPLAIN_FRAMES = {
+    "pagerank_copurchase": lambda spark, sf_dir: _pagerank_frames(spark, sf_dir)[1],
+    "kcore_peeling": lambda spark, sf_dir: _kcore_frames(spark, sf_dir)[1],
+    "triangle_count": lambda spark, sf_dir: _census_frames(_copurchase_edges(spark, sf_dir))[1],
+    "label_propagation": lambda spark, sf_dir: _label_propagation_frames(spark, sf_dir)[1],
+}
 
 QUERIES = {
     "pagerank_copurchase": (pagerank_copurchase, PAGERANK_SQL),

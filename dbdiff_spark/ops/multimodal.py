@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import load_table
+from dbdiff_spark.io import cut_lineage, load_table
 
 FEATURE_DIM = 8
 
@@ -901,7 +901,7 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance ≤ ``DHASH_RADIUS`` of another gets ``(doc_id, cluster_id)``
     with cluster_id = the component-minimum doc_id.  Band width derives
     from the corpus count (oracle re-derives it identically); the
-    banded frame is localCheckpoint'ed once so the codec scan feeds
+    banded frame's lineage is cut once so the codec scan feeds
     both the candidate-explosion seatbelt and the pair join."""
     from dbdiff_spark.ops.dedup import (
         _symmetric,
@@ -910,7 +910,7 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n, w = dhash_corpus_width(spark, sf_dir)
-    banded = _dhash_banded(spark, sf_dir, w).localCheckpoint(eager=True)
+    banded = cut_lineage(_dhash_banded(spark, sf_dir, w), eager=True)
     assert_band_load(banded, n, "multimodal_dhash_neardup")
     return bigstar_components(
         _symmetric(_dhash_pairs(banded)), "multimodal_dhash_neardup"
@@ -1162,8 +1162,8 @@ def multimodal_dhash128_neardup(
     """128-bit perceptual near-duplicate clusters at hamming radius <=
     ``DHASH128_RADIUS``: ``(doc_id, cluster_id)`` with cluster_id the
     component-minimum doc_id.  Band layout derives from the corpus
-    count (8x16 at bench N, 4x32 past 2^16 images); the banded frame is
-    localCheckpoint'ed once so the codec scan feeds both the
+    count (8x16 at bench N, 4x32 past 2^16 images); the banded frame's
+    lineage is cut once so the codec scan feeds both the
     candidate-explosion seatbelt and the pair join."""
     from dbdiff_spark.ops.dedup import (
         _symmetric,
@@ -1172,7 +1172,7 @@ def multimodal_dhash128_neardup(
     )
 
     n, w, _b = dhash128_corpus_layout(spark, sf_dir)
-    banded = _dhash128_banded(spark, sf_dir, w).localCheckpoint(eager=True)
+    banded = cut_lineage(_dhash128_banded(spark, sf_dir, w), eager=True)
     assert_band_load(banded, n, "multimodal_dhash128_neardup")
     return bigstar_components(
         _symmetric(_dhash128_pairs(banded)), "multimodal_dhash128_neardup"

@@ -39,7 +39,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import load_table, local_frame, one_file, spread
+from dbdiff_spark.io import (
+    cut_lineage,
+    load_table,
+    local_frame,
+    one_file,
+    pinned,
+    spread,
+)
 from dbdiff_spark.ops.similarity import _dot_duck, _dot_spark, _vectors, _VECTORS_SQL
 from dbdiff_spark.ops.text import _D_TOKENS, _TOKENS, bm25_rank, BM25_RANK_SQL
 
@@ -350,14 +357,11 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect).  Output is integer-only (selection step + original
     candidate rank); the float objective stays internal to both
     engines."""
-    cand = _mmr_candidates(spark, sf_dir).persist()
-    try:
+    with pinned(_mmr_candidates(spark, sf_dir)) as cand:
         rows = cand.select("cand_rank", "doc_id", "rel").collect()
         sims = {
             (r.a, r.b): r.cos for r in _mmr_pair_sims(cand).collect()
         }
-    finally:
-        cand.unpersist()
     schema = "rank int, doc_id bigint, cand_rank int"
     remaining = {r.doc_id: r for r in rows}
     if not remaining:  # empty shortlist (no probe vector / empty corpus)
@@ -464,15 +468,13 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair count at adoption time.  Ties break on the raw pair bytes
     (placeholders < letters, identical in both engines)."""
     # spread BEFORE the regexp/explode: the one-file bench scan plans as
-    # a single task, and the persisted frame would pin every later
+    # a single task, and the pinned frame would tie every later
     # round's replace+substr chain to one core (io.spread docstring)
     docs = spread(load_table(spark, sf_dir, "documents"), spark, "doc_id")
-    toks = (
-        docs.selectExpr(f"explode_outer({_TOKENS}) AS tok")
-        .filter(F.col("tok").isNotNull() & (F.length("tok") >= 2))
-        .persist()
+    toks = docs.selectExpr(f"explode_outer({_TOKENS}) AS tok").filter(
+        F.col("tok").isNotNull() & (F.length("tok") >= 2)
     )
-    try:
+    with pinned(toks):
         seg = F.col("tok")
         raws: list = []
         expansions: list = []
@@ -498,8 +500,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             expansions.append(expansion)
             out_rows.append((step, expansion, top["n"]))
             seg = F.replace(seg, F.lit(top["pair"]), F.lit(chr(step)))
-    finally:
-        toks.unpersist()
     return local_frame(
         spark, out_rows, "step int, merge_text string, n_occurrences bigint"
     )
@@ -703,7 +703,7 @@ def _bpe_batch_learn(
     100 TB it is the difference between R corpus passes and one.
 
     Each round materializes the re-segmented vocabulary once
-    (``localCheckpoint``) and applies only ITS OWN ≤m replaces on top of
+    (``io.cut_lineage``) and applies only ITS OWN ≤m replaces on top of
     the previous round's segments, so total replace passes are R·m —
     not the R²·m/2 a cumulative expression chain from the raw tokens
     would cost (and the expression depth stays ≤ m, clear of analyzer
@@ -738,15 +738,15 @@ def _bpe_batch_learn(
     docs = spread(load_table(spark, sf_dir, "documents"), spark, "doc_id")
     if where:
         docs = docs.filter(where)
-    cur = (
+    # lazy: round 1's shortlist job materializes the checkpoint — the
+    # corpus pass and the first pair count fuse into one job (the same
+    # trick the per-round re-segmentation uses below)
+    cur = cut_lineage(
         docs.selectExpr(f"explode_outer({tokens_expr}) AS s")
         .filter(F.col("s").isNotNull() & (F.length("s") >= 2))
         .groupBy("s")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        # lazy: round 1's shortlist job materializes the checkpoint —
-        # the corpus pass and the first pair count fuse into one job
-        # (the same trick the per-round re-segmentation uses below)
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("w")),
+        eager=False,
     )
     expansions: list = []
     rounds_adopted: list = []
@@ -801,10 +801,9 @@ def _bpe_batch_learn(
             # pass whose result nothing reads
             # lazy: the NEXT round's shortlist job materializes the
             # checkpoint — one vocabulary-sized job per round, not two
-            cur = (
-                cur.select(seg.alias("s"), "w")
-                .filter(F.length("s") >= 2)
-                .localCheckpoint(eager=False)
+            cur = cut_lineage(
+                cur.select(seg.alias("s"), "w").filter(F.length("s") >= 2),
+                eager=False,
             )
     return out_rows, rounds_adopted, expansions
 
@@ -943,7 +942,7 @@ def _bpe_apply_report(
             seg = F.replace(seg, F.lit(pair), F.lit(code_char))
         cur = cur.withColumn("seg", seg)
         if lo + _BPE_APPLY_STAGE < len(pair_codes):
-            cur = cur.localCheckpoint(eager=True)
+            cur = cut_lineage(cur, eager=True)
     cur = cur.withColumn("recon", F.col("seg"))
     # expansions are fully expanded (base chars only) — order-free
     for lo in range(len(expansions), 0, -_BPE_APPLY_STAGE):
@@ -952,7 +951,7 @@ def _bpe_apply_report(
             recon = F.replace(recon, F.lit(_bpe_code(k)), F.lit(expansions[k - 1]))
         cur = cur.withColumn("recon", recon)
         if lo - _BPE_APPLY_STAGE > 0:
-            cur = cur.localCheckpoint(eager=True)
+            cur = cut_lineage(cur, eager=True)
     return (
         corpus.join(cur, "tok")
         .groupBy("doc_id")

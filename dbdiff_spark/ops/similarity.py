@@ -31,7 +31,15 @@ from pyspark.sql import functions as F
 
 import logging
 
-from dbdiff_spark.io import load_table, local_frame, one_file, run_jobs, spread
+from dbdiff_spark.io import (
+    cut_lineage,
+    load_table,
+    local_frame,
+    one_file,
+    pinned,
+    run_jobs,
+    spread,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -162,8 +170,8 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings file plans as ONE scan task, and everything the
     # similarity family hangs off this frame — the interpreted
     # dot-product norms, Lloyd assignment rounds, PQ grid encodes,
-    # and (critically) the ``.persist()`` the build entries wrap it
-    # in, whose cache keeps the scan's partitioning — inherits that
+    # and (critically) the ``io.pinned`` cache the build entries hold
+    # it in, which keeps the scan's partitioning — inherits that
     # 1-task ceiling (r12 profile: 1-2 s single-task stages with 31
     # idle cores under every IVF/PQ build).  At real scale the input
     # arrives in many splits and this is a cheap rebalance.
@@ -996,8 +1004,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns per-cell membership count and grid-exact inertia.
     """
-    vecs = _vectors(spark, sf_dir).select("vec_id", "embedding").persist()
-    try:
+    with pinned(_vectors(spark, sf_dir).select("vec_id", "embedding")) as vecs:
         centroids = _kmeans_centroids(vecs)
         final = vecs.select(
             F.expr(_argmin_struct(centroids)).alias("best")
@@ -1008,8 +1015,6 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(ROUND(d2 * 1000000) AS BIGINT)) AS DOUBLE) / 1000000"
             ).alias("inertia"),
         )
-    finally:
-        vecs.unpersist()
 
 
 def _kmeans_layers_sql(
@@ -1137,7 +1142,6 @@ def ann_ivf_trained(
     max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
     nprobe: int | None = None,
     query_mod: int | None = None,
-    vecs: DataFrame | None = None,
 ) -> DataFrame:
     """THE production trained-IVF build: K derived from the corpus size
     (``_derived_kmeans_k``), Lloyd trained on a bounded DETERMINISTIC
@@ -1161,7 +1165,6 @@ def ann_ivf_trained(
         sample_mod=_derived_sample_mod(n, k),
         query_mod=query_mod_for(n) if query_mod is None else query_mod,
         n=n_ids,
-        vecs=vecs,
     )
 
 
@@ -1213,7 +1216,6 @@ def _ann_ivf_trained_with_k(
     sample_mod: int = 1,
     query_mod: int = QUERY_MOD,
     n: int | None = None,
-    vecs: DataFrame | None = None,
 ) -> DataFrame:
     """Train-then-search at an explicit K — the shared body behind
     ``ann_ivf_trained`` (derived K, ``sample_mod`` > 1: Lloyd sees
@@ -1223,17 +1225,8 @@ def _ann_ivf_trained_with_k(
     A/B), and the recall report's pinned ``ivf_trained_c8_p2``
     variant.
 
-    ``vecs``: a caller-managed, ALREADY-PERSISTED vectors frame.  The
-    recall report runs two trained arms concurrently (io.run_jobs);
-    when each arm persisted its own structurally identical
-    ``_vectors`` plan, the first arm's finally-unpersist evicted the
-    SHARED cache entry while the slower arm was mid-Lloyd, silently
-    re-triggering the duplicated interpreted argmin recompute the pin
-    above exists to prevent (r12 ADVICE).  With a caller-held frame the
-    arms share one cache entry whose lifetime outlives both."""
-    own_vecs = vecs is None
-    if own_vecs:
-        vecs = _vectors(spark, sf_dir).persist()
+    Concurrent arms (the recall report's io.run_jobs) each pin
+    ``_vectors`` and share its one reference-counted cache."""
     # PIN the assignment (r12, guide §5): the candidate join's key is
     # the HOF-computed ``cell``, and the join's inferred
     # isnotnull(cell) null-filter gets pushed below the projection
@@ -1244,24 +1237,19 @@ def _ann_ivf_trained_with_k(
     # cached ``cell`` column instead of re-deriving it.  The persisted
     # serve entries get the same barrier for free from their parquet
     # artifact — this is the inline-search twin of that materialization.
-    assigned = None
-    try:
+    with pinned(_vectors(spark, sf_dir)) as vecs:
         centroids = _kmeans_centroids(_lloyd_train_frame(vecs, sample_mod), k)
         assigned = _assign_cells(vecs, centroids).select(
             "vec_id", "embedding", "norm", "cell"
-        ).persist()
+        )
         out = _ivf_literal_search(
             vecs, assigned, centroids, nprobe, max_broadcast_queries,
             query_mod, n=n,
         )
-        # the training loop already materialized vecs; pin the bounded
-        # result so the cache can be released before returning
-        return out.localCheckpoint(eager=True)
-    finally:
-        if own_vecs:
-            vecs.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
+        # the training loop already materialized vecs; cut the bounded
+        # result so the caches can be released before returning
+        with pinned(assigned):
+            return cut_lineage(out, eager=True)
 
 
 def _probe_frame(
@@ -1388,18 +1376,15 @@ def ann_ivf_index_persist(
     mod = _derived_sample_mod(n, k)
     if nprobe is None:
         nprobe = ivf_nprobe_for(k)
-    vecs = _vectors(spark, sf_dir).persist()
-    try:
+    with pinned(_vectors(spark, sf_dir)) as vecs:
         _build_ivf_coarse_artifacts(spark, vecs, k, mod, root)
-    finally:
-        vecs.unpersist()
     # --- serving path: everything below touches ONLY the artifacts
     # (plus the raw query vectors) — no retraining, no reassignment
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, nprobe, max_broadcast_queries,
         query_mod_for(n), n=n_ids,
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _cell_spread(df: DataFrame) -> DataFrame:
@@ -1600,11 +1585,18 @@ def _ensure_index_params(
         # every field the return statement consumes must be present,
         # or an old-schema row would pass the guard then crash the
         # read it was supposed to turn into a rebuild (r10 ADVICE)
-        fresh = (
-            covers
-            and rec.get("fingerprint") == fp
-            and all(f in rec for f in ("n", "dim", "nprobe", "qmod", "n_ids"))
-        )
+        missing = [f for f in ("n", "dim", "nprobe", "qmod", "n_ids") if f not in rec]
+        # name the failed check, so an upgrade-driven rebuild (a field
+        # added to the params schema) reads apart from corpus drift
+        if not covers:
+            _log.warning("rebuilding %s: family %r does not cover %r",
+                         root, rec.get("family"), family)
+        elif rec.get("fingerprint") != fp:
+            _log.warning("rebuilding %s: corpus fingerprint changed", root)
+        elif missing:
+            _log.warning("rebuilding %s: params lack %s", root, ", ".join(missing))
+        else:
+            fresh = True
     if not fresh:
         # a cold/invalidated rebuild must not inherit the PREVIOUS
         # corpus's retraction log: every serve path anti-applies
@@ -1628,11 +1620,8 @@ def _ensure_index_params(
         n, dim, n_ids = _corpus_shape(vecs0)
         k = semdedup_cells(n)
         mod = _derived_sample_mod(n, k)
-        vecs = vecs0.persist()
-        try:
+        with pinned(vecs0) as vecs:
             build(vecs, k, mod)
-        finally:
-            vecs.unpersist()
         one_file(
             local_frame(
                 spark,
@@ -1683,7 +1672,7 @@ def ann_ivf_serve(
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 # --- incremental IVF ingest ---------------------------------------------------
@@ -1782,8 +1771,7 @@ def ann_ivf_ingest(
     from .. import fs as _hfs
 
     root = index_root or _hfs.artifact_root(spark, "ivf_ingest", sf_dir)
-    vecs = _vectors(spark, sf_dir).persist()
-    try:
+    with pinned(_vectors(spark, sf_dir)) as vecs:
         # ONE count job for both derived scalars (r12 — the old shape
         # paid one job for n_base and another for the serve stride's n)
         shape = vecs.agg(
@@ -1824,9 +1812,7 @@ def ann_ivf_ingest(
             vecs, merged, loaded_centroids, nprobe, max_broadcast_queries,
             query_mod_for(n), n=n_ids,
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
+        return cut_lineage(out, eager=True)
 
 
 def _ann_ivf_ingest_sql() -> str:
@@ -1943,25 +1929,22 @@ def ann_ivf_filtered(
     nprobe = ivf_nprobe_for(k)
     qmod = query_mod_for(n)
     # label carried through assignment (withColumn preserves columns)
-    vecs = emb.selectExpr(
+    labelled = emb.selectExpr(
         "vec_id",
         "embedding",
         f"sqrt({_dot_spark('embedding', 'embedding')}) AS norm",
         "label",
-    ).persist()
-    assigned = None
-    try:
+    )
+    with pinned(labelled) as vecs:
         centroids = _kmeans_centroids(
             _lloyd_train_frame(vecs.drop("label"), mod), k
         )
-        # pinned for the same reason as _ann_ivf_trained_with_k: the
-        # join-key null-filter otherwise re-derives the argmin HOF
-        assigned = _assign_cells(vecs, centroids).select(
-            "vec_id", "embedding", "norm", "cell", "label"
-        ).persist()
         queries = _probe_frame(vecs, centroids, nprobe, qmod).join(
             vecs.selectExpr("vec_id AS query_id", "label AS q_label"),
             "query_id",
+        )
+        assigned = _assign_cells(vecs, centroids).select(
+            "vec_id", "embedding", "norm", "cell", "label"
         )
         out = _ivf_literal_search(
             vecs,
@@ -1974,11 +1957,10 @@ def ann_ivf_filtered(
             extra_on=F.col("label") == F.col("q_label"),
             n=n_ids,
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
+        # pinned for the same reason as _ann_ivf_trained_with_k: the
+        # join-key null-filter otherwise re-derives the argmin HOF
+        with pinned(assigned):
+            return cut_lineage(out, eager=True)
 
 
 def ann_ivf_filtered_serve(
@@ -2011,9 +1993,12 @@ def ann_ivf_filtered_serve(
             spark, sf_dir, root, vecs, k, mod
         ),
     )
-    return _serve_ivf_filtered_frame(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
-    ).localCheckpoint(eager=True)
+    return cut_lineage(
+        _serve_ivf_filtered_frame(
+            spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
+        ),
+        eager=True,
+    )
 
 
 def _build_ivf_lab_coarse(
@@ -2258,21 +2243,20 @@ def _upsert_core(
     overwrite of the batch's own ``(gen, cell)`` partitions.  One
     spelling, so a change to the overwrite mode or the gen cast cannot
     diverge the exact tier from the PQ tier (r11 review).  Returns the
-    assigned frame PINNED (``localCheckpoint`` — batch-sized): the PQ
+    assigned frame PINNED (``io.cut_lineage`` — batch-sized): the PQ
     tier writes TWO artifacts from it, and re-evaluating the caller's
     lineage per write would let a non-deterministic source produce an
     assignments row whose codes row encodes different data."""
     ivf_delete(spark, root, rows, gen)
-    assigned = (
-        _assign_cells(rows, _load_index_centroids(spark, root))
-        .select(
+    assigned = cut_lineage(
+        _assign_cells(rows, _load_index_centroids(spark, root)).select(
             "vec_id",
             "embedding",
             "norm",
             F.lit(int(gen)).cast("bigint").alias("gen"),
             "cell",
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     (
         _cell_spread(assigned)
@@ -2550,9 +2534,10 @@ def ivf_compact(
     else:
         pred = F.col("cell").isin([c for _sub, _g, c in over])
         pcols = ["cell"]
-    compacted = _tombstone_visibility(
-        spark, root, spark.read.parquet(apath).filter(pred)
-    ).localCheckpoint(eager=True)
+    compacted = cut_lineage(
+        _tombstone_visibility(spark, root, spark.read.parquet(apath).filter(pred)),
+        eager=True,
+    )
     (
         _cell_spread(compacted)
         .write.mode("overwrite")
@@ -2622,7 +2607,7 @@ def ann_ivf_delete_serve(
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _build_ivf_del_artifacts(
@@ -2670,7 +2655,7 @@ def ann_ivf_upsert_serve(
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _build_ivf_ups_artifacts(
@@ -2718,7 +2703,7 @@ def ann_ivf_compact_serve(
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _build_ivf_cmp_artifacts(
@@ -2787,7 +2772,7 @@ def ann_ivfpq_delete_serve(
         fan=pq_m_for(dim) * pq_seeds_for(n),
         n=n_ids,
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _build_ivfpq_del_artifacts(
@@ -2839,7 +2824,7 @@ def ann_ivfpq_upsert_serve(
         fan=pq_m_for(dim) * pq_seeds_for(n),
         n=n_ids,
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _build_ivfpq_ups_artifacts(
@@ -3086,8 +3071,8 @@ WHERE rank <= {IVF_K}
 def _ann_ivf_trained_explain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy inspectable frame: the trained-IVF search plan with the
     round-0 (seed) centroid literals — training only changes the
-    literal values, never the plan shape, and the public op pins its
-    bounded result with localCheckpoint (which would audit as a
+    literal values, never the plan shape, and the public op cuts its
+    bounded result with io.cut_lineage (which would audit as a
     LocalTableScan)."""
     vecs = _vectors(spark, sf_dir)
     seeds = vecs.filter(F.col("vec_id") < KMEANS_K).collect()
@@ -3672,7 +3657,7 @@ def ann_ivf_pq(
     them by exact BIGINT approximate distance.  Same output contract
     as ``ann_pq`` (top-PQ_K by approx_l2sq), cell-pruned.
 
-    The corpus frame is persisted for the op's lifetime — the
+    The corpus frame is pinned for the op's lifetime — the
     ``_broadcastable`` guard jobs (probes, dtable) plus the final
     action would otherwise each re-run the corpus scan AND the
     corpus×seeds coarse scoring from scratch — and the result is
@@ -3682,14 +3667,11 @@ def ann_ivf_pq(
     n, dim, n_ids = _corpus_shape(vecs0)
     cells = semdedup_cells(n)
     nprobe = ivf_nprobe_for(cells)
-    vecs = vecs0.persist()
-    try:
+    with pinned(vecs0) as vecs:
         out = _ann_ivf_pq_frame(
             vecs, cells, nprobe, max_broadcast_queries, n, dim
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
+        return cut_lineage(out, eager=True)
 
 
 def _ann_ivf_pq_explain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4100,13 +4082,10 @@ def ann_ivf_pq_residual(
     k = semdedup_cells(n)
     mod = _derived_sample_mod(n, k)
     nprobe = ivf_nprobe_for(k)
-    vecs = _vectors(spark, sf_dir).persist()
-    try:
+    with pinned(_vectors(spark, sf_dir)) as vecs:
         dim = _build_ivfpq_artifacts(
             spark, vecs, k, mod, root, train_codebook, n=n
         )
-    finally:
-        vecs.unpersist()
     # --- serving path: artifacts only (plus the raw query vectors);
     # fan = M×K upper bound from scalars in hand — no codebook count
     # job (r12)
@@ -4115,7 +4094,7 @@ def ann_ivf_pq_residual(
         fan=pq_m_for(dim or 0) * pq_seeds_for(n),
         n=n_ids,
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _build_ivfpq_artifacts(
@@ -4145,10 +4124,9 @@ def _build_ivfpq_artifacts(
     cframe = _centroid_frame(spark, centroids)
     # the trained centroids pin the corpus dimension driver-side
     dim = len(next(iter(centroids.values()))) if centroids else None
-    assigned = _assign_cells(vecs, centroids).select(
-        "vec_id", "embedding", "norm", "cell"
-    ).persist()
-    try:
+    with pinned(
+        _assign_cells(vecs, centroids).select("vec_id", "embedding", "norm", "cell")
+    ) as assigned:
         # one count materializes the cache before any concurrent
         # consumer: cold-cache partitions are recomputed by every
         # racing job (the ingest-base lesson), and the codebook
@@ -4171,8 +4149,6 @@ def _build_ivfpq_artifacts(
             .parquet(f"{root}/pq_codebook"),
             lambda: codes.write.mode("overwrite").parquet(f"{root}/pq_codes"),
         )
-    finally:
-        assigned.unpersist()
     return dim
 
 
@@ -4234,7 +4210,7 @@ def ann_ivfpq_filtered_serve(
         n=n_ids,
         label_filtered=True,
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def ann_ivfpq_serve(
@@ -4274,7 +4250,7 @@ def ann_ivfpq_serve(
         fan=pq_m_for(dim) * pq_seeds_for(n),
         n=n_ids,
     )
-    return out.localCheckpoint(eager=True)
+    return cut_lineage(out, eager=True)
 
 
 def _serve_ivfpq_from_artifacts(
@@ -4421,10 +4397,9 @@ def _build_ivfpq_ingest_base(
     # persisted frame instead of the file read-back is value-identical
     # (the oracle re-checks it) while all FOUR writes overlap in one
     # run_jobs (guide §2.6) and the corpus assignment computes once.
-    assigned_base = _assign_cells(base, centroids).select(
-        "vec_id", "embedding", "norm", "cell"
-    ).persist()
-    try:
+    with pinned(
+        _assign_cells(base, centroids).select("vec_id", "embedding", "norm", "cell")
+    ) as assigned_base:
         # materialize the cache BEFORE the concurrent writes: Spark's
         # cache does not serialize concurrent computation of the same
         # cold partition, so four jobs launched together would each
@@ -4457,8 +4432,6 @@ def _build_ivfpq_ingest_base(
             .write.mode("overwrite")
             .parquet(f"{root}/pq_codes"),
         )
-    finally:
-        assigned_base.unpersist()
     return ivf_nprobe_for(k)
 
 
@@ -4517,8 +4490,7 @@ def ann_ivfpq_ingest(
     from .. import fs as _hfs
 
     root = index_root or _hfs.artifact_root(spark, "ivfpq_ing", sf_dir)
-    vecs = _vectors(spark, sf_dir).persist()
-    try:
+    with pinned(_vectors(spark, sf_dir)) as vecs:
         # ONE count job for both derived scalars (r12, see
         # ann_ivf_ingest) plus the dimension for the ADC fan guard
         shape = vecs.agg(
@@ -4551,9 +4523,7 @@ def ann_ivfpq_ingest(
             fan=pq_m_for(dim) * pq_seeds_for(n_base),
             n=n_ids,
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
+        return cut_lineage(out, eager=True)
 
 
 def _ann_ivfpq_ingest_sql() -> str:
@@ -5047,9 +5017,7 @@ def ann_ivf_nprobe_curve(
     np0 = ivf_nprobe_for(k)
     qmod = query_mod_for(n)
     rungs = sorted({fn(np0, k) for _label, fn in NPROBE_CURVE_RUNGS})
-    vecs = vecs0.persist()
-    assigned = None
-    try:
+    with pinned(vecs0) as vecs:
         queries = vecs.filter(F.col("vec_id") % qmod == 0).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
@@ -5089,15 +5057,11 @@ def ann_ivf_nprobe_curve(
         vecs.count()
         centroids, exact_k = run_jobs(
             lambda: _kmeans_centroids(_lloyd_train_frame(vecs, mod), k),
-            lambda: exact_k_frame.localCheckpoint(eager=True),
+            lambda: cut_lineage(exact_k_frame, eager=True),
         )
-        # pinned (r12): FOUR nprobe rungs consume this frame — without
-        # the cache each rung re-derives the interpreted argmin HOF
-        # (twice, via the join-key null-filter pushdown), i.e. eight
-        # full-corpus assignment passes for one report
         assigned = _assign_cells(vecs, centroids).select(
             "vec_id", "embedding", "norm", "cell"
-        ).persist()
+        )
         approx = None
         for rung in rungs:
             part = _ivf_literal_search(
@@ -5138,11 +5102,12 @@ def ann_ivf_nprobe_curve(
                 ).alias("recall_ppm"),
             )
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
+        # pinned (r12): FOUR nprobe rungs consume the assignment —
+        # without the cache each rung re-derives the interpreted argmin
+        # HOF (twice, via the join-key null-filter pushdown), i.e. eight
+        # full-corpus assignment passes for one report
+        with pinned(assigned):
+            return cut_lineage(out, eager=True)
 
 
 def _ann_ivf_nprobe_curve_sql() -> str:
@@ -5253,9 +5218,7 @@ def ann_ivfpq_recall_report(
     nprobe = ivf_nprobe_for(k)
     pq_seeds = pq_seeds_for(n)
     fan = pq_m_for(dim) * pq_seeds
-    vecs = vecs0.persist()
-    assigned = None
-    try:
+    with pinned(vecs0) as vecs:
         qmod = query_mod_for(n)
         # exact squared-L2 ground truth over the raw doubles — the SAME
         # derived stride as the arms, so recall denominators line up.
@@ -5292,86 +5255,82 @@ def ann_ivfpq_recall_report(
         vecs.count()
         centroids, exact_k = run_jobs(
             lambda: _kmeans_centroids(_lloyd_train_frame(vecs, mod), k),
-            lambda: exact_k_frame.localCheckpoint(eager=True),
+            lambda: cut_lineage(exact_k_frame, eager=True),
         )
         cframe = _centroid_frame(spark, centroids)
         # pinned (r12): THREE PQ arms (two of them codebook-training
         # loops) plus the candidate join consume this frame — without
         # the cache every consumer re-derives the interpreted argmin
         # HOF from the scan (the join-key null-filter doubles it)
-        assigned = _assign_cells(vecs, centroids).select(
-            "vec_id", "embedding", "cell"
-        ).persist()
-        # materialize before the three arms fan out (run_jobs below):
-        # concurrent jobs racing a cold cache each re-run the
-        # interpreted argmin assignment instead of sharing one pass
-        assigned.count()
-        probes = _probe_frame(vecs, centroids, nprobe, qmod).select(
-            "query_id", "q_emb", "q_cell"
-        )
-        # arithmetic guard bounds — every scalar is already in hand
-        # (r12: the agg guards evaluated the probe/query subplans once
-        # per consumer)
-        qb = (n_ids // qmod + 1) * nprobe
-        cand = _grid_cand(
-            assigned, probes, max_broadcast_queries, nprobe,
-            est=(qb, qb * 16),
-        )
-        # arm builds overlap (io.run_jobs, §2.6): two of the three
-        # arms run EAGER per-subspace Lloyd loops (driver-paced collect
-        # rounds) against the same pinned assignment — no shared
-        # mutable state, so their rounds interleave instead of queuing
-        def _build_arm(name: str, residual: bool, trained: bool):
-            codes, codebook = _pq_grid_codes(
-                assigned, cframe, residual, train_codebook=trained,
-                seeds=pq_seeds,
+        with pinned(
+            _assign_cells(vecs, centroids).select("vec_id", "embedding", "cell")
+        ) as assigned:
+            # materialize before the three arms fan out (run_jobs below):
+            # concurrent jobs racing a cold cache each re-run the
+            # interpreted argmin assignment instead of sharing one pass
+            assigned.count()
+            probes = _probe_frame(vecs, centroids, nprobe, qmod).select(
+                "query_id", "q_emb", "q_cell"
             )
-            dtable = _pq_grid_dtable(probes, cframe, codebook, residual)
-            return _pq_adc_rank(
-                cand, codes, dtable, max_broadcast_queries, nprobe, fan,
-                est=(qb * fan, qb * fan * 40),
-            ).select(F.lit(name).alias("variant"), "query_id", "neighbor_id")
+            # arithmetic guard bounds — every scalar is already in hand
+            # (r12: the agg guards evaluated the probe/query subplans once
+            # per consumer)
+            qb = (n_ids // qmod + 1) * nprobe
+            cand = _grid_cand(
+                assigned, probes, max_broadcast_queries, nprobe,
+                est=(qb, qb * 16),
+            )
+            # arm builds overlap (io.run_jobs, §2.6): two of the three
+            # arms run EAGER per-subspace Lloyd loops (driver-paced collect
+            # rounds) against the same pinned assignment — no shared
+            # mutable state, so their rounds interleave instead of queuing
+            def _build_arm(name: str, residual: bool, trained: bool):
+                codes, codebook = _pq_grid_codes(
+                    assigned, cframe, residual, train_codebook=trained,
+                    seeds=pq_seeds,
+                )
+                dtable = _pq_grid_dtable(probes, cframe, codebook, residual)
+                return _pq_adc_rank(
+                    cand, codes, dtable, max_broadcast_queries, nprobe, fan,
+                    est=(qb * fan, qb * fan * 40),
+                ).select(F.lit(name).alias("variant"), "query_id", "neighbor_id")
 
-        parts = run_jobs(*[
-            lambda nm=name, r=residual, t=trained: _build_arm(nm, r, t)
-            for name, residual, trained in IVFPQ_RECALL_VARIANTS
-        ])
-        approx = parts[0]
-        for part in parts[1:]:
-            approx = approx.unionByName(part)
-        hits = approx.join(exact_k, ["query_id", "neighbor_id"]).groupBy(
-            "variant"
-        ).agg(F.count(F.lit(1)).alias("n_hits"))
-        nq = exact_k.select("query_id").distinct().groupBy().agg(
-            F.count(F.lit(1)).alias("n_queries")
-        )
-        variants = local_frame(
-            spark,
-            [(name,) for name, _r, _t in IVFPQ_RECALL_VARIANTS],
-            "variant string",
-        )
-        # left join from the variant list: a 0-hit arm still reports
-        out = (
-            variants.crossJoin(nq)
-            .join(hits, "variant", "left")
-            .select(
-                "variant",
-                F.col("n_queries").cast("bigint"),
-                F.lit(PQ_K).cast("bigint").alias("k"),
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.expr(
-                    f"CAST((coalesce(n_hits, 0) * 1000000)"
-                    f" div (n_queries * {PQ_K}) AS BIGINT)"
-                ).alias("recall_ppm"),
+            parts = run_jobs(*[
+                lambda nm=name, r=residual, t=trained: _build_arm(nm, r, t)
+                for name, residual, trained in IVFPQ_RECALL_VARIANTS
+            ])
+            approx = parts[0]
+            for part in parts[1:]:
+                approx = approx.unionByName(part)
+            hits = approx.join(exact_k, ["query_id", "neighbor_id"]).groupBy(
+                "variant"
+            ).agg(F.count(F.lit(1)).alias("n_hits"))
+            nq = exact_k.select("query_id").distinct().groupBy().agg(
+                F.count(F.lit(1)).alias("n_queries")
             )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
+            variants = local_frame(
+                spark,
+                [(name,) for name, _r, _t in IVFPQ_RECALL_VARIANTS],
+                "variant string",
+            )
+            # left join from the variant list: a 0-hit arm still reports
+            out = (
+                variants.crossJoin(nq)
+                .join(hits, "variant", "left")
+                .select(
+                    "variant",
+                    F.col("n_queries").cast("bigint"),
+                    F.lit(PQ_K).cast("bigint").alias("k"),
+                    F.coalesce(F.col("n_hits"), F.lit(0))
+                    .cast("bigint")
+                    .alias("n_hits"),
+                    F.expr(
+                        f"CAST((coalesce(n_hits, 0) * 1000000)"
+                        f" div (n_queries * {PQ_K}) AS BIGINT)"
+                    ).alias("recall_ppm"),
+                )
+            )
+            return cut_lineage(out, eager=True)
 
 
 def _ann_ivfpq_recall_sql() -> str:
@@ -5666,29 +5625,25 @@ def ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derive its stride would make the query sets diverge at n > 10k —
     # hits only on the lcm intersection, recall silently understated
     # ~7× at 20k vectors (r9 review finding)
-    # ONE caller-held persisted vectors frame shared by both arms: each
-    # arm persisting its own (structurally identical) _vectors plan let
-    # the faster arm's finally-unpersist evict the shared cache entry
-    # mid-Lloyd of the slower one (r12 ADVICE)
-    shared_vecs = _vectors(spark, sf_dir).persist()
-    try:
+    # The report and both arms each pin the (structurally identical)
+    # _vectors plan; io.pinned counts the holders of the ONE cache
+    # entry, so the faster arm's release cannot evict it mid-Lloyd of
+    # the slower one (r12)
+    with pinned(_vectors(spark, sf_dir)) as vecs:
         # materialize BEFORE the arms fan out: concurrent jobs do not
         # serialize cold-cache computation of the same partitions, so
         # both arms would re-run the interpreted norm projection
-        shared_vecs.count()
+        vecs.count()
         # the exact baseline shares no state with the trained arms
         # (it never sees the centroids), so its brute-force pass rides
         # the same fan-out instead of waiting for both Lloyd loops
         # (r13, guide §2.6); its plan reads the shared vecs cache
         arm_c8, arm_prod, exact = run_jobs(
             lambda: _ann_ivf_trained_with_k(
-                spark, sf_dir, KMEANS_K, IVF_NPROBE, MAX_BROADCAST_QUERIES,
-                vecs=shared_vecs,
+                spark, sf_dir, KMEANS_K, IVF_NPROBE, MAX_BROADCAST_QUERIES
             ),
-            lambda: ann_ivf_trained(
-                spark, sf_dir, query_mod=QUERY_MOD, vecs=shared_vecs
-            ),
-            lambda: exact.localCheckpoint(eager=True),
+            lambda: ann_ivf_trained(spark, sf_dir, query_mod=QUERY_MOD),
+            lambda: cut_lineage(exact, eager=True),
         )
         approx = approx.unionByName(
             arm_c8.filter(F.col("rank") <= ANN_K).select(
@@ -5724,13 +5679,11 @@ def ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"CAST((n_hits * 1000000) div (n_queries * {ANN_K}) AS BIGINT)"
             ).alias("recall_ppm"),
         )
-        # pin the bounded result while the shared vecs cache is still
-        # live: the two untrained ann_ivf arms in the final plan read
-        # it instead of re-deriving the norm projection after the
-        # finally releases it
-        return out.localCheckpoint(eager=True)
-    finally:
-        shared_vecs.unpersist()
+        # cut the bounded result while the vecs cache is still live:
+        # the two untrained ann_ivf arms in the final plan read it
+        # instead of re-deriving the norm projection after the block
+        # releases it
+        return cut_lineage(out, eager=True)
 
 
 def _ann_ivf_recall_sql() -> str:
@@ -6107,8 +6060,7 @@ def _pca_score_expr(mu: list[float], v: list[float]) -> str:
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    emb = load_table(spark, sf_dir, "embeddings").select("embedding").persist()
-    try:
+    with pinned(load_table(spark, sf_dir, "embeddings").select("embedding")) as emb:
         # μ per position: grid-sum / n, replicated verbatim by the oracle
         mu_rows = (
             emb.selectExpr("posexplode(embedding) AS (pos0, comp)")
@@ -6151,8 +6103,6 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.range(1, PCA_DIM + 1).selectExpr(
             "CAST(id AS BIGINT) AS pos", f"element_at({v_l}, CAST(id AS INT)) AS loading"
         )
-    finally:
-        emb.unpersist()
 
 
 def _pca_sql() -> str:

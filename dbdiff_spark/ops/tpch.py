@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import load_table
+from dbdiff_spark.io import cut_lineage, load_table, pinned
 from dbdiff_spark.ops.analytics import _dsum
 
 # epoch-micros literals (UTC)
@@ -643,8 +643,8 @@ _VALUE_GRID = (
 
 
 def _q11_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(persisted per-part values, lazy result) — caller OWNS the cache
-    and must unpersist the first frame once the second is materialized."""
+    """(per-part values, lazy result) — a caller that executes the
+    result pins the first frame for as long as it reads the second."""
     supp = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_nationkey") == Q11_NATIONKEY
     ).select("s_suppkey")
@@ -653,11 +653,11 @@ def _q11_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     )
     scoped = li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
     # Per-part frame feeds both the global total and the share filter;
-    # persisted so the fact scan runs once (diff-sized: one row per
-    # part — the pagerank/pq pattern for intra-query reuse).
+    # pinned so the fact scan runs once (diff-sized: one row per part —
+    # the pagerank/pq pattern for intra-query reuse).
     values = scoped.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
         F.expr(_VALUE_GRID).alias("value_grid")
-    ).persist()
+    )
     total = values.agg(F.sum("value_grid").alias("total_grid"))
     result = (
         values.join(F.broadcast(total))
@@ -674,36 +674,21 @@ def _q11_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     return values, result
 
 
-def q11_explain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy distributed Q11 plan for inspection (CLI ``--explain``):
-    the public query materializes eagerly to release its cache, which
-    would both RUN the workload at explain time and show only a
-    LocalTableScan.  Here the persist marker is dropped immediately —
-    no cache lifecycle to manage, and the full distributed plan (two
-    fact scans instead of the cached reuse) is what prints."""
-    values, result = _q11_frames(spark, sf_dir)
-    values.unpersist()
-    return result
-
-
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, result = _q11_frames(spark, sf_dir)
     # Materialize here so the cache can be RELEASED before returning
     # (kmeans/pca pattern) — a lazy return would leak `values` into
-    # executor memory for the rest of the session.  localCheckpoint
-    # runs the job once and pins the RESULT in the block manager —
-    # no collect→createDataFrame driver round trip (that re-upload
-    # cost q11 2× in the r4 bench).  The pinned frame is bounded by
+    # executor memory for the rest of the session.  cut_lineage runs
+    # the job once and pins the RESULT in the block manager — no
+    # collect→createDataFrame driver round trip (that re-upload cost
+    # q11 2× in the r4 bench).  The cut frame is bounded by
     # construction: value·(1/frac) > total admits fewer than
     # 1/frac = 5000 qualifying parts at ANY corpus size, and it lives
     # exactly as long as the returned DataFrame — the intermediate
     # per-part cache (unbounded with part count) is what must not
-    # outlive the call, and the finally releases it.
-    try:
-        out = result.localCheckpoint(eager=True)
-    finally:
-        values.unpersist()
-    return out
+    # outlive the call, and leaving the block releases it.
+    with pinned(values):
+        return cut_lineage(result, eager=True)
 
 
 Q11_SQL = f"""
@@ -972,8 +957,11 @@ LIMIT 100
 """
 
 
+# --explain prints the lazy distributed plan (two fact scans instead of
+# the cached reuse): the public query materializes eagerly to release
+# its cache, which would RUN the workload and show a LocalTableScan
 EXPLAIN_FRAMES = {
-    "q11_important_parts": q11_explain_frame,
+    "q11_important_parts": lambda spark, sf_dir: _q11_frames(spark, sf_dir)[1],
 }
 
 QUERIES = {

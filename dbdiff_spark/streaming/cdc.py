@@ -22,14 +22,17 @@ not bounded input.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+import shutil
+import tempfile
+from pathlib import Path
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from dbdiff_spark.io import load_table, local_frame, one_file
+from dbdiff_spark.io import cut_lineage, load_table, local_frame, one_file, pinned
 
 WINDOW = "5 minutes"
 WATERMARK = "10 minutes"
@@ -539,9 +542,6 @@ def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is small) + append — the base is never shuffled, and state versions
     are atomic directory swaps.
     """
-    import shutil
-    import tempfile
-    from pathlib import Path
 
     from dbdiff_spark import testkit
     from dbdiff_spark.diff import DiffMode, apply_diff, diff_tables
@@ -585,10 +585,8 @@ def stream_apply_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pin the result OFF the temp root before removing it — the
         # lazy read would otherwise keep the root alive forever
         # (r10 VERDICT hygiene #1; pattern from stream_ivf_ingest)
-        return (
-            spark.read.parquet(str(final))
-            .select(*spec.cols)
-            .localCheckpoint(eager=True)
+        return cut_lineage(
+            spark.read.parquet(str(final)).select(*spec.cols), eager=True
         )
     finally:
         query.stop()
@@ -621,9 +619,6 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     — on a real bus the snapshot ordinal rides the message envelope
     exactly as ``_ord`` rides the rows here.
     """
-    import shutil
-    import tempfile
-    from pathlib import Path
 
     from dbdiff_spark import testkit
     from dbdiff_spark.ops.history import (
@@ -669,10 +664,11 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.processAllAvailable()
         final = sorted(Path(root).glob("state_*"))[-1]
         # pin off the temp root before removal (r10 VERDICT hygiene #1)
-        return (
-            spark.read.parquet(str(final))
-            .select(*keys, *attrs, "valid_from", "valid_to", "is_current")
-            .localCheckpoint(eager=True)
+        return cut_lineage(
+            spark.read.parquet(str(final)).select(
+                *keys, *attrs, "valid_from", "valid_to", "is_current"
+            ),
+            eager=True,
         )
     finally:
         query.stop()
@@ -858,7 +854,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (per-window totals, the window×cell grid); checkpoint the bounded
     # histogram (windows × cells rows) so the self-referencing plan
     # resolves against a materialized relation, not the memory sink
-    observed = observed.localCheckpoint()
+    observed = cut_lineage(observed, eager=True)
     base_events = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
@@ -1285,9 +1281,6 @@ def stream_dedup_ingest(
     state: per new doc, the smallest visible doc sharing any band (NULL
     ⇒ fresh cluster seed) plus the shared-band count — converging to
     the batch visibility-ordered probe the oracle computes."""
-    import shutil
-    import tempfile
-
     from dbdiff_spark import fs
     from dbdiff_spark.ops.dedup import (
         NEARDUP_OFFSET,
@@ -1352,7 +1345,7 @@ def stream_dedup_ingest(
             # pin off the temp root before removal (r10 VERDICT
             # hygiene #1); a caller-supplied root stays lazy AND
             # standing — the restart test re-reads it
-            out = out.localCheckpoint(eager=True)
+            out = cut_lineage(out, eager=True)
         return out
     finally:
         query.stop()
@@ -1415,62 +1408,78 @@ def stream_ivf_ingest(
     frozen centroids, micro-batch boundaries CANNOT change the final
     index — the op converges to ``ann_ivf_ingest``'s batch result
     exactly, which is what its oracle checks."""
-    import shutil
-    import tempfile
-
     from dbdiff_spark.ops import similarity as sim
 
-    # a default root is ours to clean: the result is eagerly
-    # localCheckpoint'd below, so nothing lazily reads the artifacts
-    # after return (r9 ADVICE: one leaked dbdiff_stream_ivf_* per
-    # invocation otherwise); a caller-supplied root is left in place
-    owned = not root
-    root = root or tempfile.mkdtemp(prefix="dbdiff_stream_ivf_")
-    vecs = sim._vectors(spark, sf_dir).persist()
-    try:
-        _centroids, _k, nprobe, _n_base = sim._build_ingest_base(
-            spark, vecs, f"{root}/index"
-        )
-        # stage the batch slice (odd vec_ids) as three ordered files —
-        # the arrival order is irrelevant by the pure-function argument
-        batch = vecs.filter(sim.IVF_BATCH_SLICE).select(
-            "vec_id", "embedding", "norm"
-        )
-        incoming = _stage_vector_batches(spark, root, batch)
-        loaded = sim._load_index_centroids(spark, f"{root}/index")
+    def encoder(index: str):
+        loaded = sim._load_index_centroids(spark, index)
 
         def _ingest_batch(bdf: DataFrame, _bid: int) -> None:
             sim._write_cell_partitioned(
                 sim._assign_cells(bdf, loaded).select(
                     "vec_id", "embedding", "norm", "cell"
                 ),
-                f"{root}/index/assignments",
+                f"{index}/assignments",
                 "append",
             )
 
-        query = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(incoming))
-            .writeStream.foreachBatch(_ingest_batch)
-            .option("checkpointLocation", f"{root}/checkpoint")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        out = sim._serve_ivf_from_artifacts(
-            spark,
-            sf_dir,
-            f"{root}/index",
-            nprobe,
-            sim.MAX_BROADCAST_QUERIES,
-            sim.query_mod_for(vecs.count()),
-        )
-        return out.localCheckpoint(eager=True)
+        return _ingest_batch
+
+    return _stream_vector_ingest(
+        spark, sf_dir, root, "dbdiff_stream_ivf_",
+        build=lambda vecs, index: sim._build_ingest_base(spark, vecs, index)[2],
+        encoder=encoder,
+        serve=sim._serve_ivf_from_artifacts,
+    )
+
+
+def _stream_vector_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    root: str | None,
+    prefix: str,
+    build: Callable[[DataFrame, str], int],
+    encoder: Callable[[str], Callable[[DataFrame, int], None]],
+    serve: Callable[..., DataFrame],
+) -> DataFrame:
+    """The streaming vector-ingest body: pin the corpus, build the BASE
+    slice's index under ``<root>/index`` (``build`` returns nprobe),
+    stream the batch slice through ``encoder(index)``'s foreachBatch
+    function, and serve from the merged artifacts.  The result is cut
+    eagerly, so a default root (a temp dir named by ``prefix``) is
+    removed on exit (r9 ADVICE: one leaked root per invocation
+    otherwise); a caller-supplied root is left in place."""
+    from dbdiff_spark.ops import similarity as sim
+
+    owned = not root
+    root = root or tempfile.mkdtemp(prefix=prefix)
+    index = f"{root}/index"
+    try:
+        with pinned(sim._vectors(spark, sf_dir)) as vecs:
+            nprobe = build(vecs, index)
+            # stage the batch slice (odd vec_ids) as three ordered files —
+            # the arrival order is irrelevant by the pure-function argument
+            batch = vecs.filter(sim.IVF_BATCH_SLICE).select(
+                "vec_id", "embedding", "norm"
+            )
+            incoming = _stage_vector_batches(spark, root, batch)
+            query = (
+                spark.readStream.schema(batch.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(str(incoming))
+                .writeStream.foreachBatch(encoder(index))
+                .option("checkpointLocation", f"{root}/checkpoint")
+                .start()
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
+            out = serve(
+                spark, sf_dir, index, nprobe, sim.MAX_BROADCAST_QUERIES,
+                sim.query_mod_for(vecs.count()),
+            )
+            return cut_lineage(out, eager=True)
     finally:
-        vecs.unpersist()
         if owned:
             shutil.rmtree(root, ignore_errors=True)
 
@@ -1515,21 +1524,9 @@ def stream_ivfpq_ingest(
     batch boundaries cannot change the final index: the op converges
     to ``ann_ivfpq_ingest``'s batch result exactly, which is what its
     oracle (the same SQL) checks."""
-    import shutil
-    import tempfile
-
     from dbdiff_spark.ops import similarity as sim
 
-    owned = not root
-    root = root or tempfile.mkdtemp(prefix="dbdiff_stream_ivfpq_")
-    vecs = sim._vectors(spark, sf_dir).persist()
-    try:
-        index = f"{root}/index"
-        nprobe = sim._build_ivfpq_ingest_base(spark, vecs, index)
-        batch = vecs.filter(sim.IVF_BATCH_SLICE).select(
-            "vec_id", "embedding", "norm"
-        )
-        incoming = _stage_vector_batches(spark, root, batch)
+    def encoder(index: str):
         loaded_centroids = sim._load_index_centroids(spark, index)
         loaded_cframe = sim._centroid_frame(spark, loaded_centroids)
         loaded_codebook = spark.read.parquet(f"{index}/pq_codebook")
@@ -1539,31 +1536,14 @@ def stream_ivfpq_ingest(
                 bdf, index, loaded_centroids, loaded_cframe, loaded_codebook
             )
 
-        query = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(incoming))
-            .writeStream.foreachBatch(_ingest_batch)
-            .option("checkpointLocation", f"{root}/checkpoint")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        out = sim._serve_ivfpq_from_artifacts(
-            spark,
-            sf_dir,
-            index,
-            nprobe,
-            sim.MAX_BROADCAST_QUERIES,
-            sim.query_mod_for(vecs.count()),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
-        if owned:
-            shutil.rmtree(root, ignore_errors=True)
+        return _ingest_batch
+
+    return _stream_vector_ingest(
+        spark, sf_dir, root, "dbdiff_stream_ivfpq_",
+        build=lambda vecs, index: sim._build_ivfpq_ingest_base(spark, vecs, index),
+        encoder=encoder,
+        serve=sim._serve_ivfpq_from_artifacts,
+    )
 
 
 def _stream_ivfpq_ingest_oracle_sql() -> str:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbdiff_spark.diff import DiffMode, apply_diff, diff_tables
-from dbdiff_spark.io import load_table
+from dbdiff_spark.io import cut_lineage, load_table
 
 
 @dataclass(frozen=True)
@@ -273,12 +273,15 @@ def format_snapshot_diff_query_df(
         # it — a lazy read would otherwise keep the root alive forever
         # (the r11 VERDICT hygiene finding: one leaked dbdiff_*_snap_*
         # dir per evaluation; pattern from streaming/cdc.py)
-        return res.df.select(
-            F.col("diff_status"),
-            F.col("is_before"),
-            F.array_join(F.col("modified_columns"), ",").alias("modified_cols"),
-            *[F.col(c) for c in spec.cols],
-        ).localCheckpoint(eager=True)
+        return cut_lineage(
+            res.df.select(
+                F.col("diff_status"),
+                F.col("is_before"),
+                F.array_join(F.col("modified_columns"), ",").alias("modified_cols"),
+                *[F.col(c) for c in spec.cols],
+            ),
+            eager=True,
+        )
     finally:
         import shutil
 

@@ -168,7 +168,10 @@ def test_registry_wide_plan_governance(spark, sf_dir):
     # (ANN builds) execute real jobs and the rest is driver-side
     # analysis behind py4j, both of which overlap across threads.  Same
     # per-query assertions, ~3x less wall time (the suite's
-    # second-largest entry; r12 VERDICT #1).
+    # second-largest entry; r12 VERDICT #1).  Concurrent entries that
+    # pin the same plan (every ANN build pins ``_vectors``) share one
+    # reference-counted cache through io.pinned, so one entry's release
+    # cannot evict it under another still running.
     from concurrent.futures import ThreadPoolExecutor
 
     bad = {}
@@ -204,12 +207,13 @@ def test_q2_argmin_is_aggregate_not_window(spark, sf_dir):
 
 def test_q11_share_filter_reuses_cached_values(spark, sf_dir):
     """Q11's scalar-subquery total and the share filter both read the
-    persisted per-part aggregate: the executed plan shows the cache, not
+    pinned per-part aggregate: the executed plan shows the cache, not
     a second lineitem scan."""
+    from dbdiff_spark.io import pinned
     from dbdiff_spark.ops.tpch import _q11_frames
 
     values, df = _q11_frames(spark, sf_dir)
-    try:
+    with pinned(values):
         df.write.format("noop").mode("overwrite").save()
         plan = _plan(df)
         assert plan.count("InMemoryTableScan") == 2
@@ -217,10 +221,8 @@ def test_q11_share_filter_reuses_cached_values(spark, sf_dir):
             ln for ln in plan.splitlines()
             if "Scan parquet" in ln and "InMemory" not in ln
         ]
-    finally:
-        values.unpersist()
     # the public query releases the per-part cache before returning.
-    # The localCheckpoint that replaced the collect→createDataFrame
+    # The lineage cut that replaced the collect→createDataFrame
     # round trip (r4 bench regression) pins the BOUNDED result
     # (<5000 rows by the 1/frac argument) for as long as the caller
     # holds it — so the map may grow by exactly that one checkpoint,
@@ -278,12 +280,17 @@ def test_explain_frames_are_lazy_and_distributed(spark, sf_dir, last_job_id):
     frames = entry.explain_frames()
     jsc = spark.sparkContext._jsc  # type: ignore[attr-defined]
     tracker = spark.sparkContext.statusTracker()
-    # q11 plus the connected-components users (one lazy contraction round)
+    # q11, the connected-components users (one lazy contraction round)
+    # and the graph entries that pin their edge lists
     for name in [
         "q11_important_parts",
         "neardup_clusters",
         "entity_resolution_parts",
         "leakage_safe_split",
+        "pagerank_copurchase",
+        "triangle_count",
+        "label_propagation",
+        "kcore_peeling",
     ]:
         before_n = jsc.getPersistentRDDs().size()
         frames[name](spark, sf_dir)  # pays the once-per-session io.spread width probes

@@ -907,6 +907,35 @@ def test_ann_serve_half_built_root_rebuilds(spark, sf_dir, tmp_path):
     assert out == full
 
 
+def test_index_rebuild_logs_the_failed_check(spark, sf_dir, tmp_path, caplog):
+    """A warm root rejected by ``_ensure_index_params`` names the check
+    that failed — here a params row written before ``n_ids`` existed —
+    so an upgrade-driven rebuild reads apart from corpus drift."""
+    import logging
+
+    import pytest
+
+    from dbdiff_spark.ops import similarity as sim
+
+    root = str(tmp_path / "old_schema")
+    spark.createDataFrame(
+        [(10, 8, 4, 2, 1, "ivf", sim._corpus_fingerprint(spark, sf_dir))],
+        "n bigint, dim bigint, cells bigint, nprobe bigint, qmod bigint,"
+        " family string, fingerprint string",
+    ).write.parquet(f"{root}/params")
+
+    class _Built(Exception):
+        pass
+
+    def _build(*_a):
+        raise _Built
+
+    with caplog.at_level(logging.WARNING, logger=sim.__name__):
+        with pytest.raises(_Built):
+            sim._ensure_index_params(spark, sf_dir, root, "ivf", _build)
+    assert any("n_ids" in r.getMessage() for r in caplog.records), caplog.text
+
+
 def test_pq_derivation_laws_and_duckdb_parity():
     """VERDICT r9 #3: the PQ configuration is DERIVED, not pinned —
     M from dim at the fixed sub-vector width, the codebook size from
