@@ -16,6 +16,7 @@ set-oriented query instead — strictly fewer round-trips, same result.
 
 from __future__ import annotations
 
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -301,7 +302,25 @@ class FileCatalog:
         return found
 
     def list_tables(self) -> list[str]:
-        return sorted(self._table_files())
+        """Sorted table names.  Every listed table's frame is built at
+        once (``io.run_jobs``) into the ``load`` memo — its
+        schema-inference job overlaps the other tables' — since a
+        listing is read to load the tables.  A table that fails to read
+        is left out of the memo; its ``load`` raises the error."""
+        from dbdiff_spark.io import run_jobs
+
+        tables = sorted(self._table_files())
+        pending = [t for t in tables if t not in self._frames]
+        for t, df in zip(pending, run_jobs(*[partial(self._try_read, t) for t in pending])):
+            if df is not None:
+                self._frames[t] = df
+        return tables
+
+    def _try_read(self, table: str):
+        try:
+            return self._read(table)
+        except Exception:  # noqa: BLE001 - load() re-reads and raises
+            return None
 
     def load(self, table: str):
         if table not in self._frames:

@@ -107,21 +107,13 @@ class DiffResult:
         return self._rows[max_rows]
 
 
-# Tables whose sink rows collect at once: each is a small driver-bound
-# job, so overlapping them hides per-job latency, but an unbounded fan-out
-# on a many-table database would open one gateway connection per table.
-_COLLECT_CONCURRENCY = 8
-
-
 def collect_rows(results: dict[str, DiffResult], max_rows: int) -> None:
     """Fill every result's ``rows(max_rows)`` memo, submitting the
-    tables' collect jobs concurrently (``io.run_jobs``).  Results already
-    collected at this cap submit nothing."""
-    pending = [r for r in results.values() if max_rows not in r._rows]
-    for i in range(0, len(pending), _COLLECT_CONCURRENCY):
-        run_jobs(
-            *[partial(r.rows, max_rows) for r in pending[i : i + _COLLECT_CONCURRENCY]]
-        )
+    tables' collect jobs concurrently (``io.run_jobs``, which bounds the
+    fan-out).  Results already collected at this cap submit nothing."""
+    run_jobs(
+        *[partial(r.rows, max_rows) for r in results.values() if max_rows not in r._rows]
+    )
 
 
 def _side_tagged_union(

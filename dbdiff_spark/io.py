@@ -178,20 +178,31 @@ def run_jobs(*thunks):
     Local-mode measurements show artifact writes here are dominated by
     sequential file open/commit latency, not CPU — overlapping them is
     wall-clock won for free, and on a real cluster the same overlap
-    hides the object-store commit round-trips.
+    hides the object-store commit round-trips.  The per-table layers of
+    the REPL iteration (catalog reads, snapshot writes, diff planning,
+    sink collects) fan out through here too.
 
     Only for actions with NO data dependency (different output paths,
-    no shared mutable state).  Results return in argument order;
-    the first exception propagates after all threads finish (no thread
-    is left orphaned mid-write)."""
+    no shared mutable state).  At most ``_MAX_CONCURRENT_JOBS`` thunks
+    run at once: a many-table database must not open one gateway
+    connection per table.  Each thunk runs with the caller's local
+    properties (job group, description, scheduler pool) and session
+    tags, which PySpark's pinned-thread mode does not pass to a plain
+    thread.  Results return in argument order; the first exception
+    propagates after all threads finish (no thread is left orphaned
+    mid-write)."""
     from concurrent.futures import ThreadPoolExecutor
 
     if not thunks:  # ThreadPoolExecutor(max_workers=0) raises (r12 ADVICE)
         return []
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+    inherit = _inherit_properties()
+    with ThreadPoolExecutor(max_workers=min(len(thunks), _MAX_CONCURRENT_JOBS)) as pool:
+        # one wrapper per thunk: a wrapper clones the caller's properties
+        # once, so thunks sharing one would share one mutable Properties
+        # object (Spark's spark.sql.execution.id included)
+        futures = [pool.submit(inherit(t)) for t in thunks]
         # collect every outcome before raising so a failing sibling
         # cannot leave a half-running write behind the caller's back
         outcomes = [None] * len(futures)
@@ -214,6 +225,27 @@ def run_jobs(*thunks):
                 )
             raise excs[0][1]
         return outcomes
+
+
+# Thunks of one run_jobs call in flight at once.
+_MAX_CONCURRENT_JOBS = 8
+
+
+def _inherit_properties():
+    """Thunk → thunk that first takes on the calling thread's local
+    properties and session tags (``pyspark.inheritable_thread_target``;
+    identity when pinned-thread mode is off).  The session is passed
+    explicitly — the bare form warns — and is the default one when the
+    caller is itself a pool thread, which has no active session.
+    Without any session there is nothing to inherit."""
+    from pyspark import inheritable_thread_target
+    from pyspark.errors import PySparkRuntimeError
+
+    try:
+        session = SparkSession.active()
+    except PySparkRuntimeError:
+        return lambda thunk: thunk
+    return lambda thunk: inheritable_thread_target(session)(thunk)
 
 
 @contextmanager

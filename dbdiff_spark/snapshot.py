@@ -15,15 +15,18 @@ Scale design:
   its key columns).  Two snapshots bucketed the same way diff with NO
   shuffle — the full-outer join zips co-located buckets.
 * Tables snapshot sequentially in the reference (single goroutine; the
-  TODO at ``extract_data.go:33`` wishes for parallelism).  Spark jobs for
-  different tables are submitted from one driver loop; on a cluster the
-  scheduler overlaps them, and each table's scan is itself partitioned.
+  TODO at ``extract_data.go:33`` wishes for parallelism).  Here every
+  table's write (and its fingerprint pass) is submitted from its own
+  driver thread through ``io.run_jobs``, so the tables' jobs run at the
+  same time, and each table's scan is itself partitioned.
+  ``diff_snapshots`` plans the tables' diffs the same way.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,7 +41,7 @@ from dbdiff_spark.diff import (
     _is_orderable,
     diff_tables,
 )
-from dbdiff_spark.io import local_frame
+from dbdiff_spark.io import local_frame, run_jobs
 from dbdiff_spark.sqltext import ident
 
 TABLE_ADDED = "TABLE_ADDED"
@@ -310,6 +313,10 @@ class Snapshot:
         )
 
 
+# Snapshot's per-table manifest fields: what one table's write adds.
+_TABLE_ENTRIES = ("tables", "keys", "columns", "catalog_tables", "group_hashes", "schemas")
+
+
 class SnapshotStore:
     """Collects snapshots (reference entry point B,
     ``CollectAllTableData``, ``extract_data.go:19-95``)."""
@@ -377,83 +384,119 @@ class SnapshotStore:
         snap.partitions = {t: list(c) for t, c in partition_by.items()}
         if track_changes:
             snap.group_hash_mod = HASH_GROUPS
-        total = 0
-        for name, df in sources.items():
-            path = str(Path(snapshot_root) / name)
-            key = list(keys.get(name) or df.columns)
-            types = dict(df.dtypes)
-            fingerprintable = track_changes and all(
-                _is_orderable(types[k]) for k in key
-            )
-            # Piggyback the record count on the WRITE job itself
-            # (df.observe): the reference pays a full extra pass for its
-            # TotalDataCount (extract_data.go:23); at 100 TB that second
-            # scan is the entire cost of counting.  Fingerprinted tables
-            # skip this — their count falls out of the fingerprint agg.
-            obs = None
-            to_write = df
-            if count_rows and not fingerprintable:
-                try:
-                    from pyspark.sql import Observation
-
-                    obs = Observation()
-                    to_write = df.observe(obs, F.count(F.lit(1)).alias("n"))
-                except Exception:
-                    obs = None
-            if buckets > 0:
-                table_id = self._catalog_identifier(snapshot_root, name)
-                (
-                    to_write.write.mode("errorifexists")
-                    .bucketBy(buckets, *key)
-                    .sortBy(*key)
-                    .option("path", path)
-                    .format("parquet")
-                    .saveAsTable(table_id)
+        # tables write concurrently (the reference's own parallel-scan
+        # TODO, extract_data.go:33); run_jobs raises a table's failure
+        # only after its siblings finish, so no write outlives collect
+        parts = run_jobs(
+            *[
+                partial(
+                    self._collect_table,
+                    snap,
+                    name,
+                    df,
+                    list(keys.get(name) or df.columns),
+                    count_rows,
                 )
-                snap.catalog_tables[name] = table_id
-            elif format == "parquet":
-                w = to_write.write.mode("errorifexists")
-                if name in partition_by:
-                    w = w.partitionBy(*partition_by[name])
-                else:
-                    snap.schemas[name] = _as_nullable(df.schema).jsonValue()
-                w.parquet(path)
-            else:
-                # delta / iceberg / orc …: same point-in-time contract;
-                # the transactional formats additionally give atomic
-                # snapshot swaps and their own time travel.  Gated: a
-                # missing runtime jar surfaces as an actionable error,
-                # not a ClassNotFoundException mid-write.
-                try:
-                    w = to_write.write.format(format).mode("errorifexists")
-                    if name in partition_by:
-                        w = w.partitionBy(*partition_by[name])
-                    w.save(path)
-                except Exception as exc:
-                    if format in ("delta", "iceberg"):
-                        raise ImportError(
-                            f"snapshot format {format!r} needs its Spark runtime "
-                            f"jar on the classpath: {exc}"
-                        ) from exc
-                    raise
-            snap.tables[name] = path
-            snap.keys[name] = key
-            snap.columns[name] = list(df.columns)
-            if fingerprintable:
-                # count falls out of the same tiny aggregation for free
-                fps = _group_fingerprints(
-                    snap.load(self.spark, name), key, snap.group_hash_mod
-                )
-                snap.group_hashes[name] = fps
-                total += sum(n for n, *_ in fps.values())
-            elif count_rows:
-                if obs is not None:
-                    total += int(obs.get["n"])
-                else:  # observation unavailable: pay the re-scan
-                    total += snap.load(self.spark, name).count()
-        snap.total_count = total
+                for name, df in sources.items()
+            ]
+        )
+        for part, n in parts:  # sources order
+            for entries in _TABLE_ENTRIES:
+                getattr(snap, entries).update(getattr(part, entries))
+            snap.total_count += n
         snap.save_manifest()
         return snap
+
+    def _collect_table(
+        self,
+        snap: Snapshot,
+        name: str,
+        df: DataFrame,
+        key: list[str],
+        count_rows: bool,
+    ) -> tuple[Snapshot, int]:
+        """Write one table of ``collect``; returns its manifest entries
+        (a one-table ``Snapshot`` with ``snap``'s layout) and its row
+        count (0 when not counted)."""
+        part = Snapshot(
+            root=snap.root,
+            buckets=snap.buckets,
+            format=snap.format,
+            group_hash_mod=snap.group_hash_mod,
+            partitions=snap.partitions,
+        )
+        path = str(Path(snap.root) / name)
+        types = dict(df.dtypes)
+        fingerprintable = part.group_hash_mod > 0 and all(
+            _is_orderable(types[k]) for k in key
+        )
+        # Piggyback the record count on the WRITE job itself
+        # (df.observe): the reference pays a full extra pass for its
+        # TotalDataCount (extract_data.go:23); at 100 TB that second
+        # scan is the entire cost of counting.  Fingerprinted tables
+        # skip this — their count falls out of the fingerprint agg.
+        obs = None
+        to_write = df
+        if count_rows and not fingerprintable:
+            try:
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                to_write = df.observe(obs, F.count(F.lit(1)).alias("n"))
+            except Exception:
+                obs = None
+        if part.buckets > 0:
+            table_id = self._catalog_identifier(snap.root, name)
+            (
+                to_write.write.mode("errorifexists")
+                .bucketBy(part.buckets, *key)
+                .sortBy(*key)
+                .option("path", path)
+                .format("parquet")
+                .saveAsTable(table_id)
+            )
+            part.catalog_tables[name] = table_id
+        elif part.format == "parquet":
+            w = to_write.write.mode("errorifexists")
+            if name in part.partitions:
+                w = w.partitionBy(*part.partitions[name])
+            else:
+                part.schemas[name] = _as_nullable(df.schema).jsonValue()
+            w.parquet(path)
+        else:
+            # delta / iceberg / orc …: same point-in-time contract;
+            # the transactional formats additionally give atomic
+            # snapshot swaps and their own time travel.  Gated: a
+            # missing runtime jar surfaces as an actionable error,
+            # not a ClassNotFoundException mid-write.
+            try:
+                w = to_write.write.format(part.format).mode("errorifexists")
+                if name in part.partitions:
+                    w = w.partitionBy(*part.partitions[name])
+                w.save(path)
+            except Exception as exc:
+                if part.format in ("delta", "iceberg"):
+                    raise ImportError(
+                        f"snapshot format {part.format!r} needs its Spark runtime "
+                        f"jar on the classpath: {exc}"
+                    ) from exc
+                raise
+        part.tables[name] = path
+        part.keys[name] = key
+        part.columns[name] = list(df.columns)
+        if fingerprintable:
+            # count falls out of the same tiny aggregation for free
+            fps = _group_fingerprints(
+                part.load(self.spark, name), key, part.group_hash_mod
+            )
+            part.group_hashes[name] = fps
+            return part, sum(n for n, *_ in fps.values())
+        if not count_rows:
+            return part, 0
+        if obs is not None:
+            return part, int(obs.get["n"])
+        # observation unavailable: pay the re-scan
+        return part, part.load(self.spark, name).count()
 
     @staticmethod
     def _catalog_identifier(snapshot_root: str, name: str) -> str:
@@ -540,8 +583,8 @@ def diff_snapshots(
             and before.buckets == after.buckets
             and mode == DiffMode.TYPED
         )
-    results: dict[str, DiffResult] = {}
-    for name in sorted(set(before.tables) | set(after.tables)):
+
+    def plan(name: str) -> DiffResult:
         # dedup_keys=True: a snapshot tool must diff identical snapshots
         # to EMPTY even when a declared key is not truly unique (the
         # reference gets this via last-row-wins map overwrite,
@@ -609,7 +652,7 @@ def diff_snapshots(
                         f"table {name!r}: ignoring every column leaves no key"
                     )
             # all-columns fallback keys treat NULLs as data → always null-safe
-            results[name] = diff_tables(
+            return diff_tables(
                 b,
                 a,
                 key,
@@ -624,7 +667,7 @@ def diff_snapshots(
             if where and name in where:
                 b = b.filter(where[name])
             empty = local_frame(spark, [], b.schema)
-            results[name] = diff_tables(
+            return diff_tables(
                 b, empty, before.keys[name], mode=mode, dedup_keys=True
             )
         else:  # added: every row INSERTED
@@ -632,10 +675,14 @@ def diff_snapshots(
             if where and name in where:
                 a = a.filter(where[name])
             empty = local_frame(spark, [], a.schema)
-            results[name] = diff_tables(
+            return diff_tables(
                 empty, a, after.keys[name], mode=mode, dedup_keys=True
             )
-    return results
+
+    # each table's plan is analysed in the JVM concurrently with the
+    # others' (py4j round trips wait on that analysis)
+    names = sorted(set(before.tables) | set(after.tables))
+    return dict(zip(names, run_jobs(*[partial(plan, n) for n in names])))
 
 
 def schema_changes(before: Snapshot, after: Snapshot) -> list[dict]:
