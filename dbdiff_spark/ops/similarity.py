@@ -739,99 +739,18 @@ KMEANS_K = 8
 KMEANS_ITERS = 3
 
 
-def _centroid_literal(comps: list[float]) -> str:
-    # string-parse round-trip: repr(float) → CAST(... AS DOUBLE) is
-    # exact for every finite f64, so the literal re-injected into the
-    # next iteration's plan is bit-identical to the collected value
-    return "array({})".format(
-        ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in comps)
-    )
-
-
-def _centroid_struct_array(
-    centroids: dict[int, list[float]], literal: bool
-) -> str:
+def _centroid_struct_array() -> str:
     """THE tie-break contract, spelled once: an ``array<struct<d2,
-    cell>>`` expression whose lexicographic struct ordering gives
+    cell>>`` expression over the broadcast ``carr`` column
+    (``_centroid_array_row``) whose lexicographic struct ordering gives
     nearest-centroid with smallest-cell tie-break — the same total
-    order as ``ORDER BY d2, cell`` in the oracles.  ``literal=True``
-    inlines the centroid values as expression literals (the small-K
-    regime); ``literal=False`` reads them from the broadcast ``carr``
-    data column (``_centroid_array_row``).  Every assignment/probe
-    regime consumes this one builder (via ``array_min`` for
-    assignment, ``array_sort`` for probe ranking), so the cross-path
-    identity the tests assert cannot drift between copies."""
-    if literal:
-        parts = ", ".join(
-            f"named_struct('d2', {_dist2_spark('embedding', _centroid_literal(c))}, "
-            f"'cell', CAST({k} AS BIGINT))"
-            for k, c in sorted(centroids.items())
-        )
-        return f"array({parts})"
+    order as ``ORDER BY d2, cell`` in the oracles.  Every assignment
+    and probe consumes this one builder (``array_min`` for assignment,
+    ``array_sort`` for probe ranking), so they cannot drift apart."""
     return (
         "transform(carr, c -> struct("
         + _dist2_spark("embedding", "c.centroid")
         + " AS d2, c.cell AS cell))"
-    )
-
-
-def _argmin_struct(centroids: dict[int, list[float]]) -> str:
-    """``array_min`` over the literal struct array: nearest-centroid
-    with smallest-cell tie-break as ONE projection expression — no
-    join, no window, no shuffle."""
-    return f"array_min({_centroid_struct_array(centroids, literal=True)})"
-
-
-# Above this K, centroids stop being inlined as literal expressions.
-# The literal argmin is the natural plan while the generated
-# expression stays analyzer-sized (K×dim double literals ≈ 25 chars
-# each: K=1024 × 16 dims ≈ 0.4 MB — fine; K=2048 × 64 dims = 5.6 MB
-# measured — not), so the derived-K tier (K ≈ √n) switches to a
-# DATA-DRIVEN assignment at scale: the centroids travel as one
-# broadcast row holding array<struct<cell, centroid>> (32k × 16 dims
-# ≈ 4 MB), cross-joined in (1-row BroadcastNestedLoopJoin — the corpus
-# never moves) and argmin'd per row with an array_min(transform(...))
-# HOF.  Both paths share the (d2, cell) lexicographic tie-break, so
-# they assign identically — asserted cross-path in
-# tests/test_similarity.py; probe-measured 1.5× faster than the
-# literal form at K=1024-2048 as well (tools/probe_ivf_scale.py).
-#
-# The r8 dim-1024 probe showed the K bound alone is wrong at
-# production embedding dims: expression size is ~25·K·DIM bytes, so
-# dim=1024 blows past analyzer-safe territory at K=256 (10 MB) where
-# dim=64 was fine to K=1024.  The default regime choice therefore
-# bounds TERMS (K·dim ≤ KMEANS_LITERAL_TERMS) alongside K; an explicit
-# ``literal_max`` still forces a regime (tests, probes).
-#
-# TERMS bound r12: 65_536 → 2_048.  The r8 probe priced the literal
-# form by repeated execution of ONE compiled plan, which amortizes
-# what iterative callers actually pay per action: parse + analyze +
-# a fresh Janino whole-stage compile EVERY time the literal VALUES
-# change — and the Lloyd loop changes them every round, so no round
-# ever reuses the codegen cache.  Measured at K=48 × dim=64 (the
-# sf0.1 derived-K tier, 3072 terms, ~75 KB of SQL per expression):
-# 1.96 s/round literal vs 1.22 s/round data-driven for the
-# assign+mean Lloyd round, and the serve probe pays the same
-# per-fresh-literal compile again.  The data regime is plan-size-
-# invariant, assigns identically (cross-path test), and is the
-# operative regime at production K ≈ √n anyway — the bound keeps the
-# literal plan only where the expression is small enough that its
-# analysis cost is noise (pinned-K ops: KMEANS_K=8 × 64 = 512 terms).
-KMEANS_LITERAL_MAX = 1024
-KMEANS_LITERAL_TERMS = 2_048
-
-
-def _literal_regime(
-    centroids: dict[int, list[float]], literal_max: int | None
-) -> bool:
-    if literal_max is not None:
-        return len(centroids) <= literal_max
-    if not centroids:
-        return True
-    dim = len(next(iter(centroids.values())))
-    return (
-        len(centroids) <= KMEANS_LITERAL_MAX
-        and len(centroids) * max(dim, 1) <= KMEANS_LITERAL_TERMS
     )
 
 
@@ -853,8 +772,10 @@ def _centroid_array_row(
     spark: SparkSession, centroids: dict[int, list[float]]
 ):
     """The trained centroids as ONE row holding the whole
-    ``array<struct<cell, centroid>>`` — the broadcast side of the
-    data-driven (large-K) assignment and probe regimes."""
+    ``array<struct<cell, centroid>>`` — the broadcast side of every
+    nearest-centroid assignment and probe.  Typed, so an empty
+    centroid set (an empty corpus) argmins to NULL instead of failing
+    analysis on a VOID-typed ``array()``."""
     return local_frame(
         spark,
         [
@@ -869,50 +790,34 @@ def _centroid_array_row(
     )
 
 
+def _with_centroids(
+    df: DataFrame, centroids: dict[int, list[float]]
+) -> DataFrame:
+    """``df`` + the ``carr`` column: a 1-row BroadcastNestedLoopJoin,
+    so the corpus never moves.  The centroids travel as DATA, not as
+    expression literals: the plan (and its generated code) is the same
+    at every K, dim and Lloyd round, where an inlined K×dim literal
+    expression is ~25·K·dim bytes of SQL re-analyzed and re-compiled
+    each time its values change (ARCHITECTURE.md, r7/r8/r14 probes)."""
+    return df.crossJoin(
+        F.broadcast(_centroid_array_row(df.sparkSession, centroids))
+    )
+
+
 def _assign_cells(
-    vecs: DataFrame,
-    centroids: dict[int, list[float]],
-    literal_max: int | None = None,
+    vecs: DataFrame, centroids: dict[int, list[float]]
 ) -> DataFrame:
     """``vecs`` + a ``cell`` column = nearest centroid (tie-break
-    smallest cell).  BOTH regimes are zero-shuffle:
-
-    * ``K <= literal_max``: the centroid values are inlined as
-      expression LITERALS (``_argmin_struct``) — the plan carries no
-      extra node at all.
-    * above it (the K ≈ √n regime, where the literal form would be MBs
-      of SQL text — 5.6 MB measured at K=2048×64 dims): the centroids
-      travel as DATA — one broadcast row holding an
-      ``array<struct<cell, centroid>>`` cross-joined in (a 1-row
-      BroadcastNestedLoopJoin, no exchange of ``vecs``), with the
-      argmin computed per row by an ``array_min(transform(...))`` HOF
-      over that array.  Same (d2, cell) lexicographic tie-break (one
-      shared builder, ``_centroid_struct_array``), so the two paths
-      assign identically (cross-path-tested).  An earlier
-      broadcast-join + min(struct)-groupBy formulation measured
-      comparably fast in local mode but re-shuffles the full corpus on
-      vec_id — a cost local[32] cannot price and a 100 TB cluster pays
-      in full; the HOF form keeps the corpus in place at any K
-      (regime timings: tools/probe_ivf_scale.py).
-
-    The default choice bounds K AND K·dim (``_literal_regime`` —
-    expression size scales with both); an explicit ``literal_max``
-    forces a regime."""
-    if _literal_regime(centroids, literal_max):
-        return vecs.withColumn(
-            "cell", F.expr(_argmin_struct(centroids) + ".cell")
-        )
+    smallest cell), zero-shuffle at any K: the argmin is
+    ``array_min`` over ``_centroid_struct_array`` per row.  An earlier
+    broadcast-join + min(struct)-groupBy formulation measured
+    comparably fast in local mode but re-shuffles the full corpus on
+    vec_id — a cost local[32] cannot price and a 100 TB cluster pays
+    in full; the HOF form keeps the corpus in place."""
     return (
-        vecs.crossJoin(
-            F.broadcast(_centroid_array_row(vecs.sparkSession, centroids))
-        )
+        _with_centroids(vecs, centroids)
         .withColumn(
-            "cell",
-            F.expr(
-                "array_min("
-                + _centroid_struct_array(centroids, literal=False)
-                + ").cell"
-            ),
+            "cell", F.expr(f"array_min({_centroid_struct_array()}).cell")
         )
         .drop("carr")
     )
@@ -958,7 +863,7 @@ def _cell_mean_frame(assigned: DataFrame) -> DataFrame:
 
 def _kmeans_centroids(vecs: DataFrame, k: int = KMEANS_K) -> dict[int, list[float]]:
     """The Lloyd loop itself over a ``(vec_id, embedding)`` frame:
-    KMEANS_ITERS rounds of zero-shuffle literal-argmin assignment +
+    KMEANS_ITERS rounds of zero-shuffle ``_assign_cells`` assignment +
     grid-exact mean update (K array rows collected per round — see
     ``_cell_mean_frame``).  Shared by ``kmeans_lloyd``
     (membership/inertia report, pinned K — the cluster count there is
@@ -983,31 +888,32 @@ def _kmeans_centroids(vecs: DataFrame, k: int = KMEANS_K) -> dict[int, list[floa
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embedding column — the iterative-
     algorithm pattern done the Spark-native way: centroids are K×dim
-    DRIVER-side values (collected each round, re-injected as literals),
-    so each iteration is
+    DRIVER-side values (collected each round, re-injected as one
+    broadcast row), so each iteration is
 
-    * assignment: a zero-shuffle projection — argmin over K literal
-      centroids fused into the corpus scan (``_argmin_struct``); no
-      corpus×K join, no per-row window (the r2-flagged full-corpus
+    * assignment: a zero-shuffle projection — argmin over the K
+      centroids of the 1-row broadcast ``carr`` (``_assign_cells``);
+      no corpus×K join, no per-row window (the r2-flagged full-corpus
       shuffle per iteration is gone), and
     * update: one map-side-combinable groupBy(cell, pos) over the
       exploded assignment, ≤ K×dim output rows collected to the driver.
 
     Lineage is flat by construction: every iteration's job hangs off
-    the cached base scan plus literals — nothing accumulates across
-    iterations, so no checkpoint is needed at any iteration count.
+    the cached base scan plus one local centroid row — nothing
+    accumulates across iterations, so no checkpoint is needed at any
+    iteration count.
 
     Deterministic end-to-end: ties break on smallest cell, centroid
     updates use integer-grid sums (order-independent), and the
-    literal round-trip (repr → CAST AS DOUBLE) is exact — which is
+    collected doubles re-enter bit-for-bit as Arrow data — which is
     what makes the nested-CTE DuckDB oracle (``KMEANS_SQL``) valid.
 
     Returns per-cell membership count and grid-exact inertia.
     """
     with pinned(_vectors(spark, sf_dir).select("vec_id", "embedding")) as vecs:
         centroids = _kmeans_centroids(vecs)
-        final = vecs.select(
-            F.expr(_argmin_struct(centroids)).alias("best")
+        final = _with_centroids(vecs, centroids).select(
+            F.expr(f"array_min({_centroid_struct_array()})").alias("best")
         ).select(F.col("best.cell").alias("cell"), F.col("best.d2").alias("d2"))
         return final.groupBy("cell").agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -1101,12 +1007,13 @@ KMEANS_SQL = _kmeans_sql()
 #
 # ``ann_ivf`` promises that "swapping seeds for trained centroids
 # changes no plumbing" — this op proves it: the coarse quantizer is the
-# k-means fixpoint (the shared ``_kmeans_centroids`` driver loop, K×dim
-# literals), assignment is the same zero-shuffle literal-argmin
-# projection k-means itself uses, and the query side ranks the K
-# literal centroids with one array_sort expression — probing nprobe
-# cells with NO window and NO extra shuffle (the seed-IVF window was
-# needed because its centroids lived in a frame; literals don't).
+# k-means fixpoint (the shared ``_kmeans_centroids`` driver loop),
+# assignment is the same zero-shuffle ``_assign_cells`` projection
+# k-means itself uses, and the query side ranks the K centroids of the
+# broadcast ``carr`` row with one array_sort expression — probing
+# nprobe cells with NO window and NO extra shuffle (the seed-IVF
+# window was needed because its centroids lived in a K-row frame; one
+# array row per query needs none).
 # Honest measured result on THIS corpus: the synthetic embeddings are
 # near-uniform, so seed cells are already balanced (sf0.1 cell sizes
 # 220-292 seeded vs 221-266 trained) and training buys no recall here —
@@ -1120,8 +1027,8 @@ KMEANS_SQL = _kmeans_sql()
 # test_trained_ivf_beats_seed_ivf_on_clustered_embeddings).  What this
 # op verifies end-to-end on the driver fixture is the trained-quantizer
 # MACHINERY: the fixpoint is bit-identical in both engines, and the
-# search plan is strictly cheaper than seed-IVF's (literal centroids
-# need no probe window).
+# search plan is strictly cheaper than seed-IVF's (the centroid array
+# row needs no probe window).
 
 
 def _derived_kmeans_k(spark: SparkSession, sf_dir: str) -> int:
@@ -1260,27 +1167,19 @@ def _probe_frame(
 ) -> DataFrame:
     """Per-query probe ranking over trained centroids →
     ``(query_id, q_emb, q_norm, q_cell)``, ``nprobe`` rows per query.
-    Mirrors the assignment's two regimes — BOTH zero-shuffle, one
-    shared shape: a per-query
-    ``explode(slice(array_sort(<struct array>), 1, nprobe))`` where
-    the struct array is K inlined literals below ``KMEANS_LITERAL_MAX``
-    and the broadcast ``carr`` data row (1-row
-    BroadcastNestedLoopJoin) above it.  No window, no per-query
-    shuffle in either regime.  Shared by the exact-cosine trained-IVF
+    The assignment's twin, zero-shuffle: a per-query
+    ``explode(slice(array_sort(<struct array>), 1, nprobe))`` over the
+    broadcast ``carr`` row (``_centroid_struct_array``).  No window, no
+    per-query shuffle.  Shared by the exact-cosine trained-IVF
     serving path and the residual IVF-PQ tier (one spelling of the
     probe tie-break)."""
     qbase = vecs.filter(F.col("vec_id") % query_mod == 0)
-    literal = _literal_regime(centroids, None)
-    if not literal:
-        qbase = qbase.crossJoin(F.broadcast(_centroid_array_row(
-            vecs.sparkSession, centroids
-        )))
-    arr = _centroid_struct_array(centroids, literal=literal)
-    return qbase.selectExpr(
+    return _with_centroids(qbase, centroids).selectExpr(
         "vec_id AS query_id",
         "embedding AS q_emb",
         "norm AS q_norm",
-        f"explode(slice(array_sort({arr}), 1, {nprobe})) AS pr",
+        f"explode(slice(array_sort({_centroid_struct_array()}), 1, {nprobe}))"
+        " AS pr",
     ).select(
         "query_id", "q_emb", "q_norm", F.col("pr.cell").alias("q_cell")
     )
@@ -3069,52 +2968,23 @@ WHERE rank <= {IVF_K}
 
 
 def _ann_ivf_trained_explain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy inspectable frame: the trained-IVF search plan with the
-    round-0 (seed) centroid literals — training only changes the
-    literal values, never the plan shape, and the public op cuts its
-    bounded result with io.cut_lineage (which would audit as a
-    LocalTableScan)."""
+    """Lazy inspectable frame: the trained-IVF search plan over the
+    round-0 (seed) centroids — training only changes the values in the
+    broadcast centroid row, never the plan shape, and the public op
+    cuts its bounded result with io.cut_lineage (which would audit as
+    a LocalTableScan).  ``n`` bounds the query side arithmetically, so
+    the broadcast guard runs no job."""
     vecs = _vectors(spark, sf_dir)
     seeds = vecs.filter(F.col("vec_id") < KMEANS_K).collect()
     centroids = {
         int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in seeds
     }
-    assigned = vecs.select(
-        "vec_id", "embedding", "norm",
-        F.expr(_argmin_struct(centroids) + ".cell").alias("cell"),
+    assigned = _assign_cells(vecs, centroids).select(
+        "vec_id", "embedding", "norm", "cell"
     )
-    probe_structs = ", ".join(
-        f"named_struct('d2', {_dist2_spark('embedding', _centroid_literal(c))}, "
-        f"'cell', CAST({k} AS BIGINT))"
-        for k, c in sorted(centroids.items())
-    )
-    queries = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .selectExpr(
-            "vec_id AS query_id", "embedding AS q_emb", "norm AS q_norm",
-            f"explode(slice(array_sort(array({probe_structs})), 1, {IVF_NPROBE}))"
-            " AS pr",
-        )
-        .select("query_id", "q_emb", "q_norm", F.col("pr.cell").alias("q_cell"))
-    )
-    cand = assigned.join(
-        F.broadcast(queries),
-        (F.col("cell") == F.col("q_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(f"{_dot_spark('embedding', 'q_emb')} / (norm * q_norm)").alias(
-            "cosine"
-        ),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= IVF_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _ivf_literal_search(
+        vecs, assigned, centroids, IVF_NPROBE, MAX_BROADCAST_QUERIES,
+        n=_corpus_counts(spark, sf_dir)[1],
     )
 
 
@@ -5791,7 +5661,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # IVF-pattern assignment: broadcast seeds against the corpus scan,
     # argmin as a map-side-combinable min(struct) — at 48 cells the
-    # literal-argmin projection kmeans uses would be a 48×64-term
+    # HOF-argmin projection kmeans uses would be a 48×64-term
     # interpreted expression per row; the join+aggregate form stays a
     # narrow codegen'd pipeline.
     #
@@ -6044,7 +5914,12 @@ _PCA_V0 = [0.125] * PCA_DIM  # 1/sqrt(64), exact in binary
 
 
 def _vec_literal(comps: list[float]) -> str:
-    return _centroid_literal(comps)  # repr round-trip: exact for f64
+    # string-parse round-trip: repr(float) → CAST(... AS DOUBLE) is
+    # exact for every finite f64, so the literal re-injected into the
+    # next iteration's plan is bit-identical to the collected value
+    return "array({})".format(
+        ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in comps)
+    )
 
 
 def _pca_score_expr(mu: list[float], v: list[float]) -> str:

@@ -61,17 +61,40 @@ def test_query_set_broadcast_guard(spark, sf_dir):
     assert "BroadcastHashJoin" not in plan2, plan2
 
 
-def test_kmeans_final_plan_is_joinless_single_exchange(spark, sf_dir):
-    """Regression (VERDICT r2 #3): k-means assignment must be a literal
-    argmin PROJECTION fused into the scan — no corpus×K join, no per-row
-    window — leaving exactly one REQUIRED exchange (the per-cell
-    aggregation) in the returned plan.  The r12 ``spread`` rebalance in
-    ``_vectors`` may add one deliberate REPARTITION_BY_NUM exchange when
-    the input scan is narrower than the core count (the local-mode
-    one-file case); it is a no-op at real scale and must never be
-    counted as a requirement the aggregation imposed."""
-    plan = _plan(entry.queries()["kmeans_lloyd"](spark, sf_dir))
-    assert "Join" not in plan and "Window" not in plan, plan
+def _nodes(plan):
+    """Pre-order walk of a JVM physical plan tree."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def test_kmeans_final_plan_is_broadcast_argmin_single_exchange(spark, sf_dir):
+    """Regression (VERDICT r2 #3): k-means assignment must be a per-row
+    argmin PROJECTION — no corpus×K join, no per-row window — leaving
+    exactly one REQUIRED exchange (the per-cell aggregation) in the
+    returned plan.  The centroids arrive as ONE broadcast row, so the
+    only join is a BroadcastNestedLoopJoin whose build side is that
+    1-row relation.  The r12 ``spread`` rebalance in ``_vectors`` may
+    add one deliberate REPARTITION_BY_NUM exchange when the input scan
+    is narrower than the core count (the local-mode one-file case); it
+    is a no-op at real scale and must never be counted as a
+    requirement the aggregation imposed."""
+    df = entry.queries()["kmeans_lloyd"](spark, sf_dir)
+    plan = _plan(df)
+    joins = [
+        n for n in _nodes(df._jdf.queryExecution().executedPlan().executedPlan())
+        if "Join" in n.nodeName()
+    ]
+    assert [j.nodeName() for j in joins] == ["BroadcastNestedLoopJoin"], plan
+    (bnlj,) = joins
+    build = bnlj.right() if bnlj.buildSide().toString() == "BuildRight" else bnlj.left()
+    leaves = build.collectLeaves()
+    assert leaves.size() == 1, plan
+    assert leaves.apply(0).nodeName() == "LocalTableScan", plan
+    assert leaves.apply(0).rows().size() == 1, plan
+    for node in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "Window"):
+        assert node not in plan, plan
     assert plan.count("ENSURE_REQUIREMENTS") == 1, plan
     assert plan.count("REPARTITION_BY_NUM") <= 1, plan
 

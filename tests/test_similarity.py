@@ -252,47 +252,32 @@ def test_trained_ivf_k_is_derived_from_corpus_size(spark, sf_dir, tmp_path):
     assert len(_glob.glob(f"{root}/assignments/cell=*")) > KMEANS_K
 
 
-def test_kmeans_join_assignment_matches_literal_path(spark, sf_dir):
-    """The broadcast-join assignment (the K > KMEANS_LITERAL_MAX regime
-    where a literal argmin expression would be MBs of SQL text) must
-    assign every vector to the IDENTICAL cell as the literal path —
-    same (d2, cell) lexicographic tie-break, different plan.  Also
-    covers the probe side: forcing the join regime through the full
-    trained search must reproduce the literal-path result exactly."""
-    from dbdiff_spark.ops import similarity as sim
+def test_kmeans_trained_entries_on_empty_corpus_match_oracles(spark, tmp_path):
+    """A zero-row ``embeddings`` table trains zero centroids.  The
+    k-means-trained entries must then return zero rows, as their DuckDB
+    oracles do — not fail analysis on an untyped empty argmin array."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    vecs = sim._vectors(spark, sf_dir)
-    seeds = vecs.filter("vec_id < 8").collect()
-    centroids = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in seeds
-    }
-    lit = {
-        r["vec_id"]: r["cell"]
-        for r in sim._assign_cells(vecs, centroids, literal_max=1024)
-        .select("vec_id", "cell").collect()
-    }
-    joined = {
-        r["vec_id"]: r["cell"]
-        for r in sim._assign_cells(vecs, centroids, literal_max=0)
-        .select("vec_id", "cell").collect()
-    }
-    assert lit == joined and len(lit) > 0
+    import __spark_entry__ as entry
 
-    # full search equality with the join regime forced end to end
-    orig = sim.KMEANS_LITERAL_MAX
-    base = {
-        (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 9))
-        for r in sim.ann_ivf_trained(spark, sf_dir).collect()
-    }
-    sim.KMEANS_LITERAL_MAX = 0
-    try:
-        forced = {
-            (r.query_id, r.rank): (r.neighbor_id, round(r.cosine, 9))
-            for r in sim.ann_ivf_trained(spark, sf_dir).collect()
-        }
-    finally:
-        sim.KMEANS_LITERAL_MAX = orig
-    assert forced == base and len(base) > 0
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([], pa.int64()),
+                "embedding": pa.array([], pa.list_(pa.float32())),
+                "label": pa.array([], pa.int32()),
+            }
+        ),
+        str(path),
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    for name in ("kmeans_lloyd", "ann_ivf_trained"):
+        assert entry.queries()[name](spark, str(tmp_path)).collect() == [], name
+        assert con.execute(entry.oracle_sql()[name]).fetchall() == [], name
 
 
 def test_production_trained_ivf_subsamples_and_serves_topk(spark, sf_dir):
@@ -401,35 +386,6 @@ def test_query_broadcast_guard_bounds_bytes_not_just_rows(spark):
     assert 20_000 <= MAX_BROADCAST_QUERIES
     assert 20_000 * 512 * 8 > MAX_BROADCAST_BYTES
     assert not _broadcastable(wide, MAX_BROADCAST_QUERIES)
-
-
-def test_literal_regime_bounds_terms_not_just_k(spark):
-    """r8 dim-1024 probe finding: literal-argmin SQL is ~25·K·dim
-    bytes, so the regime switch must bound K·dim.  r12 tightened the
-    terms bound to 2048: iterative callers pay parse + analyze + a
-    fresh Janino compile every time the literal VALUES change (every
-    Lloyd round), so the literal plan is kept only where the
-    expression is small enough that this cost is noise — the pinned
-    KMEANS_K=8 × dim 64 region stays literal, the derived-K tiers
-    (K ≈ √n) run data-driven at bench SF exactly as they do at
-    production scale."""
-    from dbdiff_spark.ops.similarity import (
-        KMEANS_K,
-        KMEANS_LITERAL_TERMS,
-        _literal_regime,
-    )
-
-    pinned = {k: [float(k)] * 64 for k in range(KMEANS_K)}
-    assert KMEANS_K * 64 <= KMEANS_LITERAL_TERMS
-    assert _literal_regime(pinned, None)  # pinned-K ops stay literal
-    derived = {k: [float(k)] * 64 for k in range(48)}
-    assert 48 * 64 > KMEANS_LITERAL_TERMS
-    assert not _literal_regime(derived, None)  # sf0.1 derived K: data regime
-    highdim = {k: [float(k)] * 1024 for k in range(256)}
-    assert not _literal_regime(highdim, None)  # 10 MB of SQL at dim 1024
-    # explicit literal_max still forces a regime (tests/probes)
-    assert _literal_regime(highdim, 1 << 30)
-    assert not _literal_regime(pinned, 0)
 
 
 def test_ivf_pq_composes_cell_pruning_with_exact_adc(spark, sf_dir):

@@ -1,24 +1,12 @@
-"""Crossover probe for the two-regime k-means assignment
-(``similarity._assign_cells``).
+"""ANN build-cost probes over synthetic clustered corpora.
 
-``KMEANS_LITERAL_MAX = 1024`` was chosen by the expression-size
-argument (K x dim double literals ~ 25 chars each: 1024 x 64 dims
-~ 1.6 MB of SQL text is analyzer-tolerable, 32k x 64 is not).  This
-probe measures what the argument cannot: the actual wall-time of the
-zero-shuffle literal-argmin projection vs the data-driven HOF argmin
-(centroids as one broadcast array row), at growing centroid counts
-over a fixed synthetic corpus, plus the literal expression's SQL-text
-size.  Both paths are
-asserted to assign IDENTICALLY (the cross-path test's invariant,
-re-checked here at every K).
-
-Usage: python tools/probe_ivf_scale.py [--n 50000] [--dim 64]
-  [--ks 64,256,1024,2048]
+Usage: python tools/probe_ivf_scale.py (--build-cost | --pq-cost)
+  [--ns 20000,50000,100000] [--dim 64]
 (run with 2>/dev/null — Spark progress bars interleave stdout).
 Writes nothing to the repo; prints a markdown table for
 ARCHITECTURE.md.
 
-``--build-cost`` probes the r8 production-build claim instead: at
+``--build-cost`` probes the r8 production-build claim: at
 derived K ≈ √n, Lloyd over the FULL corpus costs n·K·iters distance
 evals (n^1.5) while the ``_derived_sample_mod`` subsample bounds
 training to ~SAMPLE_PER_CENTROID·K rows — train time should FLATTEN
@@ -44,97 +32,32 @@ from dbdiff_spark.session import get_spark  # noqa: E402
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=50_000)
     ap.add_argument("--dim", type=int, default=64)
-    ap.add_argument("--ks", default="64,256,1024,2048")
-    ap.add_argument(
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument(
         "--build-cost",
         action="store_true",
         help="probe full-corpus vs sample-trained Lloyd + assignment "
         "at derived K over growing n (the r8 production-build row)",
     )
-    ap.add_argument("--ns", default="20000,50000,100000")
-    ap.add_argument(
+    mode.add_argument(
         "--pq-cost",
         action="store_true",
         help="probe residual IVF-PQ build vs serve-only + on-disk "
         "codes/embedding payload ratio over growing n (r9)",
     )
+    ap.add_argument("--ns", default="20000,50000,100000")
     args = ap.parse_args()
-    ks = [int(k) for k in args.ks.split(",")]
 
     spark = get_spark(app_name="probe_ivf_scale")
-    from pyspark.sql import functions as F
-
-    from dbdiff_spark import testkit
-    from dbdiff_spark.ops import similarity as sim
-
     if args.build_cost:
         return build_cost(spark, args)
-    if args.pq_cost:
-        return pq_cost(spark, args)
-
-    out_dir = tempfile.mkdtemp(prefix="ivf_scale_")
-    testkit.write_clustered_embeddings(
-        spark, out_dir, n=args.n, dim=args.dim, k=max(ks), seed=13, sigma=0.3
-    )
-    vecs = (
-        sim._vectors(spark, out_dir)
-        .select("vec_id", "embedding")
-        .persist()
-    )
-    n = vecs.count()  # materialize the cache before timing
-
-    print("| K | literal expr bytes | literal s | data-driven s | identical |")
-    print("|---|---|---|---|---|")
-    for k in ks:
-        seeds = vecs.filter(F.col("vec_id") < k).collect()
-        centroids = {
-            int(r["vec_id"]): [float(x) for x in r["embedding"]]
-            for r in seeds
-        }
-        expr_bytes = len(sim._argmin_struct(centroids))
-
-        def run(literal_max: int) -> "tuple[float, tuple[int, int]]":
-            t0 = time.time()
-            df = sim._assign_cells(vecs, centroids, literal_max=literal_max)
-            h = df.selectExpr(
-                "sum(hash(vec_id, cell)) AS h", "count(*) AS c"
-            ).collect()[0]
-            return time.time() - t0, (int(h["h"]), int(h["c"]))
-
-        join_s, join_h = run(literal_max=0)
-        if expr_bytes > 16 << 20:
-            # a >16 MB literal expression is exactly what the
-            # data-driven regime exists to avoid — running it would
-            # probe the analyzer's pathology, not the plan space
-            print(
-                f"| {k} | {expr_bytes} | (skipped: expr too large) |"
-                f" {join_s:.2f} | n/a |"
-            )
-        else:
-            lit_s, lit_h = run(literal_max=1 << 30)
-            same = lit_h == join_h
-            # print BEFORE asserting: a divergence must still emit the
-            # row's timings/expr-size diagnostics
-            print(
-                f"| {k} | {expr_bytes} | {lit_s:.2f} | {join_s:.2f} |"
-                f" {'yes' if same else 'NO'} |"
-            )
-            assert same, f"paths diverged at K={k}"
-        print(
-            f"  (carr payload at this K: {k * args.dim * 8 / 1e6:.1f} MB)",
-            flush=True,
-        )
-    print(f"(n={n}, dim={args.dim}, local[*])")
-    return 0
+    return pq_cost(spark, args)
 
 
 def build_cost(spark, args) -> int:
     """Full-corpus vs sample-trained Lloyd at derived K over growing n,
     plus the assignment pass that dominates the sampled build."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     from dbdiff_spark import testkit
     from dbdiff_spark.ops import similarity as sim
 
