@@ -26,6 +26,8 @@ Dot products fold left-to-right with double accumulators in BOTH engines
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1276,7 +1278,7 @@ def ann_ivf_index_persist(
     if nprobe is None:
         nprobe = ivf_nprobe_for(k)
     with pinned(_vectors(spark, sf_dir)) as vecs:
-        _build_ivf_coarse_artifacts(spark, vecs, k, mod, root)
+        _build_ivf_coarse_artifacts(spark, sf_dir, root, vecs, k, mod)
     # --- serving path: everything below touches ONLY the artifacts
     # (plus the raw query vectors) — no retraining, no reassignment
     out = _serve_ivf_from_artifacts(
@@ -1318,32 +1320,71 @@ def _write_cell_partitioned(df: DataFrame, path: str, mode: str) -> None:
     _cell_spread(df).write.mode(mode).partitionBy("cell").parquet(path)
 
 
+def _write_index(
+    spark: SparkSession,
+    root: str,
+    centroids: dict[int, list[float]],
+    assigned: DataFrame,
+    codebook: DataFrame | None = None,
+    codes: DataFrame | None = None,
+) -> None:
+    """THE index artifact writer every build goes through: ``centroids``
+    (one file), ``assignments`` (``partitionBy(cell)`` — or
+    ``(gen, cell)`` when ``assigned`` carries ``gen``, the upsert
+    layout's base generation), and, for the IVF-PQ composite,
+    ``pq_codebook`` (one file) and ``pq_codes`` (under ``gen=0`` when
+    the layout is gen-partitioned, so upsert generations overwrite
+    their own codes partition).  The artifacts share no data
+    dependency — assignment and codes read the in-memory centroids
+    and the caller's frames, never each other's files — so they are
+    written as overlapped jobs in one ``io.run_jobs`` call: the tiny
+    one-file commits hide inside the assignment write's tail.  A
+    caller feeding several artifacts from one frame pins and
+    materializes it first, or every racing job recomputes its cold
+    partitions."""
+    keys = ["gen", "cell"] if "gen" in assigned.columns else ["cell"]
+    jobs = [
+        lambda: one_file(_centroid_frame(spark, centroids))
+        .write.mode("overwrite")
+        .parquet(f"{root}/centroids"),
+        lambda: _cell_spread(assigned)
+        .write.mode("overwrite")
+        .partitionBy(*keys)
+        .parquet(f"{root}/assignments"),
+    ]
+    if codebook is not None:
+        jobs.append(
+            lambda: one_file(codebook)
+            .write.mode("overwrite")
+            .parquet(f"{root}/pq_codebook")
+        )
+    if codes is not None:
+        if "gen" in keys:
+            codes = codes.withColumn("gen", F.lit(0).cast("bigint"))
+        jobs.append(
+            lambda: codes.write.mode("overwrite")
+            .partitionBy(*keys[:-1])
+            .parquet(f"{root}/pq_codes")
+        )
+    run_jobs(*jobs)
+
+
 def _build_ivf_coarse_artifacts(
-    spark: SparkSession, vecs: DataFrame, k: int, mod: int, root: str
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int,
 ) -> dict[int, list[float]]:
     """Train the sample-trained quantizer and write THE coarse index
     layout — ``<root>/centroids`` (one file) + ``<root>/assignments``
     (``partitionBy(cell)``) — the artifact contract shared by
-    ``ann_ivf_index_persist``, ``ann_ivf_ingest``'s base build, and the
-    residual IVF-PQ tier (which adds fine-stage artifacts beside it, so
-    ONE root serves exact-IVF, IVF-PQ, and incremental ingest).
-    Returns the trained centroids."""
+    ``ann_ivf_index_persist``, ``ann_ivf_serve``'s standing root and
+    the delete tier built on it.  ``sf_dir`` is unused here: every
+    standing build takes the same ``(spark, sf_dir, root, vecs, k,
+    mod)`` arguments (``_STANDING_INDEX``).  Returns the trained
+    centroids."""
     centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
-    # the two artifacts share no data dependency (the assignment reads
-    # the DRIVER-side centroids, not the centroids file): overlap the
-    # writes so the tiny centroids-file commit hides inside the
-    # assignment write's tail (io.run_jobs, guide §2.6)
-    run_jobs(
-        lambda: one_file(_centroid_frame(spark, centroids))
-        .write.mode("overwrite")
-        .parquet(f"{root}/centroids"),
-        lambda: _write_cell_partitioned(
-            _assign_cells(vecs, centroids).select(
-                "vec_id", "embedding", "norm", "cell"
-            ),
-            f"{root}/assignments",
-            "overwrite",
-        ),
+    _write_index(
+        spark, root, centroids,
+        _assign_cells(vecs, centroids).select("vec_id", "embedding", "norm", "cell"),
     )
     return centroids
 
@@ -1355,6 +1396,17 @@ def _load_index_centroids(
         int(r["cell"]): [float(x) for x in r["centroid"]]
         for r in spark.read.parquet(f"{root}/centroids").collect()
     }
+
+
+def _query_labels(spark: SparkSession, sf_dir: str, query_mod: int) -> DataFrame:
+    """Q-row query-label lookup for the payload pre-filter: the stride
+    predicate pushes into the scan, so this reads Q rows, never the
+    corpus."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % query_mod == 0)
+        .selectExpr("vec_id AS query_id", "label AS q_label")
+    )
 
 
 def _serve_ivf_from_artifacts(
@@ -1372,19 +1424,31 @@ def _serve_ivf_from_artifacts(
     DELETE/UPSERT tier) are anti-applied here, so every IVF serve path
     — plain, ingest-merged, filtered — honours retractions; roots
     without a tombstone log take this branch for free (one driver-side
-    exists() probe, no plan change)."""
-    loaded = _tombstone_visibility(
+    exists() probe, no plan change).  Filtering is read off the layout:
+    a ``label`` payload column in ``assignments`` (the labeled build)
+    switches on the PRE-filter — the label rides the candidate join
+    over the cell-pruned scan, query labels are a Q-row lookup."""
+    assigned = _tombstone_visibility(
         spark, root, spark.read.parquet(f"{root}/assignments")
-    ).select(
-        "vec_id", "embedding", "norm", F.col("cell").cast("bigint").alias("cell")
     )
+    payload = ["label"] if "label" in assigned.columns else []
+    centroids = _load_index_centroids(spark, root)
+    vecs = _vectors(spark, sf_dir)
+    queries = _probe_frame(vecs, centroids, nprobe, query_mod)
+    if payload:
+        queries = queries.join(_query_labels(spark, sf_dir, query_mod), "query_id")
     return _ivf_literal_search(
-        _vectors(spark, sf_dir),
-        loaded,
-        _load_index_centroids(spark, root),
+        vecs,
+        assigned.select(
+            "vec_id", "embedding", "norm", *payload,
+            F.col("cell").cast("bigint").alias("cell"),
+        ),
+        centroids,
         nprobe,
         max_broadcast_queries,
         query_mod,
+        queries=queries,
+        extra_on=F.col("label") == F.col("q_label") if payload else None,
         n=n,
     )
 
@@ -1443,7 +1507,9 @@ def _corpus_fingerprint(spark: SparkSession, sf_dir: str) -> str:
 def _ensure_index_params(
     spark: SparkSession, sf_dir: str, root: str, family: str, build
 ) -> tuple[int, int, int, int, int]:
-    """Build-once guard for the serve-only entries: ``<root>/params``
+    """Build-once guard for the standing-index entries — its only
+    engine caller is ``_standing_frame``, the one lifecycle function
+    over the ``_STANDING_INDEX`` table: ``<root>/params``
     (1-row parquet: n, dim, cells, nprobe, qmod, family, fingerprint)
     is written LAST, so its ``_SUCCESS`` marker doubles as the
     build-complete flag — a crashed half-build never serves.  A warm
@@ -1538,6 +1604,70 @@ def _ensure_index_params(
     )
 
 
+# The standing-index entries, one row each: entry → (artifact root
+# name, params family, build, tier).  ``build`` is the NAME of a
+# module-level build function taking ``(spark, sf_dir, root, vecs, k, mod)``,
+# resolved at call time, so patching the module attribute (the
+# warm-serve tests) reaches every path.  ``tier`` picks the serve
+# function: ``ivf`` exact cosine, ``ivfpq`` residual-PQ ADC.
+_STANDING_INDEX = {
+    "ann_ivf_serve": ("ivf_serve", "ivf", "_build_ivf_coarse_artifacts", "ivf"),
+    "ann_ivf_filtered_serve": ("ivf_lab", "ivf_lab", "_build_ivf_lab_coarse", "ivf"),
+    "ann_ivf_delete_serve": ("ivf_del", "ivf_del", "_build_ivf_del_artifacts", "ivf"),
+    "ann_ivf_upsert_serve": ("ivf_ups", "ivf_ups", "_build_ivf_ups_artifacts", "ivf"),
+    "ann_ivf_compact_serve": ("ivf_cmp", "ivf_cmp", "_build_ivf_cmp_artifacts", "ivf"),
+    "ann_ivfpq_serve": ("ivfpq_serve", "ivfpq", "_build_ivfpq_artifacts", "ivfpq"),
+    "ann_ivfpq_filtered_serve": (
+        "ivfpq_lab", "ivfpq_lab", "_build_ivfpq_lab_artifacts", "ivfpq"
+    ),
+    "ann_ivfpq_delete_serve": (
+        "ivfpq_del", "ivfpq_del", "_build_ivfpq_del_artifacts", "ivfpq"
+    ),
+    "ann_ivfpq_upsert_serve": (
+        "ivfpq_ups", "ivfpq_ups", "_build_ivfpq_ups_artifacts", "ivfpq"
+    ),
+}
+
+
+def _standing_frame(
+    spark: SparkSession,
+    sf_dir: str,
+    entry: str,
+    max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
+    index_root: str | None = None,
+) -> DataFrame:
+    """THE standing-index lifecycle, for every ``_STANDING_INDEX`` row:
+    resolve the root (default: session-warehouse-scheme-qualified,
+    uid+pid-salted, stable per corpus within the process — see
+    ``fs.artifact_root``), build it only when ``_ensure_index_params``
+    finds it cold or stale, then serve lazily off the artifacts.  The
+    public entries cut the result; the plan audit's explain frames are
+    this function itself.  The PQ tier's ADC fan is M×K straight from
+    the params scalars — no artifact count job; an UPPER bound on the
+    codebook rows (exact on dense vec_ids, a sparse-id corpus seeds
+    fewer), the safe direction for a broadcast-guard threshold."""
+    from .. import fs as _hfs
+
+    root_name, family, build, tier = _STANDING_INDEX[entry]
+    root = index_root or _hfs.artifact_root(spark, root_name, sf_dir)
+    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
+        spark,
+        sf_dir,
+        root,
+        family,
+        lambda vecs, k, mod: globals()[build](spark, sf_dir, root, vecs, k, mod),
+    )
+    if tier == "ivf":
+        return _serve_ivf_from_artifacts(
+            spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=n_ids
+        )
+    return _serve_ivfpq_from_artifacts(
+        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod,
+        fan=pq_m_for(dim) * pq_seeds_for(n),
+        n=n_ids,
+    )
+
+
 def ann_ivf_serve(
     spark: SparkSession,
     sf_dir: str,
@@ -1556,20 +1686,8 @@ def ann_ivf_serve(
     deterministic, so warm and cold calls return identical rows — only
     the latency differs, which is the point: min-of-3 bench timing
     reads the ~1 s serving number, not the 8-12 s rebuild)."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivf_serve", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf",
-        lambda vecs, k, mod: _build_ivf_coarse_artifacts(
-            spark, vecs, k, mod, root
-        ),
-    )
-    out = _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
@@ -1638,19 +1756,9 @@ def _build_ingest_base(
     ``n_base`` so fine-stage callers derive their PQ seed budget from
     the slice the codebook trains on."""
     centroids, k, n_base, base = _train_ingest_base(spark, vecs, root, n_base)
-    # no data dependency between the two artifact writes — overlap them
-    # (io.run_jobs, guide §2.6; see _build_ivf_coarse_artifacts)
-    run_jobs(
-        lambda: one_file(_centroid_frame(spark, centroids))
-        .write.mode("overwrite")
-        .parquet(f"{root}/centroids"),
-        lambda: _write_cell_partitioned(
-            _assign_cells(base, centroids).select(
-                "vec_id", "embedding", "norm", "cell"
-            ),
-            f"{root}/assignments",
-            "overwrite",
-        ),
+    _write_index(
+        spark, root, centroids,
+        _assign_cells(base, centroids).select("vec_id", "embedding", "norm", "cell"),
     )
     return centroids, k, ivf_nprobe_for(k), n_base
 
@@ -1880,104 +1988,38 @@ def ann_ivf_filtered_serve(
     layout is a superset of the coarse one but serves only here);
     warm calls run serve-only.  Identical rows to ``ann_ivf_filtered``
     (same deterministic derived config), so it shares that oracle."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivf_lab", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_lab",
-        lambda vecs, k, mod: _build_ivf_lab_coarse(
-            spark, sf_dir, root, vecs, k, mod
-        ),
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_filtered_serve", max_broadcast_queries, index_root
     )
-    return cut_lineage(
-        _serve_ivf_filtered_frame(
-            spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
-        ),
-        eager=True,
-    )
+    return cut_lineage(out, eager=True)
 
 
-def _build_ivf_lab_coarse(
-    spark: SparkSession,
-    sf_dir: str,
-    root: str,
-    _vecs: DataFrame,
-    k: int,
-    mod: int,
-) -> dict[int, list[float]]:
-    """The labeled coarse build: label carried THROUGH assignment
-    (withColumn preserves columns) — joining a corpus-sized labels
-    relation after assignment would add a full-payload shuffle pair the
-    sibling entry proves unnecessary (r10 review).  Shared by the
-    public filtered-serve entry and its explain frame.  Returns the
-    trained centroids so composite builds reuse them without re-reading
-    the artifact (the ``_build_ivf_coarse_artifacts`` convention)."""
+def _labeled_cells(
+    spark: SparkSession, sf_dir: str, centroids: dict[int, list[float]]
+) -> DataFrame:
+    """The labeled layout's rows: the ``label`` payload carried THROUGH
+    assignment (withColumn preserves columns) — joining a corpus-sized
+    labels relation after assignment would add a full-payload shuffle
+    pair the sibling entry proves unnecessary."""
     labeled = load_table(spark, sf_dir, "embeddings").selectExpr(
         "vec_id",
         "embedding",
         f"sqrt({_dot_spark('embedding', 'embedding')}) AS norm",
         "label",
     )
-    centroids = _kmeans_centroids(_lloyd_train_frame(_vecs, mod), k)
-    one_file(_centroid_frame(spark, centroids)).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/centroids")
-    _write_cell_partitioned(
-        _assign_cells(labeled, centroids).select(
-            "vec_id", "embedding", "norm", "label", "cell"
-        ),
-        f"{root}/assignments",
-        "overwrite",
+    return _assign_cells(labeled, centroids).select(
+        "vec_id", "embedding", "norm", "label", "cell"
     )
-    return centroids
 
 
-def _serve_ivf_filtered_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    root: str,
-    nprobe: int,
-    max_broadcast_queries: int,
-    qmod: int,
-    n: int | None = None,
-) -> DataFrame:
-    """The lazy filtered-serve search over a pre-ensured labeled root —
-    shared by the public (checkpoint-pinning) entry and the plan
-    audit's explain frame."""
-    loaded_centroids = _load_index_centroids(spark, root)
-    assigned = _tombstone_visibility(
-        spark, root, spark.read.parquet(f"{root}/assignments")
-    ).select(
-        "vec_id",
-        "embedding",
-        "norm",
-        "label",
-        F.col("cell").cast("bigint").alias("cell"),
-    )
-    # Q-row label lookup for the query side: the stride predicate
-    # pushes into the scan, so this reads Q rows, not the corpus
-    qlab = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % qmod == 0)
-        .selectExpr("vec_id AS query_id", "label AS q_label")
-    )
-    queries = _probe_frame(
-        _vectors(spark, sf_dir), loaded_centroids, nprobe, qmod
-    ).join(qlab, "query_id")
-    return _ivf_literal_search(
-        _vectors(spark, sf_dir),
-        assigned,
-        loaded_centroids,
-        nprobe,
-        max_broadcast_queries,
-        qmod,
-        queries=queries,
-        extra_on=F.col("label") == F.col("q_label"),
-        n=n,
-    )
+def _build_ivf_lab_coarse(
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int,
+) -> None:
+    """The labeled coarse build: the quantizer trains on ``vecs`` and
+    the layout carries the label payload (``_labeled_cells``)."""
+    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
+    _write_index(spark, root, centroids, _labeled_cells(spark, sf_dir, centroids))
 
 
 def _ann_ivf_filtered_sql() -> str:
@@ -2064,10 +2106,11 @@ WHERE rank <= {IVF_K}
 #   gen-carrying files into a flat tree would mix parquet schemas and
 #   make footer-sampled reads nondeterministic (r11 review), so
 #   ``ivf_upsert`` refuses flat roots.
-# - Serving anti-applies the log with one BROADCAST left join + filter
-#   (tombstones are small between compactions — they are the retraction
-#   stream, not the corpus); rows in layouts without gens (flat roots:
-#   plain serve, delete-only, ingest appends) read as gen 0.
+# - Serving anti-applies the log with one left join + filter, broadcast
+#   while the log is under TOMBSTONE_BROADCAST_MAX_BYTES (it is the
+#   retraction stream, not the corpus; ``_tombstone_log``); rows in
+#   layouts without gens (flat roots: plain serve, delete-only, ingest
+#   appends) read as gen 0.
 # - COMPACT rewrites LEAF partition dirs whose data-file count exceeds
 #   a bound into one file each, folding tombstone-dead rows out — the
 #   Delta OPTIMIZE analogue.  Flat ingest layouts append one file per
@@ -2118,7 +2161,7 @@ def ivf_delete(
     # funnel, which serialized a corpus-scale delete batch through one
     # task AND paid an exchange).  File count = the batch frame's own
     # partitioning — fine for a log that is read through one
-    # aggregate; a delete-heavy root folds it at the next compact.
+    # aggregate (compaction keeps the log; a rebuild drops it).
     ids.select("vec_id").withColumn(
         "gen", F.lit(int(gen)).cast("bigint")
     ).write.mode("append").parquet(f"{root}/tombstones")
@@ -2167,37 +2210,24 @@ def _upsert_core(
     return assigned
 
 
-def _build_gen0_coarse(
-    spark: SparkSession, root: str, vecs: DataFrame, k: int, mod: int
-) -> dict[int, list[float]]:
-    """Train and write the GEN-PARTITIONED coarse base (centroids +
-    ``assignments/gen=0/cell=*``) — the layout contract both upsert
-    tiers' builds share (one spelling, r11 review).  Training is
-    identical to ``_build_ivf_coarse_artifacts`` (same sample, same
-    Lloyd), so gen-0 rows match a flat root's; gen lives in the
-    directory structure, uniform across the tree, so upsert
+def _gen0_cells(
+    vecs: DataFrame, centroids: dict[int, list[float]]
+) -> DataFrame:
+    """The GEN-PARTITIONED base rows (``gen`` = 0) — the layout contract
+    both upsert tiers' builds share (one spelling).
+    Training is identical to ``_build_ivf_coarse_artifacts`` (same
+    sample, same Lloyd), so gen-0 rows match a flat root's; gen lives
+    in the directory structure, uniform across the tree, so upsert
     generations never mix parquet schemas within one directory and
     replays dynamically overwrite their own ``(gen, cell)``
-    partitions.  Returns the trained centroids."""
-    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
-    one_file(_centroid_frame(spark, centroids)).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/centroids")
-    (
-        _cell_spread(
-            _assign_cells(vecs, centroids).select(
-                "vec_id",
-                "embedding",
-                "norm",
-                F.lit(0).cast("bigint").alias("gen"),
-                "cell",
-            )
-        )
-        .write.mode("overwrite")
-        .partitionBy("gen", "cell")
-        .parquet(f"{root}/assignments")
+    partitions."""
+    return _assign_cells(vecs, centroids).select(
+        "vec_id",
+        "embedding",
+        "norm",
+        F.lit(0).cast("bigint").alias("gen"),
+        "cell",
     )
-    return centroids
 
 
 def _upsert_slice_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2299,47 +2329,62 @@ def ivfpq_upsert(
     )
 
 
+def _tombstone_log(spark: SparkSession, root: str) -> DataFrame | None:
+    """The root's tombstone log aggregated to ``(vec_id, _tomb_gen)`` —
+    the max gen per vec_id — or None when the root has no log.  Every
+    reader (serving's visibility filter, compaction's dead-leaf census)
+    joins this frame, so the broadcast bound holds at every site: the
+    hint is applied only while the log is provably small (a file
+    listing of the RAW log bytes — an overestimate of the aggregated
+    build side, which is the safe direction).  Under sustained
+    retraction an unconditional broadcast grows without bound and
+    eventually OOMs the executors (r11 ADVICE #1); past the bound the
+    join falls back to the planner's distributed strategy."""
+    from .. import fs as _hfs
+
+    path = f"{root}/tombstones"
+    if not _hfs.exists(spark, path):
+        return None
+    tomb = (
+        spark.read.parquet(path)
+        .groupBy("vec_id")
+        .agg(F.max("gen").alias("_tomb_gen"))
+    )
+    log_bytes = _hfs.tree_bytes(spark, path)
+    if log_bytes <= TOMBSTONE_BROADCAST_MAX_BYTES:
+        return F.broadcast(tomb)
+    _log.warning(
+        "tombstone log at %s is %d bytes (> %d): joining it with a "
+        "shuffle instead of a broadcast — the log shrinks only when the "
+        "root is rebuilt",
+        path, log_bytes, TOMBSTONE_BROADCAST_MAX_BYTES,
+    )
+    return tomb
+
+
+def _row_gen(assigned: DataFrame):
+    """A layout row's generation: the ``gen`` partition column, or 0 on
+    flat layouts (plain serve, delete-only, ingest appends)."""
+    return F.col("gen") if "gen" in assigned.columns else F.lit(0).cast("bigint")
+
+
 def _tombstone_visibility(
     spark: SparkSession, root: str, assigned: DataFrame
 ) -> DataFrame:
     """Apply the tombstone log to an assignments scan: live iff no
     tombstone for the vec_id carries a gen greater than the row's.
-    One broadcast left join + filter — the corpus-side scan is never
-    shuffled; a root with no log returns the frame untouched (and the
-    existing zero-log serve plans unchanged)."""
-    from .. import fs as _hfs
-
-    if not _hfs.exists(spark, f"{root}/tombstones"):
+    One left join + filter against ``_tombstone_log`` (broadcast while
+    the log is small) — the corpus-side scan is never shuffled; a root
+    with no log returns the frame untouched (and the existing zero-log
+    serve plans unchanged)."""
+    tomb = _tombstone_log(spark, root)
+    if tomb is None:
         return assigned
-    tomb = (
-        spark.read.parquet(f"{root}/tombstones")
-        .groupBy("vec_id")
-        .agg(F.max("gen").alias("_tomb_gen"))
-    )
-    # Broadcast only while the log is provably small (driver-side
-    # listing of the RAW log bytes — an overestimate of the aggregated
-    # build side, which is the safe direction).  Under sustained
-    # retraction with no compact, an unconditional broadcast grows
-    # without bound and eventually OOMs the executors (r11 ADVICE #1);
-    # past the bound the join falls back to the planner's distributed
-    # strategy and the operator logs that the root needs a compact.
-    log_bytes = _hfs.tree_bytes(spark, f"{root}/tombstones")
-    if log_bytes <= TOMBSTONE_BROADCAST_MAX_BYTES:
-        tomb = F.broadcast(tomb)
-    else:
-        _log.warning(
-            "tombstone log at %s/tombstones is %d bytes (> %d): serving "
-            "with a shuffle join instead of a broadcast — run ivf_compact "
-            "(or a cross-generation merge) to fold the log",
-            root, log_bytes, TOMBSTONE_BROADCAST_MAX_BYTES,
-        )
-    gen_col = (
-        F.col("gen") if "gen" in assigned.columns
-        else F.lit(0).cast("bigint")
-    )
     return (
         assigned.join(tomb, "vec_id", "left")
-        .filter(F.col("_tomb_gen").isNull() | (gen_col >= F.col("_tomb_gen")))
+        .filter(
+            F.col("_tomb_gen").isNull() | (_row_gen(assigned) >= F.col("_tomb_gen"))
+        )
         .drop("_tomb_gen")
     )
 
@@ -2363,8 +2408,9 @@ def ivf_compact(
 
     Scale shape: the file census is a driver-side listing (namenode
     metadata, no I/O); the dead-leaf census is one column-pruned scan
-    of (vec_id, gen, cell) broadcast-joined against the small log —
-    maintenance-op cost, never a payload read.  Only the SELECTED
+    of (vec_id, gen, cell) joined against ``_tombstone_log`` (broadcast
+    under the same bound as serving) — maintenance-op cost, never a
+    payload read.  Only the SELECTED
     leaves' payloads are read — the predicate partition-prunes the scan
     — and a cell is ~n/K ≈ √n rows by construction, so the eager pin
     that makes the read-then-overwrite-same-path safe is bounded per
@@ -2392,22 +2438,14 @@ def ivf_compact(
             if c.startswith("cell="):
                 leaves.append((c, None, int(c.split("=", 1)[1])))
     dead_keys: set[tuple] = set()
-    if _hfs.exists(spark, f"{root}/tombstones"):
-        tomb = (
-            spark.read.parquet(f"{root}/tombstones")
-            .groupBy("vec_id")
-            .agg(F.max("gen").alias("_tomb_gen"))
-        )
+    tomb = _tombstone_log(spark, root)
+    if tomb is not None:
         slim = spark.read.parquet(apath)
-        gen_col = (
-            F.col("gen") if "gen" in slim.columns
-            else F.lit(0).cast("bigint")
-        )
         pcols_probe = ["gen", "cell"] if gen_layout else ["cell"]
         dead_keys = {
             tuple(r)
-            for r in slim.join(F.broadcast(tomb), "vec_id")
-            .filter(gen_col < F.col("_tomb_gen"))
+            for r in slim.join(tomb, "vec_id")
+            .filter(_row_gen(slim) < F.col("_tomb_gen"))
             .select(*pcols_probe)
             .distinct()
             .collect()
@@ -2491,33 +2529,21 @@ def ann_ivf_delete_serve(
     argument ``ann_ivf_ingest`` pins, extended to retraction).  Warm
     calls skip straight to the log-filtered serve — a delete never
     costs a corpus scan."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivf_del", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_del",
-        lambda vecs, k, mod: _build_ivf_del_artifacts(
-            spark, root, vecs, k, mod
-        ),
-    )
-    out = _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_delete_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
 
 def _build_ivf_del_artifacts(
-    spark: SparkSession, root: str, vecs: DataFrame, k: int, mod: int
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int,
 ) -> None:
     """The delete-entry build — coarse artifacts, then the slice's
-    tombstones — shared by the public entry and its explain frame (one
-    spelling, r11 review).  The central guard (``_ensure_index_params``)
-    cleared any stale log before this ran, so the slice's tombstones
-    are the whole log."""
-    _build_ivf_coarse_artifacts(spark, vecs, k, mod, root)
+    tombstones.  The central guard (``_ensure_index_params``) cleared
+    any stale log before this ran, so the slice's tombstones are the
+    whole log."""
+    _build_ivf_coarse_artifacts(spark, sf_dir, root, vecs, k, mod)
     ivf_delete(
         spark, root, vecs.filter(IVF_DELETE_SLICE).select("vec_id"), 1
     )
@@ -2538,38 +2564,21 @@ def ann_ivf_upsert_serve(
     only ever saw the new vectors.  Queries stay the ORIGINAL corpus
     stride — the query workload is external to the store, exactly as in
     every other serve entry."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivf_ups", sf_dir)
-
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_ups",
-        lambda vecs, k, mod: _build_ivf_ups_artifacts(
-            spark, sf_dir, root, vecs, k, mod
-        ),
-    )
-    out = _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_upsert_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
 
 def _build_ivf_ups_artifacts(
-    spark: SparkSession,
-    sf_dir: str,
-    root: str,
-    vecs: DataFrame,
-    k: int,
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
     mod: int,
 ) -> None:
     """The exact-tier upsert-entry build — gen-0 coarse base, then the
-    slice upsert at gen 1 — shared by the public entry and its explain
-    frame.  The central guard cleared any stale tombstone log before
-    this ran."""
-    _build_gen0_coarse(spark, root, vecs, k, mod)
+    slice upsert at gen 1.  The central guard cleared any stale
+    tombstone log before this ran."""
+    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
+    _write_index(spark, root, centroids, _gen0_cells(vecs, centroids))
     ivf_upsert(spark, root, _upsert_slice_frame(spark, sf_dir), 1)
 
 
@@ -2587,48 +2596,30 @@ def ann_ivf_compact_serve(
     never rows — while the build path exercises the full
     append→delete→rewrite lifecycle; the file-count collapse itself is
     pinned by a direct test (tests/test_similarity.py)."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivf_cmp", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_cmp",
-        lambda vecs, k, mod: _build_ivf_cmp_artifacts(
-            spark, root, vecs, k, mod
-        ),
-    )
-    out = _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=_n_ids
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_compact_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
 
 def _build_ivf_cmp_artifacts(
-    spark: SparkSession, root: str, vecs: DataFrame, k: int, mod: int
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int,
 ) -> None:
-    """The compact-entry build — TWO appended halves (>1 file/cell),
-    the delete slice tombstoned, then compaction — shared by the
-    public entry and its explain frame.  The central guard cleared any
-    stale tombstone log before this ran."""
-    from .. import fs as _hfs
-
+    """The compact-entry build — the layout written as TWO halves, the
+    second APPENDED (>1 file/cell: the state compaction exists to
+    repair, and the same rows as one write), the delete slice
+    tombstoned, then compaction.  The central guard cleared any stale
+    tombstone log before this ran."""
     centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
-    one_file(_centroid_frame(spark, centroids)).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/centroids")
-    _hfs.delete(spark, f"{root}/assignments")
-    # two appends == the same rows as one write, in >1 file per
-    # cell — the state compaction exists to repair
-    for half_pred in ("vec_id % 2 = 0", "vec_id % 2 = 1"):
-        _write_cell_partitioned(
-            _assign_cells(vecs.filter(half_pred), centroids).select(
-                "vec_id", "embedding", "norm", "cell"
-            ),
-            f"{root}/assignments",
-            "append",
+    half = [
+        _assign_cells(vecs.filter(pred), centroids).select(
+            "vec_id", "embedding", "norm", "cell"
         )
+        for pred in ("vec_id % 2 = 0", "vec_id % 2 = 1")
+    ]
+    _write_index(spark, root, centroids, half[0])
+    _write_cell_partitioned(half[1], f"{root}/assignments", "append")
     ivf_delete(
         spark, root, vecs.filter(IVF_DELETE_SLICE).select("vec_id"), 1
     )
@@ -2654,34 +2645,20 @@ def ann_ivfpq_delete_serve(
     on the corpus minus the slice while quantizer, assignment, and
     codebook still derive from the FULL corpus — exactly the
     pre-delete-trained state a standing index serves with."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivfpq_del", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq_del",
-        lambda vecs, k, mod: _build_ivfpq_del_artifacts(
-            spark, root, vecs, k, mod
-        ),
-    )
-    out = _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivfpq_delete_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
 
 def _build_ivfpq_del_artifacts(
-    spark: SparkSession, root: str, vecs: DataFrame, k: int, mod: int
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int,
 ) -> None:
     """The PQ delete-entry build — full composite, then the slice's
-    tombstones — shared by the public entry and its explain frame
-    (the ``_build_ivf_del_artifacts`` pattern on the fine tier; the
-    central guard cleared any stale log before this ran)."""
-    _build_ivfpq_artifacts(spark, vecs, k, mod, root, train_codebook=False)
+    tombstones (the ``_build_ivf_del_artifacts`` pattern on the fine
+    tier; the central guard cleared any stale log before this ran)."""
+    _build_ivfpq_artifacts(spark, sf_dir, root, vecs, k, mod)
     ivf_delete(
         spark, root, vecs.filter(IVF_DELETE_SLICE).select("vec_id"), 1
     )
@@ -2706,61 +2683,27 @@ def ann_ivfpq_upsert_serve(
     frozen pre-upsert state a standing index actually serves with;
     queries stay the original corpus stride (the workload is external
     to the store)."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivfpq_ups", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq_ups",
-        lambda vecs, k, mod: _build_ivfpq_ups_artifacts(
-            spark, sf_dir, root, vecs, k, mod
-        ),
-    )
-    out = _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivfpq_upsert_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
 
 def _build_ivfpq_ups_artifacts(
-    spark: SparkSession,
-    sf_dir: str,
-    root: str,
-    vecs: DataFrame,
-    k: int,
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
     mod: int,
 ) -> None:
-    """The PQ upsert-entry build: gen-partitioned coarse base (the
-    ``ann_ivf_upsert_serve`` layout, one shared spelling), fine stage
-    encoded off that persisted base into a gen-partitioned
-    ``pq_codes`` (gen=0), then the slice upsert at gen 1 through
+    """The PQ upsert-entry build: the gen-partitioned composite
+    (``_gen0_cells`` — the ``ann_ivf_upsert_serve`` layout — with
+    ``pq_codes`` under gen=0, so upsert gens dynamically overwrite
+    their own codes partition), then the slice upsert at gen 1 through
     ``ivfpq_upsert``.  Training is identical to
     ``_build_ivf_coarse_artifacts`` (same sample, same Lloyd), so a
     round-trip restore serves exactly what a never-touched composite
-    serves — the law the tests pin."""
-    centroids = _build_gen0_coarse(spark, root, vecs, k, mod)
-    # fine stage off the PERSISTED base layout (the codes artifact
-    # derives from the layout it serves with), gen=0-partitioned so
-    # upsert gens dynamically overwrite their own codes partition
-    cframe = _centroid_frame(spark, centroids)
-    assigned = spark.read.parquet(f"{root}/assignments").select(
-        "vec_id", "embedding", F.col("cell").cast("bigint").alias("cell")
-    )
-    codes, codebook = _pq_grid_codes(
-        assigned, cframe, residual=True, train_codebook=False
-    )
-    one_file(codebook).write.mode("overwrite").parquet(f"{root}/pq_codebook")
-    (
-        codes.withColumn("gen", F.lit(0).cast("bigint"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(f"{root}/pq_codes")
-    )
-    # the central guard cleared any stale tombstone log pre-build
+    serves — the law the tests pin.  The central guard cleared any
+    stale tombstone log pre-build."""
+    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
+    _write_pq_index(spark, root, centroids, _gen0_cells(vecs, centroids))
     ivfpq_upsert(spark, root, _upsert_slice_frame(spark, sf_dir), 1)
 
 
@@ -2849,53 +2792,6 @@ SELECT query_id, neighbor_id, approx_l2sq, rank FROM (
 )
 WHERE rank <= {PQ_K}
 """
-
-
-def _ann_ivf_delete_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true serve-through-log plan over a pre-ensured root: the
-    cell-pruned artifact scan anti-filtered by the broadcast tombstone
-    join — lazy, for the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivf_del", sf_dir)
-
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_del",
-        lambda vecs, k, mod: _build_ivf_del_artifacts(
-            spark, root, vecs, k, mod
-        ),
-    )
-    return _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod, n=_n_ids
-    )
-
-
-def _ann_ivf_filtered_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true filtered-serve plan over a pre-ensured labeled root —
-    payload pre-filter riding the cell-pruned artifact scan, lazy for
-    the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivf_lab", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_lab",
-        lambda vecs, k, mod: _build_ivf_lab_coarse(
-            spark, sf_dir, root, vecs, k, mod
-        ),
-    )
-    return _serve_ivf_filtered_frame(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod, n=_n_ids
-    )
 
 
 def _ann_ivf_trained_sql(
@@ -2988,85 +2884,19 @@ def _ann_ivf_trained_explain_frame(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _ann_ivf_serve_explain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TRUE serve plan over a pre-ensured root (r10 review: the
-    trained-tier frame shows the training path, not the artifact scans
-    + cell DPP the serve entry exists to price) — lazy, so the audit
-    reads the real serving skeleton."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivf_serve", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf",
-        lambda vecs, k, mod: _build_ivf_coarse_artifacts(
-            spark, vecs, k, mod, root
-        ),
-    )
-    return _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod, n=_n_ids
-    )
-
-
-def _ann_ivf_upsert_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true serve-through-log plan over a pre-ensured gen-layout
-    root — lazy, for the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivf_ups", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_ups",
-        lambda vecs, k, mod: _build_ivf_ups_artifacts(
-            spark, sf_dir, root, vecs, k, mod
-        ),
-    )
-    return _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod, n=_n_ids
-    )
-
-
-def _ann_ivf_compact_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true serve plan over a pre-ensured compacted root — lazy,
-    for the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivf_cmp", sf_dir)
-    nprobe, qmod, _n, _dim, _n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivf_cmp",
-        lambda vecs, k, mod: _build_ivf_cmp_artifacts(
-            spark, root, vecs, k, mod
-        ),
-    )
-    return _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod, n=_n_ids
-    )
-
-
 EXPLAIN_FRAMES = {
     "ann_ivf_trained": _ann_ivf_trained_explain_frame,
     "ann_ivf_full_trained": _ann_ivf_trained_explain_frame,
     "ann_ivf_index_persist": _ann_ivf_trained_explain_frame,
     "ann_ivf_ingest": _ann_ivf_trained_explain_frame,
-    "ann_ivf_serve": _ann_ivf_serve_explain_frame,
-    "ann_ivf_delete_serve": _ann_ivf_delete_serve_explain_frame,
-    "ann_ivf_upsert_serve": _ann_ivf_upsert_serve_explain_frame,
-    "ann_ivf_compact_serve": _ann_ivf_compact_serve_explain_frame,
-    "ann_ivf_filtered_serve": _ann_ivf_filtered_serve_explain_frame,
     "ann_ivf_pq": lambda spark, sf_dir: _ann_ivf_pq_explain_frame(
         spark, sf_dir
     ),
+    # the standing entries' true serve plans over a pre-ensured root
+    **{
+        name: functools.partial(_standing_frame, entry=name)
+        for name in _STANDING_INDEX
+    },
 }
 
 
@@ -3954,7 +3784,7 @@ def ann_ivf_pq_residual(
     nprobe = ivf_nprobe_for(k)
     with pinned(_vectors(spark, sf_dir)) as vecs:
         dim = _build_ivfpq_artifacts(
-            spark, vecs, k, mod, root, train_codebook, n=n
+            spark, sf_dir, root, vecs, k, mod, train_codebook, n=n
         )
     # --- serving path: artifacts only (plus the raw query vectors);
     # fan = M×K upper bound from scalars in hand — no codebook count
@@ -3967,85 +3797,75 @@ def ann_ivf_pq_residual(
     return cut_lineage(out, eager=True)
 
 
-def _build_ivfpq_artifacts(
+def _write_pq_index(
     spark: SparkSession,
-    vecs: DataFrame,
-    k: int,
-    mod: int,
     root: str,
-    train_codebook: bool,
-    n: int | None = None,
-) -> int | None:
-    """The build half of the residual IVF-PQ composite, shared by the
-    per-call-rebuild entry (``ann_ivf_pq_residual``, the oracle-parity
-    shape) and the build-once serve entry (``ann_ivfpq_serve``): train
-    the coarse quantizer, then derive ALL FOUR artifacts — centroids,
-    cell-partitioned assignments, pq_codebook (Lloyd-trained when
-    ``train_codebook``), pq_codes — from ONE pinned assignment frame
-    and write them as four overlapped independent jobs (r13; the old
-    shape wrote the coarse pair, then READ the assignments file back
-    for the fine pair — a write→read barrier on the critical path;
-    fine values are per-row pure functions of (assignment row,
-    centroids) and doubles round-trip parquet bit-exactly, so the
-    frame-derived artifacts are value-identical, oracle-checked).
-    ``n`` (corpus row count) lets a caller that already counted skip
-    the fine stage's shape re-derivation."""
-    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
-    cframe = _centroid_frame(spark, centroids)
-    # the trained centroids pin the corpus dimension driver-side
-    dim = len(next(iter(centroids.values()))) if centroids else None
-    with pinned(
-        _assign_cells(vecs, centroids).select("vec_id", "embedding", "norm", "cell")
-    ) as assigned:
+    centroids: dict[int, list[float]],
+    assigned: DataFrame,
+    train_codebook: bool = False,
+    seeds: int | None = None,
+) -> None:
+    """Derive the fine stage — pq_codebook (Lloyd-trained when
+    ``train_codebook``) and the residual pq_codes — from ONE pinned
+    assignment frame and write all four composite artifacts through
+    ``_write_index`` (r13; the old shape wrote the coarse pair, then
+    READ the assignments file back for the fine pair — a write→read
+    barrier on the critical path; fine values are per-row pure
+    functions of (assignment row, centroids) and doubles round-trip
+    parquet bit-exactly, so the frame-derived artifacts are
+    value-identical, oracle-checked)."""
+    with pinned(assigned) as assigned:
         # one count materializes the cache before any concurrent
         # consumer: cold-cache partitions are recomputed by every
         # racing job (the ingest-base lesson), and the codebook
-        # training loop below reads this frame every round
+        # training loop reads this frame every round
         assigned.count()
         codes, codebook = _pq_grid_codes(
-            assigned.select("vec_id", "embedding", "cell"), cframe,
-            residual=True, train_codebook=train_codebook,
-            seeds=pq_seeds_for(n) if n else None,
+            assigned.select("vec_id", "embedding", "cell"),
+            _centroid_frame(spark, centroids),
+            residual=True, train_codebook=train_codebook, seeds=seeds,
         )
-        run_jobs(
-            lambda: one_file(cframe)
-            .write.mode("overwrite")
-            .parquet(f"{root}/centroids"),
-            lambda: _write_cell_partitioned(
-                assigned, f"{root}/assignments", "overwrite"
-            ),
-            lambda: one_file(codebook)
-            .write.mode("overwrite")
-            .parquet(f"{root}/pq_codebook"),
-            lambda: codes.write.mode("overwrite").parquet(f"{root}/pq_codes"),
-        )
-    return dim
+        _write_index(spark, root, centroids, assigned, codebook, codes)
 
 
-def _build_ivfpq_lab_artifacts(
+def _build_ivfpq_artifacts(
     spark: SparkSession,
     sf_dir: str,
+    root: str,
     vecs: DataFrame,
     k: int,
     mod: int,
-    root: str,
+    train_codebook: bool = False,
+    n: int | None = None,
+) -> int | None:
+    """The build of the residual IVF-PQ composite, shared by the
+    per-call-rebuild entry (``ann_ivf_pq_residual``, the oracle-parity
+    shape) and the standing roots (``ann_ivfpq_serve`` and the delete
+    tier): train the coarse quantizer, then ``_write_pq_index``.
+    ``n`` (corpus row count) lets a caller that already counted skip
+    the fine stage's shape re-derivation.  Returns the corpus
+    dimension."""
+    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
+    _write_pq_index(
+        spark, root, centroids,
+        _assign_cells(vecs, centroids).select("vec_id", "embedding", "norm", "cell"),
+        train_codebook, pq_seeds_for(n) if n else None,
+    )
+    # the trained centroids give the corpus dimension without a job
+    return len(next(iter(centroids.values()))) if centroids else None
+
+
+def _build_ivfpq_lab_artifacts(
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int,
 ) -> None:
     """The labeled-composite build: the coarse layout carries the
-    ``label`` payload column beside the vectors
-    (``_build_ivf_lab_coarse`` — the ``ann_ivf_filtered_serve`` design,
-    so filtered serving joins no corpus-scale label relation), and the
-    fine stage (pq_codebook + pq_codes) encodes residuals off that same
-    persisted layout exactly as ``_build_ivfpq_artifacts`` does."""
-    centroids = _build_ivf_lab_coarse(spark, sf_dir, root, vecs, k, mod)
-    cframe = _centroid_frame(spark, centroids)
-    assigned = spark.read.parquet(f"{root}/assignments").select(
-        "vec_id", "embedding", F.col("cell").cast("bigint").alias("cell")
-    )
-    codes, codebook = _pq_grid_codes(
-        assigned, cframe, residual=True, train_codebook=False
-    )
-    one_file(codebook).write.mode("overwrite").parquet(f"{root}/pq_codebook")
-    codes.write.mode("overwrite").parquet(f"{root}/pq_codes")
+    ``label`` payload column beside the vectors (``_labeled_cells`` —
+    the ``ann_ivf_filtered_serve`` design, so filtered serving joins no
+    corpus-scale label relation), and the fine stage encodes residuals
+    off that same pinned layout (``_write_pq_index``)."""
+    centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
+    _write_pq_index(spark, root, centroids, _labeled_cells(spark, sf_dir, centroids))
 
 
 def ann_ivfpq_filtered_serve(
@@ -4062,23 +3882,8 @@ def ann_ivfpq_filtered_serve(
     filtering the ranked top-k is the under-fill trap the exact-tier
     sibling pins); build-once via the params guard under its own family
     ``ivfpq_lab``."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivfpq_lab", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq_lab",
-        lambda vecs, k, mod: _build_ivfpq_lab_artifacts(
-            spark, sf_dir, vecs, k, mod, root
-        ),
-    )
-    out = _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
-        label_filtered=True,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivfpq_filtered_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
@@ -4099,26 +3904,8 @@ def ann_ivfpq_serve(
     it adds to the bench is the number that matters at 100×: the query
     batch against a STANDING index, with the 8-12 s build amortized
     away exactly as a serving fleet amortizes it."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(spark, "ivfpq_serve", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq",
-        lambda vecs, k, mod: _build_ivfpq_artifacts(
-            spark, vecs, k, mod, root, train_codebook=False
-        ),
-    )
-    out = _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod,
-        # M×K straight from the params scalars — no artifact count job.
-        # An UPPER bound on the codebook rows (exact on dense vec_ids;
-        # a sparse-id corpus seeds fewer entries), which is the safe
-        # direction for a broadcast-guard threshold.
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivfpq_serve", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
@@ -4131,7 +3918,6 @@ def _serve_ivfpq_from_artifacts(
     max_broadcast_queries: int,
     query_mod: int = QUERY_MOD,
     fan: int | None = None,
-    label_filtered: bool = False,
     n: int | None = None,
 ) -> DataFrame:
     """Residual-PQ ADC serving off a persisted index root (centroids +
@@ -4141,10 +3927,11 @@ def _serve_ivfpq_from_artifacts(
     caller pins — but sizing the ADC broadcast guard needs the M×K fan
     as a scalar: pass ``fan`` when the caller already knows it (the
     serve entry derives it from its params artifact), else one tiny
-    count over the codebook artifact runs here.  ``label_filtered``
-    switches on the payload pre-filter: the persisted ``label`` column
-    rides the candidate join (BEFORE the codes join, so the predicate
-    also cuts the ADC volume), query labels are a Q-row lookup.
+    count over the codebook artifact runs here.  Filtering is read off
+    the layout, like ``gen``: a ``label`` payload column in
+    ``assignments`` switches on the pre-filter — the label rides the
+    candidate join (BEFORE the codes join, so the predicate also cuts
+    the ADC volume), query labels are a Q-row lookup.
     ``n`` (the served corpus's ID-SPACE bound, max(vec_id)+1 — equals
     the row count on dense ids, and keeps Q ≤ n//qmod + 1 a true upper
     bound on sparse ones, r12 ADVICE #1) lets BOTH broadcast guards
@@ -4161,9 +3948,10 @@ def _serve_ivfpq_from_artifacts(
     # live generation rides the candidate so the codes join can key on
     # (vec_id, gen) and never resurrect a retired version's codes
     gen_aware = "gen" in assigned_full.columns and "gen" in codes.columns
+    labeled = "label" in assigned_full.columns
     slim_cols = (
         ["vec_id"]
-        + (["label"] if label_filtered else [])
+        + (["label"] if labeled else [])
         + (["gen"] if gen_aware else [])
     )
     assigned_slim = _tombstone_visibility(spark, root, assigned_full).select(
@@ -4177,37 +3965,18 @@ def _serve_ivfpq_from_artifacts(
     # the 5-scalar distance table — 8 B/scalar + slack, the
     # _est_row_bytes_expr schema rates
     qb = (n // query_mod + 1) * nprobe if n is not None else None
-    cand_est = (
-        (qb, qb * (24 if label_filtered else 16)) if qb is not None else None
+    cand_est = (qb, qb * (24 if labeled else 16)) if qb is not None else None
+    cand = _grid_cand(
+        assigned_slim,
+        probes.join(_query_labels(spark, sf_dir, query_mod), "query_id")
+        if labeled else probes,
+        max_broadcast_queries,
+        nprobe,
+        extra_on=F.col("label") == F.col("q_label") if labeled else None,
+        probe_extra_cols=("q_label",) if labeled else (),
+        keep_cols=("gen",) if gen_aware else (),
+        est=cand_est,
     )
-    if label_filtered:
-        # Q-row query-label lookup: the stride predicate pushes to the
-        # scan, so this reads Q rows, never the corpus (the
-        # ann_ivf_filtered_serve argument, PQ spelling)
-        qlab = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % query_mod == 0)
-            .selectExpr("vec_id AS query_id", "label AS q_label")
-        )
-        cand = _grid_cand(
-            assigned_slim,
-            probes.join(qlab, "query_id"),
-            max_broadcast_queries,
-            nprobe,
-            extra_on=F.col("label") == F.col("q_label"),
-            probe_extra_cols=("q_label",),
-            keep_cols=("gen",) if gen_aware else (),
-            est=cand_est,
-        )
-    else:
-        cand = _grid_cand(
-            assigned_slim,
-            probes,
-            max_broadcast_queries,
-            nprobe,
-            keep_cols=("gen",) if gen_aware else (),
-            est=cand_est,
-        )
     dtable = _pq_grid_dtable(probes, cframe, codebook, residual=True)
     if fan is None:
         # the derived M×K is exactly the artifact codebook's row count
@@ -4288,19 +4057,9 @@ def _build_ivfpq_ingest_base(
             "m",
             F.col("sub").alias("seed_sub"),
         )
-        run_jobs(
-            lambda: one_file(_centroid_frame(spark, centroids))
-            .write.mode("overwrite")
-            .parquet(f"{root}/centroids"),
-            lambda: _write_cell_partitioned(
-                assigned_base, f"{root}/assignments", "overwrite"
-            ),
-            lambda: one_file(codebook)
-            .write.mode("overwrite")
-            .parquet(f"{root}/pq_codebook"),
-            lambda: _pq_codes_for(subs_base, codebook)
-            .write.mode("overwrite")
-            .parquet(f"{root}/pq_codes"),
+        _write_index(
+            spark, root, centroids, assigned_base, codebook,
+            _pq_codes_for(subs_base, codebook),
         )
     return ivf_nprobe_for(k)
 
@@ -4457,119 +4216,7 @@ def _ann_ivf_pq_residual_explain_frame(
     )
 
 
-def _ann_ivfpq_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The TRUE PQ serve plan over a pre-ensured root — the ADC join
-    against artifact scans, not the build path (r10 review)."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivfpq_serve", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq",
-        lambda vecs, k, mod: _build_ivfpq_artifacts(
-            spark, vecs, k, mod, root, train_codebook=False
-        ),
-    )
-    return _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
-    )
-
-
-def _ann_ivfpq_filtered_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true filtered-PQ serve plan over a pre-ensured labeled
-    composite root — the label pre-filter on the ADC candidate join,
-    lazy for the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivfpq_lab", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq_lab",
-        lambda vecs, k, mod: _build_ivfpq_lab_artifacts(
-            spark, sf_dir, vecs, k, mod, root
-        ),
-    )
-    return _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
-        label_filtered=True,
-    )
-
-
-def _ann_ivfpq_delete_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true serve-through-log ADC plan over a pre-ensured composite
-    root — the tombstone broadcast anti-filter on the candidate source,
-    lazy for the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivfpq_del", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq_del",
-        lambda vecs, k, mod: _build_ivfpq_del_artifacts(
-            spark, root, vecs, k, mod
-        ),
-    )
-    return _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
-    )
-
-
 EXPLAIN_FRAMES["ann_ivf_pq_residual"] = _ann_ivf_pq_residual_explain_frame
-EXPLAIN_FRAMES["ann_ivfpq_serve"] = _ann_ivfpq_serve_explain_frame
-EXPLAIN_FRAMES["ann_ivfpq_delete_serve"] = (
-    _ann_ivfpq_delete_serve_explain_frame
-)
-
-
-def _ann_ivfpq_upsert_serve_explain_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The true gen-aware ADC serve plan over a pre-ensured upsert
-    composite — (vec_id, gen) codes join behind the tombstone
-    visibility filter, lazy for the plan audit."""
-    from .. import fs as _hfs
-
-    root = _hfs.artifact_root(spark, "ivfpq_ups", sf_dir)
-    nprobe, qmod, n, dim, n_ids = _ensure_index_params(
-        spark,
-        sf_dir,
-        root,
-        "ivfpq_ups",
-        lambda vecs, k, mod: _build_ivfpq_ups_artifacts(
-            spark, sf_dir, root, vecs, k, mod
-        ),
-    )
-    return _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, MAX_BROADCAST_QUERIES, qmod,
-        fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
-    )
-
-
-EXPLAIN_FRAMES["ann_ivfpq_upsert_serve"] = (
-    _ann_ivfpq_upsert_serve_explain_frame
-)
-EXPLAIN_FRAMES["ann_ivfpq_filtered_serve"] = (
-    _ann_ivfpq_filtered_serve_explain_frame
-)
 EXPLAIN_FRAMES["ann_ivfpq_trained_codebook"] = (
     _ann_ivf_pq_residual_explain_frame
 )
@@ -4668,8 +4315,6 @@ tcand AS (
     ON a.cell = p.q_cell AND a.vec_id <> p.query_id
   {f"WHERE {cand_where}" if cand_where else ""}
 )'''}"""
-
-
 
 
 def _pq_codebook_train_sql_ctes(p: str) -> str:

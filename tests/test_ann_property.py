@@ -3,11 +3,14 @@ corpus and ANY centroid set — duplicate vectors, duplicate centroids
 (exact d2 ties), more centroids than distinct points, K·dim both small
 and large — the one assignment/probe regime agrees with a pure-Python
 model of the ``(d2, cell)`` total order, and IVF search with every cell
-probed is exact brute-force cosine top-IVF_K."""
+probed is exact brute-force cosine top-IVF_K.  The lifecycle test
+drives a standing gen-partitioned root through random deletes,
+upserts, compactions and same-gen replays and checks the serve against
+brute force over the live corpus the sequence leaves."""
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from dbdiff_spark.ops import similarity as sim
@@ -96,3 +99,128 @@ def test_one_argmin_regime_matches_python_model(spark, case):
         for rank, (neg_cos, i) in enumerate(cand[: sim.IVF_K], start=1):
             expect[(q, rank)] = (i, -neg_cos)
     assert {(r.query_id, r.rank): (r.neighbor_id, r.cosine) for r in out} == expect
+
+
+# --- the standing-index lifecycle --------------------------------------------
+
+GRID_DIM = 3
+grid_vec = st.lists(COMPONENT, min_size=GRID_DIM, max_size=GRID_DIM)
+
+
+@st.composite
+def lifecycle_case(draw):
+    # n >= 8 so the entry's gen-1 upsert slice (vec_id % 10 = 7) is
+    # never empty; ids up to n + 2 let upserts insert fresh vectors
+    n = draw(st.integers(8, 20))
+    corpus = draw(st.lists(grid_vec, min_size=n, max_size=n))
+    ids = st.integers(0, n + 2)
+    op = st.one_of(
+        st.tuples(
+            st.just("delete"), st.lists(ids, min_size=1, max_size=5, unique=True)
+        ),
+        st.tuples(st.just("delete_all")),
+        st.tuples(
+            st.just("upsert"),
+            st.lists(st.tuples(ids, grid_vec), min_size=1, max_size=4,
+                     unique_by=lambda r: r[0]),
+        ),
+        st.tuples(st.just("compact")),
+        st.tuples(st.just("replay")),
+    )
+    return corpus, draw(st.lists(op, min_size=1, max_size=5))
+
+
+def _ids_frame(spark, ids):
+    return spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
+
+
+def _rows_frame(spark, rows):
+    return spark.createDataFrame(
+        [(int(i), v) for i, v in rows], "vec_id bigint, embedding array<float>"
+    ).selectExpr(
+        "vec_id",
+        "embedding",
+        f"sqrt({sim._dot_spark('embedding', 'embedding')}) AS norm",
+    )
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@example(
+    # every vector retracted, then compacted and the compaction replayed:
+    # the serve must return zero rows and the replay must be a no-op
+    case=(
+        [[1.0, 2.0, -1.0], [2.0, 1.0, 1.0], [-1.0, -2.0, 1.0], [1.0, 1.0, 1.0],
+         [2.0, -1.0, 2.0], [-2.0, 1.0, 1.0], [1.0, -1.0, -2.0], [2.0, 2.0, 1.0],
+         [-1.0, 1.0, 2.0]],
+        [("upsert", [(10, [1.0, 1.0, 2.0])]), ("compact",), ("delete_all",),
+         ("compact",), ("replay",)],
+    )
+)
+@given(case=lifecycle_case())
+def test_standing_index_lifecycle_matches_python_model(spark, tmp_path, case):
+    """Any sequence of deletes, upserts, compactions and same-gen
+    replays on a gen-partitioned standing root serves exactly the
+    brute-force top-IVF_K cosine over the live corpus the sequence
+    leaves, and a replayed compaction is always a no-op."""
+    import tempfile
+
+    corpus, ops = case
+    sf = tempfile.mkdtemp(dir=tmp_path)
+    root = f"{sf}/idx"
+    spark.createDataFrame(
+        list(enumerate(corpus)), "vec_id bigint, embedding array<float>"
+    ).coalesce(1).write.parquet(f"{sf}/embeddings.parquet")
+    sim.ann_ivf_upsert_serve(spark, sf, index_root=root)
+
+    # the entry's own build: the IVF_UPSERT_SLICE sign-flipped at gen 1
+    live = {i: ([-x for x in v] if i % 10 == 7 else v) for i, v in enumerate(corpus)}
+    gen, last = 1, None
+    for op in ops:
+        if op[0] == "replay":
+            if last is None:
+                continue
+            op, replay = last, True
+        else:
+            gen, replay = gen + (op[0] != "compact"), False
+        kind = op[0]
+        if kind == "compact":
+            n_done = sim.ivf_compact(spark, root)
+            assert not replay or n_done == 0
+        elif kind in ("delete", "delete_all"):
+            if not replay:
+                op = ("delete", sorted(live) if kind == "delete_all" else op[1], gen)
+            if op[1]:
+                sim.ivf_delete(spark, root, _ids_frame(spark, op[1]), op[2])
+            for i in op[1]:
+                live.pop(i, None)
+        else:
+            if not replay:
+                op = ("upsert", op[1], gen)
+            sim.ivf_upsert(spark, root, _rows_frame(spark, op[1]), op[2])
+            live.update(dict(op[1]))
+        last = op
+
+    params = spark.read.parquet(f"{root}/params").first()
+    out = sim._serve_ivf_from_artifacts(
+        spark, sf, root, int(params["cells"]), sim.MAX_BROADCAST_QUERIES,
+        query_mod=1,
+    ).collect()
+
+    norm = {i: math.sqrt(_dot(v, v)) for i, v in live.items()}
+    expect = {}
+    for q, qv in enumerate(corpus):
+        qn = math.sqrt(_dot(qv, qv))
+        cand = sorted(
+            (-(_dot(v, qv) / (norm[i] * qn)), i) for i, v in live.items() if i != q
+        )
+        for rank, (neg_cos, i) in enumerate(cand[: sim.IVF_K], start=1):
+            expect[(q, rank)] = (i, -neg_cos)
+    got = {(r.query_id, r.rank): (r.neighbor_id, r.cosine) for r in out}
+    assert len(got) == len(out)
+    assert got == expect
+    if not live:
+        assert out == []

@@ -1,6 +1,9 @@
 """ANN-tier invariants (oracle parity covers exact values)."""
 
+import pytest
 from pyspark.sql import functions as F
+
+from dbdiff_spark.ops import similarity as sim
 
 
 def test_pq_codes_cover_corpus_and_stay_in_codebook(spark, sf_dir):
@@ -958,7 +961,7 @@ def test_ivf_serve_scan_partition_prunes_probed_cells(spark, sf_dir, tmp_path):
     n = load_table(spark, sf_dir, "embeddings").count()
     k = semdedup_cells(n)
     _build_ivf_coarse_artifacts(
-        spark, _vectors(spark, sf_dir), k, _derived_sample_mod(n, k), root
+        spark, sf_dir, root, _vectors(spark, sf_dir), k, _derived_sample_mod(n, k)
     )
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, ivf_nprobe_for(k), MAX_BROADCAST_QUERIES,
@@ -1333,6 +1336,65 @@ def test_compact_expires_fully_retracted_cells(spark, sf_dir, tmp_path):
     assert sim.ivf_compact(spark, root, max_files_per_cell=1) == 0
 
 
+def test_compact_census_honours_tombstone_broadcast_bound(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Compaction's dead-leaf census joins the tombstone log under the
+    SAME broadcast bound as serving: with the bound at 0 bytes (and
+    size-based auto-broadcast off) no plan the compaction executes may
+    broadcast the log — an unbounded broadcast there is the executor
+    OOM the bound exists to prevent.  Plans are read from the session's
+    SQL status store."""
+    from dbdiff_spark.ops import similarity as sim
+
+    root = _build_appended_delete_root(spark, sf_dir, tmp_path, "ivf_cmp_bound")
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        listed = store.executionsList()
+        return [listed.apply(i) for i in range(listed.size())]
+
+    monkeypatch.setattr(sim, "TOMBSTONE_BROADCAST_MAX_BYTES", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        before = max((e.executionId() for e in executions()), default=-1)
+        assert sim.ivf_compact(spark, root, max_files_per_cell=1) > 0
+        plans = [
+            e.physicalPlanDescription()
+            for e in executions()
+            if e.executionId() > before
+        ]
+    finally:
+        spark.conf.set(key, prev)
+    log_plans = [p for p in plans if "tombstones" in p]
+    assert log_plans  # the census and the rewrite both read the log
+    assert not any("Broadcast" in p for p in log_plans), next(
+        p for p in log_plans if "Broadcast" in p
+    )
+
+
+@pytest.mark.parametrize("entry", sorted(sim._STANDING_INDEX))
+def test_standing_entry_warm_serve_never_rebuilds(spark, sf_dir, monkeypatch, entry):
+    """Every standing-index entry builds once per root: on a warm
+    default root, with EVERY table row's build patched to raise, the
+    entry serves the identical rows."""
+    serve = getattr(sim, entry)
+    cold = sorted(map(tuple, serve(spark, sf_dir).collect()))
+    assert cold
+
+    def _no_rebuild(*_a, **_k):
+        raise AssertionError(f"warm {entry} call re-ran an index build")
+
+    for _root, _family, build, _tier in sim._STANDING_INDEX.values():
+        monkeypatch.setattr(sim, build, _no_rebuild)
+    warm = sorted(map(tuple, serve(spark, sf_dir).collect()))
+    assert warm == cold
+
+
 def test_upsert_replay_same_gen_is_idempotent(spark, sf_dir, tmp_path):
     """r11 review: gen is a batch ordinal and batch ordinals REPLAY
     (foreachBatch retries).  Re-running the same upsert at the same gen
@@ -1474,7 +1536,7 @@ def test_delete_serve_keeps_dpp_through_tombstone_join(spark, sf_dir, tmp_path):
     k = sim.semdedup_cells(n)
     vecs = sim._vectors(spark, sf_dir)
     sim._build_ivf_coarse_artifacts(
-        spark, vecs, k, sim._derived_sample_mod(n, k), root
+        spark, sf_dir, root, vecs, k, sim._derived_sample_mod(n, k)
     )
     sim.ivf_delete(
         spark, root, vecs.filter(sim.IVF_DELETE_SLICE).select("vec_id"), 1
