@@ -367,7 +367,7 @@ def main(argv: list[str] | None = None) -> int:
         maybe_open(out_name, args.auto_open)
 
         if args.apply_dir:
-            from dbdiff_spark.diff import apply_diff
+            from dbdiff_spark.diff import apply_diff, diff_multiset
             from dbdiff_spark.normalize import normalize_to_strings
 
             apply_root = Path(args.apply_dir) / f"gen{generation}"
@@ -390,7 +390,11 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 rebuilt.write.mode("overwrite").parquet(str(apply_root / tname))
                 rb = spark.read.parquet(str(apply_root / tname))
-                mismatch = rb.exceptAll(target).count() + target.exceptAll(rb).count()
+                # rows the two do not share, with multiplicity: the
+                # sum of both exceptAll counts, in one pass
+                (mismatch,) = diff_multiset(rb, target).selectExpr(
+                    "coalesce(sum(n_rows), 0)"
+                ).first()
                 status = "OK" if mismatch == 0 else f"MISMATCH({mismatch})"
                 print(f"[Apply] {tname}: reconstructed -> {apply_root / tname} [{status}]")
 

@@ -1,5 +1,5 @@
 """Core diff operators — the reference engine's entire dataflow,
-re-expressed as one Catalyst-planned full-outer join.
+re-expressed as one matcher plus one classifier per table.
 
 Reference semantics being reproduced (SURVEY §2 ops #6-#8):
 
@@ -12,17 +12,31 @@ Reference semantics being reproduced (SURVEY §2 ops #6-#8):
   is marked modified.
 * ``extract_data.go:149-160`` — row identity = primary-key columns.  The
   reference concatenates PK strings with no separator (collision bug,
-  SURVEY §1.5.1); we join on the composite key directly.
+  SURVEY §1.5.1); we match on the composite key directly.
 * NULL semantics (SURVEY §1.4): the reference renders NULL as the string
   ``"<NULL>"`` so NULL == NULL holds.  We use Spark's null-safe equality
-  (``<=>``) — same observable behavior, no sentinel collision.
+  (``<=>``, or a groupBy's one NULL group) — same observable behavior,
+  no sentinel collision.
 
 Scale notes (100 TB posture):
 
-* The diff is ONE shuffle (exchange on the key columns) feeding a
-  sort-merge join.  If the two snapshots are written bucketed-by-key
-  (see ``snapshot.py``), the exchange disappears entirely and the diff
-  is a zero-shuffle zip of co-located buckets.
+* Matching and classification are written once each.  The keyed diff
+  matches rows with one of two matchers that emit the same shape (per
+  key, each side's non-key columns as a struct plus its row count), and
+  one classifier (:func:`_classify`) turns either into the report:
+  - the fold (:func:`_fold`): both sides' rows in one tagged union,
+    grouped by key — ONE exchange, map-side partially aggregated, no
+    join.  It serves every null-safe deduplicating diff (the
+    ``diff_snapshots`` hot path, with or without tolerance, ignore,
+    drift, map values or ``include_unchanged``), the all-columns key,
+    and the three-side fold of :func:`diff3_tables`;
+  - the full outer join (:func:`_full_outer_match`): ONE exchange per
+    side feeding a sort-merge join, kept for the three shapes only it
+    plans correctly or exchange-free — a non-deduplicating declared key
+    (duplicate keys cross-match m×n), plain-equality keys (if the two
+    snapshots are written bucketed-by-key, see ``snapshot.py``, the
+    exchanges disappear entirely and the diff is a zero-shuffle zip of
+    co-located buckets), and ``include_unchanged`` without dedup.
 * Skew posture (measured, r9 — tools/probe_diff_scale.py --skew):
   AQE's skew-join split does NOT apply to a FULL OUTER sort-merge join
   (OptimizeSkewedJoin fires for inner/left/right only — splitting a
@@ -31,12 +45,12 @@ Scale notes (100 TB posture):
   construction rather than by runtime repair: the FOJ joins on a
   UNIQUE key (per-key cardinality 1×1, hash partitioning is uniform in
   the number of KEYS regardless of how pathological the key VALUE
-  distribution is), and every non-unique-key shape — all-columns
-  fallback, dedup_keys, multiset — routes through grouped aggregations
-  whose map-side partial combine collapses a planted hot key before
-  the exchange.
+  distribution is), and every non-unique-key shape — all-columns key,
+  dedup_keys, multiset — routes through grouped aggregations whose
+  map-side partial combine collapses a planted hot key before the
+  exchange.
 * Classification, per-column comparison and the UPDATED pair expansion
-  are narrow projections (``when``/``array``/``explode``) that stay
+  are narrow projections (``CASE``/``array``/``explode``) that stay
   inside whole-stage codegen — no Python in the hot path.
 * NOT_MODIFIED rows (the overwhelming majority at scale) are filtered
   *before* the explode, so the expansion only touches changed rows.
@@ -113,17 +127,6 @@ def collect_rows(results: dict[str, DiffResult], max_rows: int) -> None:
     fan-out).  Results already collected at this cap submit nothing."""
     run_jobs(
         *[partial(r.rows, max_rows) for r in results.values() if max_rows not in r._rows]
-    )
-
-
-def _side_tagged_union(
-    before: DataFrame, after: DataFrame, cols: list[str]
-) -> DataFrame:
-    """``cols`` of both sides stacked, each row tagged ``__side`` 0
-    (before) or 1 (after)."""
-    sel = [ident(c) for c in cols]
-    return before.selectExpr(*sel, "0 AS __side").unionByName(
-        after.selectExpr(*sel, "1 AS __side")
     )
 
 
@@ -237,157 +240,227 @@ def _shield_reserved(
     return shielded, [renames.get(k, k) for k in key_cols], renames
 
 
+def _fold(
+    sides: list[tuple[DataFrame, str, dict[str, str]]],
+    key_cols: list[str],
+    multiplicities: bool = False,
+) -> DataFrame:
+    """The side-tagged fold: every side's rows in one union, grouped by
+    key — ONE exchange, with map-side partial aggregation.
+
+    ``sides`` holds ``(frame, tag, dtypes)`` triples.  Per key group and
+    side tag ``T`` the result carries the key columns and
+
+    * ``T``: that side's last-wins representative, the max struct of its
+      own non-key columns (omitted when the side has none).  Rows with
+      unorderable values (maps, variant) cannot feed ``max`` and elect
+      by ``max_by`` over their string rendering instead — the surviving
+      row keeps its native values.  ``max`` skips the other sides'
+      NULLed-out entries, and a struct of NULL fields is still non-NULL,
+      so presence is exact;
+    * ``T_n``: that side's row count, capped at 1 unless
+      ``multiplicities``.
+
+    ``groupBy`` treats NULL keys as one group: the null-safe ``<=>``
+    semantics of the join matcher."""
+    keys = [ident(k) for k in key_cols]
+    parts, aggs, out = [], [], list(keys)
+    for s, (df, tag, types) in enumerate(sides):
+        others = [c for c in types if c not in key_cols]
+        packed = []
+        if others:
+            packed.append(f"struct({', '.join(ident(c) for c in others)}) AS {tag}")
+            if all(_is_orderable(types[c]) for c in others):
+                aggs.append(f"max({tag}) AS {tag}")
+            else:
+                render = ", ".join(
+                    ident(c) if _is_orderable(types[c]) else f"CAST({ident(c)} AS STRING)"
+                    for c in others
+                )
+                packed.append(f"struct({render}) AS {tag}_o")
+                aggs.append(f"max_by({tag}, {tag}_o) AS {tag}")
+            out += [tag, f"IF({tag} IS NULL, 0, 1) AS {tag}_n"]
+        else:
+            n = f"count_if(__side = {s})"
+            aggs.append(f"CAST({n if multiplicities else f'least({n}, 1)'} AS INT) AS {tag}_n")
+            out.append(f"{tag}_n")
+        parts.append(df.selectExpr(*keys, f"{s} AS __side", *packed))
+    union = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), parts)
+    return union.groupBy(*keys).agg(*[F.expr(a) for a in aggs]).selectExpr(*out)
+
+
 def dedup_last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Collapse duplicate keys to ONE deterministic representative row.
 
     The reference silently overwrites on key collision — last scanned row
     wins (``extract_data.go:81``), which is scan-order-dependent.  We keep
     the max-by-remaining-columns row instead: same contract (one row per
-    key), deterministic on any cluster.  One aggregation with map-side
-    partial combine; shuffles on the same key as the downstream diff join
-    so AQE/bucketing can reuse the exchange.
-
-    Rows containing unorderable column types (maps, variant) cannot feed
-    ``max(struct(...))`` — those tables instead rank duplicates by the
-    STRING rendering of the non-key columns (unorderable ones cast for
-    the sort key only; the surviving row keeps its native values) via a
-    row_number window: still one shuffle on the join key, still
-    deterministic for distinct rows (two different maps with an
-    identical rendering tie arbitrarily, matching the reference's own
-    nondeterminism only in that degenerate corner)."""
-    others = [c for c in df.columns if c not in key_cols]
-    if not others:
-        return df.dropDuplicates(key_cols)
+    key), deterministic on any cluster.  It is the one-side case of
+    :func:`_fold`: one aggregation with map-side partial combine, on the
+    key the downstream diff join shuffles on, so AQE/bucketing can reuse
+    the exchange.  Two different maps with an identical rendering tie
+    arbitrarily, matching the reference's own nondeterminism only in
+    that degenerate corner."""
     types = dict(df.dtypes)
+    return _fold([(df, "__r", types)], key_cols).selectExpr(
+        *[ident(c) if c in key_cols else f"__r.{ident(c)} AS {ident(c)}" for c in types]
+    )
+
+
+def _full_outer_match(
+    before: DataFrame,
+    after: DataFrame,
+    key_cols: list[str],
+    b_types: dict[str, str],
+    a_types: dict[str, str],
+    null_safe_keys: bool,
+) -> DataFrame:
+    """The join matcher, in the fold's shape: one row per matched key
+    pair (m×n for duplicate keys), each side's non-key columns packed
+    into its ``__b``/``__a`` struct, ``__b_n``/``__a_n`` 1 where the
+    side is present and 0 where it is not."""
     keys = [ident(k) for k in key_cols]
-    if all(_is_orderable(types[c]) for c in others):
-        rep = ", ".join(ident(c) for c in others)
-        packed = df.groupBy(*keys).agg(F.expr(f"max(struct({rep})) AS __rep"))
-        return packed.selectExpr(
-            *[
-                ident(c) if c in key_cols else f"__rep.{ident(c)} AS {ident(c)}"
-                for c in df.columns
-            ]
-        )
-    order_by = ", ".join(
-        (ident(c) if _is_orderable(types[c]) else f"CAST({ident(c)} AS STRING)")
-        + " DESC NULLS LAST"
-        for c in others
+
+    def side(df: DataFrame, tag: str, types: dict[str, str]) -> list[str]:
+        others = [ident(c) for c in types if c not in key_cols]
+        return [f"struct({', '.join(others)}) AS {tag}"] if others else []
+
+    b_packed, a_packed = side(before, "__b", b_types), side(after, "__a", a_types)
+    b = before.selectExpr(*keys, *b_packed, "1 AS __b_n").alias("b")
+    a = after.selectExpr(*keys, *a_packed, "1 AS __a_n").alias("a")
+    # null-safe ``<=>`` is still recognized by Catalyst as an equi-join
+    # key, so the planner can pick sort-merge / shuffled-hash / broadcast
+    # — this does NOT degrade to a nested-loop join.  Plain equality
+    # keys are only valid when key columns are known non-null (the
+    # declared-PK contract).  Catalyst rewrites `<=>` keys as
+    # coalesce(k)/isnull(k), which does NOT line up with bucketed-table
+    # output partitioning — the plain path keeps the join exchange-free
+    # over snapshots bucketed by key.
+    eq = "<=>" if null_safe_keys else "="
+    cond = _chain("AND", [f"b.{k} {eq} a.{k}" for k in keys])
+    return b.join(a, on=F.expr(cond), how="full_outer").selectExpr(
+        *[f"coalesce(b.{k}, a.{k}) AS {k}" for k in keys],
+        *(["b.__b"] if b_packed else []),
+        *(["a.__a"] if a_packed else []),
+        "coalesce(b.__b_n, 0) AS __b_n",
+        "coalesce(a.__a_n, 0) AS __a_n",
     )
-    rn = f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY {order_by})"
-    return df.selectExpr("*", f"{rn} AS __rn").filter("__rn = 1").drop("__rn")
 
 
-def _diff_all_columns_key(
-    before: DataFrame, after: DataFrame, value_cols: list[str]
+def _classify(
+    matched: DataFrame,
+    key_cols: list[str],
+    b_types: dict[str, str],
+    a_types: dict[str, str],
+    include_unchanged: bool,
+    tolerance: dict[str, float] | None,
+    ignore_columns: list[str] | None,
 ) -> DiffResult:
-    """Diff for tables keyed on ALL columns, as one grouped pass.
+    """The keyed classifier, shared by both matchers
+    (``extract_data.go:161-246``): over key columns, ``__b``/``__a``
+    side structs and ``__b_n``/``__a_n`` side counts, a key present on
+    one side only is INSERTED/DELETED (once per row of that side), and
+    a key present on both is compared column by column — an UPDATED
+    pair, or NOT_MODIFIED (dropped unless ``include_unchanged``)."""
+    # Output column order: after-side order, then before-only columns —
+    # the union of both schemas so dropped/added columns still render.
+    value_cols = list(a_types) + [c for c in b_types if c not in a_types]
+    schema_drift = b_types.keys() != a_types.keys()
+    all_types = {**b_types, **a_types}
+    conflict = {c for c in b_types if c in a_types and b_types[c] != a_types[c]}
 
-    Equivalence with the full-outer-join formulation: with every column
-    in the key, a row's "key" is the whole row, so for a distinct row
-    with multiplicity ``m`` before and ``n`` after the FOJ emits
+    def row_struct(tag: str, types: dict[str, str]) -> str:
+        """One side's output row: keys from the match, missing-on-this-side
+        columns as typed NULLs, type-conflicting columns unified to string."""
+        fields = []
+        for c in value_cols:
+            if c not in types:
+                col = f"CAST(NULL AS {all_types[c]})"
+            else:
+                col = ident(c) if c in key_cols else f"{tag}.{ident(c)}"
+                if c in conflict:
+                    col = f"CAST({col} AS STRING)"
+            fields.append(f"{col} AS {ident(c)}")
+        return f"struct({', '.join(fields)})"
 
-    * ``m × n`` NOT_MODIFIED matches (dropped) when both sides have it,
-    * ``m`` DELETED rows when it exists only before,
-    * ``n`` INSERTED rows when it exists only after,
+    def cmp_col(tag: str, c: str) -> str:
+        col = f"{tag}.{ident(c)}"
+        if c in conflict:
+            # cross-side type conflict: compare the same string
+            # rendering the output carries — implicit numeric
+            # coercion would hide real changes (1 vs '1.00')
+            return f"CAST({col} AS STRING)"
+        # unorderable value types (map/variant) cannot feed `<=>`
+        # directly; compare a canonical rendering instead (the output
+        # still carries the native value)
+        return _canonical_comparable(col, b_types[c])
 
-    and UPDATED is impossible (keys equal ⇒ all columns equal).  Exactly
-    that is reproduced from per-side multiplicities: group the union of
-    both sides by the full row (ONE shuffle, map-side combined, two
-    longs of payload per group) and re-expand the exclusive side's
-    count.  The FOJ plan needs two exchanges plus two sorts of the same
-    rows; at 100 TB the saved exchange is the diff's dominant cost.
-    NULL grouping values compare equal in groupBy — the same null-safe
-    key semantics as the join formulation (SURVEY §1.4).
-    """
-    sel = [ident(c) for c in value_cols]
-    counted = _side_tagged_union(before, after, value_cols).groupBy(*sel).agg(
-        F.expr("count_if(__side = 0) AS __nb"), F.expr("count_if(__side = 1) AS __na")
-    )
-    out = (
-        counted.filter("__nb = 0 OR __na = 0")
-        .selectExpr(
-            *sel,
-            f"CASE WHEN __na = 0 THEN {_DELETED} ELSE {_INSERTED} END AS diff_status",
-            "greatest(__nb, __na) AS __n",
+    def col_changed(c: str) -> str:
+        if tolerance and c in tolerance:
+            # within-epsilon ⇒ unchanged; null semantics match `<=>`
+            # (null≡null unchanged, null-vs-value changed).  The abs/<=
+            # are plain IEEE ops — deterministic on any engine.
+            bc, ac = f"__b.{ident(c)}", f"__a.{ident(c)}"
+            near = f"abs({bc} - {ac}) <= {_number_lit(tolerance[c])}"
+            if b_types[c] in ("float", "double"):
+                # NaN≡NaN is unchanged under the exact comparator (both
+                # engines' null-safe equality treats NaN as equal to
+                # itself); abs(NaN−NaN)≤eps is false, so without this
+                # clause adding a tolerance would FLIP such rows to
+                # changed — tolerance must only ever mask changes
+                near = f"{near} OR (isnan({bc}) AND isnan({ac}))"
+            close = f"{bc} IS NOT NULL AND {ac} IS NOT NULL AND ({near})"
+            return f"NOT (({bc} IS NULL AND {ac} IS NULL) OR ({close}))"
+        return f"NOT ({cmp_col('__b', c)} <=> {cmp_col('__a', c)})"
+
+    # keys matched null-safely ⇒ never modified; ignored columns are
+    # excluded from the comparator entirely (output still carries them)
+    _skip = set(key_cols) | set(ignore_columns or [])
+    compared_cols = [c for c in a_types if c in b_types and c not in _skip]
+    value_compares = [col_changed(c) for c in compared_cols]
+
+    if not include_unchanged and not schema_drift:
+        # Drop the unchanged majority (at scale, nearly every matched
+        # key) with a flat OR over the per-column comparisons.
+        # Filtering on diff_status instead would push the whole
+        # modified_columns ARRAY construction into the filter (Catalyst
+        # inlines it through the projection), making every matched row
+        # pay the array allocation twice; the OR chain allocates nothing
+        # and short-circuits on the first difference.
+        matched = matched.filter(
+            _or_all(["__b_n = 0", "__a_n = 0", _or_all(value_compares)])
         )
-        .selectExpr("*", "explode(sequence(1, __n)) AS __i")
-        .selectExpr(
-            "diff_status",
-            f"diff_status = {_DELETED} AS is_before",
-            f"{_EMPTY_NAMES} AS modified_columns",
-            *sel,
-        )
-    )
-    return DiffResult(df=out, key_columns=list(value_cols), value_columns=value_cols)
 
-
-def _diff_grouped_dedup(
-    before: DataFrame, after: DataFrame, key_cols: list[str]
-) -> DiffResult:
-    """Dedup-last-wins + keyed diff as ONE grouped pass over the tagged
-    union — the snapshot-diff hot path (``diff_snapshots`` always
-    dedups).
-
-    Per key group (groupBy treats NULL keys as one group — the same
-    null-safe semantics as the ``<=>`` join):
-
-    * each side's last-wins representative is ``max(struct(non-key
-      cols))`` over that side's rows — identical to ``dedup_last_wins``;
-      ``max`` ignores the other side's NULLed-out entries, and a
-      struct of all-NULL fields is still non-NULL, so presence
-      detection is exact,
-    * a missing before-rep ⇒ INSERTED, missing after-rep ⇒ DELETED,
-      both present ⇒ per-column null-safe compare ⇒ UPDATED pair or
-      dropped as unchanged.
-
-    One exchange total (both sides through the union), map-side
-    partial aggregation, vs FOUR for dedup-aggregate-then-null-safe-FOJ
-    (the aggregations hash-partition on raw keys, the rewritten join
-    keys on (coalesce, isnull) tuples — incompatible distributions, so
-    each side shuffled twice).  Caller gates semantics: same schema and
-    types both sides, orderable non-key columns, no include_unchanged.
-    """
-    value_cols = list(after.columns)
-    others = [c for c in value_cols if c not in key_cols]
-    keys = [ident(k) for k in key_cols]
-    rep_struct = f"struct({', '.join(ident(c) for c in others)})"
-    grouped = _side_tagged_union(before, after, value_cols).groupBy(*keys).agg(
-        F.expr(f"max(CASE WHEN __side = 0 THEN {rep_struct} END) AS __b"),
-        F.expr(f"max(CASE WHEN __side = 1 THEN {rep_struct} END) AS __a"),
-    )
-    # drop the unchanged majority with a flat OR chain before any array
-    # construction (same reasoning as the FOJ path's pre-filter)
-    value_compares = [
-        f"NOT (__b.{ident(c)} <=> __a.{ident(c)})" for c in others
-    ]
-    grouped = grouped.filter(
-        _or_all(["__b IS NULL", "__a IS NULL", _or_all(value_compares)])
-    )
+    if schema_drift:
+        # Reference: column-set change ⇒ every column marked modified and
+        # the row counted as UPDATED (extract_data.go:162-171), so no
+        # matched row is NOT_MODIFIED and the pre-filter above is moot.
+        changed_array = f"array({', '.join(string_lit(c) for c in value_cols)})"
+    else:
+        changed_array = _modified_array(value_compares, compared_cols)
     modified = (
-        "CASE WHEN __b IS NOT NULL AND __a IS NOT NULL THEN "
-        f"{_modified_array(value_compares, others)} ELSE {_EMPTY_NAMES} END"
+        f"CASE WHEN __b_n > 0 AND __a_n > 0 THEN {changed_array} ELSE {_EMPTY_NAMES} END"
     )
-
-    def row_struct(rep_col: str) -> str:
-        return "struct({})".format(
-            ", ".join(
-                ident(c) if c in key_cols else f"{rep_col}.{ident(c)} AS {ident(c)}"
-                for c in value_cols
-            )
-        )
-
-    classified = grouped.selectExpr(
-        *keys,
+    status = (
+        f"CASE WHEN __b_n = 0 THEN {_INSERTED} "
+        f"WHEN __a_n = 0 THEN {_DELETED} "
+        f"WHEN size(modified_columns) > 0 THEN {_UPDATED} "
+        f"ELSE {_NOT_MODIFIED} END"
+    )
+    classified = matched.selectExpr(
         f"{modified} AS modified_columns",
-        f"{row_struct('__b')} AS __b_row",
-        f"{row_struct('__a')} AS __a_row",
-        f"CASE WHEN __b IS NULL THEN {_INSERTED} WHEN __a IS NULL THEN {_DELETED} "
-        f"ELSE {_UPDATED} END AS diff_status",
-    )
+        f"{row_struct('__b', b_types)} AS __b_row",
+        f"{row_struct('__a', a_types)} AS __a_row",
+        "__b_n",
+        "__a_n",
+    ).selectExpr("*", f"{status} AS diff_status")
+    # an exclusive side renders once per row it holds (all-columns keys
+    # without dedup keep multiplicities); NOT_MODIFIED renders the after
+    # row once
     pair = (
         f"CASE WHEN diff_status = {_UPDATED} THEN array({_BEFORE_ROW}, {_AFTER_ROW}) "
-        f"WHEN diff_status = {_DELETED} THEN array({_BEFORE_ROW}) "
+        f"WHEN diff_status = {_DELETED} THEN array_repeat({_BEFORE_ROW}, __b_n) "
+        f"WHEN diff_status = {_INSERTED} THEN array_repeat({_AFTER_ROW}, __a_n) "
         f"ELSE array({_AFTER_ROW}) END"
     )
     return DiffResult(
@@ -498,188 +571,30 @@ def diff_tables(
         before = normalize_to_strings(before)
         after = normalize_to_strings(after)
 
-    if dedup_keys:
-        # Tables whose declared key is not actually unique (or no-PK
-        # tables with fully duplicate rows) would cross-match in the
-        # full-outer join; identical snapshots MUST diff empty.
-        #
-        # Preferred shape: ONE union-shuffle groupBy computing dedup AND
-        # diff together.  Dedup-then-null-safe-FOJ costs FOUR exchanges —
-        # the dedup aggregation partitions on the raw key columns while
-        # Catalyst rewrites `<=>` join keys to (coalesce, isnull) pairs,
-        # a partitioning the aggregation's exchange does not satisfy, so
-        # every side shuffles twice.  groupBy is natively null-safe
-        # (NULL keys form one group — exactly the `<=>` semantics), so
-        # grouping the tagged union gives dedup + matching + classification
-        # off a single exchange.  Kept to the cases whose semantics the
-        # grouped form reproduces exactly; everything else (schema/type
-        # drift, unorderable value types, bucketed plain-key joins,
-        # include_unchanged) stays on the FOJ.
-        # ordered equality: the last-wins representative is max over a
-        # struct built in column order, so differing orders would pick
-        # differing representatives vs per-side dedup_last_wins
-        types_agree = before.dtypes == after.dtypes
-        grouped_ok = (
-            null_safe_keys
-            and not include_unchanged
-            and not tolerance  # grouped comparator is exact-equality only
-            and not ignore_columns  # grouped comparator compares every column
-            and types_agree
-            and set(key_cols) != set(before.columns)
-            and all(
-                _is_orderable(t)
-                for c, t in before.dtypes
-                if c not in key_cols
-            )
+    b_types, a_types = dict(before.dtypes), dict(after.dtypes)
+    # One matcher per shape.  The fold serves every null-safe
+    # deduplicating diff and the all-columns key (presence under dedup,
+    # multiplicities without), off one exchange.  The full outer join
+    # keeps the three shapes only it plans correctly or exchange-free:
+    # a non-deduplicating declared key (duplicate keys cross-match
+    # m×n), plain-equality keys (exchange-free over snapshots bucketed
+    # by key) and include_unchanged without dedup (m×n NOT_MODIFIED).
+    all_columns_key = set(key_cols) == set(b_types) == set(a_types)
+    if (dedup_keys and null_safe_keys) or (all_columns_key and not include_unchanged):
+        matched = _fold(
+            [(before, "__b", b_types), (after, "__a", a_types)],
+            key_cols,
+            multiplicities=not dedup_keys,
         )
-        if grouped_ok:
-            return _diff_grouped_dedup(before, after, key_cols)
-        before = dedup_last_wins(before, key_cols)
-        after = dedup_last_wins(after, key_cols)
-
-    b_cols, a_cols = list(before.columns), list(after.columns)
-    # Output column order: after-side order, then before-only columns —
-    # the union of both schemas so dropped/added columns still render.
-    value_cols = a_cols + [c for c in b_cols if c not in set(a_cols)]
-    common_cols = [c for c in a_cols if c in set(b_cols)]
-    schema_drift = set(b_cols) != set(a_cols)
-
-    if (
-        not include_unchanged
-        and set(key_cols) == set(b_cols) == set(a_cols)
-    ):
-        # All-columns key (the reference's no-PK fallback): the diff
-        # degenerates to keyed symmetric difference, which ONE grouped
-        # pass computes — vs. two exchanges plus a sort-merge FOJ.  See
-        # _diff_all_columns_key for the exact FOJ-equivalence argument.
-        return _diff_all_columns_key(before, after, value_cols)
-
-    b_types = dict(before.dtypes)
-    a_types = dict(after.dtypes)
-
-    def side_struct(side: str, side_cols: list[str], alias: str) -> str:
-        """A struct of every output value column for one join side,
-        with missing-on-this-side columns as typed NULLs and
-        type-conflicting columns unified to string."""
-        fields = []
-        for c in value_cols:
-            if c in side_cols:
-                col = f"{side}.{ident(c)}"
-                if c in b_types and c in a_types and b_types[c] != a_types[c]:
-                    col = f"CAST({col} AS STRING)"
-            else:
-                other_type = a_types.get(c, b_types.get(c, "string"))
-                col = f"CAST(NULL AS {other_type})"
-            fields.append(f"{col} AS {ident(c)}")
-        return f"struct({', '.join(fields)}) AS {alias}"
-
-    b = before.selectExpr("*", "true AS __b_present").alias("b")
-    a = after.selectExpr("*", "true AS __a_present").alias("a")
-
-    # null-safe ``<=>`` is still recognized by Catalyst as an equi-join
-    # key, so the planner can pick sort-merge / shuffled-hash / broadcast
-    # — this does NOT degrade to a nested-loop join.  Plain equality
-    # keys are only valid when key columns are known non-null (the
-    # declared-PK contract).  Catalyst rewrites `<=>` keys as
-    # coalesce(k)/isnull(k), which does NOT line up with bucketed-table
-    # output partitioning — the plain path keeps the join exchange-free
-    # over snapshots bucketed by key.
-    eq = "<=>" if null_safe_keys else "="
-    cond = _chain("AND", [f"b.{ident(k)} {eq} a.{ident(k)}" for k in key_cols])
-    joined = b.join(a, on=F.expr(cond), how="full_outer")
-
-    both_present = "b.__b_present IS NOT NULL AND a.__a_present IS NOT NULL"
-
-    def cmp_col(side: str, c: str) -> str:
-        col = f"{side}.{ident(c)}"
-        if b_types[c] != a_types[c]:
-            # cross-side type conflict: compare the same string
-            # rendering the output carries — implicit numeric
-            # coercion would hide real changes (1 vs '1.00')
-            return f"CAST({col} AS STRING)"
-        # unorderable value types (map/variant) cannot feed `<=>`
-        # directly; compare a canonical rendering instead (the output
-        # still carries the native value)
-        return _canonical_comparable(col, b_types[c])
-
-    def col_changed(c: str) -> str:
-        if tolerance and c in tolerance:
-            # within-epsilon ⇒ unchanged; null semantics match `<=>`
-            # (null≡null unchanged, null-vs-value changed).  The abs/<=
-            # are plain IEEE ops — deterministic on any engine.
-            bc, ac = f"b.{ident(c)}", f"a.{ident(c)}"
-            near = f"abs({bc} - {ac}) <= {_number_lit(tolerance[c])}"
-            if b_types[c] in ("float", "double"):
-                # NaN≡NaN is unchanged under the exact comparator (both
-                # engines' null-safe equality treats NaN as equal to
-                # itself); abs(NaN−NaN)≤eps is false, so without this
-                # clause adding a tolerance would FLIP such rows to
-                # changed — tolerance must only ever mask changes
-                near = f"{near} OR (isnan({bc}) AND isnan({ac}))"
-            close = f"{bc} IS NOT NULL AND {ac} IS NOT NULL AND ({near})"
-            return f"NOT (({bc} IS NULL AND {ac} IS NULL) OR ({close}))"
-        return f"NOT ({cmp_col('b', c)} <=> {cmp_col('a', c)})"
-
-    # keys matched null-safely ⇒ never modified; ignored columns are
-    # excluded from the comparator entirely (output still carries them)
-    _skip = set(key_cols) | set(ignore_columns or [])
-    compared_cols = [c for c in common_cols if c not in _skip]
-    value_compares = [col_changed(c) for c in compared_cols]
-
-    if not include_unchanged and not schema_drift:
-        # Drop the unchanged majority (at scale, nearly every matched
-        # row) straight off the join with a flat OR over the per-column
-        # comparisons.  Filtering on diff_status instead would push the
-        # whole modified_columns ARRAY construction into the filter
-        # (Catalyst inlines it through the projection), making every
-        # joined row pay the array+lambda allocation twice; the OR chain
-        # allocates nothing and short-circuits on the first difference.
-        joined = joined.filter(
-            _or_all(
-                ["b.__b_present IS NULL", "a.__a_present IS NULL", _or_all(value_compares)]
-            )
-        )
-
-    if schema_drift:
-        # Reference: column-set change ⇒ every column marked modified and
-        # the row counted as UPDATED (extract_data.go:162-171).
-        changed_array = f"array({', '.join(string_lit(c) for c in value_cols)})"
     else:
-        changed_array = _modified_array(value_compares, compared_cols)
-    modified = f"CASE WHEN {both_present} THEN {changed_array} ELSE {_EMPTY_NAMES} END"
-
-    status = (
-        f"CASE WHEN __b_present IS NULL THEN {_INSERTED} "
-        f"WHEN __a_present IS NULL THEN {_DELETED} "
-        f"WHEN size(modified_columns) > 0 THEN {_UPDATED} "
-        f"ELSE {_NOT_MODIFIED} END"
-    )
-    classified = joined.selectExpr(
-        f"{modified} AS modified_columns",
-        side_struct("b", b_cols, "__b_row"),
-        side_struct("a", a_cols, "__a_row"),
-        "b.__b_present AS __b_present",
-        "a.__a_present AS __a_present",
-    ).selectExpr("*", f"{status} AS diff_status")
-
-    if not include_unchanged and schema_drift:
-        # Under schema drift every matched row is UPDATED, so only the
-        # matched/unmatched split matters; the cheap pre-filter above is
-        # skipped and NOT_MODIFIED cannot occur — this filter is kept as
-        # a semantic guard only.
-        classified = classified.filter(f"diff_status != {_NOT_MODIFIED}")
-
-    # include_unchanged mode: NOT_MODIFIED renders the after row once
-    pair = (
-        f"CASE WHEN diff_status = {_UPDATED} THEN array({_BEFORE_ROW}, {_AFTER_ROW}) "
-        f"WHEN diff_status = {_DELETED} THEN array({_BEFORE_ROW}) "
-        f"WHEN diff_status = {_INSERTED} THEN array({_AFTER_ROW}) "
-        f"ELSE array({_AFTER_ROW}) END"
-    )
-    return DiffResult(
-        df=_explode_pairs(classified, pair, value_cols),
-        key_columns=list(key_cols),
-        value_columns=value_cols,
+        if dedup_keys:
+            before = dedup_last_wins(before, key_cols)
+            after = dedup_last_wins(after, key_cols)
+        matched = _full_outer_match(
+            before, after, key_cols, b_types, a_types, null_safe_keys
+        )
+    return _classify(
+        matched, key_cols, b_types, a_types, include_unchanged, tolerance, ignore_columns
     )
 
 
@@ -757,7 +672,6 @@ def apply_diff(
     return kept.unionByName(added)
 
 
-MULTISET_ONE_PASS_MAX_BYTES_CONF = "spark.dbdiff.multiset.onePassMaxBytes"
 # Threshold units are the OPTIMIZER'S estimate — compressed leaf-file
 # bytes for parquet sources, typically 5-10× smaller than in-memory row
 # volume.  Calibrated by A/B at two scales on local[32] (r4): combined
@@ -765,7 +679,7 @@ MULTISET_ONE_PASS_MAX_BYTES_CONF = "spark.dbdiff.multiset.onePassMaxBytes"
 # rows) → hash_first wins 1.3× (13.7 s vs 18.1 s).  64 MiB sits just
 # under the measured crossover; electing hash_first early is the safe
 # direction (it is the only shape that survives at 100 TB).
-MULTISET_ONE_PASS_MAX_BYTES_DEFAULT = 64 * 1024**2
+MULTISET_ONE_PASS_MAX_BYTES = 64 * 1024**2
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:
@@ -789,31 +703,7 @@ def _estimated_bytes(df: DataFrame) -> int | None:
     return size if 0 <= size < 2**62 else None
 
 
-def _pick_multiset_strategy(before: DataFrame, after: DataFrame) -> str:
-    """Size-based strategy election for ``diff_multiset(strategy="auto")``
-    — Spark's own broadcast-threshold idiom applied to the full-row-vs-
-    fingerprint shuffle trade.  Unknown size ⇒ the scale-safe shape."""
-    try:
-        threshold = int(
-            before.sparkSession.conf.get(
-                MULTISET_ONE_PASS_MAX_BYTES_CONF,
-                str(MULTISET_ONE_PASS_MAX_BYTES_DEFAULT),
-            )
-        )
-    except Exception:
-        threshold = MULTISET_ONE_PASS_MAX_BYTES_DEFAULT
-    b, a = _estimated_bytes(before), _estimated_bytes(after)
-    if b is None or a is None or b + a > threshold:
-        return "hash_first"
-    return "one_pass"
-
-
-def diff_multiset(
-    before: DataFrame,
-    after: DataFrame,
-    hash_first: bool = True,
-    strategy: str | None = None,
-) -> DataFrame:
+def diff_multiset(before: DataFrame, after: DataFrame) -> DataFrame:
     """Count-preserving (multiset) diff — the semantically correct diff
     for tables with no usable key (SURVEY §7.3.4): group both sides by
     ALL columns, compare multiplicities.
@@ -823,54 +713,41 @@ def diff_multiset(
     A row present 3× before and 1× after is DELETED with n_rows=2 —
     information the reference's last-wins keyed map silently destroys.
 
-    Three strategies, identical results (parity-tested):
+    Both regimes group by a 128-bit row fingerprint (two independently
+    salted xxhash64s); a masked change needs a ~2^-128-per-pair double
+    collision (no adversarial inputs constructible without the salt
+    split; the keyed diff is available when certainty is required).
+    The optimizer's size estimate of the two inputs elects one — the
+    size-threshold mechanism Spark uses to elect broadcast joins:
 
-    * ``hash_first`` (default — the 100 TB shape): the heavy
-      aggregation runs over a 128-bit row fingerprint (two
-      independently-salted xxhash64s), so the cluster-wide shuffle
-      carries ~24 bytes/row instead of the full row — at 100 TB that is
-      the difference between shuffling 100 TB and shuffling ~2 TB.  Row
-      values are then recovered by probing the (diff-sized)
-      changed-fingerprint set as a broadcast semi-join on a second scan
-      — no second shuffle of data.  The rescan is the deliberate price
-      of the light shuffle; persisting the fingerprinted projection
-      instead was measured SLOWER at sf0.1 (2.9s vs 1.8s — cache
-      materialization exceeds the rescan) and is a non-starter at
-      100 TB (it would spool the full input to executor storage).
-      A masked change needs a ~2^-128-per-pair double collision (no
-      adversarial inputs constructible without the salt split; the
-      keyed diff is available when certainty is required).
-    * ``one_pass``: single scan, single shuffle — the aggregation
-      carries one representative ``struct`` of the row values per
-      fingerprint (any representative is THE row, same 2^-128 caveat).
-      Fastest when the full-row shuffle fits comfortably (measured 2×
-      faster than hash_first at sf0.1 on local[32]); wrong at 100 TB,
-      where map-side combine cannot collapse across sides/files and the
-      shuffle reverts to full data volume.
-    * ``full_row``: exact one-shuffle full-row grouping — no hashing
-      anywhere, collision probability exactly 0.  The certainty
-      fallback.
-
-    ``hash_first=False`` is back-compat shorthand for ``full_row``.
-
-    * ``auto``: pick between ``one_pass`` and ``hash_first`` from the
-      optimizer's size estimate of the two inputs — the same
-      size-threshold mechanism Spark uses to elect broadcast joins.
-      Below ``spark.dbdiff.multiset.onePassMaxBytes`` (default 64 MiB
-      combined ESTIMATE — compressed file bytes; see the constant's
-      calibration note) the full-row shuffle is comfortably local and
-      ``one_pass``'s single scan wins (measured 2× at sf0.1); above it
-      — or when either estimate is unavailable — the 24-byte/row
-      ``hash_first`` shape wins (measured 1.3× at 6M rows) and is the
-      only one that survives at 100 TB, so auto degrades
-      conservatively.
+    * ``one_pass``, at most ``MULTISET_ONE_PASS_MAX_BYTES`` combined
+      (an ESTIMATE — compressed file bytes; see the constant's
+      calibration note): single scan, single shuffle, the aggregation
+      carrying one representative ``struct`` of the row values per
+      fingerprint.  Measured 2× faster than hash_first at sf0.1 on
+      local[32]; wrong at 100 TB, where map-side combine cannot
+      collapse across sides/files and the shuffle reverts to full data
+      volume.
+    * ``hash_first``, above the bound or when either estimate is
+      unavailable (the 100 TB shape, so the election degrades
+      conservatively): the heavy aggregation shuffles ~24 bytes/row
+      instead of the full row — at 100 TB the difference between
+      shuffling 100 TB and ~2 TB.  Row values are then recovered by
+      probing the (diff-sized) changed-fingerprint set as a broadcast
+      semi-join on a second scan — no second shuffle of data.  The
+      rescan is the deliberate price of the light shuffle; persisting
+      the fingerprinted projection instead was measured SLOWER at sf0.1
+      (2.9s vs 1.8s — cache materialization exceeds the rescan) and is
+      a non-starter at 100 TB (it would spool the full input to
+      executor storage).  Measured 1.3× faster than one_pass at 6M
+      rows.
     """
-    if strategy is None:
-        strategy = "hash_first" if hash_first else "full_row"
-    if strategy not in ("auto", "hash_first", "one_pass", "full_row"):
-        raise ValueError(f"unknown diff_multiset strategy: {strategy!r}")
-    if strategy == "auto":
-        strategy = _pick_multiset_strategy(before, after)
+    b_bytes, a_bytes = _estimated_bytes(before), _estimated_bytes(after)
+    one_pass = (
+        b_bytes is not None
+        and a_bytes is not None
+        and b_bytes + a_bytes <= MULTISET_ONE_PASS_MAX_BYTES
+    )
     # see diff_tables: inputs carrying the output/internal column names
     # (diff-audit tables fed back through the engine) must be shielded —
     # here a colliding `diff_status` would be silently REPLACED by
@@ -908,19 +785,11 @@ def diff_multiset(
             .withColumn("n_rows", F.abs(F.col("n_after") - F.col("n_before")))
         )
 
-    if strategy == "full_row":
-        return finish(
-            tagged.groupBy(*value_cols).agg(
-                F.count_if(F.col("__side") == 0).alias("n_before"),
-                F.count_if(F.col("__side") == 1).alias("n_after"),
-            )
-        )
-
     fp = [
         F.xxhash64(*value_cols).alias("__h1"),
         F.xxhash64(F.lit("dbdiff_multiset_salt"), *value_cols).alias("__h2"),
     ]
-    if strategy == "one_pass":
+    if one_pass:
         grouped = (
             tagged.select(*fp, "__side", F.struct(*value_cols).alias("__row"))
             .groupBy("__h1", "__h2")
@@ -1011,113 +880,69 @@ def diff3_tables(
       before/after pair rendering, extract_data.go:213-234)
 
     "Changed" covers deletes and inserts; a merged delete carries
-    ``deleted = true`` with NULL value columns.
+    ``deleted = true`` with NULL value columns.  Duplicate keys collapse
+    last-wins per side, as in the deduplicating keyed diff.
 
-    Scale shape: ONE shuffle — the three tagged snapshots union and a
-    single groupBy(key) folds each side into a fixed-size max(struct)
-    buffer (the `_diff_grouped_dedup` pattern; no FOJ chain, so there is
-    no second exchange and NULL keys group naturally without null-safe
-    join rewrites).  Classification and the conflict pair expansion are
-    narrow projections on changed keys only.
+    Scale shape: ONE shuffle — the three-side :func:`_fold` (no FOJ
+    chain, so there is no second exchange and NULL keys group naturally
+    without null-safe join rewrites).  Classification and the conflict
+    pair expansion are narrow projections on changed keys only.
     """
-    val_cols = [c for c in base.columns if c not in key_cols]
     for df, name in ((ours, "ours"), (theirs, "theirs")):
         if df.columns != base.columns:
             raise ValueError(
                 f"diff3 requires identical schemas; {name} differs from base"
             )
-
-    def tagged(df: DataFrame, side: int) -> DataFrame:
-        return df.select(
-            *key_cols,
-            F.lit(side).alias("_side"),
-            F.struct(*[F.col(c) for c in val_cols]).alias("_vals"),
-        )
-
-    unioned = (
-        tagged(base, 0)
-        .unionByName(tagged(ours, 1))
-        .unionByName(tagged(theirs, 2))
-    )
-    folded = unioned.groupBy(*key_cols).agg(
-        *[
-            F.max(F.when(F.col("_side") == s, F.col("_vals"))).alias(n)
-            for s, n in ((0, "_b"), (1, "_o"), (2, "_t"))
-        ],
-        *[
-            F.max(F.when(F.col("_side") == s, F.lit(True)))
-            .isNotNull()
-            .alias(f"_p{n}")
-            for s, n in ((0, "b"), (1, "o"), (2, "t"))
-        ],
+    types = dict(base.dtypes)
+    val_cols = [c for c in types if c not in key_cols]
+    keys = [ident(k) for k in key_cols]
+    folded = _fold(
+        [(base, "__b", types), (ours, "__o", types), (theirs, "__t", types)], key_cols
     )
 
-    def differs(x: str, y: str, px: str, py: str) -> Column:
-        col_diff = reduce(
-            lambda acc, c: acc
-            | ~F.col(f"{x}.{c}").eqNullSafe(F.col(f"{y}.{c}")),
-            val_cols,
-            F.lit(False),
-        )
-        return (F.col(px) != F.col(py)) | (F.col(px) & F.col(py) & col_diff)
+    def differs(x: str, y: str) -> str:
+        cols = [
+            f"NOT ({_canonical_comparable(f'{x}.{ident(c)}', types[c])} <=> "
+            f"{_canonical_comparable(f'{y}.{ident(c)}', types[c])})"
+            for c in val_cols
+        ]
+        return f"({x}_n != {y}_n) OR ({x}_n = 1 AND {y}_n = 1 AND ({_or_all(cols)}))"
 
-    changed_o = differs("_o", "_b", "_po", "_pb")
-    changed_t = differs("_t", "_b", "_pt", "_pb")
-    same_ot = ~differs("_o", "_t", "_po", "_pt")
-
+    ours_l, theirs_l, same_l, conflict_l = (
+        string_lit(s) for s in (MERGE_OURS, MERGE_THEIRS, MERGE_BOTH_SAME, MERGE_CONFLICT)
+    )
     classified = (
-        folded.withColumn("_co", changed_o)
-        .withColumn("_ct", changed_t)
-        .filter(F.col("_co") | F.col("_ct"))
-        .withColumn(
-            "merge_status",
-            F.when(F.col("_co") & ~F.col("_ct"), F.lit(MERGE_OURS))
-            .when(F.col("_ct") & ~F.col("_co"), F.lit(MERGE_THEIRS))
-            .when(same_ot, F.lit(MERGE_BOTH_SAME))
-            .otherwise(F.lit(MERGE_CONFLICT)),
+        folded.selectExpr(
+            "*", f"{differs('__o', '__b')} AS __co", f"{differs('__t', '__b')} AS __ct"
+        )
+        .filter("__co OR __ct")
+        .selectExpr(
+            "*",
+            f"CASE WHEN __co AND NOT __ct THEN {ours_l} "
+            f"WHEN __ct AND NOT __co THEN {theirs_l} "
+            f"WHEN NOT ({differs('__o', '__t')}) THEN {same_l} "
+            f"ELSE {conflict_l} END AS merge_status",
         )
     )
 
-    def out_row(side_label: str, vals: str, present: str) -> Column:
-        return F.struct(
-            F.lit(side_label).alias("side"),
-            (~F.col(present)).alias("deleted"),
-            *[
-                F.when(F.col(present), F.col(f"{vals}.{c}")).alias(c)
-                for c in val_cols
-            ],
-        )
+    def out_row(side: str, tag: str) -> str:
+        vals = "".join(f", {tag}.{ident(c)} AS {ident(c)}" for c in val_cols)
+        return f"struct({string_lit(side)} AS side, {tag}_n = 0 AS deleted{vals})"
 
-    winner_vals = F.when(
-        F.col("merge_status") == MERGE_THEIRS, F.col("_t")
-    ).otherwise(F.col("_o"))
-    winner_present = F.when(
-        F.col("merge_status") == MERGE_THEIRS, F.col("_pt")
-    ).otherwise(F.col("_po"))
-    rows = F.when(
-        F.col("merge_status") == MERGE_CONFLICT,
-        F.array(out_row("ours", "_o", "_po"), out_row("theirs", "_t", "_pt")),
-    ).otherwise(
-        F.array(
-            F.struct(
-                F.lit("merged").alias("side"),
-                (~winner_present).alias("deleted"),
-                *[
-                    F.when(winner_present, winner_vals[c]).alias(c)
-                    for c in val_cols
-                ],
-            )
-        )
+    rows = (
+        f"CASE WHEN merge_status = {conflict_l} "
+        f"THEN array({out_row('ours', '__o')}, {out_row('theirs', '__t')}) "
+        f"WHEN merge_status = {theirs_l} THEN array({out_row('merged', '__t')}) "
+        f"ELSE array({out_row('merged', '__o')}) END"
     )
-    exploded = classified.select(
-        *key_cols, "merge_status", F.explode(rows).alias("_r")
-    )
-    return exploded.select(
-        *key_cols,
+    return classified.selectExpr(
+        *keys, "merge_status", f"explode({rows}) AS __r"
+    ).selectExpr(
+        *keys,
         "merge_status",
-        F.col("_r.side").alias("side"),
-        F.col("_r.deleted").alias("deleted"),
-        *[F.col(f"_r.{c}").alias(c) for c in val_cols],
+        "__r.side AS side",
+        "__r.deleted AS deleted",
+        *[f"__r.{ident(c)} AS {ident(c)}" for c in val_cols],
     )
 
 

@@ -10,7 +10,7 @@ downstream point-in-time joins consume.
 
 Scale shape: ONE shuffle.  The S tagged snapshots union and a single
 groupBy(key) folds each snapshot's row into a fixed-size max(struct)
-buffer (the `_diff_grouped_dedup` pattern from diff.py) — absence is a
+buffer (the `_fold` pattern from diff.py) — absence is a
 NULL buffer, so DISAPPEARANCES are visible without densifying a
 (key × snapshot) timeline, and there are no windows and no joins.
 Change points, interval closing, and the version explode are all

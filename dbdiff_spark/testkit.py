@@ -432,7 +432,7 @@ def multiset_diff_query_df(spark: SparkSession, sf_dir: str, table: str) -> Data
     spec, mut = SPECS[table], MUTATIONS[table]
     base = prep(load_table(spark, sf_dir, table), spec)
     after = apply_mutation(base, spec, mut)
-    return diff_multiset(base, after, strategy="auto")
+    return diff_multiset(base, after)
 
 
 def multiset_oracle_sql(table: str) -> str:

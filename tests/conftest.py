@@ -56,3 +56,55 @@ def union_find_labels(pairs):
             # the smaller root wins, so every root is its component's minimum
             parent[max(ra, rb)] = min(ra, rb)
     return {x: find(x) for x in parent}
+
+
+def force_multiset_regime(monkeypatch, regime):
+    """Pin ``diff_multiset``'s size election through its bound: -1 elects
+    ``hash_first`` for any estimate, 2**62 elects ``one_pass`` for any
+    known one.  Frames built from local rows carry no estimate (which
+    elects ``hash_first`` whatever the bound), so forcing ``one_pass``
+    also pins the estimate to 0 bytes."""
+    import dbdiff_spark.diff as diff_mod
+
+    if regime == "one_pass":
+        monkeypatch.setattr(diff_mod, "MULTISET_ONE_PASS_MAX_BYTES", 2**62)
+        monkeypatch.setattr(diff_mod, "_estimated_bytes", lambda df: 0)
+    else:
+        monkeypatch.setattr(diff_mod, "MULTISET_ONE_PASS_MAX_BYTES", -1)
+
+
+def elected_regime(out):
+    """The regime a ``diff_multiset`` plan shows: only hash_first joins
+    (its probe of the changed fingerprints)."""
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    return "hash_first" if "Join" in plan else "one_pass"
+
+
+def multiset_model(b_rows, a_rows):
+    """``diff_multiset``'s contract over Python tuples: every distinct
+    row whose count changed, as (row, n_before, n_after, diff_status,
+    n_rows = |delta|), sorted by ``repr`` (rows may hold NULLs)."""
+    from collections import Counter
+
+    nb, na = Counter(b_rows), Counter(a_rows)
+    changed = [row for row in nb | na if nb[row] != na[row]]
+    return sorted(
+        [
+            (row, nb[row], na[row], "INSERTED" if na[row] > nb[row] else "DELETED",
+             abs(na[row] - nb[row]))
+            for row in changed
+        ],
+        key=repr,
+    )
+
+
+def multiset_rows(out, names):
+    """A ``diff_multiset`` result in :func:`multiset_model`'s shape."""
+    return sorted(
+        [
+            (tuple(r[c] for c in names), r["n_before"], r["n_after"], r["diff_status"],
+             r["n_rows"])
+            for r in out.collect()
+        ],
+        key=repr,
+    )

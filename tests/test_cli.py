@@ -82,6 +82,50 @@ def test_cli_apply_dir_reconstructs_after_state(spark, tmp_path, monkeypatch, ca
     assert rebuilt == {("1", "a"), ("2", "B"), ("4", "d")}
 
 
+def test_cli_apply_dir_reports_planted_mismatch(spark, tmp_path, monkeypatch, capsys):
+    """The verify step counts every row the rebuilt table and the after
+    snapshot do not share, with multiplicity: one altered row (missing
+    on one side, extra on the other) plus one duplicated row is
+    MISMATCH(3)."""
+    import dbdiff_spark.diff as diff_mod
+
+    src = tmp_path / "db"
+    src.mkdir()
+    spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id int, s string"
+    ).write.parquet(str(src / "t1.parquet"))
+    real_stdin = io.StringIO("\nq\n")
+
+    def fake_readline():
+        spark.createDataFrame(
+            [(1, "a"), (2, "B"), (4, "d")], "id int, s string"
+        ).write.mode("overwrite").parquet(str(src / "t1.parquet"))
+        return real_stdin.readline()
+
+    real_apply = diff_mod.apply_diff
+
+    def planted_apply(*args, **kwargs):
+        out = real_apply(*args, **kwargs)
+        altered = out.selectExpr("id", "IF(id = 1, 'planted', s) AS s")
+        return altered.unionByName(altered.filter("id = 4"))
+
+    monkeypatch.setattr(diff_mod, "apply_diff", planted_apply)
+    monkeypatch.setattr("sys.stdin", io.StringIO())
+    monkeypatch.setattr("sys.stdin.readline", fake_readline)
+    rc = cli.main(
+        [
+            "--parquet-dir", str(src),
+            "--snapshot-dir", str(tmp_path / "snaps"),
+            "--mode", "typed",
+            "--apply-dir", str(tmp_path / "applied"),
+            "-o", str(tmp_path / "out.xlsx"),
+        ]
+    )
+    assert rc == 0
+    text = capsys.readouterr().out
+    assert "[Apply] t1" in text and "[MISMATCH(3)]" in text, text
+
+
 def test_cli_apply_dir_survives_schema_drift(spark, tmp_path, monkeypatch, capsys):
     """--apply-dir across a schema migration: the mutated 'database'
     drops one column and adds another between snapshots; the apply must

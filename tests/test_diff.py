@@ -476,7 +476,7 @@ def test_diff_multiset_with_reserved_column_names(spark):
 
     b = spark.createDataFrame([(1, "x")], "n_rows int, diff_status string")
     a = spark.createDataFrame([(1, "y")], "n_rows int, diff_status string")
-    out = diff_multiset(b, a, strategy="full_row")
+    out = diff_multiset(b, a)
     assert {"n_rows__data", "diff_status__data"} <= set(out.columns)
     got = {(r["diff_status__data"], r["diff_status"]) for r in out.collect()}
     assert got == {("x", "DELETED"), ("y", "INSERTED")}
@@ -661,29 +661,21 @@ def _odd_out_names():
     return [c if c != "diff_status" else "diff_status__data" for c in _ODD_COLS]
 
 
-@pytest.mark.parametrize("strategy", ["full_row", "one_pass", "hash_first"])
-def test_adversarial_column_names_through_diff_multiset(spark, strategy):
-    """Every diff_multiset strategy quotes the odd names (backticks
-    included) and matches a Python multiset difference."""
-    from collections import Counter
+@pytest.mark.parametrize("regime", ["one_pass", "hash_first"])
+def test_adversarial_column_names_through_diff_multiset(spark, monkeypatch, regime):
+    """Both diff_multiset regimes quote the odd names (backticks
+    included) and match a Python multiset difference."""
+    from conftest import elected_regime, force_multiset_regime, multiset_model, multiset_rows
 
     from dbdiff_spark.diff import diff_multiset
 
     before = spark.createDataFrame(_ODD_BEFORE, _ODD_SCHEMA)
     after = spark.createDataFrame(_ODD_AFTER, _ODD_SCHEMA)
-    out = diff_multiset(before, after, strategy=strategy)
+    force_multiset_regime(monkeypatch, regime)
+    out = diff_multiset(before, after)
+    assert elected_regime(out) == regime
     names = _odd_out_names()
-    nb, na = Counter(_ODD_BEFORE), Counter(_ODD_AFTER)
-    expected = {
-        (row, INSERTED if na[row] > nb[row] else DELETED, abs(na[row] - nb[row]))
-        for row in nb | na
-        if na[row] != nb[row]
-    }
-    got = {
-        (tuple(r[c] for c in names), r["diff_status"], r["n_rows"])
-        for r in out.collect()
-    }
-    assert got == expected
+    assert multiset_rows(out, names) == multiset_model(_ODD_BEFORE, _ODD_AFTER)
 
 
 def test_adversarial_column_names_through_tracked_snapshot_diff(spark, tmp_path):

@@ -41,6 +41,55 @@ def test_diff3_classification(spark):
     ]
 
 
+# dots, backticks, quotes and spaces, in the key and in value columns
+_ODD_KEY = "k.e`y"
+_ODD_VALS = ["a`b", "dot.ted", "it's", "with space"]
+
+
+def test_diff3_quotes_odd_column_names(spark):
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField(_ODD_KEY, T.IntegerType())]
+        + [T.StructField(c, T.StringType()) for c in _ODD_VALS]
+    )
+    base = [(1, "a", "b", "c", "d"), (2, "a", "b", "c", "d"), (3, "a", "b", "c", "d")]
+    ours = [(1, "A", "b", "c", "d"), (2, "a", "b", "c", "d"), (3, "a", "b", "O", "d")]
+    theirs = [(1, "a", "b", "c", "d"), (2, "a", "B", "c", "d"), (3, "a", "b", "T", "d")]
+    frames = [spark.createDataFrame(r, schema) for r in (base, ours, theirs)]
+    out = diff3_tables(*frames, [_ODD_KEY])
+    assert out.columns == [_ODD_KEY, "merge_status", "side", "deleted", *_ODD_VALS]
+    got = sorted(
+        (r[_ODD_KEY], r["merge_status"], r["side"], r["deleted"], *[r[c] for c in _ODD_VALS])
+        for r in out.collect()
+    )
+    assert got == [
+        (1, "OURS", "merged", False, "A", "b", "c", "d"),
+        (2, "THEIRS", "merged", False, "a", "B", "c", "d"),
+        (3, "CONFLICT", "ours", False, "a", "b", "O", "d"),
+        (3, "CONFLICT", "theirs", False, "a", "b", "T", "d"),
+    ]
+
+
+def test_diff3_quotes_odd_key_names_when_deleting(spark):
+    """A delete on one side and a NULL key group, under an odd key name."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField(_ODD_KEY, T.IntegerType()), T.StructField("dot.ted", T.StringType())]
+    )
+    base = [(1, "x"), (None, "n")]
+    ours = [(None, "n")]
+    theirs = [(1, "x"), (None, "m")]
+    frames = [spark.createDataFrame(r, schema) for r in (base, ours, theirs)]
+    out = diff3_tables(*frames, [_ODD_KEY])
+    got = sorted(
+        (r[_ODD_KEY] is None, r["merge_status"], r["deleted"], r["dot.ted"])
+        for r in out.collect()
+    )
+    assert got == [(False, "OURS", True, None), (True, "THEIRS", False, "m")]
+
+
 def test_diff3_delete_vs_update_conflict(spark):
     base = _t(spark, [(1, "a", 1)])
     ours = _t(spark, [])

@@ -3,6 +3,7 @@ for ANY base table and ANY disjoint mutation plan (inserts with fresh
 keys, updates, deletes), the diff recovers exactly the mutated keys with
 exactly the touched columns."""
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -67,6 +68,173 @@ def test_diff_recovers_any_mutation_exactly(spark, plan):
             assert r["modified_columns"] == expect_cols
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+# --- the fold against a Python model -----------------------------------------
+
+_V = [0.0, 1.0, 1.25, 3.0]
+_FOLD_SCHEMA = "id int, s string, v double, m map<string,int>, w int"
+
+
+@st.composite
+def fold_case(draw):
+    """A mutation plan widened to every shape the fold serves: duplicate
+    keys, a NULL key, a map column, schema or type drift, tolerance,
+    ignore and include_unchanged.  Duplicates of a key differ in ``s``,
+    the first non-key column, so the last-wins pick never ties."""
+    base_keys, deletes, upd_a, upd_b, inserts = draw(mutation_plan())
+    upd_m = draw(st.sets(st.sampled_from(base_keys), max_size=len(base_keys)))
+    dups = draw(st.sets(st.sampled_from([*base_keys[:4], None]), max_size=3))
+    dup_changed = draw(st.booleans())
+
+    def row(k, s="a"):
+        return (k, f"{s}{k}", _V[(k or 0) % 4], {"x": (k or 0) % 3}, (k or 0) % 5)
+
+    before = [row(k) for k in base_keys] + [(None, "n", 1.0, None, None)]
+    after = []
+    for k in base_keys:
+        if k in deletes:
+            continue
+        k_, s_, v_, m_, w_ = row(k)
+        after.append((
+            k_,
+            f"A{k}" if k in upd_a else s_,
+            v_ + (0.25 if k % 2 else 2.0) if k in upd_b else v_,
+            {"x": k % 3, "y": 1} if k in upd_m else m_,
+            w_,
+        ))
+    after += [row(k) for k in sorted(inserts)] + [(None, "n", 1.5, None, None)]
+    for k in dups:
+        before.append((k, "z", 3.0, {"y": 1}, 7))
+        after.append((k, "z", 0.0, None, 7) if dup_changed else (k, "z", 3.0, {"y": 1}, 7))
+    return {
+        "before": before,
+        "after": after,
+        "drift": draw(st.sampled_from(["none", "drop_w", "add_x", "retype_w"])),
+        "tolerance": draw(st.sampled_from([None, {"v": 0.5}])),
+        "ignore": draw(st.sampled_from([None, ["s"]])),
+        "include_unchanged": draw(st.booleans()),
+    }
+
+
+def _canon(x):
+    return tuple(sorted(x.items())) if isinstance(x, dict) else x
+
+
+def _diff_model(b_rows, a_rows, b_types, a_types, tolerance, ignore, include_unchanged):
+    """Reference diff over Python rows keyed on ``id``: last-wins dedup
+    (per side, max over the non-key values, NULL lowest), null-safe key
+    matching, per-column comparison (type-conflicting columns as their
+    string rendering, maps by content, tolerance as |delta| <= eps) and
+    all-columns-modified under a column-set change."""
+    value_cols = list(a_types) + [c for c in b_types if c not in a_types]
+    drift = set(b_types) != set(a_types)
+    conflict = {c for c in b_types if c in a_types and b_types[c] != a_types[c]}
+
+    def order(x):
+        return (0,) if x is None else (1, _canon(x))
+
+    def dedup(rows, types):
+        reps = {}
+        for r in rows:
+            d = dict(zip(types, r))
+            rank = tuple(order(d[c]) for c in types if c != "id")
+            if d["id"] not in reps or rank > reps[d["id"]][0]:
+                reps[d["id"]] = (rank, d)
+        return {k: d for k, (_, d) in reps.items()}
+
+    def out(d, types):
+        vals = []
+        for c in value_cols:
+            x = d.get(c) if c in types else None
+            vals.append(None if x is None else str(x) if c in conflict else _canon(x))
+        return tuple(vals)
+
+    def changed(c, x, y):
+        if c in conflict:
+            x, y = (None if v is None else str(v) for v in (x, y))
+        if tolerance and c in tolerance:
+            if x is None or y is None:
+                return (x is None) != (y is None)
+            return abs(x - y) > tolerance[c]
+        return _canon(x) != _canon(y)
+
+    b, a = dedup(b_rows, b_types), dedup(a_rows, a_types)
+    compared = [c for c in a_types if c in b_types and c != "id" and c not in (ignore or [])]
+    rows = []
+    for k in set(b) | set(a):
+        if k not in a:
+            rows.append(("DELETED", True, (), out(b[k], b_types)))
+        elif k not in b:
+            rows.append(("INSERTED", False, (), out(a[k], a_types)))
+        else:
+            mods = tuple(value_cols) if drift else tuple(
+                c for c in compared if changed(c, b[k][c], a[k][c])
+            )
+            if mods:
+                rows.append(("UPDATED", True, mods, out(b[k], b_types)))
+                rows.append(("UPDATED", False, mods, out(a[k], a_types)))
+            elif include_unchanged:
+                rows.append(("NOT_MODIFIED", False, (), out(a[k], a_types)))
+    return sorted(rows, key=repr)
+
+
+@pytest.mark.parametrize("mode", [DiffMode.STRING, DiffMode.TYPED])
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=fold_case())
+def test_fold_matches_python_model(spark, mode, case):
+    """Every null-safe deduplicating diff shape plans as the one fold (no
+    join) and equals the Python model.  STRING mode models the diff of
+    the string renderings (``normalize_to_strings``), where tolerance
+    does not apply."""
+    from pyspark.sql import functions as F
+
+    from dbdiff_spark.normalize import normalize_to_strings
+
+    before = spark.createDataFrame(case["before"], _FOLD_SCHEMA)
+    after = spark.createDataFrame(case["after"], _FOLD_SCHEMA)
+    drift = case["drift"]
+    if drift == "drop_w":
+        after = after.drop("w")
+    elif drift == "add_x":
+        after = after.withColumn("x", F.length("s"))
+    elif drift == "retype_w":
+        after = after.withColumn("w", F.col("w").cast("string"))
+    tolerance = case["tolerance"] if mode == DiffMode.TYPED else None
+    res = diff_tables(
+        before, after, ["id"], mode=mode, dedup_keys=True,
+        tolerance=tolerance, ignore_columns=case["ignore"],
+        include_unchanged=case["include_unchanged"],
+    )
+    assert "Join" not in _plan(res.df)
+    if mode == DiffMode.STRING:
+        before, after = normalize_to_strings(before), normalize_to_strings(after)
+    expected = _diff_model(
+        [tuple(r) for r in before.collect()],
+        [tuple(r) for r in after.collect()],
+        dict(before.dtypes),
+        dict(after.dtypes),
+        tolerance,
+        case["ignore"],
+        case["include_unchanged"],
+    )
+    got = sorted(
+        [
+            (r["diff_status"], r["is_before"], tuple(r["modified_columns"]),
+             tuple(_canon(r[c]) for c in res.value_columns))
+            for r in res.df.collect()
+        ],
+        key=repr,
+    )
+    assert got == expected
+
+
 ROWS = st.lists(
     st.tuples(st.integers(min_value=0, max_value=6), st.sampled_from(["x", "y"])),
     max_size=20,
@@ -83,8 +251,8 @@ def test_all_columns_key_equals_foj_formulation(spark, b_rows, a_rows):
     """The one-shuffle all-columns-key rewrite must emit exactly what the
     full-outer-join formulation emits, for ANY multisets on either side
     (duplicates exercise the m×n match/m-exclusive expansion cases).
-    include_unchanged=True forces the generic FOJ path, giving the
-    reference behavior to compare against."""
+    include_unchanged=True without dedup keeps the full-outer-join
+    matcher, giving the reference behavior to compare against."""
     from pyspark.sql import functions as F
 
     schema = "id int, s string"
@@ -94,6 +262,8 @@ def test_all_columns_key_equals_foj_formulation(spark, b_rows, a_rows):
     foj = diff_tables(
         before, after, ["id", "s"], mode=DiffMode.TYPED, include_unchanged=True
     )
+    # the reference must reach the join matcher, never the fold itself
+    assert "Join" not in _plan(fast.df) and "FullOuter" in _plan(foj.df)
     fast_rows = sorted(
         (r["diff_status"], r["is_before"], r["id"], r["s"])
         for r in fast.df.collect()
@@ -146,21 +316,29 @@ def test_apply_diff_roundtrip_any_mutation(spark, plan):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(b_rows=ROWS, a_rows=ROWS)
-def test_multiset_strategies_agree_on_any_multisets(spark, b_rows, a_rows):
-    """All three diff_multiset strategies (hash_first / one_pass /
-    full_row) must produce the identical changed-row multiset for ANY
-    pair of input multisets — duplicates, NULL-free small domains, and
-    empty sides included."""
+def test_multiset_strategies_agree_on_any_multisets(spark, monkeypatch, b_rows, a_rows):
+    """Both diff_multiset regimes (one_pass / hash_first, each forced
+    through the size bound) equal a Python Counter model for ANY pair
+    of input multisets — duplicates, small domains and empty sides
+    included."""
+    from conftest import (
+        elected_regime,
+        force_multiset_regime,
+        multiset_model,
+        multiset_rows,
+    )
+
     from dbdiff_spark.diff import diff_multiset
 
     schema = "id int, s string"
     before = spark.createDataFrame(b_rows, schema)
     after = spark.createDataFrame(a_rows, schema)
-    outs = [
-        sorted(tuple(r) for r in diff_multiset(before, after, strategy=s).collect())
-        for s in ("hash_first", "one_pass", "full_row")
-    ]
-    assert outs[0] == outs[1] == outs[2]
+    expected = multiset_model(b_rows, a_rows)
+    for regime in ("one_pass", "hash_first"):
+        force_multiset_regime(monkeypatch, regime)
+        out = diff_multiset(before, after)
+        assert elected_regime(out) == regime
+        assert multiset_rows(out, ["id", "s"]) == expected, regime
 
 
 @st.composite

@@ -99,6 +99,51 @@ def test_kmeans_final_plan_is_broadcast_argmin_single_exchange(spark, sf_dir):
     assert plan.count("REPARTITION_BY_NUM") <= 1, plan
 
 
+def test_keyed_diff_matchers(spark, sf_dir):
+    """The fold: every null-safe deduplicating diff shape (plain,
+    tolerance, ignore, type and schema drift, unorderable values,
+    include_unchanged) and the all-columns key with or without dedup
+    plan exactly ONE exchange and no join.  A non-deduplicating
+    declared key keeps its full outer join (duplicate keys cross-match
+    m×n)."""
+    from pyspark.sql import functions as F
+
+    from dbdiff_spark import testkit
+    from dbdiff_spark.diff import DiffMode, diff_tables
+    from dbdiff_spark.io import load_table
+
+    spec, mut = testkit.SPECS["customer"], testkit.MUTATIONS["customer"]
+    base = testkit.prep(load_table(spark, sf_dir, "customer"), spec)
+    after = testkit.apply_mutation(base, spec, mut)
+    key = list(spec.key)
+    typed = {"mode": DiffMode.TYPED, "dedup_keys": True}
+    with_map = "map('segment', c_mktsegment) AS c_props"
+    shapes = {
+        "plain": (base, after, {"dedup_keys": True}),
+        "tolerance": (base, after, {**typed, "tolerance": {"c_acctbal": 0.5}}),
+        "ignore": (base, after, {**typed, "ignore_columns": ["c_mktsegment"]}),
+        "type drift": (
+            base, after.withColumn("c_nationkey", F.col("c_nationkey").cast("string")), typed
+        ),
+        "schema drift": (base, after.drop("c_mktsegment"), typed),
+        "map values": (base.selectExpr("*", with_map), after.selectExpr("*", with_map), typed),
+        "include_unchanged": (base, after, {**typed, "include_unchanged": True}),
+    }
+    events = load_table(spark, sf_dir, "events")
+    edited = events.filter("event_id % 7 != 0")
+    for dedup in (True, False):
+        shapes[f"all-columns key, dedup={dedup}"] = (
+            events, edited, {"dedup_keys": dedup, "key": list(events.columns)}
+        )
+    for name, (b, a, kw) in shapes.items():
+        kw = dict(kw)
+        plan = _plan(diff_tables(b, a, kw.pop("key", key), **kw).df)
+        assert plan.count("Exchange") == 1, (name, plan)
+        assert "Join" not in plan, (name, plan)
+    plan = _plan(diff_tables(base, after, key, mode=DiffMode.TYPED).df)
+    assert "FullOuter" in plan, plan
+
+
 def test_merge3_and_scd2_are_single_exchange_grouped(spark, sf_dir):
     """diff3 and the SCD2 fold both use the grouped max(struct) pattern:
     ONE exchange, no joins, no windows, no Python in the plan."""

@@ -3,7 +3,7 @@ snapshots, dotted column names, multiset schema-drift refusal, typed-mode
 cross-side type conflicts."""
 
 import pytest
-
+from conftest import elected_regime, force_multiset_regime, multiset_model, multiset_rows
 from pyspark.sql import functions as F
 
 from dbdiff_spark.diff import (
@@ -67,31 +67,23 @@ def test_sanitized_catalog_identifier():
     other = SnapshotStore._catalog_identifier("/tmp/x", "order items")
     assert ident != other
 
-def test_multiset_hash_first_matches_exact_grouping(spark):
-    """Both multiset formulations (hash-first fingerprint aggregation vs
-    exact full-row grouping) must produce the identical changed-row
-    multiset, including multiplicities (3 copies -> 1 copy = DELETED x2)
+def test_multiset_hash_first_matches_exact_grouping(spark, monkeypatch):
+    """Both multiset regimes (one_pass carrying a representative row,
+    hash_first probing for changed fingerprints) equal the Counter model
+    exactly, including multiplicities (3 copies -> 1 copy = DELETED x2)
     and NULL-valued rows."""
-    before = spark.createDataFrame(
-        [(1, "a"), (1, "a"), (1, "a"), (2, None), (3, "c")],
-        "id int, v string",
-    )
-    after = spark.createDataFrame(
-        [(1, "a"), (2, None), (2, None), (4, "d")], "id int, v string"
-    )
-    fast = diff_multiset(before, after)
-    exact = diff_multiset(before, after, hash_first=False)
-    one_pass = diff_multiset(before, after, strategy="one_pass")
-    f = sorted((tuple(r) for r in fast.collect()), key=lambda t: str(t))
-    e = sorted((tuple(r) for r in exact.collect()), key=lambda t: str(t))
-    o = sorted((tuple(r) for r in one_pass.collect()), key=lambda t: str(t))
-    assert f == e == o
-    by_id = {r["id"]: r for r in fast.collect()}
-    assert by_id[1]["diff_status"] == "DELETED" and by_id[1]["n_rows"] == 2
-    assert by_id[2]["diff_status"] == "INSERTED" and by_id[2]["n_rows"] == 1
+    b_rows = [(1, "a"), (1, "a"), (1, "a"), (2, None), (3, "c")]
+    a_rows = [(1, "a"), (2, None), (2, None), (4, "d")]
+    before = spark.createDataFrame(b_rows, "id int, v string")
+    after = spark.createDataFrame(a_rows, "id int, v string")
+    for regime in ("one_pass", "hash_first"):
+        force_multiset_regime(monkeypatch, regime)
+        out = diff_multiset(before, after)
+        assert elected_regime(out) == regime
+        assert multiset_rows(out, ["id", "v"]) == multiset_model(b_rows, a_rows), regime
 
 
-def test_multiset_one_pass_plan_has_single_scan_branch(spark, sf_dir):
+def test_multiset_one_pass_plan_has_single_scan_branch(spark, sf_dir, monkeypatch):
     """one_pass must not rescan the input: exactly one parquet scan per
     side in the plan (hash_first deliberately has two — the rescan is
     the price of the 24-byte shuffle)."""
@@ -99,37 +91,36 @@ def test_multiset_one_pass_plan_has_single_scan_branch(spark, sf_dir):
 
     li = load_table(spark, sf_dir, "part")
     shifted = li.withColumn("p_retailprice", F.col("p_retailprice") + 1)
-    one = diff_multiset(li, shifted, strategy="one_pass")
+    force_multiset_regime(monkeypatch, "one_pass")
+    one = diff_multiset(li, shifted)
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 2, plan  # one per side
+    force_multiset_regime(monkeypatch, "hash_first")
     two = diff_multiset(li, shifted)
     plan2 = two._jdf.queryExecution().executedPlan().toString()
     assert plan2.count("FileScan") == 4, plan2  # agg branch + probe branch
 
 
-def test_multiset_auto_strategy_election(spark, sf_dir):
-    """auto = the broadcast-threshold idiom applied to the multiset
-    shuffle: small estimated inputs elect one_pass (single scan per
-    side); a zero threshold forces the scale-safe hash_first (rescan
+def test_multiset_auto_strategy_election(spark, sf_dir, monkeypatch):
+    """The size election = the broadcast-threshold idiom applied to the
+    multiset shuffle: small estimated inputs elect one_pass (single scan
+    per side); a zero bound elects the scale-safe hash_first (rescan
     probe); results identical either way."""
-    from dbdiff_spark.diff import MULTISET_ONE_PASS_MAX_BYTES_CONF
+    import dbdiff_spark.diff as diff_mod
     from dbdiff_spark.io import load_table
 
     li = load_table(spark, sf_dir, "part")
     shifted = li.withColumn("p_retailprice", F.col("p_retailprice") + 1)
-    auto = diff_multiset(li, shifted, strategy="auto")
+    auto = diff_multiset(li, shifted)
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 2, plan  # sf0.001 fits: one_pass
-    spark.conf.set(MULTISET_ONE_PASS_MAX_BYTES_CONF, "0")
-    try:
-        forced = diff_multiset(li, shifted, strategy="auto")
-        plan0 = forced._jdf.queryExecution().executedPlan().toString()
-        assert plan0.count("FileScan") == 4, plan0  # hash_first shape
-        a = sorted((tuple(r) for r in auto.collect()), key=lambda t: str(t))
-        f = sorted((tuple(r) for r in forced.collect()), key=lambda t: str(t))
-        assert a == f
-    finally:
-        spark.conf.unset(MULTISET_ONE_PASS_MAX_BYTES_CONF)
+    monkeypatch.setattr(diff_mod, "MULTISET_ONE_PASS_MAX_BYTES", 0)
+    forced = diff_multiset(li, shifted)
+    plan0 = forced._jdf.queryExecution().executedPlan().toString()
+    assert plan0.count("FileScan") == 4, plan0  # hash_first shape
+    a = sorted((tuple(r) for r in auto.collect()), key=lambda t: str(t))
+    f = sorted((tuple(r) for r in forced.collect()), key=lambda t: str(t))
+    assert a == f
 
 
 def test_bpe_train_exhausted_corpus_agrees_with_oracle(spark, tmp_path):

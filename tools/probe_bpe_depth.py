@@ -68,7 +68,9 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    spark = get_spark()
+    spark = get_spark(
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     from dbdiff_spark import testkit
     from dbdiff_spark.ops.retrieval import (
         _bpe_apply_report,

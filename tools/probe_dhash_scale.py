@@ -127,7 +127,10 @@ def main() -> None:
         hamming_band_bits,
     )
 
-    spark = get_spark(app_name="probe_dhash_scale")
+    spark = get_spark(
+        app_name="probe_dhash_scale",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     # derived_w: what the runtime derivation (r6) would actually pick at
     # this N — the law the fixed-w rows validate empirically
     print(

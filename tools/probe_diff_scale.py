@@ -7,7 +7,7 @@ and times the three headline diff shapes warm:
 
 * naive typed keyed diff (``diff_tables``, the FOJ-equivalent path),
 * bucketed snapshot diff (the zero-exchange 100 TB posture),
-* multiset diff (``strategy="auto"``).
+* multiset diff (``diff_multiset``, its regime size-elected).
 
 Reports seconds and s/Mrow at 600k and 6M so the linear-regime claim in
 ARCHITECTURE.md is measured, not asserted.  Writes nothing to the repo.
@@ -204,7 +204,10 @@ def main() -> int:
     factors = [int(f) for f in args.factors.split(",")]
 
     if args.skew:
-        spark = get_spark(app_name="probe_diff_skew")
+        spark = get_spark(
+            app_name="probe_diff_skew",
+            extra_conf={"spark.ui.showConsoleProgress": "false"},
+        )
         print(
             "| rows | pk_uniform s (s/Mrow) | pk_hot s (s/Mrow) "
             "| coarse_hot_dedup s (s/Mrow) |"
@@ -221,7 +224,10 @@ def main() -> int:
             )
         return 0
 
-    spark = get_spark(app_name="probe_diff_scale")
+    spark = get_spark(
+        app_name="probe_diff_scale",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     print("| rows | naive s (s/Mrow) | bucketed s (s/Mrow) | multiset s (s/Mrow) |")
     print("|---|---|---|---|")
     for factor in factors:

@@ -49,7 +49,10 @@ def main() -> int:
     ap.add_argument("--ns", default="20000,50000,100000")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="probe_ivf_scale")
+    spark = get_spark(
+        app_name="probe_ivf_scale",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     if args.build_cost:
         return build_cost(spark, args)
     return pq_cost(spark, args)

@@ -57,7 +57,10 @@ def main() -> int:
     from dbdiff_spark.ops.similarity import semdedup_cells, semdedup_prune
     from dbdiff_spark.session import get_spark
 
-    spark = get_spark(app_name="semdedup_scale_probe")
+    spark = get_spark(
+        app_name="semdedup_scale_probe",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     print("| n_vectors | corpus (2n) | K | within-cell pairs | pairs/n | sec |")
     print("|---|---|---|---|---|---|")

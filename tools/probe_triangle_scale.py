@@ -93,7 +93,9 @@ def main() -> int:
     ap.add_argument("--nodes-div", type=int, default=20)
     args = ap.parse_args()
 
-    spark = get_spark()
+    spark = get_spark(
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     from dbdiff_spark.ops.graph import triangle_census
 
     for m_target in (int(s) for s in args.sizes.split(",")):
