@@ -259,12 +259,16 @@ def _fold(
       NULLed-out entries, and a struct of NULL fields is still non-NULL,
       so presence is exact;
     * ``T_n``: that side's row count, capped at 1 unless
-      ``multiplicities``.
+      ``multiplicities``.  Without multiplicities, the sides with no
+      non-key columns share one presence bitmask buffer (bit ``s`` for
+      side ``s``) instead of a count each.
 
     ``groupBy`` treats NULL keys as one group: the null-safe ``<=>``
     semantics of the join matcher."""
     keys = [ident(k) for k in key_cols]
     parts, aggs, out = [], [], list(keys)
+    if not multiplicities and any(set(types) <= set(key_cols) for _, _, types in sides):
+        aggs.append("bit_or(shiftleft(1, __side)) AS __mask")
     for s, (df, tag, types) in enumerate(sides):
         others = [c for c in types if c not in key_cols]
         packed = []
@@ -280,10 +284,11 @@ def _fold(
                 packed.append(f"struct({render}) AS {tag}_o")
                 aggs.append(f"max_by({tag}, {tag}_o) AS {tag}")
             out += [tag, f"IF({tag} IS NULL, 0, 1) AS {tag}_n"]
-        else:
-            n = f"count_if(__side = {s})"
-            aggs.append(f"CAST({n if multiplicities else f'least({n}, 1)'} AS INT) AS {tag}_n")
+        elif multiplicities:
+            aggs.append(f"CAST(count_if(__side = {s}) AS INT) AS {tag}_n")
             out.append(f"{tag}_n")
+        else:
+            out.append(f"shiftright(__mask, {s}) & 1 AS {tag}_n")
         parts.append(df.selectExpr(*keys, f"{s} AS __side", *packed))
     union = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), parts)
     return union.groupBy(*keys).agg(*[F.expr(a) for a in aggs]).selectExpr(*out)

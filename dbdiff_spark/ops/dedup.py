@@ -844,26 +844,35 @@ HAVING count(*) > 1
 # "Connected Components in MapReduce and Beyond" — alternating
 # large-star / small-star contractions converge in O(log² n) rounds on
 # ANY graph (min-label propagation needs diameter rounds, fatal on
-# chain-shaped graphs), and every round is one groupBy over the edge
-# list.  Fixpoint: every node maps to the minimum doc_id of its
+# chain-shaped graphs).  Their fixpoint is a star forest, and
+# large-star's own grouping shows one without an exchange: every node is
+# a root (no smaller neighbour) or a leaf (exactly one neighbour, and it
+# is smaller).  Fixpoint: every node maps to the minimum doc_id of its
 # component, so every oracle is the same recursive closure
 # (``_CC_CLUSTERS_CTES``).
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """For each node u: connect every strictly-larger neighbor to
-    min(N(u) ∪ {u}).  Keeps (big → small) edges, shrinks tall trees.
+def _star_groups(edges: DataFrame) -> DataFrame:
+    """Large-star's grouping of a symmetric edge list: one row per node
+    ``src`` with ``nbrs``, its distinct neighbours other than itself (a
+    self-loop contributes none, so a node whose only edge is a self-loop
+    keeps an empty list).  The loop's convergence test, its labels and
+    large-star's projection all read this one frame."""
+    return edges.groupBy("src").agg(
+        F.array_remove(F.collect_set("dst"), F.col("src")).alias("nbrs")
+    )
+
+
+def _large_star(grouped: DataFrame) -> DataFrame:
+    """Large-star's projection over ``_star_groups``: for each node u,
+    connect every strictly-larger neighbor to min(N(u) ∪ {u}).  Keeps
+    (big → small) edges, shrinks tall trees.
 
     Emits a MULTISET (r12): the old trailing ``distinct()`` paid a
-    full exchange per round, yet every consumer re-dedups anyway —
-    ``_small_star``'s ``collect_set``, the convergence ``subtract``
-    (set semantics), the next round's ``collect_set``, and the final
-    ``min`` aggregate are all duplicate-insensitive.  Cross-group
-    duplicates are degree-bounded, so the checkpoint grows by at most
-    that factor while each round drops one exchange."""
-    grouped = edges.groupBy("src").agg(
-        F.collect_set("dst").alias("nbrs")
-    )
+    full exchange per round, yet its one consumer, ``_small_star``'s
+    ``collect_set``, re-dedups anyway.  Cross-group duplicates are
+    degree-bounded, so the next round's input grows by at most that
+    factor while each round drops one exchange."""
     return grouped.selectExpr(
         "explode(filter(nbrs, v -> v > src)) AS src",
         "least(src, array_min(nbrs)) AS dst",
@@ -872,8 +881,8 @@ def _large_star(edges: DataFrame) -> DataFrame:
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """For each node u over (big → small) edges: connect u and all its
-    smaller neighbors to the minimum among them.  Multiset out — see
-    ``_large_star`` (every consumer is duplicate-insensitive)."""
+    smaller neighbors to the minimum among them.  Multiset out: the next
+    round's ``_star_groups`` re-dedups with its ``collect_set``."""
     directed = edges.selectExpr(
         "greatest(src, dst) AS src", "least(src, dst) AS dst"
     ).filter(F.col("src") != F.col("dst"))
@@ -889,47 +898,40 @@ def bigstar_components(sym_edges: DataFrame, query: str) -> DataFrame:
     alternating large-star/small-star contraction.  Returns
     ``(doc_id, cluster_id)`` where cluster_id is the component minimum.
 
+    Stops at the first star forest, which the input itself may be.
     Raises ``RuntimeError`` naming ``query`` when ``CC_MAX_ITERS``
-    rounds pass without convergence — a partial contraction is a wrong
-    labeling, never a result."""
-    # lineage cut per round — without it the logical plan doubles
-    # every contraction and the driver OOMs just stringifying it by
-    # round ~6 (the classic iterative-algorithm trap).  cut_lineage
-    # upgrades to reliable checkpointing (executor-loss-safe) when the
-    # session has a checkpoint dir configured.
-    edges = cut_lineage(sym_edges)
-    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
-    # the previous round's (big → small) edge set for the convergence
-    # check; ``subtract`` is set-semantic on both sides, so the raw
-    # multiset is equivalent to its distinct
-    prev = edges.selectExpr(
-        "greatest(src, dst) AS src", "least(src, dst) AS dst"
-    ).filter(F.col("src") != F.col("dst"))
-    for _ in range(CC_MAX_ITERS):
-        contracted = cut_lineage(_small_star(_large_star(edges)))
-        # converged when the (big → small) edge set is stable
-        changed = contracted.subtract(prev).count()
-        prev = contracted
-        # re-symmetrize for the next large-star round
+    contraction rounds pass without reaching one — a partial
+    contraction is a wrong labeling, never a result."""
+    edges = sym_edges
+    for rounds in range(CC_MAX_ITERS + 1):
+        # the one lineage cut per round: without it the logical plan
+        # doubles every contraction and the driver OOMs just
+        # stringifying it by round ~6 (the classic iterative-algorithm
+        # trap).  cut_lineage upgrades to reliable checkpointing
+        # (executor-loss-safe) when the session has a checkpoint dir.
+        grouped = cut_lineage(_star_groups(edges), eager=True)
+        # a star forest when no node has both a smaller neighbour and a
+        # second neighbour: then each leaf's one neighbour is a root and
+        # each component is a star rooted at its minimum.  A count over
+        # the materialized frame: no edge is shuffled.
+        if grouped.filter("size(nbrs) > 1 AND array_min(nbrs) < src").count() == 0:
+            return grouped.selectExpr(
+                "src AS doc_id", "least(src, array_min(nbrs)) AS cluster_id"
+            )
+        if rounds == CC_MAX_ITERS:
+            break
+        contracted = _small_star(_large_star(grouped))
+        # re-symmetrize for the next round's grouping; a node with no
+        # neighbour but itself has no edge in the contraction, so it
+        # carries over as its self-loop
         edges = contracted.unionByName(
             contracted.selectExpr("dst AS src", "src AS dst")
+        ).unionByName(
+            grouped.filter("size(nbrs) = 0").selectExpr("src", "src AS dst")
         )
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"{query}: connected components did not converge within "
-            f"CC_MAX_ITERS={CC_MAX_ITERS} large-star/small-star rounds"
-        )
-    # stars: child → root on the (big → small) half; roots map to themselves
-    parents = (
-        edges.filter(F.col("src") > F.col("dst"))
-        .groupBy(F.col("src").alias("doc_id"))
-        .agg(F.min("dst").alias("cluster_id"))
-    )
-    return nodes.join(parents, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
+    raise RuntimeError(
+        f"{query}: connected components did not converge within "
+        f"CC_MAX_ITERS={CC_MAX_ITERS} large-star/small-star rounds"
     )
 
 
@@ -2164,7 +2166,7 @@ def _cc_one_round_lazy(sym_edges: DataFrame) -> DataFrame:
     per round at construction time, so inspecting their plan would
     execute the workload; every round has this same shape, so one
     round is the honest plan to print."""
-    return _small_star(_large_star(sym_edges)).selectExpr(
+    return _small_star(_large_star(_star_groups(sym_edges))).selectExpr(
         "src AS doc_id", "dst AS cluster_id"
     )
 

@@ -33,22 +33,28 @@ def test_bigstar_chain_graph(spark):
 
 
 def test_bigstar_multiple_components_and_singleton_pair(spark):
-    edges = _sym(spark, [(10, 11), (11, 12), (20, 21), (5, 30)])
+    # 40's only edge is a self-loop, in a graph that needs a round
+    edges = _sym(spark, [(10, 11), (11, 12), (20, 21), (5, 30), (40, 40)])
     got = {(r.doc_id, r.cluster_id) for r in bigstar_components(edges, "test").collect()}
     assert got == {
         (10, 10), (11, 10), (12, 10),
         (20, 20), (21, 20),
         (5, 5), (30, 5),
+        (40, 40),
     }
 
 
 @st.composite
 def cc_graphs(draw):
     """A path of ≥1000 nodes plus up to three more components (paths,
-    stars, cliques, random forests), as an edge list over node ids that
-    are either in path order or shuffled."""
+    stars, cliques, random forests, isolated pairs, lone self-loops), as
+    an edge list over node ids that are either in path order or
+    shuffled, with some edges repeated and some self-loops added."""
     shapes = ["path"] + draw(
-        st.lists(st.sampled_from(["path", "star", "clique", "forest"]), max_size=3)
+        st.lists(
+            st.sampled_from(["path", "star", "clique", "forest", "pair", "loop"]),
+            max_size=3,
+        )
     )
     edges, n = [], 0
     for i, shape in enumerate(shapes):
@@ -61,6 +67,13 @@ def cc_graphs(draw):
         elif shape == "clique":
             size = draw(st.integers(2, 20))
             edges += [(n + a, n + b) for a in range(size) for b in range(a + 1, size)]
+        elif shape == "pair":
+            size = 2
+            edges.append((n, n + 1))
+        elif shape == "loop":
+            # a node whose only edge is a self-loop
+            size = 1
+            edges.append((n, n))
         else:
             # each node links to a random earlier node, or starts a new tree
             parents = draw(
@@ -73,6 +86,8 @@ def cc_graphs(draw):
                 if p >= 0
             ]
         n += size
+    edges += [edges[j % len(edges)] for j in draw(st.lists(st.integers(0), max_size=5))]
+    edges += [(v % n, v % n) for v in draw(st.lists(st.integers(0), max_size=3))]
     ids = list(range(n))
     if draw(st.booleans()):
         random.Random(draw(st.integers(0, 2**32))).shuffle(ids)
@@ -98,6 +113,24 @@ def test_bigstar_raises_when_rounds_run_out(spark, monkeypatch):
     path = _sym(spark, [(i, i + 1) for i in range(999)])
     with pytest.raises(RuntimeError, match="long_path_query.*CC_MAX_ITERS=2"):
         bigstar_components(path, "long_path_query")
+
+
+def test_bigstar_stops_at_a_star_forest(spark, monkeypatch):
+    """A star forest (every component a star rooted at its minimum) is
+    the loop's fixpoint, read off the first grouping: with no
+    contraction round allowed it still labels every node, while a
+    3-node path rooted in the middle of its ids needs a round and
+    raises."""
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 0)
+    forest = (
+        [(0, j) for j in range(1, 6)]  # a star rooted at its minimum
+        + [(0, 3), (10, 11), (10, 11)]  # a repeated edge, an isolated pair
+        + [(20, 20), (0, 0), (4, 4)]  # a lone self-loop, on a root, on a leaf
+    )
+    out = bigstar_components(_sym(spark, forest), "test").collect()
+    assert {r.doc_id: r.cluster_id for r in out} == union_find_labels(forest)
+    with pytest.raises(RuntimeError, match="path_query.*CC_MAX_ITERS=0"):
+        bigstar_components(_sym(spark, [(0, 1), (1, 2)]), "path_query")
 
 
 def test_fuzzy_part_match_blocking_and_band(spark, sf_dir):

@@ -244,3 +244,28 @@ def test_entries_are_durable_with_a_checkpoint_dir(spark, sf_dir, tmp_path, monk
         _reset_checkpoint_dir(spark)
     assert [n for n in DURABLE_ENTRIES if durable[n] != plain[n]] == []
     assert list((tmp_path / "ckpt").rglob("*")), "no reliable checkpoint was written"
+
+
+def test_multi_round_components_are_durable_with_a_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """The connected-components loop cuts its lineage once per round; on
+    a path that takes several rounds, with a checkpoint dir set, every
+    cut is a reliable checkpoint and the labels are the union-find's."""
+    from conftest import union_find_labels
+
+    from dbdiff_spark.ops.dedup import bigstar_components
+
+    pairs = [(i, i + 1) for i in range(63)]
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    sym = df.unionByName(df.selectExpr("dst AS src", "src AS dst"))
+
+    def _no_local_checkpoint(self, *_a, **_k):
+        raise AssertionError("localCheckpoint used with a checkpoint dir set")
+
+    monkeypatch.setattr(type(sym), "localCheckpoint", _no_local_checkpoint)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        out = bigstar_components(sym, "test").collect()
+    finally:
+        _reset_checkpoint_dir(spark)
+    assert {r.doc_id: r.cluster_id for r in out} == union_find_labels(pairs)
+    assert len(list((tmp_path / "ckpt").rglob("rdd-*"))) > 2, "fewer than three rounds ran"

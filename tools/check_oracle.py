@@ -101,7 +101,11 @@ def main(names: list[str], sf_dir: str = SF_DIR, spark=None, jobs: int = 1) -> i
     if spark is None:
         from dbdiff_spark.session import get_spark
 
-        spark = get_spark(app_name="check_oracle", shuffle_partitions=8)
+        spark = get_spark(
+            app_name="check_oracle",
+            shuffle_partitions=8,
+            extra_conf={"spark.ui.showConsoleProgress": "false"},
+        )
 
     def make_con():
         con = duckdb.connect()
