@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbdiff_spark.sqltext import ident, string_lit
+
 TABLES = [
     "region",
     "nation",
@@ -103,6 +105,31 @@ def spread(df: DataFrame, spark: SparkSession, *key_cols: str) -> DataFrame:
 
 _SPREAD_WIDTH_CACHE: dict[tuple, int] = {}
 _SPREAD_WIDTH_CACHE_MAX = 4096
+
+
+def with_variants(df: DataFrame, *variants: dict[str, str]) -> DataFrame:
+    """Every row of ``df`` followed by one derived row per mapping in
+    ``variants`` (column name → SQL expression over the ORIGINAL row's
+    columns; an unnamed column passes through), same schema as ``df``.
+
+    One Generate, ``inline(array(named_struct(<row>), named_struct(<variant>)…))``,
+    not a ``unionByName`` of projections of ``df``: Spark plans each
+    union branch in full, so the scan, any exchange and every
+    expensive per-row step below the variants (the tokenizer, a Python
+    codec) would run once per branch.  Here they run once and the
+    variants are cheap expressions on the result.  The array is a literal
+    ``CreateArray``, which Catalyst never infers a non-empty filter
+    for, so nothing below is re-inlined (ARCHITECTURE "Generate's
+    inferred non-empty filter")."""
+    cols = df.columns
+
+    def struct(exprs: dict[str, str]) -> str:
+        return "named_struct(" + ", ".join(
+            f"{string_lit(c)}, {exprs.get(c, ident(c))}" for c in cols
+        ) + ")"
+
+    rows = ", ".join(struct(v) for v in ({}, *variants))
+    return df.selectExpr(f"inline(array({rows}))")
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

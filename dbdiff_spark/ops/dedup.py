@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import cut_lineage, load_table, spread
+from dbdiff_spark.io import cut_lineage, load_table, spread, with_variants
 from dbdiff_spark.ops.text import (
     _D_TOKENS,
     _SPLIT_CASE,
@@ -55,10 +55,7 @@ TRUNCATE_TOKENS = 10
 
 def _exact_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    copy = docs.select(
-        (F.col("doc_id") + EXACT_COPY_OFFSET).alias("doc_id"), F.col("text")
-    )
-    return docs.unionByName(copy)
+    return with_variants(docs, {"doc_id": f"doc_id + {EXACT_COPY_OFFSET}"})
 
 
 _EXACT_CORPUS_SQL = f"""
@@ -72,22 +69,26 @@ def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Original docs plus tail-truncated variants (drop the last 10
     tokens) — near-duplicates by construction.
 
-    Emits ``doc_id, tokens`` (not text): the regexp tokenization runs
-    ONCE per original document, and the truncated variant is an array
-    slice of the original's token array.  Equivalent to re-tokenizing
-    the re-joined text — tokens match ``[a-z0-9]+`` so they contain no
-    separators and round-trip through a space join — but the old
-    text-shaped corpus paid the regexp THREE times per doc (variant
-    construction + re-tokenization of both corpus halves downstream),
-    and the regexp is the single most expensive scalar in the pipeline."""
+    Emits ``doc_id, tokens`` (not text): the truncated variant is an
+    array slice of the original's token array.  Equivalent to
+    re-tokenizing the re-joined text — tokens match ``[a-z0-9]+`` so
+    they contain no separators and round-trip through a space join.
+    The regexp tokenization, the single most expensive scalar in the
+    pipeline, runs ONCE per original document because both rows come
+    out of one Generate over the tokenized frame (``with_variants``):
+    the scan, the spread exchange and the regexp sit below it once,
+    where a self-union of the tokenized frame would re-plan all three
+    per branch."""
     docs = spread(
         load_table(spark, sf_dir, "documents"), spark, "doc_id"
     ).selectExpr("doc_id", f"{_TOKENS} AS tokens")
-    trunc = docs.selectExpr(
-        f"doc_id + {NEARDUP_OFFSET} AS doc_id",
-        f"slice(tokens, 1, greatest(1, size(tokens) - {TRUNCATE_TOKENS})) AS tokens",
+    return with_variants(
+        docs,
+        {
+            "doc_id": f"doc_id + {NEARDUP_OFFSET}",
+            "tokens": f"slice(tokens, 1, greatest(1, size(tokens) - {TRUNCATE_TOKENS}))",
+        },
     )
-    return docs.unionByName(trunc)
 
 
 _NEARDUP_CORPUS_SQL = f"""
@@ -1809,12 +1810,9 @@ def dedup_ingest_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     it."""
     corpus = _neardup_corpus(spark, sf_dir)
     sigs = cut_lineage(_signatures_spark(corpus), eager=True)
-    hcols = [f"h{s}" for s in range(N_HASHES)]
     arriving = sigs.filter(F.col("doc_id") >= NEARDUP_OFFSET)
-    batch_sigs = arriving.unionByName(
-        arriving.selectExpr(
-            f"doc_id + {INTRA_COPY_OFFSET} AS doc_id", *hcols
-        )
+    batch_sigs = with_variants(
+        arriving, {"doc_id": f"doc_id + {INTRA_COPY_OFFSET}"}
     )
     batch_banded = _banded_from_sigs(batch_sigs)
     # intra-batch candidate pairs → connected components
@@ -2129,9 +2127,7 @@ def _split_assignments(
     if clusters is None:
         clusters = neardup_clusters(spark, sf_dir)
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    corpus_ids = ids.unionByName(
-        ids.selectExpr(f"doc_id + {NEARDUP_OFFSET} AS doc_id")
-    )
+    corpus_ids = with_variants(ids, {"doc_id": f"doc_id + {NEARDUP_OFFSET}"})
     return (
         corpus_ids.join(clusters, "doc_id", "left")
         .selectExpr("doc_id", "coalesce(cluster_id, doc_id) AS group_id")
@@ -2253,9 +2249,7 @@ def _neg_bucket(engine: str, *id_exprs: str) -> str:
 def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_minhash_lsh(spark, sf_dir)
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    corpus_ids = ids.unionByName(
-        ids.selectExpr(f"doc_id + {NEARDUP_OFFSET} AS doc_id")
-    )
+    corpus_ids = with_variants(ids, {"doc_id": f"doc_id + {NEARDUP_OFFSET}"})
     reps = (
         corpus_ids.selectExpr(
             "doc_id", f"{_neg_bucket('spark', 'doc_id')} AS bucket"

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbdiff_spark.io import cut_lineage, load_table
+from dbdiff_spark.io import cut_lineage, load_table, with_variants
 
 FEATURE_DIM = 8
 
@@ -673,20 +673,23 @@ def _dhash_frame(corpus: DataFrame) -> DataFrame:
             yield pd.DataFrame(recs, columns=["doc_id", "dhash"])
 
     # deliberately NOT spread (r12 A/B): hash-repartitioning the docs
-    # before the codec loop measured a net LOSS at bench SF (the
-    # exchange + the 3×-unioned 96-partition banded frame cost more
-    # than the codec parallelism bought — 4.4 s vs 3.4 s on the
-    # neardup composite), and at real scale the input arrives in many
-    # splits so io.spread would be a no-op there anyway
+    # before the codec loop measured a net LOSS at bench SF (4.4 s vs
+    # 3.4 s on the neardup composite): the exchange cost more than the
+    # codec parallelism bought.  That A/B predates io.with_variants,
+    # when each of the three jittered branches re-ran the spread and
+    # the codec; it has not been re-run over the one codec pass.  At
+    # real scale the input arrives in many splits, so io.spread would
+    # be a no-op there anyway
     return corpus.mapInPandas(batches, schema="doc_id bigint, dhash bigint")
 
 
 def multimodal_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the codec reads only ``text``, so a byte-identical copy hashes
+    # the same: hash the originals once and emit the copies after it
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.selectExpr(f"doc_id + {DHASH_COPY_OFFSET} AS doc_id", "text")
+    hashed = with_variants(
+        _dhash_frame(docs), {"doc_id": f"doc_id + {DHASH_COPY_OFFSET}"}
     )
-    hashed = _dhash_frame(corpus)
     return (
         hashed.groupBy("dhash")
         .agg(
@@ -839,15 +842,17 @@ def _far_mask(engine: str) -> str:
 def _jittered_hashes(hashed: DataFrame) -> DataFrame:
     """originals ∪ near copies (≤3 planted flips) ∪ far copies (5
     flips), masks derived from the ORIGINAL doc_id."""
-    near = hashed.selectExpr(
-        f"doc_id + {DHASH_NEAR_OFFSET} AS doc_id",
-        f"dhash ^ ({_near_mask('spark')}) AS dhash",
+    return with_variants(
+        hashed,
+        {
+            "doc_id": f"doc_id + {DHASH_NEAR_OFFSET}",
+            "dhash": f"dhash ^ ({_near_mask('spark')})",
+        },
+        {
+            "doc_id": f"doc_id + {DHASH_FAR_OFFSET}",
+            "dhash": f"dhash ^ ({_far_mask('spark')})",
+        },
     )
-    far = hashed.selectExpr(
-        f"doc_id + {DHASH_FAR_OFFSET} AS doc_id",
-        f"dhash ^ ({_far_mask('spark')}) AS dhash",
-    )
-    return hashed.unionByName(near).unionByName(far)
 
 
 def _dhash_banded(spark: SparkSession, sf_dir: str, band_bits: int) -> DataFrame:
@@ -1092,17 +1097,19 @@ def _jittered128(hashed: DataFrame) -> DataFrame:
     flips), masks derived from the ORIGINAL doc_id."""
     near_lo, near_hi = _mask128_words(_NEAR128_STEPS, guarded=True)
     far_lo, far_hi = _mask128_words(_FAR128_STEPS, guarded=False)
-    near = hashed.selectExpr(
-        f"doc_id + {DHASH128_NEAR_OFFSET} AS doc_id",
-        f"fp_lo ^ ({near_lo}) AS fp_lo",
-        f"fp_hi ^ ({near_hi}) AS fp_hi",
+    return with_variants(
+        hashed,
+        {
+            "doc_id": f"doc_id + {DHASH128_NEAR_OFFSET}",
+            "fp_lo": f"fp_lo ^ ({near_lo})",
+            "fp_hi": f"fp_hi ^ ({near_hi})",
+        },
+        {
+            "doc_id": f"doc_id + {DHASH128_FAR_OFFSET}",
+            "fp_lo": f"fp_lo ^ ({far_lo})",
+            "fp_hi": f"fp_hi ^ ({far_hi})",
+        },
     )
-    far = hashed.selectExpr(
-        f"doc_id + {DHASH128_FAR_OFFSET} AS doc_id",
-        f"fp_lo ^ ({far_lo}) AS fp_lo",
-        f"fp_hi ^ ({far_hi}) AS fp_hi",
-    )
-    return hashed.unionByName(near).unionByName(far)
 
 
 def _dhash128_banded(

@@ -41,6 +41,7 @@ from dbdiff_spark.io import (
     pinned,
     run_jobs,
     spread,
+    with_variants,
 )
 
 _log = logging.getLogger(__name__)
@@ -317,14 +318,10 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate vectors: corpus ∪ exact copies (shifted ids), pairs
     sharing a sign bucket with cosine ≥ 0.999.  Bucket-join candidates
     only — never the n² pair space."""
-    vecs = _vectors(spark, sf_dir)
-    corpus = vecs.unionByName(
-        vecs.select(
-            (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
-            "embedding",
-            "norm",
-        )
-    ).withColumn("bucket", F.expr(_sign_bucket_spark("embedding")))
+    vecs = _vectors(spark, sf_dir).withColumn(
+        "bucket", F.expr(_sign_bucket_spark("embedding"))
+    )
+    corpus = with_variants(vecs, {"vec_id": f"vec_id + {NEARDUP_OFFSET}"})
     a = corpus.alias("a")
     b = corpus.alias("b")
     return (
@@ -5294,13 +5291,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work), and the resulting seed set (≈√n rows) stays comfortably
     # broadcastable: 10⁹ docs → ~45k seeds × 64 dims ≈ 23 MB.
     cells = semdedup_cells(2 * load_table(spark, sf_dir, "embeddings").count())
-    corpus = vecs.unionByName(
-        vecs.select(
-            (F.col("vec_id") + NEARDUP_OFFSET).alias("vec_id"),
-            "embedding",
-            "norm",
-        )
-    )
+    corpus = with_variants(vecs, {"vec_id": f"vec_id + {NEARDUP_OFFSET}"})
     seeds = vecs.filter(F.col("vec_id") < cells).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("seed_emb")
     )

@@ -9,8 +9,13 @@ caller for the data scale.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# The directory that holds the ``dbdiff_spark`` package: Python workers
+# unpickle functions that reference it (``mapInPandas`` batches, UDFs).
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(
@@ -24,6 +29,12 @@ def get_spark(
     Defaults are chosen for correctness-critical oracle comparison
     (UTC session timezone, ANSI off so casts behave like the reference's
     permissive string coercion) and for scale (AQE on, Arrow on).
+
+    The package root goes first on the workers' ``PYTHONPATH``
+    (``spark.executorEnv.PYTHONPATH``, merged with any value passed in
+    ``extra_conf``): a driver that imports the package through
+    ``sys.path`` from another working directory would otherwise run
+    Python workers that cannot import it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -47,7 +58,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [_PACKAGE_ROOT, *conf.get(key, "").split(os.pathsep)]
+    conf[key] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

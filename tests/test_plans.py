@@ -377,3 +377,32 @@ def test_explain_frames_are_lazy_and_distributed(spark, sf_dir, last_job_id):
         ]
         assert all(s.startswith("parquet at ") for s in stages), f"{name}: {stages}"
         assert jsc.getPersistentRDDs().size() <= before_n, name
+
+
+def test_corpus_variants_come_from_one_scan(spark, sf_dir):
+    """Every row-variant corpus is one Generate over ONE pass of its
+    base (``io.with_variants``): the tokenizer and the Python dhash
+    codec run once over one ``documents`` scan.  A self-union of the
+    base re-plans its whole subtree per branch — two scans and two
+    regexps for the near-dup corpus, three codec passes for each
+    jittered banded frame — so no plan here may hold a Union."""
+    from dbdiff_spark.ops.dedup import _neardup_corpus, _signatures_spark
+    from dbdiff_spark.ops.multimodal import (
+        _dhash128_banded,
+        _dhash_banded,
+        multimodal_dhash_dedup,
+    )
+
+    plan = _plan(_signatures_spark(_neardup_corpus(spark, sf_dir)))
+    assert plan.count("regexp_extract_all") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert "Union" not in plan, plan
+    for df in (
+        _dhash_banded(spark, sf_dir, 8),
+        _dhash128_banded(spark, sf_dir, 16),
+        multimodal_dhash_dedup(spark, sf_dir),
+    ):
+        plan = _plan(df)
+        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("FileScan") == 1, plan
+        assert "Union" not in plan, plan

@@ -8,12 +8,16 @@ Usage::
     python tools/profile_query.py ann_ivfpq_ingest            # sf0.1, 2 runs
     python tools/profile_query.py --runs 1 dedup_ingest_full
     python tools/profile_query.py --sf-dir /root/testdata/sf0.01 q1_pricing_summary
+    python tools/profile_query.py --events-dir /tmp/ev --runs 1 neardup_clusters
 
 Method: a fresh SparkSession with the JSON event log enabled writes one
 log per application; each timed run is bracketed by job-description
 markers, and the log is parsed afterwards into a per-job table (start
-offset, duration, #tasks, stage names) plus the driver-side gaps.  Noop
-sink, per-plan sf0.001 warmup first — the bench's own methodology.
+offset, duration, #tasks, stage names) plus the driver-side gaps, then
+a per-stage table of the operators each stage ran (its RDD scopes) and
+the shuffle bytes and records it wrote (a subtree planned twice shows
+up there as two stages writing the same bytes).  Noop sink, per-plan
+sf0.001 warmup first — the bench's own methodology.
 """
 
 from __future__ import annotations
@@ -28,29 +32,51 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 EVDIR = "/tmp/dbdiff_profile_events"
 
+_SHUFFLE_BYTES = "internal.metrics.shuffle.write.bytesWritten"
+_SHUFFLE_RECORDS = "internal.metrics.shuffle.write.recordsWritten"
+
+
+def _stage_operators(stage_info: dict) -> str:
+    """The physical operators a stage ran, from its RDDs' scopes — the
+    stage name of a DataFrame job is a call-site lambda
+    (``$anonfun$withThreadLocalCaptured$2``) that tells stages apart
+    by nothing."""
+    names = set()
+    for rdd in stage_info.get("RDD Info", []):
+        try:
+            name = json.loads(rdd.get("Scope") or "{}").get("name", "")
+        except json.JSONDecodeError:
+            continue
+        if name and not name.startswith("WholeStageCodegen"):
+            names.add(name.strip())
+    return ", ".join(sorted(names))
+
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     runs = 2
     sf_dir = "/root/testdata/sf0.1"
     names = []
+    evdir = EVDIR
     i = 0
     while i < len(args):
         if args[i] == "--runs":
             runs = int(args[i + 1]); i += 2
         elif args[i] == "--sf-dir":
             sf_dir = args[i + 1]; i += 2
+        elif args[i] == "--events-dir":
+            evdir = args[i + 1]; i += 2
         else:
             names.append(args[i]); i += 1
 
-    os.makedirs(EVDIR, exist_ok=True)
+    os.makedirs(evdir, exist_ok=True)
     from dbdiff_spark.session import get_spark
 
     spark = get_spark(
         app_name="dbdiff_profile",
         extra_conf={
             "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{EVDIR}",
+            "spark.eventLog.dir": f"file://{os.path.abspath(evdir)}",
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
         },
@@ -84,11 +110,11 @@ def main() -> None:
 
     # --- parse the event log ------------------------------------------------
     evfile = None
-    for p in Path(EVDIR).iterdir():
+    for p in Path(evdir).iterdir():
         if app_id in p.name and not p.name.endswith(".inprogress"):
             evfile = p
     if evfile is None:
-        for p in Path(EVDIR).iterdir():
+        for p in Path(evdir).iterdir():
             if app_id in p.name:
                 evfile = p
     jobs = []  # (submit_ms, end_ms, desc, n_tasks, stage_names)
@@ -133,11 +159,18 @@ def main() -> None:
                         j["t1"] = ev["Completion Time"]
             elif e == "SparkListenerStageCompleted":
                 si = ev["Stage Info"]
+                acc = {
+                    a.get("Name"): a.get("Value")
+                    for a in si.get("Accumulables", [])
+                }
                 stages[si["Stage ID"]] = {
                     "t0": si.get("Submission Time"),
                     "t1": si.get("Completion Time"),
                     "n": si.get("Number of Tasks"),
                     "name": si.get("Stage Name"),
+                    "sw_bytes": int(acc.get(_SHUFFLE_BYTES) or 0),
+                    "sw_records": int(acc.get(_SHUFFLE_RECORDS) or 0),
+                    "ops": _stage_operators(si),
                 }
 
     for name in names:
@@ -152,6 +185,7 @@ def main() -> None:
             prev_end = t0ms
             job_sum = 0.0
             gap_sum = 0.0
+            ran_stages = []
             for j in sorted(inside, key=lambda x: x["t0"]):
                 gap = (j["t0"] - prev_end) / 1000
                 dur = (j["t1"] - j["t0"]) / 1000
@@ -163,6 +197,7 @@ def main() -> None:
                     if sid in stages and stages[sid]["t0"] and
                     stages[sid]["t0"] >= t0ms - 50
                 ]
+                ran_stages += ran
                 stage_str = ", ".join(
                     f"{snm}[{n}t]" for _, snm, n in ran
                 ) or "(skipped/cached stages)"
@@ -176,6 +211,16 @@ def main() -> None:
                 f"  jobs={job_sum:.2f}s gaps={gap_sum:.2f}s "
                 f"tail(driver)={tail:.2f}s of {total:.2f}s"
             )
+            print(f"  {'stage':>7} {'tasks':>5} {'shuffle_write_B':>15} "
+                  f"{'records':>8}  operators")
+            sw_bytes = sw_records = 0
+            for sid, snm, n in sorted(ran_stages):
+                st = stages[sid]
+                sw_bytes += st["sw_bytes"]
+                sw_records += st["sw_records"]
+                print(f"  {sid:>7} {n:>5} {st['sw_bytes']:>15,} "
+                      f"{st['sw_records']:>8,}  {st['ops'] or snm}")
+            print(f"  {'total':>7} {'':>5} {sw_bytes:>15,} {sw_records:>8,}")
 
 
 if __name__ == "__main__":
