@@ -20,9 +20,6 @@ try:  # pyyaml is present in most Spark images; degrade gracefully.
 except Exception:  # pragma: no cover
     _HAVE_YAML = False
 
-SUPPORTED_DB_TYPES = ("postgresql", "mysql", "sqlserver")
-
-
 @dataclass
 class DbConfig:
     type: str = ""

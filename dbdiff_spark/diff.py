@@ -76,8 +76,6 @@ DELETED = "DELETED"
 UPDATED = "UPDATED"
 NOT_MODIFIED = "NOT_MODIFIED"
 
-META_COLS = ["diff_status", "is_before", "modified_columns"]
-
 # SQL-text fragments shared by the planners below
 _INSERTED, _DELETED, _UPDATED, _NOT_MODIFIED = (
     string_lit(s) for s in (INSERTED, DELETED, UPDATED, NOT_MODIFIED)

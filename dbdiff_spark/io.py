@@ -48,10 +48,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def spread(df: DataFrame, spark: SparkSession, *key_cols: str) -> DataFrame:
     """Hash-repartition a small input across the cluster's cores before a
     CPU-heavy per-row stage (regexp tokenization, shingling, hashing).

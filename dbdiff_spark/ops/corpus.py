@@ -257,7 +257,6 @@ FROM (
 # table (orders) map-side before any join.  Reports, per order priority,
 # how many orders the bloom passes vs. truly match — the false-positive
 # overhead is the price of skipping the full semi-join shuffle.
-BLOOM_MIN_BITS = 4096  # floor: 128 words x 32 bits
 BLOOM_K = 3
 BLOOM_BITS_PER_KEY = 16  # with k=3 hashes → fpr ≈ 0.55% below the cap
 # Ceiling: the filter broadcasts as ONE packed array row, so it must
@@ -424,7 +423,6 @@ GROUP BY o_orderpriority
 # add the bucket's global offset from the 65536-row bucket histogram —
 # the only single-partition step touches 64 Ki rows regardless of corpus
 # size, and the mapping is identical on every engine, run, and layout.
-SHUFFLE_BUCKETS = 65536  # first 4 md5 hex chars
 
 
 def corpus_shuffle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,7 +981,6 @@ ORDER BY stage
 # 256-row bucket-total table broadcasts.
 
 RESAMPLE_STEP = 10_000_000
-_RS_BUCKETS = 256
 
 
 def importance_resample(

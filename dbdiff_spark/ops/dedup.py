@@ -139,17 +139,6 @@ HAVING count(*) > 1
 _SLICE_W = 8  # hex chars per minhash slice; 4 slices per md5
 
 
-def _minhash_select_spark() -> list[str]:
-    out = []
-    for s in range(N_HASHES):
-        arr = "hs1" if s < 4 else "hs2"
-        start = _SLICE_W * (s % 4) + 1
-        out.append(
-            f"array_min(transform({arr}, h -> substr(h, {start}, {_SLICE_W}))) AS h{s}"
-        )
-    return out
-
-
 def _minhash_select_duck() -> list[str]:
     out = []
     for s in range(N_HASHES):

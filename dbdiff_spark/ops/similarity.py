@@ -207,28 +207,95 @@ def knn_bruteforce(
     return _knn_over(_vectors(spark, sf_dir), max_broadcast_queries)
 
 
-def _knn_over(vecs: DataFrame, max_broadcast_queries: int) -> DataFrame:
-    """Exact cosine top-``KNN_K`` over any ``(vec_id, embedding,
-    norm)`` frame — the brute-force body, shared by the full-dim
-    baseline and the truncated-prefix evaluation."""
-    queries = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
+def _top_k(scored: DataFrame, order, k: int) -> DataFrame:
+    """THE per-query top-``k``: ``row_number`` over ``query_id`` by
+    ``order`` (a score column, ``.desc()`` for similarities), ties
+    broken by ``neighbor_id`` — the order every oracle twin spells as
+    ``ORDER BY <score>, neighbor_id``.  Appends ``rank``; the caller
+    projects."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
-    q = _query_side(queries, max_broadcast_queries, "shuffle_replicate_nl")
+
+
+def _knn_over(
+    vecs: DataFrame,
+    max_broadcast_queries: int,
+    k: int = KNN_K,
+    query_mod: int = QUERY_MOD,
+    metric: str = "cosine",
+    est: tuple[int, int] | None = None,
+) -> DataFrame:
+    """THE exact brute-force baseline over any ``(vec_id, embedding,
+    norm)`` frame: every ``vec_id % query_mod == 0`` vector queries the
+    whole corpus through the broadcast-guarded cross join, top-``k`` by
+    ``metric`` — ``"cosine"`` (descending, column ``cosine``) or
+    ``"l2"`` (squared L2 ascending, column ``d2``).  ``est`` is the
+    caller's arithmetic ``(rows, bytes)`` bound on the query side, so
+    the guard costs no job (``_query_side``).  Returns ``(query_id,
+    neighbor_id, <score>, rank)``."""
+    if metric == "cosine":
+        qcols = [F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm")]
+        score = F.expr(
+            f"{_dot_spark('embedding', 'q_emb')} / (norm * q_norm)"
+        ).alias("cosine")
+        order = F.col("cosine").desc()
+    else:
+        vecs = vecs.select("vec_id", "embedding")
+        qcols = [F.col("embedding").alias("q_emb")]
+        score = F.expr(_dist2_spark("embedding", "q_emb")).alias("d2")
+        order = F.col("d2")
+    queries = vecs.filter(F.col("vec_id") % query_mod == 0).select(
+        F.col("vec_id").alias("query_id"), *qcols
+    )
+    q = _query_side(queries, max_broadcast_queries, "shuffle_replicate_nl", est=est)
     scored = vecs.join(q, F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(f"{_dot_spark('embedding', 'q_emb')} / (norm * q_norm)").alias("cosine"),
+        "query_id", F.col("vec_id").alias("neighbor_id"), score
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
+    return _top_k(scored, order, k)
+
+
+def _recall(
+    approx: DataFrame,
+    exact_k: DataFrame,
+    k: int,
+    label: str | None = None,
+    labels: list | tuple = (),
+) -> DataFrame:
+    """THE recall@k scorer of every ANN evaluation report: hits of
+    ``approx`` (``label``, query_id, neighbor_id) against ``exact_k``
+    (query_id, neighbor_id), both already cut to top-``k`` →
+    ``(label, n_queries, k, n_hits, recall_ppm)``, one row per value
+    of the DRIVER-SIDE ``labels`` list — a label whose search returned
+    no rows still reports ``n_hits = 0``.  Without ``label`` it is one
+    row.  Integer ppm; an empty ``exact_k`` divides by zero, which is
+    NULL with ANSI off, as in DuckDB."""
+    keys = [label] if label else []
+    hits = (
+        approx.select(*keys, "query_id", "neighbor_id")
+        .join(exact_k.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    nq = exact_k.select("query_id").distinct().groupBy().agg(
+        F.count(F.lit(1)).alias("n_queries")
+    )
+    if label:
+        typ = "string" if isinstance(labels[0], str) else "bigint"
+        rows = local_frame(
+            approx.sparkSession, [(v,) for v in labels], f"{label} {typ}"
+        ).crossJoin(nq).join(hits, label, "left")
+    else:
+        rows = nq.crossJoin(hits)
+    return rows.select(
+        *keys,
+        F.col("n_queries").cast("bigint"),
+        F.lit(k).cast("bigint").alias("k"),
+        F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
+        F.expr(
+            f"CAST((coalesce(n_hits, 0) * 1000000) div (n_queries * {k}) AS BIGINT)"
+        ).alias("recall_ppm"),
     )
 
 
@@ -280,14 +347,7 @@ def ann_lsh_bitsample(
         F.col("vec_id").alias("neighbor_id"),
         F.expr(f"{_dot_spark('embedding', 'q_emb')} / (norm * q_norm)").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, F.col("cosine").desc(), ANN_K)
 
 
 ANN_LSH_SQL = f"""
@@ -511,27 +571,9 @@ def ann_ivf(
     assigned, queries = _ivf_coarse(
         vecs, cells, nprobe, payload=True, query_mod=query_mod
     )
-    # a corpus vector lives in exactly one cell and a query's probed
-    # cells are distinct, so candidate pairs need no dedup.  The row
-    # bound scales by nprobe — the probe explosion puts nprobe rows
-    # per query in this frame, and an unscaled bound would demote
-    # honest megabyte-sized query sets to the sort-merge fallback at
-    # derived nprobe (the byte bound still caps true payload).
-    cand = assigned.join(
-        _query_side(queries, max_broadcast_queries * nprobe, "merge"),
-        (F.col("cell") == F.col("q_cell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(f"{_dot_spark('embedding', 'q_emb')} / (norm * q_norm)").alias("cosine"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= IVF_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _ivf_literal_search(
+        vecs, assigned, None, nprobe, max_broadcast_queries, query_mod,
+        queries=queries,
     )
 
 
@@ -1187,7 +1229,7 @@ def _probe_frame(
 def _ivf_literal_search(
     vecs: DataFrame,
     assigned: DataFrame,
-    centroids: dict[int, list[float]],
+    centroids: dict[int, list[float]] | None,
     nprobe: int,
     max_broadcast_queries: int,
     query_mod: int = QUERY_MOD,
@@ -1195,12 +1237,13 @@ def _ivf_literal_search(
     extra_on=None,
     n: int | None = None,
 ) -> DataFrame:
-    """The serving half of trained IVF: rank the K centroids per query
+    """The IVF search: rank the K centroids per query
     (``_probe_frame``), probe ``nprobe`` cells against the assignment
     frame, exact-rank the cell-restricted candidates.  ``assigned`` may
     be freshly computed or reloaded from a persisted index — the search
-    is agnostic.  ``queries`` overrides the probe frame (a caller that
-    enriched it, e.g. with per-query labels); ``extra_on`` ANDs an
+    is agnostic.  ``queries`` overrides the probe frame (the seed-IVF
+    ``ann_ivf`` passes ``_ivf_coarse``'s probes, and a caller may
+    enrich it, e.g. with per-query labels); ``extra_on`` ANDs an
     extra predicate into the candidate join — the PRE-FILTER hook the
     metadata-filtered entries ride (one spelling of the cand/rank
     block, r10 review).  ``n`` — the corpus ID-SPACE bound,
@@ -1222,8 +1265,12 @@ def _ivf_literal_search(
         dim = len(next(iter(centroids.values()))) if centroids else 0
         qb = (n // query_mod + 1) * nprobe
         est = (qb, qb * (dim * 8 + 56))
-    # row bound scaled by nprobe: the explode above emits nprobe rows
-    # per query (see ann_ivf's multi-probe note)
+    # a corpus vector lives in exactly one cell and a query's probed
+    # cells are distinct, so candidate pairs need no dedup.  The row
+    # bound scales by nprobe — the probe frame puts nprobe rows per
+    # query, and an unscaled bound would demote honest megabyte-sized
+    # query sets to the sort-merge fallback at derived nprobe (the
+    # byte bound still caps true payload).
     cand = assigned.join(
         _query_side(queries, max_broadcast_queries * nprobe, "merge", est=est),
         on,
@@ -1234,14 +1281,7 @@ def _ivf_literal_search(
             "cosine"
         ),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= IVF_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(cand, F.col("cosine").desc(), IVF_K)
 
 
 def ann_ivf_index_persist(
@@ -2958,19 +2998,12 @@ def ann_int8_quantized(
         F.col("vec_id").alias("neighbor_id"),
         F.expr(_qdot_spark("qvec", "q_qvec")).alias("qdot"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "qdot",
-            F.expr("CAST(qdot AS DOUBLE) / 16129").alias("approx_cosine"),
-            "rank",
-        )
+    return _top_k(scored, F.col("qdot").desc(), KNN_K).select(
+        "query_id",
+        "neighbor_id",
+        "qdot",
+        F.expr("CAST(qdot AS DOUBLE) / 16129").alias("approx_cosine"),
+        "rank",
     )
 
 
@@ -3225,13 +3258,7 @@ def ann_pq(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("qd2").cast("bigint").alias("approx_l2sq"))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("approx_l2sq"), F.col("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= PQ_K)
-    )
+    return _top_k(adc, F.col("approx_l2sq"), PQ_K)
 
 
 # The PQ fine stage as one shared CTE fragment (expects a ``vecs`` CTE
@@ -3336,12 +3363,7 @@ def _ann_ivf_pq_frame(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("qd2").cast("bigint").alias("approx_l2sq"))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("approx_l2sq"), F.col("neighbor_id")
-    )
-    return adc.withColumn("rank", F.row_number().over(wq)).filter(
-        F.col("rank") <= PQ_K
-    )
+    return _top_k(adc, F.col("approx_l2sq"), PQ_K)
 
 
 def ann_ivf_pq(
@@ -3704,12 +3726,7 @@ def _pq_adc_rank(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("qd2").cast("bigint").alias("approx_l2sq"))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("approx_l2sq"), F.col("neighbor_id")
-    )
-    return adc.withColumn("rank", F.row_number().over(wq)).filter(
-        F.col("rank") <= PQ_K
-    )
+    return _top_k(adc, F.col("approx_l2sq"), PQ_K)
 
 
 def _grid_cand(
@@ -4530,38 +4547,12 @@ def ann_ivf_nprobe_curve(
     qmod = query_mod_for(n)
     rungs = sorted({fn(np0, k) for _label, fn in NPROBE_CURVE_RUNGS})
     with pinned(vecs0) as vecs:
-        queries = vecs.filter(F.col("vec_id") % qmod == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
         # arithmetic guard bound from the scalars in hand (r12): the
         # agg spelling evaluated the query projection once per report
         q_est = (n_ids // qmod + 1, (n_ids // qmod + 1) * (dim * 8 + 48))
-        exact = (
-            vecs.join(
-                _query_side(
-                    queries, max_broadcast_queries, "shuffle_replicate_nl",
-                    est=q_est,
-                ),
-                F.col("vec_id") != F.col("query_id"),
-            )
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.expr(
-                    f"{_dot_spark('embedding', 'q_emb')} / (norm * q_norm)"
-                ).alias("cosine"),
-            )
-        )
-        we = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        exact_k_frame = (
-            exact.withColumn("rank", F.row_number().over(we))
-            .filter(F.col("rank") <= IVF_K)
-            .select("query_id", "neighbor_id")
-        )
+        exact_k_frame = _knn_over(
+            vecs, max_broadcast_queries, IVF_K, qmod, est=q_est
+        ).select("query_id", "neighbor_id")
         # the exact baseline never sees the centroids: its brute-force
         # pass overlaps the driver-paced Lloyd loop (r13, guide §2.6);
         # the vecs cache is materialized first so the concurrent jobs
@@ -4574,46 +4565,17 @@ def ann_ivf_nprobe_curve(
         assigned = _assign_cells(vecs, centroids).select(
             "vec_id", "embedding", "norm", "cell"
         )
-        approx = None
-        for rung in rungs:
-            part = _ivf_literal_search(
+        approx = functools.reduce(DataFrame.unionByName, [
+            _ivf_literal_search(
                 vecs, assigned, centroids, rung, max_broadcast_queries, qmod,
                 n=n_ids,
-            ).select(
-                F.lit(rung).cast("bigint").alias("nprobe"),
-                "query_id",
-                "neighbor_id",
-            )
-            approx = part if approx is None else approx.unionByName(part)
-        hits = approx.join(exact_k, ["query_id", "neighbor_id"]).groupBy(
-            "nprobe"
-        ).agg(F.count(F.lit(1)).alias("n_hits"))
-        nq = exact_k.select("query_id").distinct().groupBy().agg(
-            F.count(F.lit(1)).alias("n_queries")
-        )
-        # rung frame from the driver-side list, NOT a distinct over the
+            ).withColumn("nprobe", F.lit(rung).cast("bigint"))
+            for rung in rungs
+        ])
+        # rungs from the driver-side list, NOT a distinct over the
         # unioned searches — that branch would re-run all four corpus
         # searches a second time absent exchange reuse (r9 review)
-        rung_frame = local_frame(
-            spark, [(int(r),) for r in rungs], "nprobe bigint"
-        )
-        out = (
-            rung_frame
-            .crossJoin(nq)
-            .join(hits, "nprobe", "left")
-            .select(
-                "nprobe",
-                F.col("n_queries").cast("bigint"),
-                F.lit(IVF_K).cast("bigint").alias("k"),
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.expr(
-                    f"CAST((coalesce(n_hits, 0) * 1000000)"
-                    f" div (n_queries * {IVF_K}) AS BIGINT)"
-                ).alias("recall_ppm"),
-            )
-        )
+        out = _recall(approx, exact_k, IVF_K, "nprobe", rungs)
         # pinned (r12): FOUR nprobe rungs consume the assignment —
         # without the cache each rung re-derives the interpreted argmin
         # HOF (twice, via the join-key null-filter pushdown), i.e. eight
@@ -4738,32 +4700,10 @@ def ann_ivfpq_recall_report(
         # the driver-paced Lloyd loop below (r13, guide §2.6) — the
         # vecs cache is materialized first so the concurrent jobs do
         # not both recompute its cold partitions.
-        queries = vecs.filter(F.col("vec_id") % qmod == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-        )
-        exact = (
-            vecs.select("vec_id", "embedding")
-            .join(
-                _query_side(
-                    queries, max_broadcast_queries, "shuffle_replicate_nl",
-                    est=(n_ids // qmod + 1, (n_ids // qmod + 1) * (dim * 8 + 48)),
-                ),
-                F.col("vec_id") != F.col("query_id"),
-            )
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.expr(_dist2_spark("embedding", "q_emb")).alias("d2"),
-            )
-        )
-        we = Window.partitionBy("query_id").orderBy(
-            F.col("d2"), F.col("neighbor_id")
-        )
-        exact_k_frame = (
-            exact.withColumn("rank", F.row_number().over(we))
-            .filter(F.col("rank") <= PQ_K)
-            .select("query_id", "neighbor_id")
-        )
+        exact_k_frame = _knn_over(
+            vecs, max_broadcast_queries, PQ_K, qmod, metric="l2",
+            est=(n_ids // qmod + 1, (n_ids // qmod + 1) * (dim * 8 + 48)),
+        ).select("query_id", "neighbor_id")
         vecs.count()
         centroids, exact_k = run_jobs(
             lambda: _kmeans_centroids(_lloyd_train_frame(vecs, mod), k),
@@ -4811,36 +4751,9 @@ def ann_ivfpq_recall_report(
                 lambda nm=name, r=residual, t=trained: _build_arm(nm, r, t)
                 for name, residual, trained in IVFPQ_RECALL_VARIANTS
             ])
-            approx = parts[0]
-            for part in parts[1:]:
-                approx = approx.unionByName(part)
-            hits = approx.join(exact_k, ["query_id", "neighbor_id"]).groupBy(
-                "variant"
-            ).agg(F.count(F.lit(1)).alias("n_hits"))
-            nq = exact_k.select("query_id").distinct().groupBy().agg(
-                F.count(F.lit(1)).alias("n_queries")
-            )
-            variants = local_frame(
-                spark,
-                [(name,) for name, _r, _t in IVFPQ_RECALL_VARIANTS],
-                "variant string",
-            )
-            # left join from the variant list: a 0-hit arm still reports
-            out = (
-                variants.crossJoin(nq)
-                .join(hits, "variant", "left")
-                .select(
-                    "variant",
-                    F.col("n_queries").cast("bigint"),
-                    F.lit(PQ_K).cast("bigint").alias("k"),
-                    F.coalesce(F.col("n_hits"), F.lit(0))
-                    .cast("bigint")
-                    .alias("n_hits"),
-                    F.expr(
-                        f"CAST((coalesce(n_hits, 0) * 1000000)"
-                        f" div (n_queries * {PQ_K}) AS BIGINT)"
-                    ).alias("recall_ppm"),
-                )
+            out = _recall(
+                functools.reduce(DataFrame.unionByName, parts), exact_k, PQ_K,
+                "variant", [name for name, _r, _t in IVFPQ_RECALL_VARIANTS],
             )
             return cut_lineage(out, eager=True)
 
@@ -4908,26 +4821,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: both sides are the already-bounded top-k outputs (Q×k rows),
     so the evaluation join is driver-trivial regardless of corpus
     size — the expensive parts are the two searches themselves."""
-    exact = knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= ANN_K).select(
-        "query_id", "neighbor_id"
-    )
-    approx = ann_lsh_bitsample(spark, sf_dir).filter(F.col("rank") <= ANN_K).select(
-        "query_id", "neighbor_id"
-    )
-    hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy().agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    nq = exact.select("query_id").distinct().groupBy().agg(
-        F.count(F.lit(1)).alias("n_queries")
-    )
-    return nq.crossJoin(hits).select(
-        F.col("n_queries").cast("bigint"),
-        F.lit(ANN_K).cast("bigint").alias("k"),
-        F.col("n_hits").cast("bigint"),
-        F.expr(f"CAST((n_hits * 1000000) div (n_queries * {ANN_K}) AS BIGINT)").alias(
-            "recall_ppm"
-        ),
-    )
+    exact = knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= ANN_K)
+    return _recall(ann_lsh_bitsample(spark, sf_dir), exact, ANN_K)
 
 
 ANN_RECALL_SQL = f"""
@@ -4977,67 +4872,37 @@ def embedding_truncation_recall(
     NARROWER projection (the slice prunes bytes before the scoring
     join), and the evaluation join runs over Q×k rows per variant."""
     emb = load_table(spark, sf_dir, "embeddings")
-    full_d = int(emb.selectExpr("max(size(embedding)) AS d").collect()[0]["d"])
-    exact = knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= ANN_K).select(
-        "query_id", "neighbor_id"
-    )
-    approx = None
-    for frac in TRUNC_FRACS:
-        p = full_d // frac
-        if p < 2:
-            continue
-        tv = emb.selectExpr(
-            "vec_id", f"slice(embedding, 1, {p}) AS embedding"
-        ).selectExpr(
-            "vec_id",
-            "embedding",
-            f"sqrt({_dot_spark('embedding', 'embedding')}) AS norm",
-        )
-        part = (
-            _knn_over(tv, max_broadcast_queries)
-            .filter(F.col("rank") <= ANN_K)
-            .select(
-                F.lit(p).cast("bigint").alias("prefix_dims"),
-                "query_id",
-                "neighbor_id",
-            )
-        )
-        approx = part if approx is None else approx.unionByName(part)
-    if approx is None:
-        # degenerate corpus (max dim < 4): no prefix width reaches 2
-        # dims.  The DuckDB twin's WHERE d//frac >= 2 yields an empty
+    full_d = emb.selectExpr("max(size(embedding)) AS d").collect()[0]["d"] or 0
+    prefixes = [full_d // frac for frac in TRUNC_FRACS if full_d // frac >= 2]
+    if not prefixes:
+        # degenerate corpus (max dim < 4, or no rows): no prefix width
+        # reaches 2 dims.  The DuckDB twin's WHERE d//frac >= 2 yields an empty
         # frame here, so return the same — empty, same schema — rather
-        # than crashing on approx.join (r8 ADVICE finding).
+        # than crashing on the scorer (r8 ADVICE finding).
         return local_frame(
             spark,
             [],
             "prefix_dims bigint, n_queries bigint, k bigint,"
             " n_hits bigint, recall_ppm bigint",
         )
-    hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy(
-        "prefix_dims"
-    ).agg(F.count(F.lit(1)).alias("n_hits"))
-    nq = exact.select("query_id").distinct().groupBy().agg(
-        F.count(F.lit(1)).alias("n_queries")
-    )
-    # left join from the prefix set: a prefix whose top-k misses
-    # everything still reports, with n_hits = 0
-    return (
-        approx.select("prefix_dims")
-        .distinct()
-        .crossJoin(nq)
-        .join(hits, "prefix_dims", "left")
-        .select(
-            "prefix_dims",
-            F.col("n_queries").cast("bigint"),
-            F.lit(ANN_K).cast("bigint").alias("k"),
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-            F.expr(
-                f"CAST((coalesce(n_hits, 0) * 1000000)"
-                f" div (n_queries * {ANN_K}) AS BIGINT)"
-            ).alias("recall_ppm"),
-        )
-    )
+    approx = functools.reduce(DataFrame.unionByName, [
+        _knn_over(
+            emb.selectExpr(
+                "vec_id", f"slice(embedding, 1, {p}) AS embedding"
+            ).selectExpr(
+                "vec_id",
+                "embedding",
+                f"sqrt({_dot_spark('embedding', 'embedding')}) AS norm",
+            ),
+            max_broadcast_queries,
+            ANN_K,
+        ).withColumn("prefix_dims", F.lit(p).cast("bigint"))
+        for p in prefixes
+    ])
+    exact = knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= ANN_K)
+    # one row per prefix width from the driver-side list: a prefix whose
+    # search returns no rows still reports, with n_hits = 0
+    return _recall(approx, exact, ANN_K, "prefix_dims", prefixes)
 
 
 def _truncation_recall_sql() -> str:
@@ -5083,12 +4948,19 @@ hits AS (
 ),
 q AS (
   SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries FROM exact_k
+),
+-- plist from the prefix widths, mirroring the engine's driver-side
+-- list: a prefix whose search returns no rows still reports 0 hits
+plist AS (
+{chr(10).join(f"  SELECT d // {frac} AS prefix_dims FROM dd WHERE d // {frac} >= 2"
+              + ("" if i == len(TRUNC_FRACS) - 1 else chr(10) + "  UNION ALL")
+              for i, frac in enumerate(TRUNC_FRACS))}
 )
 SELECT p.prefix_dims, n_queries, CAST({ANN_K} AS BIGINT) AS k,
        CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
        CAST((coalesce(n_hits, 0) * 1000000) // (n_queries * {ANN_K}) AS BIGINT)
          AS recall_ppm
-FROM (SELECT DISTINCT prefix_dims FROM approx) p
+FROM plist p
 CROSS JOIN q
 LEFT JOIN hits ON p.prefix_dims = hits.prefix_dims
 """
@@ -5118,14 +4990,10 @@ def ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= ANN_K).select(
         "query_id", "neighbor_id"
     )
-    approx = None
-    for name, cells, nprobe in IVF_RECALL_VARIANTS:
-        part = (
-            ann_ivf(spark, sf_dir, cells=cells, nprobe=nprobe)
-            .filter(F.col("rank") <= ANN_K)
-            .select(F.lit(name).alias("variant"), "query_id", "neighbor_id")
-        )
-        approx = part if approx is None else approx.unionByName(part)
+    arms = [
+        (name, ann_ivf(spark, sf_dir, cells=cells, nprobe=nprobe))
+        for name, cells, nprobe in IVF_RECALL_VARIANTS
+    ]
     # trained centroids at the SAME (cells, nprobe) as ivf_c8_p2: the
     # recall-per-candidate value of training the coarse quantizer —
     # PINNED K here (A/B comparisons only hold at pinned configs; the
@@ -5157,40 +5025,19 @@ def ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: ann_ivf_trained(spark, sf_dir, query_mod=QUERY_MOD),
             lambda: cut_lineage(exact, eager=True),
         )
-        approx = approx.unionByName(
-            arm_c8.filter(F.col("rank") <= ANN_K).select(
-                F.lit("ivf_trained_c8_p2").alias("variant"),
-                "query_id",
-                "neighbor_id",
-            )
-        )
         # the PRODUCTION config's measured recall (VERDICT r7 #5):
         # derived K ≈ √n, sample-trained Lloyd, derived nprobe = ⌈√K⌉
         # — exactly what ann_ivf_trained ships, so the report states
         # the recall of the config users actually run, not only the
         # pinned A/Bs
-        approx = approx.unionByName(
-            arm_prod.filter(F.col("rank") <= ANN_K).select(
-                F.lit("ivf_trained_prod").alias("variant"),
-                "query_id",
-                "neighbor_id",
+        arms += [("ivf_trained_c8_p2", arm_c8), ("ivf_trained_prod", arm_prod)]
+        approx = functools.reduce(DataFrame.unionByName, [
+            arm.filter(F.col("rank") <= ANN_K).select(
+                F.lit(name).alias("variant"), "query_id", "neighbor_id"
             )
-        )
-        hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy(
-            "variant"
-        ).agg(F.count(F.lit(1)).alias("n_hits"))
-        nq = exact.select("query_id").distinct().groupBy().agg(
-            F.count(F.lit(1)).alias("n_queries")
-        )
-        out = hits.crossJoin(nq).select(
-            "variant",
-            F.col("n_queries").cast("bigint"),
-            F.lit(ANN_K).cast("bigint").alias("k"),
-            F.col("n_hits").cast("bigint"),
-            F.expr(
-                f"CAST((n_hits * 1000000) div (n_queries * {ANN_K}) AS BIGINT)"
-            ).alias("recall_ppm"),
-        )
+            for name, arm in arms
+        ])
+        out = _recall(approx, exact, ANN_K, "variant", [nm for nm, _ in arms])
         # cut the bounded result while the vecs cache is still live:
         # the two untrained ann_ivf arms in the final plan read it
         # instead of re-deriving the norm projection after the block
@@ -5199,6 +5046,9 @@ def ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_ivf_recall_sql() -> str:
+    names = [name for name, _c, _p in IVF_RECALL_VARIANTS] + [
+        "ivf_trained_c8_p2", "ivf_trained_prod",
+    ]
     approx = "\nUNION ALL\n".join(
         f"SELECT '{name}' AS variant, query_id, neighbor_id"
         f" FROM ({_ann_ivf_sql(cells, nprobe)}) WHERE rank <= {ANN_K}"
@@ -5227,10 +5077,14 @@ h AS (
 ),
 q AS (
   SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries FROM exact_k
-)
-SELECT variant, n_queries, CAST({ANN_K} AS BIGINT) AS k, n_hits,
-       CAST((n_hits * 1000000) // (n_queries * {ANN_K}) AS BIGINT) AS recall_ppm
-FROM h, q
+),
+-- vlist from the variant names: a variant with no hits still reports
+vlist AS ({' UNION ALL '.join(f"SELECT '{name}' AS variant" for name in names)})
+SELECT vlist.variant, n_queries, CAST({ANN_K} AS BIGINT) AS k,
+       CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
+       CAST((coalesce(n_hits, 0) * 1000000) // (n_queries * {ANN_K}) AS BIGINT)
+         AS recall_ppm
+FROM vlist CROSS JOIN q LEFT JOIN h ON vlist.variant = h.variant
 """
 
 

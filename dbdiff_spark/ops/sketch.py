@@ -33,7 +33,6 @@ from dbdiff_spark.ops.text import _D_TOKENS, _TOKENS
 
 CMS_DEPTH = 4
 _HEX_CHARS = 2  # bucket = first _HEX_CHARS of the md5 → width 16^_HEX_CHARS
-CMS_WIDTH = 16 ** _HEX_CHARS
 
 
 def _bucket_spark(depth: int, token_col: str) -> str:

@@ -213,7 +213,7 @@ class Snapshot:
 
         wanted = {g % self.buckets for g in changed_groups}
         files: list[str] = []
-        for uri, name in names:
+        for uri, name, _len in names:
             m = re.search(r"_(\d{5})[.]", name)
             if m is None:  # not a recognizable bucketed layout
                 return self.load(spark, table), False
@@ -234,10 +234,11 @@ class Snapshot:
     @staticmethod
     def _list_data_files(
         spark: SparkSession, path: str
-    ) -> list[tuple[str, str]] | None:
+    ) -> list[tuple[str, str, int]] | None:
         """List a snapshot table directory's data files as
-        ``(uri, basename)`` pairs via Hadoop's FileSystem API (resolves
-        any scheme the cluster is configured for).  Returns ``None``
+        ``(uri, basename, length)`` triples via Hadoop's FileSystem API
+        (resolves any scheme the cluster is configured for; the length
+        comes from the same ``listStatus``).  Returns ``None``
         when the listing cannot be obtained (no JVM gateway — e.g.
         Spark Connect — or the filesystem call fails): callers must
         treat that as "prune unavailable", never as "no files"."""
@@ -253,7 +254,7 @@ class Snapshot:
                 name = st.getPath().getName()
                 if name.startswith("_") or name.startswith("."):
                     continue  # _SUCCESS, hidden/metadata files
-                out.append((st.getPath().toString(), name))
+                out.append((st.getPath().toString(), name, st.getLen()))
             return out
         except Exception:
             return None
@@ -851,16 +852,7 @@ def snapshot_file_stats(spark: SparkSession, snap: Snapshot) -> list[dict]:
     out = []
     for name in sorted(snap.tables):
         files = Snapshot._list_data_files(spark, snap.tables[name]) or []
-        sizes = []
-        if files:
-            try:
-                jvm = spark._jvm  # type: ignore[attr-defined]
-                hconf = spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
-                for uri, _ in files:
-                    p = jvm.org.apache.hadoop.fs.Path(uri)
-                    sizes.append(p.getFileSystem(hconf).getFileStatus(p).getLen())
-            except Exception:
-                sizes = [Path(uri.replace("file:", "")).stat().st_size for uri, _ in files]
+        sizes = [length for _uri, _name, length in files]
         total = sum(sizes)
         out.append(
             {

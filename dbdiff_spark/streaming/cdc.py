@@ -725,7 +725,6 @@ SELECT user_id, n_seen, md5(props) AS last_hash FROM (
 
 SLIDE = "5 minutes"
 _SLIDE_US = 300_000_000
-_WINDOW_US = 600_000_000
 
 
 def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,9 +6,12 @@ model of the ``(d2, cell)`` total order, and IVF search with every cell
 probed is exact brute-force cosine top-IVF_K.  The lifecycle test
 drives a standing gen-partitioned root through random deletes,
 upserts, compactions and same-gen replays and checks the serve against
-brute force over the live corpus the sequence leaves."""
+brute force over the live corpus the sequence leaves.  The evaluation
+helpers get the same treatment: the one exact baseline against a numpy
+brute force, and the one recall scorer against a ``Counter`` model."""
 
 import math
+from collections import Counter
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
@@ -224,3 +227,119 @@ def test_standing_index_lifecycle_matches_python_model(spark, tmp_path, case):
     assert got == expect
     if not live:
         assert out == []
+
+
+# --- the exact baseline and the recall scorer ---------------------------------
+
+
+@st.composite
+def baseline_case(draw):
+    dim = draw(st.integers(1, 4))
+    point = st.lists(COMPONENT, min_size=dim, max_size=dim)
+    # few distinct points, many rows: duplicated vectors give exact ties
+    distinct = draw(st.lists(point, min_size=1, max_size=3))
+    vecs = draw(st.lists(st.sampled_from(distinct), min_size=1, max_size=12))
+    ids = draw(
+        st.lists(st.integers(0, 40), min_size=len(vecs), max_size=len(vecs), unique=True)
+    )
+    k = draw(st.integers(1, 6))
+    stride = draw(st.integers(1, 5))
+    metric = draw(st.sampled_from(["cosine", "l2"]))
+    return list(zip(ids, vecs)), k, stride, metric
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=baseline_case())
+def test_exact_baseline_matches_numpy_brute_force(spark, case):
+    """``_knn_over`` at any k, stride and metric is the numpy brute
+    force over the same rows, ties broken by ``neighbor_id``."""
+    import numpy as np
+
+    rows, k, stride, metric = case
+    vecs = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>"
+    ).selectExpr(
+        "vec_id",
+        "embedding",
+        f"sqrt({sim._dot_spark('embedding', 'embedding')}) AS norm",
+    )
+    out = sim._knn_over(vecs, sim.MAX_BROADCAST_QUERIES, k, stride, metric).collect()
+
+    ids = np.array([i for i, _v in rows])
+    m = np.array([v for _i, v in rows], dtype=np.float64)
+    norms = np.sqrt((m * m).sum(axis=1))
+    expect = {}
+    for qi, q in enumerate(ids):
+        if q % stride:
+            continue
+        if metric == "cosine":
+            score = (m @ m[qi]) / (norms * norms[qi])
+            key = -score
+        else:
+            score = ((m - m[qi]) ** 2).sum(axis=1)
+            key = score
+        order = sorted((key[j], ids[j], j) for j in range(len(ids)) if j != qi)
+        for rank, (_key, nid, j) in enumerate(order[:k], start=1):
+            expect[(int(q), rank)] = (int(nid), float(score[j]))
+    col = "cosine" if metric == "cosine" else "d2"
+    assert {(r.query_id, r.rank): (r.neighbor_id, r[col]) for r in out} == expect
+
+
+@st.composite
+def recall_case(draw):
+    labels = draw(st.sampled_from([[], ["a", "b", "c"], [1, 2], [4, 8, 16, 32]]))
+    pair = st.tuples(st.integers(0, 3), st.integers(0, 5))
+    exact = draw(st.lists(pair, max_size=8))
+    # approx rows carry only a prefix of the listed labels, so a label
+    # may have no rows at all
+    used = labels[: draw(st.integers(0, len(labels)))] if labels else [None]
+    approx = draw(st.lists(st.tuples(st.sampled_from(used), pair), max_size=10)) if used else []
+    k = draw(st.integers(1, 4))
+    return labels, exact, approx, k
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@example(case=(["a", "b"], [], [], 3))  # empty exact_k: recall_ppm NULL
+@example(case=([], [], [], 3))
+@given(case=recall_case())
+def test_recall_scorer_matches_counter_model(spark, case):
+    """``_recall`` is hit counting over a ``Counter`` of the exact
+    pairs: one row per listed label (a label absent from ``approx``
+    reports 0 hits), integer ppm, NULL ppm when ``exact_k`` is empty."""
+    labels, exact, approx, k = case
+    label = "lab" if labels else None
+    typ = "string" if labels and isinstance(labels[0], str) else "bigint"
+    exact_df = spark.createDataFrame(exact, "query_id bigint, neighbor_id bigint")
+    approx_df = spark.createDataFrame(
+        [(lab, q, nb) for lab, (q, nb) in approx],
+        f"lab {typ}, query_id bigint, neighbor_id bigint",
+    )
+    if label is None:
+        approx_df = approx_df.drop("lab")
+    got = sim._recall(approx_df, exact_df, k, label, labels).collect()
+
+    truth = Counter(exact)
+    n_queries = len({q for q, _n in exact})
+    hits = Counter()
+    for lab, p in approx:
+        hits[lab] += truth[p]
+
+    def row(n_hits):
+        ppm = n_hits * 1_000_000 // (n_queries * k) if n_queries else None
+        return (n_queries, k, n_hits, ppm)
+
+    if label is None:
+        assert [tuple(r) for r in got] == [row(hits[None])]
+    else:
+        assert len(got) == len(labels)
+        assert {r[0]: tuple(r[1:]) for r in got} == {
+            lab: row(hits[lab]) for lab in labels
+        }

@@ -356,6 +356,11 @@ def test_truncation_recall_degenerate_dims_returns_empty(spark, tmp_path):
     out = embedding_truncation_recall(spark, str(tmp_path))
     assert out.columns == ["prefix_dims", "n_queries", "k", "n_hits", "recall_ppm"]
     assert out.count() == 0
+    # an empty table has no max dimension at all: empty too, no crash
+    spark.createDataFrame([], "vec_id bigint, embedding array<float>, label int").write.parquet(
+        str(tmp_path / "empty" / "embeddings.parquet")
+    )
+    assert embedding_truncation_recall(spark, str(tmp_path / "empty")).count() == 0
 
 
 def test_jaccard_ppm_survives_wide_overlap(spark):

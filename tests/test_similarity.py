@@ -140,6 +140,33 @@ def test_ivf_multiprobe_improves_recall_at_equal_budget(spark, sf_dir):
     assert j.filter(F.col("c2") < F.col("c1")).count() == 0
 
 
+def test_ivf_recall_report_keeps_a_variant_with_no_hits(spark, sf_dir, monkeypatch):
+    """A variant whose search returns no rows still reports, with
+    ``n_hits = 0`` and ``recall_ppm = 0``: the report's rows come from
+    the variant list, not from the hits (the DuckDB twin's ``vlist``)."""
+    from dbdiff_spark.ops import similarity as sim
+
+    real = sim.ann_ivf
+
+    def no_rows_at_16_cells(spark, sf_dir, **kw):
+        out = real(spark, sf_dir, **kw)
+        return out.limit(0) if kw.get("cells") == 16 else out
+
+    monkeypatch.setattr(sim, "ann_ivf", no_rows_at_16_cells)
+    rows = {r.variant: r for r in sim.ann_ivf_recall_report(spark, sf_dir).collect()}
+    assert set(rows) == {
+        "ivf_c8_p1",
+        "ivf_c8_p2",
+        "ivf_c16_p2",
+        "ivf_trained_c8_p2",
+        "ivf_trained_prod",
+    }
+    empty = rows["ivf_c16_p2"]
+    assert (empty.k, empty.n_hits, empty.recall_ppm) == (sim.ANN_K, 0, 0)
+    assert empty.n_queries == rows["ivf_c8_p1"].n_queries > 0
+    assert rows["ivf_c8_p1"].n_hits > 0
+
+
 def test_trained_ivf_beats_seed_ivf_on_clustered_embeddings(spark, tmp_path):
     """VERDICT r5 #6: the near-uniform driver fixture cannot show a
     trained-quantizer recall win (documented in ann_ivf_trained); on a
