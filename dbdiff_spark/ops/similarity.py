@@ -27,6 +27,7 @@ Dot products fold left-to-right with double accumulators in BOTH engines
 from __future__ import annotations
 
 import functools
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1288,39 +1289,25 @@ def ann_ivf_index_persist(
     spark: SparkSession,
     sf_dir: str,
     max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
-    nprobe: int | None = None,
     index_root: str | None = None,
 ) -> DataFrame:
-    """Build-once / serve-many IVF: train the coarse quantizer — on the
-    bounded ``_derived_sample_mod`` subsample, the production build
-    posture (r7's weak item was full-corpus Lloyd here: n^1.5 distance
-    evals at derived K ≈ √n; the sampled build is ~SAMPLE_PER_CENTROID
-    ·√n training rows and the one full-corpus pass left is the
-    assignment, which genuinely needs all n rows) — PERSIST the index:
-    centroids parquet plus the assignment frame ``partitionBy(cell)``
-    (the layout a serving fleet partition-prunes probes on) — then
-    RELOAD both artifacts and answer the query set entirely from them.
+    """Build-once / serve-many IVF, rebuilt on every call: train the
+    coarse quantizer — on the bounded ``_derived_sample_mod``
+    subsample, the production build posture (full-corpus Lloyd is
+    n^1.5 distance evals at derived K ≈ √n; the sampled build is
+    ~SAMPLE_PER_CENTROID·√n training rows and the one full-corpus pass
+    left is the assignment, which genuinely needs all n rows) —
+    PERSIST the index: centroids parquet plus the assignment frame
+    ``partitionBy(cell)`` (the layout a serving fleet partition-prunes
+    probes on) — then RELOAD both artifacts and answer the query set
+    entirely from them.  A per-call row of ``_STANDING_INDEX``, so the
+    rebuild runs through the params guard like every standing build.
     Oracle equality against the retrain-and-search SQL proves the
     persisted index reproduces the in-memory build exactly (doubles
     round-trip parquet bit-for-bit), mirroring
     ``bpe_apply_from_artifact``'s artifact contract for the ANN tier."""
-    from .. import fs as _hfs
-
-    # default root: session-warehouse-scheme-qualified, uid+pid-salted,
-    # stable per corpus within the process (see fs.artifact_root)
-    root = index_root or _hfs.artifact_root(spark, "ivf_index", sf_dir)
-    n, n_ids = _corpus_counts(spark, sf_dir)
-    k = semdedup_cells(n)
-    mod = _derived_sample_mod(n, k)
-    if nprobe is None:
-        nprobe = ivf_nprobe_for(k)
-    with pinned(_vectors(spark, sf_dir)) as vecs:
-        _build_ivf_coarse_artifacts(spark, sf_dir, root, vecs, k, mod)
-    # --- serving path: everything below touches ONLY the artifacts
-    # (plus the raw query vectors) — no retraining, no reassignment
-    out = _serve_ivf_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries,
-        query_mod_for(n), n=n_ids,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_index_persist", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
@@ -1408,30 +1395,31 @@ def _write_index(
 
 def _build_ivf_coarse_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
-) -> dict[int, list[float]]:
+    mod: int, n: int,
+) -> None:
     """Train the sample-trained quantizer and write THE coarse index
     layout — ``<root>/centroids`` (one file) + ``<root>/assignments``
     (``partitionBy(cell)``) — the artifact contract shared by
     ``ann_ivf_index_persist``, ``ann_ivf_serve``'s standing root and
-    the delete tier built on it.  ``sf_dir`` is unused here: every
-    standing build takes the same ``(spark, sf_dir, root, vecs, k,
-    mod)`` arguments (``_STANDING_INDEX``).  Returns the trained
-    centroids."""
+    the delete tier built on it.  ``sf_dir`` and ``n`` are unused
+    here: every standing build takes the same ``(spark, sf_dir, root,
+    vecs, k, mod, n)`` arguments (``_STANDING_INDEX``)."""
     centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
     _write_index(
         spark, root, centroids,
         _assign_cells(vecs, centroids).select("vec_id", "embedding", "norm", "cell"),
     )
-    return centroids
 
 
 def _load_index_centroids(
     spark: SparkSession, root: str
 ) -> dict[int, list[float]]:
+    # the schema ``_centroid_frame`` writes: naming it skips the
+    # footer-inference job every reload would otherwise pay
+    path = f"{root}/centroids"
+    rows = spark.read.schema("cell bigint, centroid array<double>").parquet(path)
     return {
-        int(r["cell"]): [float(x) for x in r["centroid"]]
-        for r in spark.read.parquet(f"{root}/centroids").collect()
+        int(r["cell"]): [float(x) for x in r["centroid"]] for r in rows.collect()
     }
 
 
@@ -1452,11 +1440,14 @@ def _serve_ivf_from_artifacts(
     root: str,
     nprobe: int,
     max_broadcast_queries: int,
-    query_mod: int = QUERY_MOD,
-    n: int | None = None,
+    query_mod: int,
+    n: int,
+    centroids: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """Exact-cosine IVF serving off a persisted coarse index: reload
-    centroids + cell-partitioned assignments, probe, rank.  Lazy — the
+    centroids (unless the caller already holds the reloaded ones) +
+    cell-partitioned assignments, probe, rank.  ``n`` is the served
+    corpus's ID-SPACE bound (see ``_ivf_literal_search``).  Lazy — the
     caller pins/checkpoints.  Tombstones under the root (the
     DELETE/UPSERT tier) are anti-applied here, so every IVF serve path
     — plain, ingest-merged, filtered — honours retractions; roots
@@ -1469,7 +1460,8 @@ def _serve_ivf_from_artifacts(
         spark, root, spark.read.parquet(f"{root}/assignments")
     )
     payload = ["label"] if "label" in assigned.columns else []
-    centroids = _load_index_centroids(spark, root)
+    if centroids is None:
+        centroids = _load_index_centroids(spark, root)
     vecs = _vectors(spark, sf_dir)
     queries = _probe_frame(vecs, centroids, nprobe, query_mod)
     if payload:
@@ -1541,14 +1533,34 @@ def _corpus_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     return hashlib.md5("\n".join(sorted(parts)).encode()).hexdigest()
 
 
+def _drop_tombstone_log(spark: SparkSession, root: str) -> None:
+    """Clear ``<root>/tombstones`` before a rebuild: every serve path
+    anti-applies the log, so a stale one would silently hide rebuilt
+    rows whose vec_ids were once retracted (r11 review, second pass).
+    The drop is logged when a log actually existed, so an intentional
+    retraction (a GDPR delete) silently discarded by a rebuild is at
+    least auditable (r11 ADVICE #2); delete-entry builds re-create
+    their log after."""
+    from .. import fs as _hfs
+
+    if _hfs.delete(spark, f"{root}/tombstones"):
+        _log.warning(
+            "rebuild of %s dropped its existing tombstone log: "
+            "retractions issued against the previous build no longer "
+            "apply — re-issue deletes against the new build if they "
+            "were intentional", root,
+        )
+
+
 def _ensure_index_params(
-    spark: SparkSession, sf_dir: str, root: str, family: str, build
+    spark: SparkSession, sf_dir: str, root: str, family: str, build,
+    rebuild: bool = False,
 ) -> tuple[int, int, int, int, int]:
-    """Build-once guard for the standing-index entries — its only
+    """Build-once guard for every ``_STANDING_INDEX`` row — its only
     engine caller is ``_standing_frame``, the one lifecycle function
-    over the ``_STANDING_INDEX`` table: ``<root>/params``
-    (1-row parquet: n, dim, cells, nprobe, qmod, family, fingerprint)
-    is written LAST, so its ``_SUCCESS`` marker doubles as the
+    over that table: ``<root>/params``
+    (1-row parquet: n, dim, cells, nprobe, qmod, family, fingerprint,
+    n_ids) is written LAST, so its ``_SUCCESS`` marker doubles as the
     build-complete flag — a crashed half-build never serves.  A warm
     root is trusted only when BOTH recorded facts still hold
     (r10 review findings):
@@ -1565,22 +1577,23 @@ def _ensure_index_params(
     When trusted, the build is skipped entirely and serving re-reads
     the derived config from the artifact instead of re-counting the
     corpus (at 100 TB the serve path must not pay a corpus scan to
-    rediscover K/nprobe every query batch).  ``build(vecs, k, mod)``
-    runs only on a cold/invalidated root.  Returns ``(nprobe, qmod,
-    n, dim, n_ids)`` — ``n_ids`` = max(vec_id)+1 at build time, the
-    id-space bound the serve paths' broadcast guards use (r12 ADVICE
-    #1: the row count under-bounds stride matches on sparse ids)."""
+    rediscover K/nprobe every query batch).  ``rebuild`` (the per-call
+    rows) treats every root as stale.  ``build(vecs, k, mod, n)`` runs
+    only on a cold/invalidated root, after the stale tombstone log is
+    dropped.  Returns ``(nprobe, qmod, n, dim, n_ids)`` — ``n_ids`` =
+    max(vec_id)+1 at build time, the id-space bound the serve paths'
+    broadcast guards use (r12 ADVICE #1: the row count under-bounds
+    stride matches on sparse ids)."""
     from .. import fs as _hfs
 
     ppath = f"{root}/params"
     fp = _corpus_fingerprint(spark, sf_dir)
-    fresh = False
-    if _hfs.exists(spark, f"{ppath}/_SUCCESS"):
-        row = spark.read.parquet(ppath).collect()[0]
+    rec = None
+    if not rebuild and _hfs.exists(spark, f"{ppath}/_SUCCESS"):
         # asDict + .get: a durable root written by an OLDER params
         # schema (pre-family/fingerprint) must read as stale and
         # rebuild, not crash the guard on a missing field (r10 review)
-        rec = row.asDict()
+        rec = spark.read.parquet(ppath).collect()[0].asDict()
         covers = rec.get("family") == family or (
             rec.get("family") == "ivfpq" and family == "ivf"
         )
@@ -1598,72 +1611,102 @@ def _ensure_index_params(
         elif missing:
             _log.warning("rebuilding %s: params lack %s", root, ", ".join(missing))
         else:
-            fresh = True
-    if not fresh:
-        # a cold/invalidated rebuild must not inherit the PREVIOUS
-        # corpus's retraction log: every serve path anti-applies
-        # <root>/tombstones, so a stale log would silently hide
-        # new-corpus rows whose vec_ids were once retracted (r11
-        # review, second pass).  Cleared here — before ANY family's
-        # build — so the invariant holds without each build restating
-        # it; delete-entry builds re-create their log after.  The drop
-        # is logged when a log actually existed, so an intentional
-        # retraction (a GDPR delete) silently discarded by a corpus
-        # replacement is at least auditable (r11 ADVICE #2).
-        if _hfs.delete(spark, f"{root}/tombstones"):
-            _log.warning(
-                "rebuild of %s dropped its existing tombstone log: the "
-                "corpus fingerprint changed (or the root was stale), so "
-                "retractions issued against the previous build no longer "
-                "apply — re-issue deletes against the new build if they "
-                "were intentional", root,
+            return (
+                int(rec["nprobe"]), int(rec["qmod"]), int(rec["n"]),
+                int(rec["dim"]), int(rec["n_ids"]),
             )
-        vecs0 = _vectors(spark, sf_dir)
-        n, dim, n_ids = _corpus_shape(vecs0)
+    # cleared here — before ANY family's build — so a rebuild never
+    # inherits the previous build's retractions
+    _drop_tombstone_log(spark, root)
+    with pinned(_vectors(spark, sf_dir)) as vecs:
+        # the shape job fills the pin the build reads, so the corpus
+        # is scanned and spread once
+        n, dim, n_ids = _corpus_shape(vecs)
         k = semdedup_cells(n)
-        mod = _derived_sample_mod(n, k)
-        with pinned(vecs0) as vecs:
-            build(vecs, k, mod)
-        one_file(
-            local_frame(
-                spark,
-                [(n, dim, k, ivf_nprobe_for(k), query_mod_for(n), family,
-                  fp, n_ids)],
-                "n bigint, dim bigint, cells bigint, nprobe bigint,"
-                " qmod bigint, family string, fingerprint string,"
-                " n_ids bigint",
-            )
-        ).write.mode("overwrite").parquet(ppath)
-        row = spark.read.parquet(ppath).collect()[0]
-    return (
-        int(row["nprobe"]), int(row["qmod"]), int(row["n"]), int(row["dim"]),
-        int(row["n_ids"]),
-    )
+        build(vecs, k, _derived_sample_mod(n, k), n)
+    nprobe, qmod = ivf_nprobe_for(k), query_mod_for(n)
+    one_file(
+        local_frame(
+            spark,
+            [(n, dim, k, nprobe, qmod, family, fp, n_ids)],
+            "n bigint, dim bigint, cells bigint, nprobe bigint,"
+            " qmod bigint, family string, fingerprint string,"
+            " n_ids bigint",
+        )
+    ).write.mode("overwrite").parquet(ppath)
+    return nprobe, qmod, n, dim, n_ids
 
 
-# The standing-index entries, one row each: entry → (artifact root
-# name, params family, build, tier).  ``build`` is the NAME of a
-# module-level build function taking ``(spark, sf_dir, root, vecs, k, mod)``,
-# resolved at call time, so patching the module attribute (the
-# warm-serve tests) reaches every path.  ``tier`` picks the serve
+# The index entries, one row each: entry → (artifact root name, params
+# family, build, tier, per_call).  ``build`` is the NAME of a
+# module-level build function taking ``(spark, sf_dir, root, vecs, k,
+# mod, n)``, resolved at call time, so patching the module attribute
+# (the warm-serve tests) reaches every path.  ``tier`` picks the serve
 # function: ``ivf`` exact cosine, ``ivfpq`` residual-PQ ADC.
+# ``per_call`` rows rebuild on every call (the bench prices the build);
+# the others build once per root and serve warm after.
 _STANDING_INDEX = {
-    "ann_ivf_serve": ("ivf_serve", "ivf", "_build_ivf_coarse_artifacts", "ivf"),
-    "ann_ivf_filtered_serve": ("ivf_lab", "ivf_lab", "_build_ivf_lab_coarse", "ivf"),
-    "ann_ivf_delete_serve": ("ivf_del", "ivf_del", "_build_ivf_del_artifacts", "ivf"),
-    "ann_ivf_upsert_serve": ("ivf_ups", "ivf_ups", "_build_ivf_ups_artifacts", "ivf"),
-    "ann_ivf_compact_serve": ("ivf_cmp", "ivf_cmp", "_build_ivf_cmp_artifacts", "ivf"),
-    "ann_ivfpq_serve": ("ivfpq_serve", "ivfpq", "_build_ivfpq_artifacts", "ivfpq"),
+    "ann_ivf_serve": ("ivf_serve", "ivf", "_build_ivf_coarse_artifacts", "ivf", False),
+    "ann_ivf_filtered_serve": (
+        "ivf_lab", "ivf_lab", "_build_ivf_lab_coarse", "ivf", False
+    ),
+    "ann_ivf_delete_serve": (
+        "ivf_del", "ivf_del", "_build_ivf_del_artifacts", "ivf", False
+    ),
+    "ann_ivf_upsert_serve": (
+        "ivf_ups", "ivf_ups", "_build_ivf_ups_artifacts", "ivf", False
+    ),
+    "ann_ivf_compact_serve": (
+        "ivf_cmp", "ivf_cmp", "_build_ivf_cmp_artifacts", "ivf", False
+    ),
+    "ann_ivfpq_serve": (
+        "ivfpq_serve", "ivfpq", "_build_ivfpq_artifacts", "ivfpq", False
+    ),
     "ann_ivfpq_filtered_serve": (
-        "ivfpq_lab", "ivfpq_lab", "_build_ivfpq_lab_artifacts", "ivfpq"
+        "ivfpq_lab", "ivfpq_lab", "_build_ivfpq_lab_artifacts", "ivfpq", False
     ),
     "ann_ivfpq_delete_serve": (
-        "ivfpq_del", "ivfpq_del", "_build_ivfpq_del_artifacts", "ivfpq"
+        "ivfpq_del", "ivfpq_del", "_build_ivfpq_del_artifacts", "ivfpq", False
     ),
     "ann_ivfpq_upsert_serve": (
-        "ivfpq_ups", "ivfpq_ups", "_build_ivfpq_ups_artifacts", "ivfpq"
+        "ivfpq_ups", "ivfpq_ups", "_build_ivfpq_ups_artifacts", "ivfpq", False
+    ),
+    "ann_ivf_index_persist": (
+        "ivf_index", "ivf", "_build_ivf_coarse_artifacts", "ivf", True
+    ),
+    "ann_ivf_pq_residual": (
+        "ivfpq_index", "ivfpq", "_build_ivfpq_artifacts", "ivfpq", True
+    ),
+    "ann_ivfpq_trained_codebook": (
+        "ivfpq_tcb", "ivfpq_tcb", "_build_ivfpq_tcb_artifacts", "ivfpq", True
     ),
 }
+
+
+def _serve_index(
+    spark: SparkSession,
+    sf_dir: str,
+    root: str,
+    tier: str,
+    nprobe: int,
+    max_broadcast_queries: int,
+    query_mod: int,
+    n: int,
+    fan: int,
+    centroids: dict[int, list[float]] | None = None,
+) -> DataFrame:
+    """Serve a built root lazily through its tier's serve function —
+    ``ivf`` exact cosine, ``ivfpq`` residual-PQ ADC at the M×K ``fan``.
+    Shared by ``_standing_frame`` and ``_vector_ingest``."""
+    if tier == "ivf":
+        return _serve_ivf_from_artifacts(
+            spark, sf_dir, root, nprobe, max_broadcast_queries, query_mod, n,
+            centroids,
+        )
+    return _serve_ivfpq_from_artifacts(
+        spark, sf_dir, root, nprobe, max_broadcast_queries, query_mod, n, fan,
+        centroids,
+    )
 
 
 def _standing_frame(
@@ -1673,35 +1716,32 @@ def _standing_frame(
     max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
     index_root: str | None = None,
 ) -> DataFrame:
-    """THE standing-index lifecycle, for every ``_STANDING_INDEX`` row:
-    resolve the root (default: session-warehouse-scheme-qualified,
-    uid+pid-salted, stable per corpus within the process — see
-    ``fs.artifact_root``), build it only when ``_ensure_index_params``
-    finds it cold or stale, then serve lazily off the artifacts.  The
-    public entries cut the result; the plan audit's explain frames are
-    this function itself.  The PQ tier's ADC fan is M×K straight from
-    the params scalars — no artifact count job; an UPPER bound on the
-    codebook rows (exact on dense vec_ids, a sparse-id corpus seeds
-    fewer), the safe direction for a broadcast-guard threshold."""
+    """THE index lifecycle, for every ``_STANDING_INDEX`` row: resolve
+    the root (default: session-warehouse-scheme-qualified, uid+pid-
+    salted, stable per corpus within the process — see
+    ``fs.artifact_root``), build it when ``_ensure_index_params`` finds
+    it cold or stale (always, on a per-call row), then serve lazily
+    off the artifacts.  The public entries cut the result; the plan
+    audit's explain frames of the build-once rows are this function
+    itself.  The PQ tier's ADC fan is M×K straight from the params
+    scalars — no artifact count job; an UPPER bound on the codebook
+    rows (exact on dense vec_ids, a sparse-id corpus seeds fewer), the
+    safe direction for a broadcast-guard threshold."""
     from .. import fs as _hfs
 
-    root_name, family, build, tier = _STANDING_INDEX[entry]
+    root_name, family, build, tier, per_call = _STANDING_INDEX[entry]
     root = index_root or _hfs.artifact_root(spark, root_name, sf_dir)
     nprobe, qmod, n, dim, n_ids = _ensure_index_params(
         spark,
         sf_dir,
         root,
         family,
-        lambda vecs, k, mod: globals()[build](spark, sf_dir, root, vecs, k, mod),
+        lambda vecs, k, mod, n: globals()[build](spark, sf_dir, root, vecs, k, mod, n),
+        rebuild=per_call,
     )
-    if tier == "ivf":
-        return _serve_ivf_from_artifacts(
-            spark, sf_dir, root, nprobe, max_broadcast_queries, qmod, n=n_ids
-        )
-    return _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, qmod,
+    return _serve_index(
+        spark, sf_dir, root, tier, nprobe, max_broadcast_queries, qmod, n_ids,
         fan=pq_m_for(dim) * pq_seeds_for(n),
-        n=n_ids,
     )
 
 
@@ -1747,57 +1787,118 @@ IVF_BASE_SLICE = "vec_id % 2 = 0"
 IVF_BATCH_SLICE = "vec_id % 2 = 1"
 
 
-def _train_ingest_base(
-    spark: SparkSession, vecs: DataFrame, root: str,
-    n_base: int | None = None,
-) -> tuple[dict[int, list[float]], int, int, DataFrame]:
-    """The TRAINING half of the shared ingest base build: clear the
-    stale tombstone log, derive n/K/stride from the BASE slice,
-    dense-renumber it (``vec_id div 2`` so the seed rule and sample
-    stride see 0..n-1) and run the sampled Lloyd.  Returns
-    ``(centroids, k, n_base, base)`` — split from the artifact writes
-    (r13) so the IVF-PQ ingest can overlap its FOUR independent writes
-    (centroids, assignments, codebook, codes) in one run_jobs instead
-    of two sequential pairs separated by an assignments read-back."""
-    from .. import fs as _hfs
-
-    # ingest entries rebuild per call without the params guard, so the
-    # stale-log invariant is enforced here: a rebuilt base must not
-    # inherit retractions issued against the previous build (r11
-    # review, second pass); an actually-dropped log is logged so the
-    # discard is auditable (r11 ADVICE #2)
-    if _hfs.delete(spark, f"{root}/tombstones"):
-        _log.warning(
-            "ingest base rebuild of %s dropped its existing tombstone "
-            "log — retractions issued against the previous build no "
-            "longer apply", root,
-        )
-    base = vecs.filter(IVF_BASE_SLICE)
-    if n_base is None:
-        n_base = base.count()
-    k = semdedup_cells(n_base)
-    mod = _derived_sample_mod(n_base, k)
-    base_renum = base.selectExpr("vec_id div 2 AS vec_id", "embedding")
-    centroids = _kmeans_centroids(_lloyd_train_frame(base_renum, mod), k)
-    return centroids, k, n_base, base
-
-
 def _build_ingest_base(
-    spark: SparkSession, vecs: DataFrame, root: str,
-    n_base: int | None = None,
-) -> tuple[dict[int, list[float]], int, int, int]:
-    """The shared base-slice build behind every ingest op (batch IVF,
-    batch IVF-PQ, streaming — r9 review: previously spelled three
-    times): train via ``_train_ingest_base`` and write the coarse
-    index layout.  Returns ``(centroids, k, nprobe, n_base)`` —
-    ``n_base`` so fine-stage callers derive their PQ seed budget from
-    the slice the codebook trains on."""
-    centroids, k, n_base, base = _train_ingest_base(spark, vecs, root, n_base)
-    _write_index(
-        spark, root, centroids,
-        _assign_cells(base, centroids).select("vec_id", "embedding", "norm", "cell"),
+    spark: SparkSession, vecs: DataFrame, root: str, n_base: int, tier: str
+) -> int:
+    """The BASE-slice build of a growing index root: drop the stale
+    tombstone log, derive K and the sample stride from the base slice's
+    ``n_base`` rows, train on its dense renumbering (``vec_id div 2``,
+    so the seed rule and sample stride see 0..n_base-1) and write the
+    coarse layout.  The ``ivfpq`` tier writes the full composite
+    through ``_write_pq_index`` instead, its codebook seeded from the
+    base slice's first ``pq_seeds_for(n_base)`` dense ids.  Returns
+    K."""
+    _drop_tombstone_log(spark, root)
+    base = vecs.filter(IVF_BASE_SLICE)
+    k = semdedup_cells(n_base)
+    base_renum = base.selectExpr("vec_id div 2 AS vec_id", "embedding")
+    centroids = _kmeans_centroids(
+        _lloyd_train_frame(base_renum, _derived_sample_mod(n_base, k)), k
     )
-    return centroids, k, ivf_nprobe_for(k), n_base
+    assigned = _assign_cells(base, centroids).select(
+        "vec_id", "embedding", "norm", "cell"
+    )
+    if tier == "ivf":
+        _write_index(spark, root, centroids, assigned)
+    else:
+        _write_pq_index(
+            spark, root, centroids, assigned, pq_seeds_for(n_base),
+            seed_index="vec_id div 2",
+        )
+    return k
+
+
+def _ingest_encode_batch(
+    batch: DataFrame,
+    root: str,
+    centroids: dict[int, list[float]],
+    codebook: DataFrame | None,
+) -> None:
+    """Assign one arriving batch with the RELOADED frozen quantizer
+    and append it into the live layout — and, when the root holds a
+    ``codebook``, residual-encode it at that frozen codebook into
+    ``pq_codes`` — O(batch·(K + M·K)), zero shuffle, base files
+    untouched.  The batch ops' single call and the streaming ops'
+    per-micro-batch calls all run THIS function, so stream ≡ batch is
+    structural: assignment and encoding are per-row pure functions of
+    the frozen artifacts, and append order cannot change the served
+    relation."""
+    assigned = _assign_cells(batch, centroids).select(
+        "vec_id", "embedding", "norm", "cell"
+    )
+    jobs = [
+        lambda: _write_cell_partitioned(assigned, f"{root}/assignments", "append")
+    ]
+    if codebook is not None:
+        # the two appends land in DIFFERENT directories — independent
+        # jobs (io.run_jobs, §2.6)
+        jobs.append(
+            lambda: _pq_codes_for(
+                _pq_subs(
+                    assigned.select("vec_id", "embedding", "cell"),
+                    _centroid_frame(batch.sparkSession, centroids),
+                    residual=True,
+                ),
+                codebook,
+            ).write.mode("append").parquet(f"{root}/pq_codes")
+        )
+    run_jobs(*jobs)
+
+
+def _vector_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    root: str,
+    tier: str,
+    arrive: Callable[[DataFrame, Callable[[DataFrame], None]], None],
+    max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
+) -> DataFrame:
+    """THE vector-ingest body behind ``ann_ivf_ingest``,
+    ``ann_ivfpq_ingest`` and the streaming ``stream_ivf_ingest`` /
+    ``stream_ivfpq_ingest`` (streaming/cdc.py): pin the corpus, take
+    every derived scalar from ONE shape job, build the BASE slice
+    (``_build_ingest_base``), reload the frozen artifacts once, hand
+    the batch slice and its encoder (``_ingest_encode_batch``) to
+    ``arrive`` — a direct call for the batch ops, a staged-file
+    foreachBatch stream for the streaming ops — and serve the merged
+    root through ``_serve_index``.  The query stride and the broadcast
+    bound derive from the SERVED corpus (base + batch), the PQ fan from
+    the slice the codebook seeds on.  The result is cut eagerly."""
+    with pinned(_vectors(spark, sf_dir)) as vecs:
+        shape = vecs.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.expr(IVF_BASE_SLICE)).alias("n_base"),
+            F.max(F.size("embedding")).alias("dim"),
+            F.max("vec_id").alias("max_id"),
+        ).first()
+        n_base = int(shape["n_base"])
+        k = _build_ingest_base(spark, vecs, root, n_base, tier)
+        centroids = _load_index_centroids(spark, root)
+        codebook = (
+            spark.read.parquet(f"{root}/pq_codebook") if tier == "ivfpq" else None
+        )
+        arrive(
+            vecs.filter(IVF_BATCH_SLICE).select("vec_id", "embedding", "norm"),
+            lambda batch: _ingest_encode_batch(batch, root, centroids, codebook),
+        )
+        out = _serve_index(
+            spark, sf_dir, root, tier, ivf_nprobe_for(k), max_broadcast_queries,
+            query_mod_for(int(shape["n"])),
+            int(shape["max_id"]) + 1 if shape["max_id"] is not None else 0,
+            fan=pq_m_for(int(shape["dim"] or 0)) * pq_seeds_for(n_base),
+            centroids=centroids,
+        )
+        return cut_lineage(out, eager=True)
 
 
 def ann_ivf_ingest(
@@ -1810,53 +1911,17 @@ def ann_ivf_ingest(
     trained quantizer at derived K/nprobe, persisted cell-partitioned),
     then INGEST the batch slice (odd vec_ids) by assigning it with the
     RELOADED centroids and appending into the same layout, and serve
-    the full query set from the merged artifacts.  Same output
-    contract as ``ann_ivf_trained``."""
+    the full query set from the merged artifacts (``_vector_ingest``).
+    The serve honours the root's tombstone log like every other serve
+    path (r11 review: a delete on an ingest root must not be served
+    back).  Same output contract as ``ann_ivf_trained``."""
     from .. import fs as _hfs
 
     root = index_root or _hfs.artifact_root(spark, "ivf_ingest", sf_dir)
-    with pinned(_vectors(spark, sf_dir)) as vecs:
-        # ONE count job for both derived scalars (r12 — the old shape
-        # paid one job for n_base and another for the serve stride's n)
-        shape = vecs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.expr(IVF_BASE_SLICE)).alias("n_base"),
-            F.max("vec_id").alias("max_id"),
-        ).first()
-        n, n_base = int(shape["n"]), int(shape["n_base"])
-        n_ids = int(shape["max_id"]) + 1 if shape["max_id"] is not None else 0
-        _centroids, _k, nprobe, _n_base = _build_ingest_base(
-            spark, vecs, root, n_base
-        )
-        # --- ingest: batch-only assignment with the RELOADED quantizer,
-        # appended into the live layout (base files untouched)
-        loaded_centroids = _load_index_centroids(spark, root)
-        _write_cell_partitioned(
-            _assign_cells(vecs.filter(IVF_BATCH_SLICE), loaded_centroids).select(
-                "vec_id", "embedding", "norm", "cell"
-            ),
-            f"{root}/assignments",
-            "append",
-        )
-        # --- serve from the merged artifacts only; the query stride
-        # derives from the SERVED corpus (base + batch), not the slice
-        # the quantizer trained on.  The tombstone filter keeps the
-        # ingest-merged path consistent with every other serve path
-        # (r11 review: a delete on an ingest root must not be served
-        # back) — a log-less root passes through untouched.
-        merged = _tombstone_visibility(
-            spark, root, spark.read.parquet(f"{root}/assignments")
-        ).select(
-            "vec_id",
-            "embedding",
-            "norm",
-            F.col("cell").cast("bigint").alias("cell"),
-        )
-        out = _ivf_literal_search(
-            vecs, merged, loaded_centroids, nprobe, max_broadcast_queries,
-            query_mod_for(n), n=n_ids,
-        )
-        return cut_lineage(out, eager=True)
+    return _vector_ingest(
+        spark, sf_dir, root, "ivf", lambda batch, encode: encode(batch),
+        max_broadcast_queries,
+    )
 
 
 def _ann_ivf_ingest_sql() -> str:
@@ -2051,7 +2116,7 @@ def _labeled_cells(
 
 def _build_ivf_lab_coarse(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The labeled coarse build: the quantizer trains on ``vecs`` and
     the layout carries the label payload (``_labeled_cells``)."""
@@ -2574,13 +2639,13 @@ def ann_ivf_delete_serve(
 
 def _build_ivf_del_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The delete-entry build — coarse artifacts, then the slice's
     tombstones.  The central guard (``_ensure_index_params``) cleared
     any stale log before this ran, so the slice's tombstones are the
     whole log."""
-    _build_ivf_coarse_artifacts(spark, sf_dir, root, vecs, k, mod)
+    _build_ivf_coarse_artifacts(spark, sf_dir, root, vecs, k, mod, n)
     ivf_delete(
         spark, root, vecs.filter(IVF_DELETE_SLICE).select("vec_id"), 1
     )
@@ -2609,7 +2674,7 @@ def ann_ivf_upsert_serve(
 
 def _build_ivf_ups_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The exact-tier upsert-entry build — gen-0 coarse base, then the
     slice upsert at gen 1.  The central guard cleared any stale
@@ -2641,7 +2706,7 @@ def ann_ivf_compact_serve(
 
 def _build_ivf_cmp_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The compact-entry build — the layout written as TWO halves, the
     second APPENDED (>1 file/cell: the state compaction exists to
@@ -2690,12 +2755,12 @@ def ann_ivfpq_delete_serve(
 
 def _build_ivfpq_del_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The PQ delete-entry build — full composite, then the slice's
     tombstones (the ``_build_ivf_del_artifacts`` pattern on the fine
     tier; the central guard cleared any stale log before this ran)."""
-    _build_ivfpq_artifacts(spark, sf_dir, root, vecs, k, mod)
+    _build_ivfpq_artifacts(spark, sf_dir, root, vecs, k, mod, n)
     ivf_delete(
         spark, root, vecs.filter(IVF_DELETE_SLICE).select("vec_id"), 1
     )
@@ -2728,7 +2793,7 @@ def ann_ivfpq_upsert_serve(
 
 def _build_ivfpq_ups_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The PQ upsert-entry build: the gen-partitioned composite
     (``_gen0_cells`` — the ``ann_ivf_upsert_serve`` layout — with
@@ -2740,7 +2805,9 @@ def _build_ivfpq_ups_artifacts(
     serves — the law the tests pin.  The central guard cleared any
     stale tombstone log pre-build."""
     centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
-    _write_pq_index(spark, root, centroids, _gen0_cells(vecs, centroids))
+    _write_pq_index(
+        spark, root, centroids, _gen0_cells(vecs, centroids), pq_seeds_for(n)
+    )
     ivfpq_upsert(spark, root, _upsert_slice_frame(spark, sf_dir), 1)
 
 
@@ -2929,10 +2996,11 @@ EXPLAIN_FRAMES = {
     "ann_ivf_pq": lambda spark, sf_dir: _ann_ivf_pq_explain_frame(
         spark, sf_dir
     ),
-    # the standing entries' true serve plans over a pre-ensured root
+    # the build-once entries' true serve plans over a pre-ensured root
     **{
         name: functools.partial(_standing_frame, entry=name)
-        for name in _STANDING_INDEX
+        for name, row in _STANDING_INDEX.items()
+        if not row[4]
     },
 }
 
@@ -3547,12 +3615,11 @@ def _pq_code_argmin() -> str:
     )
 
 
-def _train_pq_codebook(subs: DataFrame, seeds: int) -> DataFrame:
+def _train_pq_codebook(subs: DataFrame, cb: DataFrame) -> DataFrame:
     """Per-subspace Lloyd over grid sub-vectors → a trained
     ``(seed_id, m, seed_sub)`` codebook frame (driver-local: M×K rows
-    of subdim ints).  Seeds are the same first-``seeds`` sub-vectors
-    the seeded codebook uses (round 0 = seeded, so the A/B isolates the
-    training); ``seeds`` is the derived ``pq_seeds_for`` budget.  Each
+    of subdim ints).  Round 0 is the seeded codebook ``cb`` itself, so
+    the A/B isolates the training.  Each
     round is one zero-shuffle broadcast-HOF argmin
     (``_pq_code_argmin`` — r12; the former broadcast-join +
     min(struct) groupBy re-shuffled corpus×M rows every round) plus
@@ -3561,9 +3628,6 @@ def _train_pq_codebook(subs: DataFrame, seeds: int) -> DataFrame:
     spelling of the mean was A/B'd in r12 and rejected for the same
     plan-size-driven driver cost as ``_cell_mean_frame``'s.)"""
     spark = subs.sparkSession
-    cb = subs.filter(F.col("vec_id") < seeds).select(
-        F.col("vec_id").alias("seed_id"), "m", F.col("sub").alias("seed_sub")
-    )
     for _ in range(PQ_CB_ITERS):
         assigned = subs.crossJoin(
             F.broadcast(_cb_array_row(cb))
@@ -3602,31 +3666,28 @@ def _pq_grid_codes(
     assigned: DataFrame,
     cframe: DataFrame,
     residual: bool,
+    seeds: int,
     train_codebook: bool = False,
-    seeds: int | None = None,
+    seed_index: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Corpus fine-encoding over the fixed grid → ``(codes, codebook)``:
     ``codes`` is (vec_id, m, code); ``codebook`` is (seed_id, m,
     seed_sub) — the residual (or raw) sub-vectors of the first
-    ``seeds`` vectors (the derived ``pq_seeds_for`` budget; derived
-    from ``assigned`` itself when not given), Lloyd-trained per
-    subspace when ``train_codebook``.  ``assigned`` carries (vec_id,
-    embedding, cell); the residual path joins the BROADCAST centroid
-    frame (K rows) to subtract each vector's own cell centroid — the
-    corpus never shuffles.  Code argmin is the zero-shuffle
-    broadcast-HOF winner (``_pq_code_argmin``)."""
-    if seeds is None:
-        # one tiny agg job — callers that already hold (n, dim) pass
-        # them through instead (r12: the rebuild entries re-derived the
-        # corpus shape up to three times per call)
-        seeds = pq_seeds_for(_corpus_shape(assigned)[0])
+    ``seeds`` vectors (the derived ``pq_seeds_for`` budget) by the
+    dense ``seed_index`` (the ingest base slice numbers its even ids
+    ``vec_id div 2``), Lloyd-trained per subspace when
+    ``train_codebook``.  ``assigned`` carries (vec_id, embedding,
+    cell); the residual path joins the BROADCAST centroid frame (K
+    rows) to subtract each vector's own cell centroid — the corpus
+    never shuffles.  Code argmin is the zero-shuffle broadcast-HOF
+    winner (``_pq_code_argmin``)."""
     subs = _pq_subs(assigned, cframe, residual)
+    idx = F.expr(seed_index)
+    codebook = subs.filter(idx < seeds).select(
+        idx.alias("seed_id"), "m", F.col("sub").alias("seed_sub")
+    )
     if train_codebook:
-        codebook = _train_pq_codebook(subs, seeds)
-    else:
-        codebook = subs.filter(F.col("vec_id") < seeds).select(
-            F.col("vec_id").alias("seed_id"), "m", F.col("sub").alias("seed_sub")
-        )
+        codebook = _train_pq_codebook(subs, codebook)
     return _pq_codes_for(subs, codebook), codebook
 
 
@@ -3767,9 +3828,9 @@ def ann_ivf_pq_residual(
     sf_dir: str,
     max_broadcast_queries: int = MAX_BROADCAST_QUERIES,
     index_root: str | None = None,
-    train_codebook: bool = False,
 ) -> DataFrame:
-    """Residual-encoded IVF-PQ served from the persisted index layout:
+    """Residual-encoded IVF-PQ served from the persisted index layout,
+    rebuilt on every call (a per-call row of ``_STANDING_INDEX``):
     train the production quantizer (sample-trained Lloyd, derived K),
     write the coarse artifacts (``_build_ivf_coarse_artifacts`` — the
     SAME ``centroids``/``assignments`` layout ``ann_ivf_index_persist``
@@ -3787,26 +3848,8 @@ def ann_ivf_pq_residual(
     matches ``ann_pq`` (top-PQ_K by BIGINT approx_l2sq); here the ADC
     approximates ||q − x||²·RESQ_SCALE² because the probed cell's
     centroid cancels in the residual difference."""
-    from .. import fs as _hfs
-
-    root = index_root or _hfs.artifact_root(
-        spark, "ivfpq_tcb" if train_codebook else "ivfpq_index", sf_dir
-    )
-    n, n_ids = _corpus_counts(spark, sf_dir)
-    k = semdedup_cells(n)
-    mod = _derived_sample_mod(n, k)
-    nprobe = ivf_nprobe_for(k)
-    with pinned(_vectors(spark, sf_dir)) as vecs:
-        dim = _build_ivfpq_artifacts(
-            spark, sf_dir, root, vecs, k, mod, train_codebook, n=n
-        )
-    # --- serving path: artifacts only (plus the raw query vectors);
-    # fan = M×K upper bound from scalars in hand — no codebook count
-    # job (r12)
-    out = _serve_ivfpq_from_artifacts(
-        spark, sf_dir, root, nprobe, max_broadcast_queries, query_mod_for(n),
-        fan=pq_m_for(dim or 0) * pq_seeds_for(n),
-        n=n_ids,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivf_pq_residual", max_broadcast_queries, index_root
     )
     return cut_lineage(out, eager=True)
 
@@ -3816,11 +3859,13 @@ def _write_pq_index(
     root: str,
     centroids: dict[int, list[float]],
     assigned: DataFrame,
+    seeds: int,
     train_codebook: bool = False,
-    seeds: int | None = None,
+    seed_index: str = "vec_id",
 ) -> None:
-    """Derive the fine stage — pq_codebook (Lloyd-trained when
-    ``train_codebook``) and the residual pq_codes — from ONE pinned
+    """Derive the fine stage — pq_codebook (``seeds`` per subspace by
+    ``seed_index``, Lloyd-trained when ``train_codebook``; see
+    ``_pq_grid_codes``) and the residual pq_codes — from ONE pinned
     assignment frame and write all four composite artifacts through
     ``_write_index`` (r13; the old shape wrote the coarse pair, then
     READ the assignments file back for the fine pair — a write→read
@@ -3837,41 +3882,44 @@ def _write_pq_index(
         codes, codebook = _pq_grid_codes(
             assigned.select("vec_id", "embedding", "cell"),
             _centroid_frame(spark, centroids),
-            residual=True, train_codebook=train_codebook, seeds=seeds,
+            residual=True, seeds=seeds, train_codebook=train_codebook,
+            seed_index=seed_index,
         )
         _write_index(spark, root, centroids, assigned, codebook, codes)
 
 
 def _build_ivfpq_artifacts(
-    spark: SparkSession,
-    sf_dir: str,
-    root: str,
-    vecs: DataFrame,
-    k: int,
-    mod: int,
-    train_codebook: bool = False,
-    n: int | None = None,
-) -> int | None:
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int, n: int, train_codebook: bool = False,
+) -> None:
     """The build of the residual IVF-PQ composite, shared by the
     per-call-rebuild entry (``ann_ivf_pq_residual``, the oracle-parity
     shape) and the standing roots (``ann_ivfpq_serve`` and the delete
-    tier): train the coarse quantizer, then ``_write_pq_index``.
-    ``n`` (corpus row count) lets a caller that already counted skip
-    the fine stage's shape re-derivation.  Returns the corpus
-    dimension."""
+    tier): train the coarse quantizer, then ``_write_pq_index`` at the
+    ``pq_seeds_for(n)`` codebook budget."""
     centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
     _write_pq_index(
         spark, root, centroids,
         _assign_cells(vecs, centroids).select("vec_id", "embedding", "norm", "cell"),
-        train_codebook, pq_seeds_for(n) if n else None,
+        pq_seeds_for(n), train_codebook,
     )
-    # the trained centroids give the corpus dimension without a job
-    return len(next(iter(centroids.values()))) if centroids else None
+
+
+def _build_ivfpq_tcb_artifacts(
+    spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
+    mod: int, n: int,
+) -> None:
+    """The trained-codebook composite (``ann_ivfpq_trained_codebook``):
+    ``_build_ivfpq_artifacts`` with the per-subspace Lloyd-trained
+    codebook.  Its own build and params family (``ivfpq_tcb``), so a
+    root holding a trained codebook never satisfies an
+    ``ann_ivfpq_serve`` request."""
+    _build_ivfpq_artifacts(spark, sf_dir, root, vecs, k, mod, n, train_codebook=True)
 
 
 def _build_ivfpq_lab_artifacts(
     spark: SparkSession, sf_dir: str, root: str, vecs: DataFrame, k: int,
-    mod: int,
+    mod: int, n: int,
 ) -> None:
     """The labeled-composite build: the coarse layout carries the
     ``label`` payload column beside the vectors (``_labeled_cells`` —
@@ -3879,7 +3927,10 @@ def _build_ivfpq_lab_artifacts(
     corpus-scale label relation), and the fine stage encodes residuals
     off that same pinned layout (``_write_pq_index``)."""
     centroids = _kmeans_centroids(_lloyd_train_frame(vecs, mod), k)
-    _write_pq_index(spark, root, centroids, _labeled_cells(spark, sf_dir, centroids))
+    _write_pq_index(
+        spark, root, centroids, _labeled_cells(spark, sf_dir, centroids),
+        pq_seeds_for(n),
+    )
 
 
 def ann_ivfpq_filtered_serve(
@@ -3930,29 +3981,30 @@ def _serve_ivfpq_from_artifacts(
     root: str,
     nprobe: int,
     max_broadcast_queries: int,
-    query_mod: int = QUERY_MOD,
-    fan: int | None = None,
-    n: int | None = None,
+    query_mod: int,
+    n: int,
+    fan: int,
+    centroids: dict[int, list[float]] | None = None,
 ) -> DataFrame:
     """Residual-PQ ADC serving off a persisted index root (centroids +
     cell-partitioned assignments + pq_codebook + pq_codes) — the
     build-once/serve-many half of the composite, the sibling of
     ``_serve_ivf_from_artifacts``.  The returned frame is lazy — the
     caller pins — but sizing the ADC broadcast guard needs the M×K fan
-    as a scalar: pass ``fan`` when the caller already knows it (the
-    serve entry derives it from its params artifact), else one tiny
-    count over the codebook artifact runs here.  Filtering is read off
-    the layout, like ``gen``: a ``label`` payload column in
-    ``assignments`` switches on the pre-filter — the label rides the
-    candidate join (BEFORE the codes join, so the predicate also cuts
-    the ADC volume), query labels are a Q-row lookup.
+    as a scalar, which every caller derives from the scalars it holds
+    (no codebook count job).  Filtering is read off the layout, like
+    ``gen``: a ``label`` payload column in ``assignments`` switches on
+    the pre-filter — the label rides the candidate join (BEFORE the
+    codes join, so the predicate also cuts the ADC volume), query
+    labels are a Q-row lookup.
     ``n`` (the served corpus's ID-SPACE bound, max(vec_id)+1 — equals
     the row count on dense ids, and keeps Q ≤ n//qmod + 1 a true upper
     bound on sparse ones, r12 ADVICE #1) lets BOTH broadcast guards
     bound their query relation arithmetically instead of each
     evaluating its subplan once just to count it (r12, _query_side)."""
-    loaded_centroids = _load_index_centroids(spark, root)
-    cframe = _centroid_frame(spark, loaded_centroids)
+    if centroids is None:
+        centroids = _load_index_centroids(spark, root)
+    cframe = _centroid_frame(spark, centroids)
     codes = spark.read.parquet(f"{root}/pq_codes")
     codebook = spark.read.parquet(f"{root}/pq_codebook")
     # tombstone retractions filter the candidate source, so a deleted
@@ -3972,14 +4024,13 @@ def _serve_ivfpq_from_artifacts(
         *slim_cols, F.col("cell").cast("bigint").alias("cell")
     )
     probes = _probe_frame(
-        _vectors(spark, sf_dir), loaded_centroids, nprobe, query_mod
+        _vectors(spark, sf_dir), centroids, nprobe, query_mod
     ).select("query_id", "q_emb", "q_cell")
     # arithmetic broadcast-guard bounds (rows, bytes): the cand guard
     # sees (query_id, q_cell[, q_label]) scalar rows, the ADC guard
     # the 5-scalar distance table — 8 B/scalar + slack, the
     # _est_row_bytes_expr schema rates
-    qb = (n // query_mod + 1) * nprobe if n is not None else None
-    cand_est = (qb, qb * (24 if labeled else 16)) if qb is not None else None
+    qb = (n // query_mod + 1) * nprobe
     cand = _grid_cand(
         assigned_slim,
         probes.join(_query_labels(spark, sf_dir, query_mod), "query_id")
@@ -3989,17 +4040,12 @@ def _serve_ivfpq_from_artifacts(
         extra_on=F.col("label") == F.col("q_label") if labeled else None,
         probe_extra_cols=("q_label",) if labeled else (),
         keep_cols=("gen",) if gen_aware else (),
-        est=cand_est,
+        est=(qb, qb * (24 if labeled else 16)),
     )
     dtable = _pq_grid_dtable(probes, cframe, codebook, residual=True)
-    if fan is None:
-        # the derived M×K is exactly the artifact codebook's row count
-        # — one tiny parquet read, never a corpus scan
-        fan = codebook.count()
-    dtable_est = (qb * fan, qb * fan * 40) if qb is not None else None
     return _pq_adc_rank(
         cand, codes, dtable, max_broadcast_queries, nprobe, fan,
-        est=dtable_est,
+        est=(qb * fan, qb * fan * 40),
     )
 
 
@@ -4015,101 +4061,11 @@ def ann_ivfpq_trained_codebook(
     persisted index root.  Same output contract as
     ``ann_ivf_pq_residual``; the recall report's third arm measures
     what codebook training buys at the identical M×K budget."""
-    return ann_ivf_pq_residual(
-        spark,
-        sf_dir,
-        max_broadcast_queries=max_broadcast_queries,
-        index_root=index_root,
-        train_codebook=True,
+    out = _standing_frame(
+        spark, sf_dir, "ann_ivfpq_trained_codebook", max_broadcast_queries,
+        index_root,
     )
-
-
-def _build_ivfpq_ingest_base(
-    spark: SparkSession, vecs: DataFrame, root: str,
-    n_base: int | None = None,
-) -> int:
-    """The BASE-slice build of the growing IVF-PQ root, shared by the
-    batch (``ann_ivfpq_ingest``) and streaming
-    (``stream_ivfpq_ingest``) fine-stage ingest ops: train via
-    ``_train_ingest_base``, then derive ALL FOUR artifacts — coarse
-    (centroids, cell-partitioned assignments) and fine (codebook from
-    the base slice's first derived-budget DENSE ids, the ingest
-    dense-renumber convention with the budget from the slice the
-    codebook trains on, ``pq_seeds_for(n_base)``; codes for the base)
-    — from ONE pinned assignment frame and write them as four
-    overlapped independent jobs.  Returns the derived nprobe."""
-    centroids, k, n_base, base = _train_ingest_base(spark, vecs, root, n_base)
-    cframe = _centroid_frame(spark, centroids)
-    seeds = pq_seeds_for(n_base)
-    # ONE pinned assignment feeds all four artifacts (r13): the old
-    # shape wrote centroids ∥ assignments, then READ the assignments
-    # file back to derive codebook ∥ codes — two sequential run_jobs
-    # pairs with a write→read barrier between them.  The fine stage is
-    # a per-row pure function of (assignment row, centroids), and
-    # doubles round-trip parquet bit-exactly, so deriving it from the
-    # persisted frame instead of the file read-back is value-identical
-    # (the oracle re-checks it) while all FOUR writes overlap in one
-    # run_jobs (guide §2.6) and the corpus assignment computes once.
-    with pinned(
-        _assign_cells(base, centroids).select("vec_id", "embedding", "norm", "cell")
-    ) as assigned_base:
-        # materialize the cache BEFORE the concurrent writes: Spark's
-        # cache does not serialize concurrent computation of the same
-        # cold partition, so four jobs launched together would each
-        # re-run the interpreted argmin assignment (measured +30% on
-        # the whole entry); one count pays the pass exactly once
-        assigned_base.count()
-        subs_base = _pq_subs(
-            assigned_base.select("vec_id", "embedding", "cell"),
-            cframe,
-            residual=True,
-        )
-        codebook = subs_base.filter(
-            F.expr(f"vec_id div 2 < {seeds}")
-        ).select(
-            F.expr("vec_id div 2").alias("seed_id"),
-            "m",
-            F.col("sub").alias("seed_sub"),
-        )
-        _write_index(
-            spark, root, centroids, assigned_base, codebook,
-            _pq_codes_for(subs_base, codebook),
-        )
-    return ivf_nprobe_for(k)
-
-
-def _ingest_encode_batch(
-    batch: DataFrame,
-    root: str,
-    loaded_centroids: dict[int, list[float]],
-    loaded_cframe: DataFrame,
-    loaded_codebook: DataFrame,
-) -> None:
-    """Assign AND residual-encode one arriving batch with the RELOADED
-    frozen quantizer + codebook, appending into the live layout —
-    O(batch·(K + M·K)), zero shuffle, base files untouched.  Both the
-    batch op's single call and the streaming op's per-micro-batch call
-    run THIS function, so stream ≡ batch is structural: assignment and
-    encoding are per-row pure functions of the frozen artifacts, and
-    append order cannot change the served relation."""
-    assigned_batch = _assign_cells(batch, loaded_centroids).select(
-        "vec_id", "embedding", "norm", "cell"
-    )
-    # both appends derive from the same frozen artifacts and land in
-    # DIFFERENT directories — independent jobs (io.run_jobs, §2.6)
-    run_jobs(
-        lambda: _write_cell_partitioned(
-            assigned_batch, f"{root}/assignments", "append"
-        ),
-        lambda: _pq_codes_for(
-            _pq_subs(
-                assigned_batch.select("vec_id", "embedding", "cell"),
-                loaded_cframe,
-                residual=True,
-            ),
-            loaded_codebook,
-        ).write.mode("append").parquet(f"{root}/pq_codes"),
-    )
+    return cut_lineage(out, eager=True)
 
 
 def ann_ivfpq_ingest(
@@ -4126,47 +4082,18 @@ def ann_ivfpq_ingest(
     (``_ingest_encode_batch`` — the same function the streaming op
     runs per micro-batch) — O(batch·(K + M·K)), zero shuffle, base
     files untouched — and serve the full query set by ADC from the
-    merged artifacts.  Completes ``ann_ivf_ingest``'s story for the
-    production composite: one growing index root serves exact-IVF and
-    IVF-PQ.  The oracle proves merged-after-ingest ≡ encoding the
-    UNION corpus at the same frozen quantizer and codebook."""
+    merged artifacts (``_vector_ingest``).  Completes
+    ``ann_ivf_ingest``'s story for the production composite: one
+    growing index root serves exact-IVF and IVF-PQ.  The oracle proves
+    merged-after-ingest ≡ encoding the UNION corpus at the same frozen
+    quantizer and codebook."""
     from .. import fs as _hfs
 
     root = index_root or _hfs.artifact_root(spark, "ivfpq_ing", sf_dir)
-    with pinned(_vectors(spark, sf_dir)) as vecs:
-        # ONE count job for both derived scalars (r12, see
-        # ann_ivf_ingest) plus the dimension for the ADC fan guard
-        shape = vecs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.expr(IVF_BASE_SLICE)).alias("n_base"),
-            F.max(F.size("embedding")).alias("dim"),
-            F.max("vec_id").alias("max_id"),
-        ).first()
-        n, n_base = int(shape["n"]), int(shape["n_base"])
-        dim = int(shape["dim"] or 0)
-        n_ids = int(shape["max_id"]) + 1 if shape["max_id"] is not None else 0
-        nprobe = _build_ivfpq_ingest_base(spark, vecs, root, n_base)
-        # --- ingest: the shared frozen-artifact encode, one batch
-        loaded_centroids = _load_index_centroids(spark, root)
-        loaded_cframe = _centroid_frame(spark, loaded_centroids)
-        loaded_codebook = spark.read.parquet(f"{root}/pq_codebook")
-        _ingest_encode_batch(
-            vecs.filter(IVF_BATCH_SLICE).select("vec_id", "embedding", "norm"),
-            root,
-            loaded_centroids,
-            loaded_cframe,
-            loaded_codebook,
-        )
-        # --- serve by ADC from the merged artifacts only; query stride
-        # derives from the SERVED corpus.  fan = M×K upper bound from
-        # the scalars already in hand — no codebook count job (r12).
-        out = _serve_ivfpq_from_artifacts(
-            spark, sf_dir, root, nprobe, max_broadcast_queries,
-            query_mod_for(n),
-            fan=pq_m_for(dim) * pq_seeds_for(n_base),
-            n=n_ids,
-        )
-        return cut_lineage(out, eager=True)
+    return _vector_ingest(
+        spark, sf_dir, root, "ivfpq", lambda batch, encode: encode(batch),
+        max_broadcast_queries,
+    )
 
 
 def _ann_ivfpq_ingest_sql() -> str:

@@ -210,7 +210,7 @@ def test_standing_index_lifecycle_matches_python_model(spark, tmp_path, case):
     params = spark.read.parquet(f"{root}/params").first()
     out = sim._serve_ivf_from_artifacts(
         spark, sf, root, int(params["cells"]), sim.MAX_BROADCAST_QUERIES,
-        query_mod=1,
+        query_mod=1, n=len(corpus),
     ).collect()
 
     norm = {i: math.sqrt(_dot(v, v)) for i, v in live.items()}

@@ -65,13 +65,25 @@ def test_graph_entries_release_their_caches(spark, sf_dir):
         assert _persistent_rdds(spark) <= before + 1, name
 
 
+def _cache_loaded(df) -> bool:
+    """Whether the session's cache manager holds ``df``'s own plan with
+    its column buffers materialized."""
+    cached = df.sparkSession._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    return cached.isDefined() and (
+        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
 def test_pinned_shares_one_cache_across_holders(spark, sf_dir):
     """Two threads pin two semantically equal ``_vectors`` frames: the
     first release must not evict the cache the other still reads, and
-    the last release must free it."""
+    the last release must free it.  Both facts are read off the
+    frame's own cache entry, not the session-wide persisted-RDD count,
+    which other tests' weakly held RDDs can change between reads."""
     from dbdiff_spark.ops.similarity import _vectors
 
-    start = _persistent_rdds(spark)
     a, b = _vectors(spark, sf_dir), _vectors(spark, sf_dir)
     assert a is not b and a.sameSemantics(b)
     both_pinned = threading.Barrier(2, timeout=120)
@@ -89,7 +101,7 @@ def test_pinned_shares_one_cache_across_holders(spark, sf_dir):
             both_pinned.wait()
             first_released.wait(120)
             seen["level"] = b.storageLevel
-            seen["rdds"] = _persistent_rdds(spark)
+            seen["loaded"] = _cache_loaded(b)
 
     threads = [threading.Thread(target=t) for t in (first, second)]
     for t in threads:
@@ -98,9 +110,10 @@ def test_pinned_shares_one_cache_across_holders(spark, sf_dir):
         t.join(180)
     assert not any(t.is_alive() for t in threads)
     assert seen["level"] != StorageLevel.NONE
-    assert seen["rdds"] > start
-    assert _persistent_rdds(spark) == start
+    assert seen["loaded"]  # the first holder's count filled the shared cache
     assert a.storageLevel == StorageLevel.NONE
+    assert b.storageLevel == StorageLevel.NONE
+    assert not _cache_loaded(a)
 
 
 def test_pinned_counts_survive_racing_holders(spark):

@@ -541,6 +541,7 @@ def test_ivfpq_residual_one_root_serves_exact_ivf_and_pq(spark, sf_dir, tmp_path
 
     from dbdiff_spark.io import load_table
     from dbdiff_spark.ops.similarity import (
+        QUERY_MOD,
         _serve_ivf_from_artifacts,
         ann_ivf_pq_residual,
         ann_ivf_trained,
@@ -588,7 +589,7 @@ def test_ivfpq_residual_one_root_serves_exact_ivf_and_pq(spark, sf_dir, tmp_path
     served = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine)
         for r in _serve_ivf_from_artifacts(
-            spark, sf_dir, root, ivf_nprobe_for(k), 65_536
+            spark, sf_dir, root, ivf_nprobe_for(k), 65_536, QUERY_MOD, n
         ).collect()
     }
     trained = {
@@ -645,6 +646,7 @@ def test_trained_pq_codebook_lowers_coding_error(spark, sf_dir):
         _pq_grid_codes,
         _qdist2_spark,
         _vectors,
+        pq_seeds_for,
         semdedup_cells,
     )
     from dbdiff_spark.io import load_table
@@ -663,7 +665,8 @@ def test_trained_pq_codebook_lowers_coding_error(spark, sf_dir):
 
         def total_err(trained: bool) -> int:
             _codes, codebook = _pq_grid_codes(
-                assigned, cframe, residual=True, train_codebook=trained
+                assigned, cframe, residual=True, seeds=pq_seeds_for(n),
+                train_codebook=trained,
             )
             subs = _grid_explode_m(
                 assigned.join(F.broadcast(cframe), "cell").selectExpr(
@@ -988,11 +991,13 @@ def test_ivf_serve_scan_partition_prunes_probed_cells(spark, sf_dir, tmp_path):
     n = load_table(spark, sf_dir, "embeddings").count()
     k = semdedup_cells(n)
     _build_ivf_coarse_artifacts(
-        spark, sf_dir, root, _vectors(spark, sf_dir), k, _derived_sample_mod(n, k)
+        spark, sf_dir, root, _vectors(spark, sf_dir), k, _derived_sample_mod(n, k),
+        n,
     )
     out = _serve_ivf_from_artifacts(
         spark, sf_dir, root, ivf_nprobe_for(k), MAX_BROADCAST_QUERIES,
         query_mod=n,  # a single-query batch — the pruning-visible shape
+        n=n,
     )
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -1321,7 +1326,7 @@ def test_compact_collapses_cell_files_and_preserves_served_rows(
             tuple,
             sim._serve_ivf_from_artifacts(
                 spark, sf_dir, root, sim.ivf_nprobe_for(k),
-                sim.MAX_BROADCAST_QUERIES, sim.query_mod_for(n),
+                sim.MAX_BROADCAST_QUERIES, sim.query_mod_for(n), n,
             ).collect(),
         )
     )
@@ -1404,11 +1409,13 @@ def test_compact_census_honours_tombstone_broadcast_bound(
     )
 
 
-@pytest.mark.parametrize("entry", sorted(sim._STANDING_INDEX))
+@pytest.mark.parametrize(
+    "entry", sorted(e for e, row in sim._STANDING_INDEX.items() if not row[4])
+)
 def test_standing_entry_warm_serve_never_rebuilds(spark, sf_dir, monkeypatch, entry):
-    """Every standing-index entry builds once per root: on a warm
-    default root, with EVERY table row's build patched to raise, the
-    entry serves the identical rows."""
+    """Every build-once entry builds once per root: on a warm default
+    root, with EVERY table row's build patched to raise, the entry
+    serves the identical rows."""
     serve = getattr(sim, entry)
     cold = sorted(map(tuple, serve(spark, sf_dir).collect()))
     assert cold
@@ -1416,10 +1423,65 @@ def test_standing_entry_warm_serve_never_rebuilds(spark, sf_dir, monkeypatch, en
     def _no_rebuild(*_a, **_k):
         raise AssertionError(f"warm {entry} call re-ran an index build")
 
-    for _root, _family, build, _tier in sim._STANDING_INDEX.values():
+    for _root, _family, build, _tier, _per_call in sim._STANDING_INDEX.values():
         monkeypatch.setattr(sim, build, _no_rebuild)
     warm = sorted(map(tuple, serve(spark, sf_dir).collect()))
     assert warm == cold
+
+
+@pytest.mark.parametrize(
+    "entry", sorted(e for e, row in sim._STANDING_INDEX.items() if row[4])
+)
+def test_per_call_entry_rebuilds_on_a_warm_root(
+    spark, sf_dir, tmp_path, monkeypatch, entry
+):
+    """The converse: a per-call row rebuilds on every call, even on a
+    root its own last call left complete, and serves the same rows."""
+    serve = getattr(sim, entry)
+    root = str(tmp_path / entry)
+    cold = sorted(map(tuple, serve(spark, sf_dir, index_root=root).collect()))
+    assert cold
+    build = sim._STANDING_INDEX[entry][2]
+    real, calls = getattr(sim, build), []
+
+    def _counting(*a, **k):
+        calls.append(a[2])
+        return real(*a, **k)
+
+    monkeypatch.setattr(sim, build, _counting)
+    warm = sorted(map(tuple, serve(spark, sf_dir, index_root=root).collect()))
+    assert calls == [root]
+    assert warm == cold
+
+
+@pytest.mark.parametrize(
+    "delete_entry, entry",
+    [
+        ("ann_ivf_delete_serve", "ann_ivf_index_persist"),
+        ("ann_ivfpq_delete_serve", "ann_ivf_pq_residual"),
+    ],
+)
+def test_per_call_rebuild_drops_a_stale_tombstone_log(
+    spark, sf_dir, tmp_path, delete_entry, entry
+):
+    """A per-call rebuild on a root that holds a tombstone log (left by
+    a delete entry's build) must not inherit those retractions: it
+    serves exactly what a fresh root serves, retracted slice included."""
+    root = str(tmp_path / "shared")
+    assert getattr(sim, delete_entry)(spark, sf_dir, index_root=root).collect()
+    reused = sorted(
+        map(tuple, getattr(sim, entry)(spark, sf_dir, index_root=root).collect())
+    )
+    fresh = sorted(
+        map(
+            tuple,
+            getattr(sim, entry)(
+                spark, sf_dir, index_root=str(tmp_path / "fresh")
+            ).collect(),
+        )
+    )
+    assert any(r[1] % 5 == 3 for r in fresh)  # the slice is served
+    assert reused == fresh
 
 
 def test_upsert_replay_same_gen_is_idempotent(spark, sf_dir, tmp_path):
@@ -1503,7 +1565,7 @@ def test_delete_on_ingest_root_is_honoured_by_merged_serve(
     )
     out = sim._serve_ivf_from_artifacts(
         spark, sf_dir, root, sim.ivf_nprobe_for(k_base),
-        sim.MAX_BROADCAST_QUERIES, sim.query_mod_for(n),
+        sim.MAX_BROADCAST_QUERIES, sim.query_mod_for(n), n,
     ).collect()
     assert out and all(r.neighbor_id % 5 != 3 for r in out)
 
@@ -1563,7 +1625,7 @@ def test_delete_serve_keeps_dpp_through_tombstone_join(spark, sf_dir, tmp_path):
     k = sim.semdedup_cells(n)
     vecs = sim._vectors(spark, sf_dir)
     sim._build_ivf_coarse_artifacts(
-        spark, sf_dir, root, vecs, k, sim._derived_sample_mod(n, k)
+        spark, sf_dir, root, vecs, k, sim._derived_sample_mod(n, k), n
     )
     sim.ivf_delete(
         spark, root, vecs.filter(sim.IVF_DELETE_SLICE).select("vec_id"), 1
@@ -1571,6 +1633,7 @@ def test_delete_serve_keeps_dpp_through_tombstone_join(spark, sf_dir, tmp_path):
     out = sim._serve_ivf_from_artifacts(
         spark, sf_dir, root, sim.ivf_nprobe_for(k), sim.MAX_BROADCAST_QUERIES,
         query_mod=n,  # single-query batch — the pruning-visible shape
+        n=n,
     )
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()

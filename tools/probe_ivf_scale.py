@@ -147,7 +147,8 @@ def pq_cost(spark, args) -> int:
         t0 = time.time()
         sim._serve_ivfpq_from_artifacts(
             spark, out_dir, root, nprobe, sim.MAX_BROADCAST_QUERIES,
-            sim.query_mod_for(n),
+            sim.query_mod_for(n), n,
+            sim.pq_m_for(args.dim) * sim.pq_seeds_for(n),
         ).write.format("noop").mode("overwrite").save()
         serve_s = time.time() - t0
         code_b = tree_bytes(f"{root}/pq_codes")
