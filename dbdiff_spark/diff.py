@@ -25,18 +25,27 @@ Scale notes (100 TB posture):
   key, each side's non-key columns as a struct plus its row count), and
   one classifier (:func:`_classify`) turns either into the report:
   - the fold (:func:`_fold`): both sides' rows in one tagged union,
-    grouped by key — ONE exchange, map-side partially aggregated, no
-    join.  It serves every null-safe deduplicating diff (the
-    ``diff_snapshots`` hot path, with or without tolerance, ignore,
-    drift, map values or ``include_unchanged``), the all-columns key,
-    and the three-side fold of :func:`diff3_tables`;
-  - the full outer join (:func:`_full_outer_match`): ONE exchange per
-    side feeding a sort-merge join, kept for the three shapes only it
-    plans correctly or exchange-free — a non-deduplicating declared key
-    (duplicate keys cross-match m×n), plain-equality keys (if the two
-    snapshots are written bucketed-by-key, see ``snapshot.py``, the
-    exchanges disappear entirely and the diff is a zero-shuffle zip of
-    co-located buckets), and ``include_unchanged`` without dedup.
+    grouped by key — map-side partially aggregated, no join.  It serves
+    every null-safe deduplicating diff (the ``diff_snapshots`` hot
+    path, with or without tolerance, ignore, drift, map values or
+    ``include_unchanged``), the all-columns key, and the three-side
+    fold of :func:`diff3_tables`;
+  - the full outer join (:func:`_full_outer_match`): a sort-merge join,
+    kept for the three shapes only it plans correctly or exchange-free
+    — a non-deduplicating declared key (duplicate keys cross-match
+    m×n), plain-equality keys (if the two snapshots are written
+    bucketed-by-key, see ``snapshot.py``, the exchanges disappear
+    entirely and the diff is a zero-shuffle zip of co-located buckets),
+    and ``include_unchanged`` without dedup.
+* One size election over the summed optimizer estimate of a diff's
+  inputs (:func:`_input_bytes`) sets every matcher's plan shape, in
+  three regimes by size: ONE TASK at most ``DIFF_ONE_TASK_MAX_BYTES``
+  (the input coalesced to one partition, no exchange — a developer's
+  test database, the REPL's case); ONE EXCHANGE above it (the fold's
+  one, one per side of the join, ``diff_multiset``'s ``one_pass``);
+  and, for ``diff_multiset``, HASH-FIRST above
+  ``MULTISET_ONE_PASS_MAX_BYTES`` or when an estimate is missing.  A
+  missing estimate never elects one task.
 * Skew posture (measured, r9 — tools/probe_diff_scale.py --skew):
   AQE's skew-join split does NOT apply to a FULL OUTER sort-merge join
   (OptimizeSkewedJoin fires for inner/left/right only — splitting a
@@ -58,6 +67,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import logging
 import math
 from dataclasses import dataclass, field
 from enum import Enum
@@ -69,6 +79,8 @@ from pyspark.sql import functions as F
 from dbdiff_spark.io import run_jobs
 from dbdiff_spark.normalize import normalize_to_strings
 from dbdiff_spark.sqltext import ident, string_lit
+
+_log = logging.getLogger(__name__)
 
 # Diff status labels (reference: extract_data.go:186-192 const block).
 INSERTED = "INSERTED"
@@ -241,10 +253,13 @@ def _shield_reserved(
 def _fold(
     sides: list[tuple[DataFrame, str, dict[str, str]]],
     key_cols: list[str],
+    one_task: bool,
     multiplicities: bool = False,
 ) -> DataFrame:
     """The side-tagged fold: every side's rows in one union, grouped by
-    key — ONE exchange, with map-side partial aggregation.
+    key — ONE exchange, with map-side partial aggregation, or, when the
+    one-task gate (:func:`_one_task`) holds, one task with no exchange
+    at all.
 
     ``sides`` holds ``(frame, tag, dtypes)`` triples.  Per key group and
     side tag ``T`` the result carries the key columns and
@@ -289,7 +304,12 @@ def _fold(
             out.append(f"shiftright(__mask, {s}) & 1 AS {tag}_n")
         parts.append(df.selectExpr(*keys, f"{s} AS __side", *packed))
     union = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), parts)
-    return union.groupBy(*keys).agg(*[F.expr(a) for a in aggs]).selectExpr(*out)
+    return (
+        _single_task(union, one_task)
+        .groupBy(*keys)
+        .agg(*[F.expr(a) for a in aggs])
+        .selectExpr(*out)
+    )
 
 
 def dedup_last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -304,8 +324,12 @@ def dedup_last_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     the exchange.  Two different maps with an identical rendering tie
     arbitrarily, matching the reference's own nondeterminism only in
     that degenerate corner."""
+    return _last_wins(df, key_cols, _one_task(_input_bytes([df])))
+
+
+def _last_wins(df: DataFrame, key_cols: list[str], one_task: bool) -> DataFrame:
     types = dict(df.dtypes)
-    return _fold([(df, "__r", types)], key_cols).selectExpr(
+    return _fold([(df, "__r", types)], key_cols, one_task).selectExpr(
         *[ident(c) if c in key_cols else f"__r.{ident(c)} AS {ident(c)}" for c in types]
     )
 
@@ -317,11 +341,14 @@ def _full_outer_match(
     b_types: dict[str, str],
     a_types: dict[str, str],
     null_safe_keys: bool,
+    one_task: bool,
 ) -> DataFrame:
     """The join matcher, in the fold's shape: one row per matched key
     pair (m×n for duplicate keys), each side's non-key columns packed
     into its ``__b``/``__a`` struct, ``__b_n``/``__a_n`` 1 where the
-    side is present and 0 where it is not."""
+    side is present and 0 where it is not.  Under ``one_task`` both
+    sides are single partitions, which the sort-merge join accepts as
+    co-partitioned: no exchange."""
     keys = [ident(k) for k in key_cols]
 
     def side(df: DataFrame, tag: str, types: dict[str, str]) -> list[str]:
@@ -329,8 +356,8 @@ def _full_outer_match(
         return [f"struct({', '.join(others)}) AS {tag}"] if others else []
 
     b_packed, a_packed = side(before, "__b", b_types), side(after, "__a", a_types)
-    b = before.selectExpr(*keys, *b_packed, "1 AS __b_n").alias("b")
-    a = after.selectExpr(*keys, *a_packed, "1 AS __a_n").alias("a")
+    b = _single_task(before.selectExpr(*keys, *b_packed, "1 AS __b_n"), one_task).alias("b")
+    a = _single_task(after.selectExpr(*keys, *a_packed, "1 AS __a_n"), one_task).alias("a")
     # null-safe ``<=>`` is still recognized by Catalyst as an equi-join
     # key, so the planner can pick sort-merge / shuffled-hash / broadcast
     # — this does NOT degrade to a nested-loop join.  Plain equality
@@ -570,6 +597,9 @@ def diff_tables(
                 "diff such tables with mode=DiffMode.STRING"
             )
 
+    # elected on the inputs as given (file bytes for parquet sources, the
+    # units of both bounds), before STRING mode renders them
+    one_task = _one_task(_input_bytes([before, after]))
     if mode == DiffMode.STRING:
         before = normalize_to_strings(before)
         after = normalize_to_strings(after)
@@ -582,19 +612,21 @@ def diff_tables(
     # a non-deduplicating declared key (duplicate keys cross-match
     # m×n), plain-equality keys (exchange-free over snapshots bucketed
     # by key) and include_unchanged without dedup (m×n NOT_MODIFIED).
+    # Either matcher runs as one task when the inputs are small.
     all_columns_key = set(key_cols) == set(b_types) == set(a_types)
     if (dedup_keys and null_safe_keys) or (all_columns_key and not include_unchanged):
         matched = _fold(
             [(before, "__b", b_types), (after, "__a", a_types)],
             key_cols,
+            one_task,
             multiplicities=not dedup_keys,
         )
     else:
         if dedup_keys:
-            before = dedup_last_wins(before, key_cols)
-            after = dedup_last_wins(after, key_cols)
+            before = _last_wins(before, key_cols, one_task)
+            after = _last_wins(after, key_cols, one_task)
         matched = _full_outer_match(
-            before, after, key_cols, b_types, a_types, null_safe_keys
+            before, after, key_cols, b_types, a_types, null_safe_keys, one_task
         )
     return _classify(
         matched, key_cols, b_types, a_types, include_unchanged, tolerance, ignore_columns
@@ -684,6 +716,23 @@ def apply_diff(
 # direction (it is the only shape that survives at 100 TB).
 MULTISET_ONE_PASS_MAX_BYTES = 64 * 1024**2
 
+# At most this combined estimate, every matcher plans as ONE task: its
+# input coalesces to one partition, which satisfies the aggregate's and
+# the sort-merge join's required distribution, so Spark plans no
+# exchange and no map-stage job.  Calibrated on local[4] by
+# ``tools/probe_diff_scale.py --crossover`` (first-N-row cuts of sf0.1's
+# lineitem, STRING ``diff_snapshots`` plus the console sink after a few
+# dozen edits, min of 3 warm reps; the estimate is the one this
+# election sees, of the inputs before STRING rendering), exchange → one
+# task: 0.21 MiB 0.80 → 0.61 s, 0.39 MiB 0.74 → 0.46 s, 0.56 MiB 0.56 →
+# 0.48 s, 0.73 MiB 0.51 → 0.41 s, 0.89 MiB 0.51 → 0.51 s, 1.20 MiB
+# 0.55 → 0.53 s, 1.51 MiB 0.56 → 0.71 s, 3.78 MiB 0.93 → 1.03 s,
+# 20.4 MiB 3.91 → 6.05 s.  One task stops paying at ~0.9-1.2 MiB and
+# loses above, where it serializes work the exchange spreads over the
+# cores; 512 KiB sits under that crossover and covers every table of a
+# small test database.
+DIFF_ONE_TASK_MAX_BYTES = 512 * 1024
+
 
 def _estimated_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate for a frame (sum of leaf file sizes for
@@ -706,6 +755,40 @@ def _estimated_bytes(df: DataFrame) -> int | None:
     return size if 0 <= size < 2**62 else None
 
 
+def _input_bytes(frames: list[DataFrame]) -> int | None:
+    """The diff's combined input estimate: the sum of
+    :func:`_estimated_bytes` over its inputs, ``None`` if any input
+    has none."""
+    total = 0
+    for df in frames:
+        size = _estimated_bytes(df)
+        if size is None:
+            return None
+        total += size
+    return total
+
+
+def _one_task(total: int | None) -> bool:
+    """The one-task gate every diff matcher shares, on the combined
+    estimate from :func:`_input_bytes`: at most DIFF_ONE_TASK_MAX_BYTES.
+    A missing estimate never elects one task.  Logs the estimate and the
+    plan shape at DEBUG, so a slow diff traces to its plan shape."""
+    one_task = total is not None and total <= DIFF_ONE_TASK_MAX_BYTES
+    _log.debug(
+        "diff inputs estimated at %s bytes: %s",
+        total,
+        "one task" if one_task else "exchange",
+    )
+    return one_task
+
+
+def _single_task(df: DataFrame, one_task: bool) -> DataFrame:
+    """``df`` as one partition under ``one_task``: its ``SinglePartition``
+    output satisfies any aggregate's or sort-merge join's required
+    distribution, so no exchange is planned above it."""
+    return df.coalesce(1) if one_task else df
+
+
 def diff_multiset(before: DataFrame, after: DataFrame) -> DataFrame:
     """Count-preserving (multiset) diff — the semantically correct diff
     for tables with no usable key (SURVEY §7.3.4): group both sides by
@@ -721,16 +804,18 @@ def diff_multiset(before: DataFrame, after: DataFrame) -> DataFrame:
     collision (no adversarial inputs constructible without the salt
     split; the keyed diff is available when certainty is required).
     The optimizer's size estimate of the two inputs elects one — the
-    size-threshold mechanism Spark uses to elect broadcast joins:
+    size-threshold mechanism Spark uses to elect broadcast joins (the
+    shared :func:`_input_bytes`):
 
     * ``one_pass``, at most ``MULTISET_ONE_PASS_MAX_BYTES`` combined
       (an ESTIMATE — compressed file bytes; see the constant's
       calibration note): single scan, single shuffle, the aggregation
       carrying one representative ``struct`` of the row values per
-      fingerprint.  Measured 2× faster than hash_first at sf0.1 on
-      local[32]; wrong at 100 TB, where map-side combine cannot
-      collapse across sides/files and the shuffle reverts to full data
-      volume.
+      fingerprint — and no shuffle at all, one task, at most
+      ``DIFF_ONE_TASK_MAX_BYTES`` combined.  Measured 2× faster than
+      hash_first at sf0.1 on local[32]; wrong at 100 TB, where map-side
+      combine cannot collapse across sides/files and the shuffle
+      reverts to full data volume.
     * ``hash_first``, above the bound or when either estimate is
       unavailable (the 100 TB shape, so the election degrades
       conservatively): the heavy aggregation shuffles ~24 bytes/row
@@ -745,12 +830,9 @@ def diff_multiset(before: DataFrame, after: DataFrame) -> DataFrame:
       executor storage).  Measured 1.3× faster than one_pass at 6M
       rows.
     """
-    b_bytes, a_bytes = _estimated_bytes(before), _estimated_bytes(after)
-    one_pass = (
-        b_bytes is not None
-        and a_bytes is not None
-        and b_bytes + a_bytes <= MULTISET_ONE_PASS_MAX_BYTES
-    )
+    total = _input_bytes([before, after])
+    hash_first = total is None or total > MULTISET_ONE_PASS_MAX_BYTES
+    _log.debug("diff_multiset: %s", "hash_first" if hash_first else "one_pass")
     # see diff_tables: inputs carrying the output/internal column names
     # (diff-audit tables fed back through the engine) must be shielded —
     # here a colliding `diff_status` would be silently REPLACED by
@@ -792,9 +874,12 @@ def diff_multiset(before: DataFrame, after: DataFrame) -> DataFrame:
         F.xxhash64(*value_cols).alias("__h1"),
         F.xxhash64(F.lit("dbdiff_multiset_salt"), *value_cols).alias("__h2"),
     ]
-    if one_pass:
+    if not hash_first:
         grouped = (
-            tagged.select(*fp, "__side", F.struct(*value_cols).alias("__row"))
+            _single_task(
+                tagged.select(*fp, "__side", F.struct(*value_cols).alias("__row")),
+                _one_task(total),
+            )
             .groupBy("__h1", "__h2")
             .agg(
                 F.count_if(F.col("__side") == 0).alias("n_before"),
@@ -888,7 +973,8 @@ def diff3_tables(
 
     Scale shape: ONE shuffle — the three-side :func:`_fold` (no FOJ
     chain, so there is no second exchange and NULL keys group naturally
-    without null-safe join rewrites).  Classification and the conflict
+    without null-safe join rewrites); none at all when the size
+    election picks ``one_task``.  Classification and the conflict
     pair expansion are narrow projections on changed keys only.
     """
     for df, name in ((ours, "ours"), (theirs, "theirs")):
@@ -899,9 +985,9 @@ def diff3_tables(
     types = dict(base.dtypes)
     val_cols = [c for c in types if c not in key_cols]
     keys = [ident(k) for k in key_cols]
-    folded = _fold(
-        [(base, "__b", types), (ours, "__o", types), (theirs, "__t", types)], key_cols
-    )
+    sides = [(base, "__b", types), (ours, "__o", types), (theirs, "__t", types)]
+    one_task = _one_task(_input_bytes([base, ours, theirs]))
+    folded = _fold(sides, key_cols, one_task)
 
     def differs(x: str, y: str) -> str:
         cols = [

@@ -1552,6 +1552,16 @@ def _drop_tombstone_log(spark: SparkSession, root: str) -> None:
         )
 
 
+# The 1-row ``<root>/params`` record ``_ensure_index_params`` writes and
+# reads back: naming it skips the footer-inference job every warm serve
+# would otherwise pay.  A root written by an older schema reads its
+# absent fields as NULL.
+_PARAMS_SCHEMA = (
+    "n bigint, dim bigint, cells bigint, nprobe bigint, qmod bigint,"
+    " family string, fingerprint string, n_ids bigint"
+)
+
+
 def _ensure_index_params(
     spark: SparkSession, sf_dir: str, root: str, family: str, build,
     rebuild: bool = False,
@@ -1590,23 +1600,23 @@ def _ensure_index_params(
     fp = _corpus_fingerprint(spark, sf_dir)
     rec = None
     if not rebuild and _hfs.exists(spark, f"{ppath}/_SUCCESS"):
-        # asDict + .get: a durable root written by an OLDER params
-        # schema (pre-family/fingerprint) must read as stale and
-        # rebuild, not crash the guard on a missing field (r10 review)
-        rec = spark.read.parquet(ppath).collect()[0].asDict()
-        covers = rec.get("family") == family or (
-            rec.get("family") == "ivfpq" and family == "ivf"
+        # a durable root written by an OLDER params schema reads its
+        # absent fields as NULL, so it reads as stale and rebuilds
+        # instead of crashing the guard (r10 review)
+        rec = spark.read.schema(_PARAMS_SCHEMA).parquet(ppath).collect()[0].asDict()
+        covers = rec["family"] == family or (
+            rec["family"] == "ivfpq" and family == "ivf"
         )
         # every field the return statement consumes must be present,
         # or an old-schema row would pass the guard then crash the
         # read it was supposed to turn into a rebuild (r10 ADVICE)
-        missing = [f for f in ("n", "dim", "nprobe", "qmod", "n_ids") if f not in rec]
+        missing = [f for f in ("n", "dim", "nprobe", "qmod", "n_ids") if rec[f] is None]
         # name the failed check, so an upgrade-driven rebuild (a field
         # added to the params schema) reads apart from corpus drift
         if not covers:
             _log.warning("rebuilding %s: family %r does not cover %r",
-                         root, rec.get("family"), family)
-        elif rec.get("fingerprint") != fp:
+                         root, rec["family"], family)
+        elif rec["fingerprint"] != fp:
             _log.warning("rebuilding %s: corpus fingerprint changed", root)
         elif missing:
             _log.warning("rebuilding %s: params lack %s", root, ", ".join(missing))
@@ -1628,10 +1638,7 @@ def _ensure_index_params(
     one_file(
         local_frame(
             spark,
-            [(n, dim, k, nprobe, qmod, family, fp, n_ids)],
-            "n bigint, dim bigint, cells bigint, nprobe bigint,"
-            " qmod bigint, family string, fingerprint string,"
-            " n_ids bigint",
+            [(n, dim, k, nprobe, qmod, family, fp, n_ids)], _PARAMS_SCHEMA
         )
     ).write.mode("overwrite").parquet(ppath)
     return nprobe, qmod, n, dim, n_ids

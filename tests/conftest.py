@@ -73,6 +73,23 @@ def force_multiset_regime(monkeypatch, regime):
         monkeypatch.setattr(diff_mod, "MULTISET_ONE_PASS_MAX_BYTES", -1)
 
 
+def force_diff_regime(monkeypatch, regime):
+    """Pin the diff size election's one-task gate through its bound:
+    ``"exchange"`` (-1) keeps every matcher's exchange plan for any
+    estimate; ``"one_task"`` (2**62) plans one task for any known
+    estimate, and also pins the estimate to 0 bytes, since frames built
+    from local rows carry none (which never elects one task).  Composes
+    with :func:`force_multiset_regime`: a forced ``hash_first`` still
+    wins, as it does above ``MULTISET_ONE_PASS_MAX_BYTES``."""
+    import dbdiff_spark.diff as diff_mod
+
+    if regime == "one_task":
+        monkeypatch.setattr(diff_mod, "DIFF_ONE_TASK_MAX_BYTES", 2**62)
+        monkeypatch.setattr(diff_mod, "_estimated_bytes", lambda df: 0)
+    else:
+        monkeypatch.setattr(diff_mod, "DIFF_ONE_TASK_MAX_BYTES", -1)
+
+
 def elected_regime(out):
     """The regime a ``diff_multiset`` plan shows: only hash_first joins
     (its probe of the changed fingerprints)."""

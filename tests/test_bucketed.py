@@ -21,7 +21,13 @@ def _mutate(customer):
     )
 
 
-def test_bucketed_diff_is_exchange_free_and_correct(spark, sf_dir, tmp_path):
+def test_bucketed_diff_is_exchange_free_and_correct(spark, sf_dir, tmp_path, monkeypatch):
+    """In the exchange regime, forced (sf0.001's customer falls under the
+    one-task bound, whose plan has no exchange either): no exchange must
+    then come from the bucketing alone."""
+    from conftest import force_diff_regime
+
+    force_diff_regime(monkeypatch, "exchange")
     customer = load_table(spark, sf_dir, "customer")
     store = SnapshotStore(spark)
     before = store.collect(
@@ -60,8 +66,13 @@ def test_bucketed_diff_is_exchange_free_and_correct(spark, sf_dir, tmp_path):
     assert statuses == sorted(expect)
 
 
-def test_unbucketed_diff_has_exchanges(spark, sf_dir, tmp_path):
-    """Control: the same diff without bucketing shuffles both sides."""
+def test_unbucketed_diff_has_exchanges(spark, sf_dir, tmp_path, monkeypatch):
+    """Control: the same diff without bucketing shuffles both sides (in
+    the exchange regime, forced: sf0.001's customer falls under the
+    one-task bound)."""
+    from conftest import force_diff_regime
+
+    force_diff_regime(monkeypatch, "exchange")
     customer = load_table(spark, sf_dir, "customer")
     store = SnapshotStore(spark)
     before = store.collect(

@@ -72,6 +72,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+REGIMES = ["one_task", "exchange"]
+
+
+def _assert_regime(df, regime):
+    """The forced size-election regime shows in the plan: one task
+    coalesces the matcher's input to one partition.  (Whether Spark
+    then drops the exchange also rests on its own size estimate, which
+    frames built from local rows lack; test_plans.py checks that on
+    file sources.)"""
+    assert ("Coalesce 1" in _plan(df)) == (regime == "one_task"), _plan(df)
+
+
 # --- the fold against a Python model -----------------------------------------
 
 _V = [0.0, 1.0, 1.25, 3.0]
@@ -188,11 +200,12 @@ def _diff_model(b_rows, a_rows, b_types, a_types, tolerance, ignore, include_unc
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(case=fold_case())
-def test_fold_matches_python_model(spark, mode, case):
+def test_fold_matches_python_model(spark, monkeypatch, mode, case):
     """Every null-safe deduplicating diff shape plans as the one fold (no
-    join) and equals the Python model.  STRING mode models the diff of
-    the string renderings (``normalize_to_strings``), where tolerance
-    does not apply."""
+    join) and equals the Python model, in both size-election regimes.
+    STRING mode models the diff of the string renderings
+    (``normalize_to_strings``), where tolerance does not apply."""
+    from conftest import force_diff_regime
     from pyspark.sql import functions as F
 
     from dbdiff_spark.normalize import normalize_to_strings
@@ -207,32 +220,40 @@ def test_fold_matches_python_model(spark, mode, case):
     elif drift == "retype_w":
         after = after.withColumn("w", F.col("w").cast("string"))
     tolerance = case["tolerance"] if mode == DiffMode.TYPED else None
-    res = diff_tables(
-        before, after, ["id"], mode=mode, dedup_keys=True,
-        tolerance=tolerance, ignore_columns=case["ignore"],
-        include_unchanged=case["include_unchanged"],
+    model_b, model_a = (
+        (normalize_to_strings(before), normalize_to_strings(after))
+        if mode == DiffMode.STRING
+        else (before, after)
     )
-    assert "Join" not in _plan(res.df)
-    if mode == DiffMode.STRING:
-        before, after = normalize_to_strings(before), normalize_to_strings(after)
     expected = _diff_model(
-        [tuple(r) for r in before.collect()],
-        [tuple(r) for r in after.collect()],
-        dict(before.dtypes),
-        dict(after.dtypes),
+        [tuple(r) for r in model_b.collect()],
+        [tuple(r) for r in model_a.collect()],
+        dict(model_b.dtypes),
+        dict(model_a.dtypes),
         tolerance,
         case["ignore"],
         case["include_unchanged"],
     )
-    got = sorted(
-        [
-            (r["diff_status"], r["is_before"], tuple(r["modified_columns"]),
-             tuple(_canon(r[c]) for c in res.value_columns))
-            for r in res.df.collect()
-        ],
-        key=repr,
-    )
-    assert got == expected
+    for regime in REGIMES:
+        force_diff_regime(monkeypatch, regime)
+        res = diff_tables(
+            before, after, ["id"], mode=mode, dedup_keys=True,
+            tolerance=tolerance, ignore_columns=case["ignore"],
+            include_unchanged=case["include_unchanged"],
+        )
+        assert "Join" not in _plan(res.df)
+        _assert_regime(res.df, regime)
+        # the fold's one child needs no size estimate to stay exchange-free
+        assert ("Exchange" in _plan(res.df)) == (regime == "exchange"), regime
+        got = sorted(
+            [
+                (r["diff_status"], r["is_before"], tuple(r["modified_columns"]),
+                 tuple(_canon(r[c]) for c in res.value_columns))
+                for r in res.df.collect()
+            ],
+            key=repr,
+        )
+        assert got == expected, regime
 
 
 ROWS = st.lists(
@@ -247,32 +268,38 @@ ROWS = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(b_rows=ROWS, a_rows=ROWS)
-def test_all_columns_key_equals_foj_formulation(spark, b_rows, a_rows):
+def test_all_columns_key_equals_foj_formulation(spark, monkeypatch, b_rows, a_rows):
     """The one-shuffle all-columns-key rewrite must emit exactly what the
     full-outer-join formulation emits, for ANY multisets on either side
-    (duplicates exercise the m×n match/m-exclusive expansion cases).
-    include_unchanged=True without dedup keeps the full-outer-join
-    matcher, giving the reference behavior to compare against."""
+    (duplicates exercise the m×n match/m-exclusive expansion cases), in
+    both size-election regimes.  include_unchanged=True without dedup
+    keeps the full-outer-join matcher, giving the reference behavior to
+    compare against."""
+    from conftest import force_diff_regime
     from pyspark.sql import functions as F
 
     schema = "id int, s string"
     before = spark.createDataFrame(b_rows, schema)
     after = spark.createDataFrame(a_rows, schema)
-    fast = diff_tables(before, after, ["id", "s"], mode=DiffMode.TYPED)
-    foj = diff_tables(
-        before, after, ["id", "s"], mode=DiffMode.TYPED, include_unchanged=True
-    )
-    # the reference must reach the join matcher, never the fold itself
-    assert "Join" not in _plan(fast.df) and "FullOuter" in _plan(foj.df)
-    fast_rows = sorted(
-        (r["diff_status"], r["is_before"], r["id"], r["s"])
-        for r in fast.df.collect()
-    )
-    foj_rows = sorted(
-        (r["diff_status"], r["is_before"], r["id"], r["s"])
-        for r in foj.df.filter(F.col("diff_status") != "NOT_MODIFIED").collect()
-    )
-    assert fast_rows == foj_rows
+    for regime in REGIMES:
+        force_diff_regime(monkeypatch, regime)
+        fast = diff_tables(before, after, ["id", "s"], mode=DiffMode.TYPED)
+        foj = diff_tables(
+            before, after, ["id", "s"], mode=DiffMode.TYPED, include_unchanged=True
+        )
+        # the reference must reach the join matcher, never the fold itself
+        assert "Join" not in _plan(fast.df) and "FullOuter" in _plan(foj.df)
+        _assert_regime(fast.df, regime)
+        _assert_regime(foj.df, regime)
+        fast_rows = sorted(
+            (r["diff_status"], r["is_before"], r["id"], r["s"])
+            for r in fast.df.collect()
+        )
+        foj_rows = sorted(
+            (r["diff_status"], r["is_before"], r["id"], r["s"])
+            for r in foj.df.filter(F.col("diff_status") != "NOT_MODIFIED").collect()
+        )
+        assert fast_rows == foj_rows, regime
 
 
 @settings(
@@ -320,9 +347,10 @@ def test_multiset_strategies_agree_on_any_multisets(spark, monkeypatch, b_rows, 
     """Both diff_multiset regimes (one_pass / hash_first, each forced
     through the size bound) equal a Python Counter model for ANY pair
     of input multisets — duplicates, small domains and empty sides
-    included."""
+    included — with one_pass as one task and over its exchange."""
     from conftest import (
         elected_regime,
+        force_diff_regime,
         force_multiset_regime,
         multiset_model,
         multiset_rows,
@@ -334,11 +362,15 @@ def test_multiset_strategies_agree_on_any_multisets(spark, monkeypatch, b_rows, 
     before = spark.createDataFrame(b_rows, schema)
     after = spark.createDataFrame(a_rows, schema)
     expected = multiset_model(b_rows, a_rows)
-    for regime in ("one_pass", "hash_first"):
-        force_multiset_regime(monkeypatch, regime)
-        out = diff_multiset(before, after)
-        assert elected_regime(out) == regime
-        assert multiset_rows(out, ["id", "s"]) == expected, regime
+    for diff_regime in REGIMES:
+        force_diff_regime(monkeypatch, diff_regime)
+        for regime in ("one_pass", "hash_first"):
+            force_multiset_regime(monkeypatch, regime)
+            out = diff_multiset(before, after)
+            assert elected_regime(out) == regime
+            if regime == "one_pass":
+                _assert_regime(out, diff_regime)
+            assert multiset_rows(out, ["id", "s"]) == expected, (diff_regime, regime)
 
 
 @st.composite

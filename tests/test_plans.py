@@ -99,19 +99,22 @@ def test_kmeans_final_plan_is_broadcast_argmin_single_exchange(spark, sf_dir):
     assert plan.count("REPARTITION_BY_NUM") <= 1, plan
 
 
-def test_keyed_diff_matchers(spark, sf_dir):
+def test_keyed_diff_matchers(spark, sf_dir, monkeypatch):
     """The fold: every null-safe deduplicating diff shape (plain,
     tolerance, ignore, type and schema drift, unorderable values,
     include_unchanged) and the all-columns key with or without dedup
     plan exactly ONE exchange and no join.  A non-deduplicating
     declared key keeps its full outer join (duplicate keys cross-match
-    m×n)."""
+    m×n).  The sf0.001 inputs fall under the one-task bound, so the
+    exchange regime is forced."""
+    from conftest import force_diff_regime
     from pyspark.sql import functions as F
 
     from dbdiff_spark import testkit
     from dbdiff_spark.diff import DiffMode, diff_tables
     from dbdiff_spark.io import load_table
 
+    force_diff_regime(monkeypatch, "exchange")
     spec, mut = testkit.SPECS["customer"], testkit.MUTATIONS["customer"]
     base = testkit.prep(load_table(spark, sf_dir, "customer"), spec)
     after = testkit.apply_mutation(base, spec, mut)
@@ -144,14 +147,76 @@ def test_keyed_diff_matchers(spark, sf_dir):
     assert "FullOuter" in plan, plan
 
 
-def test_merge3_and_scd2_are_single_exchange_grouped(spark, sf_dir):
+def test_merge3_and_scd2_are_single_exchange_grouped(spark, sf_dir, monkeypatch):
     """diff3 and the SCD2 fold both use the grouped max(struct) pattern:
-    ONE exchange, no joins, no windows, no Python in the plan."""
+    ONE exchange, no joins, no windows, no Python in the plan (in the
+    exchange regime, forced: the sf0.001 inputs fall under the one-task
+    bound)."""
+    from conftest import force_diff_regime
+
+    force_diff_regime(monkeypatch, "exchange")
     for name in ("merge3_customer", "scd2_customer"):
         plan = _plan(entry.queries()[name](spark, sf_dir))
         assert plan.count("Exchange") == 1, (name, plan)
         assert "Join" not in plan, name
         assert "Window" not in plan, name
+
+
+def test_one_task_diff_plans_no_exchange(spark, sf_dir, monkeypatch, tmp_path):
+    """The converse of the exchange-regime tests above: with the
+    one-task regime forced, every matcher — the fold (diff_snapshots,
+    all-columns key, diff3), the full outer join and diff_multiset's
+    one_pass — plans no exchange, and the console sink's collect over a
+    three-table diff_snapshots runs one job per table (no AQE map
+    stage)."""
+    from conftest import force_diff_regime
+
+    from dbdiff_spark import testkit
+    from dbdiff_spark.catalog import TESTDATA_KEYS, FileCatalog
+    from dbdiff_spark.diff import (
+        DiffMode,
+        collect_rows,
+        diff3_tables,
+        diff_multiset,
+        diff_tables,
+    )
+    from dbdiff_spark.snapshot import SnapshotStore, diff_snapshots
+
+    force_diff_regime(monkeypatch, "one_task")
+    cat = FileCatalog(spark, sf_dir, TESTDATA_KEYS)
+    names = ["customer", "events", "lineitem"]
+    keys = cat.primary_keys(names)
+    store = SnapshotStore(spark)
+    before = store.collect({t: cat.load(t) for t in names}, keys, str(tmp_path / "b"))
+    edited = {
+        "customer": cat.load("customer").filter("c_custkey % 10 != 7"),
+        "events": cat.load("events").filter("event_id % 7 != 0"),
+        "lineitem": cat.load("lineitem").filter("l_orderkey % 13 != 5"),
+    }
+    after = store.collect(edited, keys, str(tmp_path / "a"))
+    results = diff_snapshots(spark, before, after)
+    spec = testkit.SPECS["customer"]
+    base = testkit.prep(cat.load("customer"), spec)
+    after_c = testkit.apply_mutation(base, spec, testkit.MUTATIONS["customer"])
+    frames = {
+        **{f"diff_snapshots {t}": r.df for t, r in results.items()},
+        "full outer join": diff_tables(
+            base, after_c, list(spec.key), mode=DiffMode.TYPED
+        ).df,
+        "diff3": diff3_tables(base, after_c, base, list(spec.key)),
+        "multiset": diff_multiset(base, after_c),
+    }
+    for name, df in frames.items():
+        plan = _plan(df)
+        assert "Exchange" not in plan, (name, plan)
+        assert "Coalesce 1" in plan, (name, plan)
+    assert "FullOuter" in _plan(frames["full outer join"])
+    tracker = spark.sparkContext.statusTracker()
+    first = max(tracker.getJobIdsForGroup(), default=-1)
+    collect_rows(results, 10_000)
+    jobs = [j for j in tracker.getJobIdsForGroup() if j > first]
+    assert len(jobs) == len(names), jobs
+    assert all(results[t]._rows[10_000] for t in names)
 
 
 def test_bm25_is_one_scan_takeordered(spark, sf_dir):

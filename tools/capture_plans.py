@@ -15,8 +15,10 @@ Queries whose public form materializes eagerly use their registered
 in ``--out-dir`` (every query captured under TAG_A when none is named)
 after masking what differs between two captures of one plan —
 expression ids (``#123``), node ordinals (``(12)``), codegen ids,
-exchange plan ids (``plan_id=77``) and the per-process salt of
-artifact roots (``u0_p4242``) — prints each query's differing lines
+exchange plan ids (``plan_id=77``), the per-process salt of
+artifact roots (``u0_p4242``) and the RDD ids of eagerly cut frames
+(``MapPartitionsRDD[4417]``), which count every RDD the session made
+before — prints each query's differing lines
 and exits 1 on any difference or missing file.  Capture both tags from
 the same working directory, so artifact roots share their prefix.
 """
@@ -35,6 +37,7 @@ _MASKS = (
     (re.compile(r"codegen id : \d+"), "codegen id : N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"/u\d+_p\d+/"), "/uN_pN/"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
 )
 
 

@@ -12,7 +12,15 @@ and times the three headline diff shapes warm:
 Reports seconds and s/Mrow at 600k and 6M so the linear-regime claim in
 ARCHITECTURE.md is measured, not asserted.  Writes nothing to the repo.
 
-Usage: python tools/probe_diff_scale.py
+``--crossover`` instead sweeps the one-task bound of the diff size
+election (``diff.DIFF_ONE_TASK_MAX_BYTES``): cuts of sf0.1's lineitem
+(``--cuts``, the first rows by key), each snapshotted before and after
+a few dozen edits, then ``diff_snapshots`` (STRING) plus
+``print_diffs`` — one REPL Enter press without the snapshot — with each
+regime forced in turn.  Prints the combined input estimate the
+election compares, the rows and the min-of-3 warm seconds per regime.
+
+Usage: python tools/probe_diff_scale.py [--skew | --crossover]
 """
 
 from __future__ import annotations
@@ -189,6 +197,66 @@ def run_skew(spark, factor: int) -> dict[str, float]:
     return out
 
 
+# a REPL-sized edit: ~1/1000 of the orders deleted, updated or re-keyed
+_SMALL_EDIT = {
+    "delete_where": "l_orderkey % 997 = 5",
+    "updates": (("l_orderkey % 997 = 3", "l_quantity", "l_quantity + 1.0"),),
+    "insert_where": "l_orderkey % 997 = 2",
+    "insert_overrides": {"l_orderkey": "l_orderkey + 10000000"},
+}
+
+
+def run_crossover(spark, sf_dir: str, rows: int) -> dict[str, float]:
+    """One sweep row: ``rows`` lineitem rows of ``sf_dir`` (0 = all),
+    snapshotted before and after ``_SMALL_EDIT``; min-of-3 warm seconds
+    of ``diff_snapshots`` + ``print_diffs`` per forced regime."""
+    import contextlib
+    import io
+
+    from dbdiff_spark import diff as diff_mod
+    from dbdiff_spark import testkit
+    from dbdiff_spark.io import load_table
+    from dbdiff_spark.sinks.console import print_diffs
+    from dbdiff_spark.snapshot import SnapshotStore, diff_snapshots
+
+    spec = testkit.SPECS["lineitem"]
+    base = load_table(spark, sf_dir, "lineitem")
+    if rows:
+        base = base.orderBy(*spec.key).limit(rows)
+    root = tempfile.mkdtemp(prefix=f"probe_diff_crossover_{rows}_")
+    out: dict[str, float] = {}
+    bound = diff_mod.DIFF_ONE_TASK_MAX_BYTES
+    try:
+        # the live table is one file, as a test database's would be
+        base.coalesce(1).write.parquet(f"{root}/live")
+        live = spark.read.parquet(f"{root}/live")
+        after = testkit.apply_mutation(live, spec, testkit.Mutation(**_SMALL_EDIT))
+        store, keys = SnapshotStore(spark), {"lineitem": list(spec.key)}
+        sb = store.collect({"lineitem": live}, keys, f"{root}/sb")
+        sa = store.collect({"lineitem": after}, keys, f"{root}/sa")
+        out["rows"] = sb.total_count
+        out["estimate"] = diff_mod._input_bytes(
+            [sb.load(spark, "lineitem"), sa.load(spark, "lineitem")]
+        )
+
+        def press():
+            with contextlib.redirect_stdout(io.StringIO()):
+                print_diffs(diff_snapshots(spark, sb, sa))
+
+        for regime, forced in (("exchange", -1), ("one_task", 2**62)):
+            diff_mod.DIFF_ONE_TASK_MAX_BYTES = forced
+            press()  # warm this regime's plan
+            out[regime] = timed(press, reps=3)
+    finally:
+        diff_mod.DIFF_ONE_TASK_MAX_BYTES = bound
+        shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
+def _mib(n: int | None) -> str:
+    return "unknown" if n is None else f"{n / 1024**2:.2f} MiB ({n:,} B)"
+
+
 def main() -> int:
     import argparse
 
@@ -200,8 +268,38 @@ def main() -> int:
         "--skew", action="store_true",
         help="run the planted hot-key stress instead of the scale sweep",
     )
+    ap.add_argument(
+        "--crossover", action="store_true",
+        help="sweep the diff one-task bound instead of the scale sweep",
+    )
+    ap.add_argument(
+        "--cuts",
+        default="5000,10000,15000,20000,25000,35000,45000,60000,80000,120000,200000,0",
+        help="--crossover: lineitem rows per sweep row (0 = the whole table)",
+    )
     args = ap.parse_args()
     factors = [int(f) for f in args.factors.split(",")]
+
+    if args.crossover:
+        from dbdiff_spark.diff import DIFF_ONE_TASK_MAX_BYTES
+
+        spark = get_spark(
+            app_name="probe_diff_crossover",
+            extra_conf={"spark.ui.showConsoleProgress": "false"},
+        )
+        print(f"bound: {_mib(DIFF_ONE_TASK_MAX_BYTES)} (diff.DIFF_ONE_TASK_MAX_BYTES)")
+        print("| estimate | rows | exchange s | one_task s |")
+        print("|---|---|---|---|")
+        cuts = [int(c) for c in args.cuts.split(",")]
+        run_crossover(spark, SF_DIR, cuts[0])  # untimed: the JVM's first diffs run cold
+        for rows in cuts:
+            r = run_crossover(spark, SF_DIR, rows)
+            print(
+                f"| {_mib(r['estimate'])} | {int(r['rows']):,} "
+                f"| {r['exchange']} | {r['one_task']} |",
+                flush=True,
+            )
+        return 0
 
     if args.skew:
         spark = get_spark(
